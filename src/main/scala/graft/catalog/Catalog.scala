@@ -48,6 +48,15 @@ final class Catalog(spark: SparkSession, dir: String) {
   private val statusDir = s"$dir/processed_files"
   private val watermarkDir = s"$dir/watermarks"
 
+  /** Read a log (recursive: one subdir per commit, plus any legacy flat
+    * files) with its declared row layout, so no job infers it from footers.
+    */
+  private def readLog(d: String, schema: String): DataFrame =
+    spark.read.schema(schema).option("recursiveFileLookup", "true").parquet(d)
+
+  private def watermarkLog: DataFrame =
+    readLog(watermarkDir, "table_name STRING, last_id BIGINT, updated_at TIMESTAMP")
+
   /** Per-run cache of the processed-file NAME SET for the driver-side
     * [[isProcessed]] probe: the per-file orchestration path probes once per
     * input file, and without a cache each probe re-scans the whole status
@@ -107,16 +116,19 @@ final class Catalog(spark: SparkSession, dir: String) {
     fs.exists(p) && fs.listStatus(p).nonEmpty
   }
 
-  /** K3 — append one status row (and keep the probe cache in sync).
+  /** K3 — append one status row per given status, all in ONE commit (one
+    * write job), and keep the probe cache in sync.
     * Each append lands in its OWN subdirectory: Spark's output committer
     * stages every job writing to a path under that path's shared
     * `_temporary` dir, so two processes appending to the same directory
     * can delete each other's staged files — per-commit dirs make the
     * append multi-writer safe (reads recurse).
     */
-  def recordStatus(fileName: String, status: String): Unit = {
+  def recordStatus(fileName: String, statuses: String*): Unit = {
+    require(statuses.nonEmpty, "need at least one status")
     val preStamp = statusStamp()
-    Seq((fileName, status, new java.sql.Timestamp(System.currentTimeMillis())))
+    val now = new java.sql.Timestamp(System.currentTimeMillis())
+    statuses.map(s => (fileName, s, now))
       .toDF("file_name", "status", "created_at")
       .coalesce(1)
       .write.mode(SaveMode.Overwrite)
@@ -133,12 +145,10 @@ final class Catalog(spark: SparkSession, dir: String) {
     }
   }
 
-  /** S9/S10 — the full status log (recursive: one subdir per commit,
-    * plus any legacy flat files).
-    */
+  /** S9/S10 — the full status log. */
   def statusLog: DataFrame =
     if (existsAny(statusDir))
-      spark.read.option("recursiveFileLookup", "true").parquet(statusDir)
+      readLog(statusDir, "file_name STRING, status STRING, created_at TIMESTAMP")
     else Seq.empty[(String, String, java.sql.Timestamp)].toDF("file_name", "status", "created_at")
 
   /** The idempotency set: distinct file names with any recorded status. */
@@ -180,7 +190,7 @@ final class Catalog(spark: SparkSession, dir: String) {
   def watermark(table: String): Long =
     if (!existsAny(watermarkDir)) 0L
     else {
-      val rows = spark.read.option("recursiveFileLookup", "true").parquet(watermarkDir)
+      val rows = watermarkLog
         .filter($"table_name" === table)
         .orderBy($"last_id".desc, $"updated_at".desc)
         .select($"last_id")
@@ -281,7 +291,7 @@ final class Catalog(spark: SparkSession, dir: String) {
     val fs = wmPath.getFileSystem(conf)
     val oldDirs = fs.listStatus(wmPath).filter(_.isDirectory).map(_.getPath)
     // latest row per table: last_id desc (strictly-increasing resolution)
-    val snapshot = spark.read.option("recursiveFileLookup", "true").parquet(watermarkDir)
+    val snapshot = watermarkLog
       .groupBy($"table_name")
       .agg(max(struct($"last_id", $"updated_at")).as("w"))
       .select($"table_name", $"w.last_id", $"w.updated_at")

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,9 +14,10 @@ import org.apache.spark.sql.functions._
   *    `autoBroadcastJoinThreshold` Catalyst falls back to shuffled hash /
   *    sort-merge automatically. The reference's per-prior-file loop collapses
   *    into ONE anti-join against the union of prior hashes.
-  *  - J3 prunes the build side to the batch's id range BEFORE the join, so the
-  *    probe of a 100 TB target table reads only the overlapping id range
-  *    (parquet min/max row-group skipping makes the pruned scan cheap).
+  *  - J3 prunes the build side to the batch's id range (or, for ids stamped
+  *    from a watermark, to ids above it) BEFORE the join, so the probe of a
+  *    100 TB target table reads only the overlapping id range (parquet
+  *    min/max row-group skipping makes the pruned scan cheap).
   */
 object Dedup {
 
@@ -74,11 +75,17 @@ object Dedup {
     // `util/data_pushing.py:125-131`, is only observable in its logs).
     val bounds = batch.agg(min(col(idCol)).as("mn"), max(col(idCol)).as("mx")).head()
     if (bounds.isNullAt(0)) batch
-    else {
-      val existing = target
-        .select(col(idCol))
-        .filter(col(idCol).between(bounds.getAs[Any]("mn"), bounds.getAs[Any]("mx")))
-      batch.join(existing, Seq(idCol), "left_anti")
-    }
+    else antiJoinIds(batch, target, idCol,
+      col(idCol).between(bounds.getAs[Any]("mn"), bounds.getAs[Any]("mx")))
   }
+
+  /** J3 for a batch whose ids are all known to exceed `floor` (ids stamped
+    * from a watermark): the same rows as [[idGuard]], and the same literal
+    * pushed into the target scan, without the bounds job.
+    */
+  def idGuardAbove(batch: DataFrame, target: DataFrame, floor: Long, idCol: String = "id"): DataFrame =
+    antiJoinIds(batch, target, idCol, col(idCol) > floor)
+
+  private def antiJoinIds(batch: DataFrame, target: DataFrame, idCol: String, range: Column) =
+    batch.join(target.select(col(idCol)).filter(range), Seq(idCol), "left_anti")
 }

@@ -21,6 +21,13 @@ object Snapshot {
     * metrics row. The warehouse use: record rows-written / null counts /
     * value bounds in the audit catalog without re-reading what was just
     * written.
+    *
+    * Exactness: `observe` sits on top of the plan the write runs, so the
+    * metrics are collected in the write's result stage, whose accumulator
+    * updates Spark merges once per partition even when a task is retried
+    * or speculated (map-stage updates merge once per successful attempt).
+    * The ingest pipeline's watermark reads only `max(id)`, which a repeated
+    * merge could not change anyway; its row count is only reported.
     */
   def appendBatchObserved(
       df: DataFrame,

@@ -16,7 +16,13 @@ import org.apache.spark.sql.functions._
   * intra-batch dedup (J1) → anti-join vs target hashes (J2) → typed casts →
   * dense ids from watermark (P3) → id guard (J3) → append snapshot → commit
   * watermark → status rows. One logical plan per batch; Catalyst fuses the
-  * clean/cast projections, and the two anti-joins are the only exchanges.
+  * clean/cast projections, and the anti-joins are the only exchanges.
+  *
+  * Spark jobs per file into an existing table: CSV header read; target
+  * footer read; watermark lookup; the id stamp's stages (J1, J2, range
+  * sample, partition counts); J3's broadcast of target ids above the
+  * watermark; ONE write over the batch, which also observes its row count
+  * and max id; one watermark commit; one status commit.
   */
 object Pipeline {
   final case class Result(fileName: String, table: Option[String], inserted: Long, status: String)
@@ -43,18 +49,21 @@ final class Pipeline(
     val fileName = path.split('/').last
     if (catalog.isProcessed(fileName))
       return Result(fileName, None, 0L, "skipped: already processed")
+    val lower = fileName.toLowerCase
+    if (lower.endsWith(".csv")) ingest(fileName, path)
+    else if (!lower.endsWith(".zip")) fail(fileName, Status.NotValidCsv)
+    else {
+      // 1. zip extraction (first entry only, reference semantics) into a
+      // scratch dir, deleted once the write has consumed the CSV
+      val outDir = java.nio.file.Files.createTempDirectory("graft_zip")
+      try ZipCsv.extractFirstEntry(path, outDir.toString) match {
+        case Left(_) => fail(fileName, Status.ExtractionFailed)
+        case Right(csvPath) => ingest(fileName, csvPath)
+      } finally org.apache.hadoop.fs.FileUtil.fullyDelete(outDir.toFile)
+    }
+  }
 
-    // 1. zip extraction (first entry only, reference semantics)
-    val csvPath =
-      if (fileName.toLowerCase.endsWith(".zip")) {
-        val outDir = java.nio.file.Files.createTempDirectory("graft_zip").toString
-        ZipCsv.extractFirstEntry(path, outDir) match {
-          case Left(_) => return fail(fileName, Status.ExtractionFailed)
-          case Right(p) => p
-        }
-      } else if (fileName.toLowerCase.endsWith(".csv")) path
-      else return fail(fileName, Status.NotValidCsv)
-
+  private def ingest(fileName: String, csvPath: String): Result = {
     // 2. route by file name (contains-match + prefix aliases; fixed reference bug)
     val routed = Registry.route(csvPath, schemas.map(_.tableName), prefixAliases)
     val schema = routed.flatMap(k => schemas.find(_.tableName == k)) match {
@@ -91,48 +100,43 @@ final class Pipeline(
       // 5. content hash over the raw string fields, then J1 + J2
       val hashed = Clean.withRowHash(conformed, dataCols)
       val deduped = Dedup.selfDedupAnyWins(hashed, "row_hash")
-      val tableDir = s"$warehouseDir/${schema.tableName}"
-      val target =
-        if (Snapshot.exists(spark, tableDir)) Some(Snapshot.readTable(spark, tableDir))
-        else None
-      val netNew = target match {
-        case Some(t) => Dedup.antiJoinPrior(deduped, t, "row_hash")
-        case None => deduped
-      }
+      val target = prior(schema.tableName)
+      val netNew = target.fold(deduped)(Dedup.antiJoinPrior(deduped, _, "row_hash"))
 
-      // 6. typed casts + dense ids from the watermark + J3 guard
-      val typed = Casts.applyRoles(netNew, schema)
-      val lastId = catalog.watermark(schema.tableName)
-      val withIds = IdAssign.denseIds(typed, lastId, Seq("row_hash"))
-      val guarded = target match {
-        case Some(t) => Dedup.idGuard(withIds, t, "id")
-        case None => withIds
-      }
-
-      // 7. append snapshot, commit watermark, record statuses.
-      // Stats are computed BEFORE the append: once our rows land in the
-      // target, any recomputation of this plan would anti-join them away
-      // (the hash/id guards see their own output) — so nothing below may
-      // lazily re-evaluate the batch after the write.
-      val ordered = guarded.select(schema.columnNames.map(col): _*)
-      val persisted = ordered.persist()
-      val stats = persisted.agg(count(lit(1)).as("n"), max(col("id")).as("mx")).head()
-      val inserted = stats.getLong(0)
-      val newLast = if (stats.isNullAt(1)) lastId else stats.getLong(1)
-      Snapshot.appendBatch(persisted, tableDir)
-      persisted.unpersist()
-      // watermark BEFORE the status rows: a crash after the append but
-      // before the file is marked processed means the rerun's hash anti-join
-      // inserts zero rows (content idempotency) — harmless. The reverse
-      // order would leave a stale watermark behind a recorded file, and the
-      // id guard would then silently discard later batches' reused ids.
-      catalog.setWatermark(schema.tableName, math.max(lastId, newLast))
-      catalog.recordStatus(fileName, Status.Processed)
-      catalog.recordStatus(fileName, Status.Uploaded)
+      // 6-7. typed casts; ids, J3, append, watermark (land); statuses.
+      // The watermark is committed BEFORE the status rows: a crash after
+      // the append but before the file is marked processed means the
+      // rerun's hash anti-join inserts zero rows (content idempotency) —
+      // harmless. The reverse order would leave a stale watermark behind a
+      // recorded file, and the id guard would then silently discard later
+      // batches' reused ids.
+      val inserted = land(Casts.applyRoles(netNew, schema), schema, target)
+      catalog.recordStatus(fileName, Status.Processed, Status.Uploaded)
       Result(fileName, Some(schema.tableName), inserted, Status.Uploaded)
     } catch {
       case e: Exception => fail(fileName, Status.unexpected(e.getMessage))
     }
+  }
+
+  /** The table's rows so far, if it has any (the J2 and J3 build side). */
+  private def prior(table: String): Option[DataFrame] = {
+    val tableDir = s"$warehouseDir/$table"
+    if (Snapshot.exists(spark, tableDir)) Some(Snapshot.readTable(spark, tableDir)) else None
+  }
+
+  /** The landing tail of both paths: ids from the watermark (P3), J3 floored
+    * at it (every stamped id is > lastId), one observed append, then the
+    * watermark commit (none for an empty batch). Nothing may evaluate the
+    * batch after the write: its anti-joins would see their own output.
+    */
+  private def land(typed: DataFrame, schema: TableSchema, target: Option[DataFrame]): Long = {
+    val lastId = catalog.watermark(schema.tableName)
+    val withIds = IdAssign.denseIds(typed, lastId, Seq("row_hash"))
+    val guarded = target.fold(withIds)(Dedup.idGuardAbove(withIds, _, lastId, "id"))
+    val m = Snapshot.appendBatchObserved(guarded.select(schema.columnNames.map(col): _*),
+      s"$warehouseDir/${schema.tableName}", Seq(count(lit(1)).as("n"), max(col("id")).as("mx")))
+    Option(m("mx")).foreach(mx => catalog.setWatermark(schema.tableName, mx.asInstanceOf[Long]))
+    m("n").asInstanceOf[Long]
   }
 
   /** Streaming variant of the ingest (SURVEY.md §7.1 step 7): one file
@@ -140,7 +144,7 @@ final class Pipeline(
     * stream has one schema, so the stream is per table), drained with
     * `Trigger.AvailableNow`. The checkpoint replaces the processed-files
     * idempotency set; each micro-batch runs the same clean → hash → dedup →
-    * cast → id → append stages through `foreachBatch`.
+    * cast → id → J3 → append stages through `foreachBatch`.
     */
   def runTableStream(
       tableName: String,
@@ -166,19 +170,9 @@ final class Pipeline(
         .fold(e => throw new RuntimeException(e.message), identity)
       val conformed = Clean.conform(renamed, dataCols)
       val hashed = Dedup.selfDedupAnyWins(Clean.withRowHash(conformed, dataCols), "row_hash")
-      val tableDir = s"$warehouseDir/$tableName"
-      val netNew =
-        if (Snapshot.exists(spark, tableDir))
-          Dedup.antiJoinPrior(hashed, Snapshot.readTable(spark, tableDir), "row_hash")
-        else hashed
-      val typed = Casts.applyRoles(netNew, schema)
-      val lastId = catalog.watermark(tableName)
-      val withIds = IdAssign.denseIds(typed, lastId, Seq("row_hash"))
-      val ordered = withIds.select(schema.columnNames.map(col): _*).persist()
-      val stats = ordered.agg(count(lit(1)).as("n"), max(col("id")).as("mx")).head()
-      Snapshot.appendBatch(ordered, tableDir)
-      ordered.unpersist()
-      if (!stats.isNullAt(1)) catalog.setWatermark(tableName, stats.getLong(1))
+      val target = prior(tableName)
+      val netNew = target.fold(hashed)(Dedup.antiJoinPrior(hashed, _, "row_hash"))
+      land(Casts.applyRoles(netNew, schema), schema, target)
     }
   }
 

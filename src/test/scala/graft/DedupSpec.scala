@@ -57,6 +57,16 @@ class DedupSpec extends SparkSpec {
     assert(out.select("id").as[Long].collect().sorted.toSeq == Seq(5L, 7L))
   }
 
+  test("J3 floored at the watermark drops the same rows as the bounds-probing guard") {
+    // batch ids 11..15 stamped above watermark 10; target ids lie below,
+    // inside and above the batch's range
+    val batch = (11L to 15L).map(i => (i, s"v$i")).toDF("id", "v")
+    val target = Seq(3L, 10L, 12L, 14L, 20L).map(Tuple1(_)).toDF("id")
+    val floored = Dedup.idGuardAbove(batch, target, 10L, "id").as[(Long, String)].collect().sorted
+    assert(floored.toSeq == Dedup.idGuard(batch, target, "id").as[(Long, String)].collect().sorted.toSeq)
+    assert(floored.map(_._1).toSeq == Seq(11L, 13L, 15L))
+  }
+
   test("J3 empty-target fast path keeps everything") {
     val batch = Seq((1L, "x")).toDF("id", "v")
     val target = spark.emptyDataFrame.withColumn("id", lit(0L)).filter(lit(false))

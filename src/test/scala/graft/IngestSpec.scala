@@ -16,9 +16,12 @@ class IngestSpec extends SparkSpec {
     assert(Sniff.detectEncoding(utf16le).contains("UTF-16LE"))
     val utf16be = Array(0xFE.toByte, 0xFF.toByte) ++ "a,b".getBytes(StandardCharsets.UTF_16BE)
     assert(Sniff.detectEncoding(utf16be).contains("UTF-16BE"))
-    // even-length latin1 bytes trial-decode as UTF-16 (reference does the
-    // same: utf-8 strict fails, utf-16 accepts most even-length sequences)
-    assert(Sniff.detectEncoding(Array(0xE9.toByte, 0x2C.toByte, 0xE9.toByte, 0x41.toByte, 0x42.toByte, 0x43.toByte)).contains("UTF-16"))
+    // even-length latin1 bytes trial-decode as UTF-16, but never to a line
+    // break or delimiter (that needs a NUL byte) → None, so the caller
+    // falls back to latin1 instead of reading the file as UTF-16
+    assert(Sniff.detectEncoding(Array(0xE9.toByte, 0x2C.toByte, 0xE9.toByte, 0x41.toByte, 0x42.toByte, 0x43.toByte)).isEmpty)
+    // BOM-less UTF-16 text (big-endian, the charset's default) is still found
+    assert(Sniff.detectEncoding("é;b\n".getBytes(StandardCharsets.UTF_16BE)).contains("UTF-16"))
     // odd-length high-byte sequence decodes as neither → None (caller falls back to latin1)
     assert(Sniff.detectEncoding(Array(0xE9.toByte, 0x2C.toByte, 0x41.toByte)).isEmpty)
   }

@@ -41,6 +41,14 @@ class PipelineSpec extends SparkSpec {
     p
   }
 
+  private def zipCsv(zipPath: String, entry: String, body: String): String = {
+    val zos = new java.util.zip.ZipOutputStream(Files.newOutputStream(Paths.get(zipPath)))
+    zos.putNextEntry(new java.util.zip.ZipEntry(entry))
+    zos.write(body.getBytes(StandardCharsets.UTF_8))
+    zos.closeEntry(); zos.close()
+    zipPath
+  }
+
   test("clean file: ingest, dedup, ids, statuses, watermark") {
     val (root, cat, pipe) = mkPipeline()
     val csv = write(root, "mini_campaign_events_b1.csv",
@@ -100,15 +108,24 @@ class PipelineSpec extends SparkSpec {
 
   test("zip routing via last24h__ alias (first entry only)") {
     val (root, _, pipe) = mkPipeline()
-    val zipPath = s"$root/last24h__20240101.zip"
-    val zos = new java.util.zip.ZipOutputStream(Files.newOutputStream(Paths.get(zipPath)))
-    zos.putNextEntry(new java.util.zip.ZipEntry("last24h__20240101.csv"))
-    zos.write("Email,prénom,Event Datetime,NB_TOTAL_COMMANDES\nz@x.com,Zoe,2024-02-01 00:00:00,9\n"
-      .getBytes(StandardCharsets.UTF_8))
-    zos.closeEntry(); zos.close()
-    val res = pipe.processFile(zipPath)
+    val res = pipe.processFile(zipCsv(s"$root/last24h__20240101.zip", "last24h__20240101.csv",
+      "Email,prénom,Event Datetime,NB_TOTAL_COMMANDES\nz@x.com,Zoe,2024-02-01 00:00:00,9\n"))
     assert(res.table.contains("mini_campaign_events"))
     assert(res.inserted == 1)
+  }
+
+  test("zip extraction dir is deleted after the ingest, landed or failed") {
+    val (root, _, pipe) = mkPipeline()
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def zipDirs() = Option(tmp.listFiles()).toSeq.flatten.filter(_.getName.startsWith("graft_zip")).toSet
+    val before = zipDirs()
+    val landed = pipe.processFile(zipCsv(s"$root/last24h__20240102.zip", "last24h__20240102.csv",
+      "Email,prénom,Event Datetime,NB_TOTAL_COMMANDES\nz@x.com,Zoe,2024-02-01 00:00:00,9\n"))
+    assert(landed.status == Status.Uploaded && landed.inserted == 1)
+    // the entry name routes nowhere: a failure after extraction
+    val failed = pipe.processFile(zipCsv(s"$root/unrouted.zip", "unknown_table.csv", "a,b\n1,2\n"))
+    assert(failed.status == Status.NoSchema)
+    assert((zipDirs() -- before).isEmpty, s"left behind: ${zipDirs() -- before}")
   }
 
   test("3-entry zip: all-entries read routes each CSV member to its table") {
@@ -256,6 +273,51 @@ class PipelineSpec extends SparkSpec {
     // and an explicit refresh reloads from the log
     cat.refreshProcessedNames()
     assert(cat.isProcessed("f1.csv") && cat.isProcessed("f3.csv"))
+  }
+
+  test("second file into an existing table: job budget, nothing cached, re-delivery lands 0") {
+    val (root, cat, pipe) = mkPipeline()
+    val header = "Email,prénom,Event Datetime,NB_TOTAL_COMMANDES\n"
+    assert(pipe.processFile(write(root, "mini_campaign_events_b1.csv",
+      header + "a@x.com,Ana,2024-01-01 10:00:00,1\nb@x.com,Bob,2024-01-01 11:00:00,2\n")).inserted == 2)
+    val b2 = header + "a@x.com,Ana,2024-01-01 10:00:00,1\nd@x.com,Dia,2024-01-03 09:00:00,4\n"
+    spark.catalog.clearCache() // other suites share this session and its cache
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val res = try {
+      val r = pipe.processFile(write(root, "mini_campaign_events_b2.csv", b2))
+      Thread.sleep(300) // let job-start events drain to listeners
+      r
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(res.status == Status.Uploaded && res.inserted == 1)
+    // the 12 jobs measured for this file (sequence: Pipeline scaladoc)
+    assert(jobs.get() <= 12, s"${jobs.get()} jobs for one file")
+    assert(spark.sharedState.cacheManager.isEmpty, "the ingest left cached data behind")
+    assert(cat.watermark("mini_campaign_events") == 3L)
+    // a byte-identical re-delivery under a new name: an empty observed write
+    val again = pipe.processFile(write(root, "mini_campaign_events_b2_resend.csv", b2))
+    assert(again.status == Status.Uploaded && again.inserted == 0)
+    assert(cat.watermark("mini_campaign_events") == 3L)
+    assert(spark.read.parquet(s"$root/warehouse/mini_campaign_events").count() == 3)
+  }
+
+  test("latin-1 ';' export lands with its accents") {
+    val (root, _, pipe) = mkPipeline()
+    val body = "Email;prénom;Event Datetime;NB_TOTAL_COMMANDES\n" +
+      "a@x.com;Chloé;2024-01-01 10:00:00;1\nb@x.com;Zoë;2024-01-02 11:00:00;2\n"
+    // an even byte count: the length at which latin-1 trial-decodes as UTF-16
+    val bytes = body.getBytes(StandardCharsets.ISO_8859_1)
+    val csv = s"$root/mini_campaign_events_latin1.csv"
+    Files.write(Paths.get(csv), if (bytes.length % 2 == 0) bytes else bytes :+ '\n'.toByte)
+    val res = pipe.processFile(csv)
+    assert(res.status == Status.Uploaded && res.inserted == 2)
+    val names = spark.read.parquet(s"$root/warehouse/mini_campaign_events")
+      .select("first_name").as[String].collect().sorted.toSeq
+    assert(names == Seq("Chloé", "Zoë"))
   }
 
   test("unroutable and non-CSV files get error statuses") {
