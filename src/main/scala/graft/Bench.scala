@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver-contract benchmark main: runs every gate query against
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line with per-query seconds.
@@ -19,6 +19,9 @@ import org.apache.spark.sql.SparkSession
   *      re-measured once and the better figure kept — a transient stall
   *      can no longer flip queries red silently, while a genuine plan
   *      regression reproduces on the retry and still flags.
+  *
+  * A query that throws is listed in `"failed"`; it has no entry in
+  * `"queries"` and adds nothing to the total.
   */
 object Bench {
   /** Minimal flat parse of BASELINE_QUERIES.json's `"queries"` object.
@@ -52,13 +55,30 @@ object Bench {
     } catch { case _: Throwable => Map.empty }
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  /** The data dir of the measuring mains: `SPARK_GRAFT_SF_DIR`, else sf0.1. */
+  private[graft] def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** The session of the measuring mains: `SPARK_GRAFT_CPUS` cores, else 4. */
+  private[graft] def session(appName: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = GraftSession.builder(appName, Some(cpus)).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Bench's timed action: seconds to build a query and `count()` it, or
+    * what it threw.
+    */
+  private[graft] def time(query: => DataFrame): Either[Throwable, Double] = {
+    val t0 = System.nanoTime()
+    try { query.count(); Right((System.nanoTime() - t0) / 1e9) }
+    catch { case e: Throwable => Left(e) }
+  }
+
+  def main(args: Array[String]): Unit = {
     val baselinePath = sys.env.getOrElse("SPARK_GRAFT_BASELINE", "BASELINE_QUERIES.json")
     val baseline = loadBaseline(baselinePath)
-    val spark = GraftSession.builder("graft-bench", Some(cpus)).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session("graft-bench")
 
     // warmup, untimed: scan/shuffle/agg machinery on the bench data, plus
     // the heavy dedup pipelines on the SMALLEST scale factor — their
@@ -76,23 +96,29 @@ object Bench {
       catch { case _: Throwable => () }
 
     val benchT0 = System.nanoTime()
-    def measure(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      (System.nanoTime() - t0) / 1e9
+    val queries = SparkEntry.queries
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
+    // best of `runs`, or None once a run fails: the query is then listed in
+    // "failed". Cache cleared per query: several operators persist() small
+    // internal tables and the handles outlive the query — 110 queries × 2
+    // runs of accumulated cache otherwise LRU-churns later measurements.
+    def measure(name: String, runs: Int): Option[Double] = {
+      val best = (1 to runs).foldLeft[Either[Throwable, Double]](Right(Double.MaxValue)) {
+        (b, _) => b.flatMap(t => time(queries(name)(spark, sfDir)).map(math.min(t, _)))
+      }
+      spark.catalog.clearCache()
+      best.fold({ e =>
+        failed += name
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        None
+      }, Some(_))
     }
 
     // best of two runs per query: steady-state cost, not JIT/GC noise.
-    // Cache cleared per query: several operators persist() small internal
-    // tables and the handles outlive the query — 110 queries × 2 runs of
-    // accumulated cache otherwise LRU-churns later measurements.
-    val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
     val started = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val firstPass = sorted.map { case (name, fn) =>
+    val firstPass = queries.keys.toSeq.sorted.flatMap { name =>
       started(name) = (System.nanoTime() - benchT0) / 1e9
-      val best = math.min(measure(fn), measure(fn))
-      spark.catalog.clearCache()
-      name -> best
+      measure(name, 2).map(name -> _)
     }
 
     // contention retry pass: re-measure only the queries that exceeded the
@@ -102,14 +128,12 @@ object Bench {
     // measurements are reported separately (`"retried"`) so the artifact
     // shows both the stalled first pass and the retry, not just the min.
     val retried = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val results = firstPass.map { case (name, t) =>
+    val results = firstPass.flatMap { case (name, t) =>
       val over = baseline.get(name).exists(b => t > 2.0 * b && (t > 0.25 || b > 0.25))
-      if (over) {
-        val retry = measure(SparkEntry.queries(name))
-        spark.catalog.clearCache()
+      if (over) measure(name, 1).map { retry =>
         retried(name) = retry
         name -> math.min(t, retry)
-      } else name -> t
+      } else Some(name -> t)
     }
 
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
@@ -118,9 +142,10 @@ object Bench {
       .mkString("{", ",", "}")
     val rt = retried.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    val fl = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"started":$ts,"retried":$rt,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"started":$ts,"retried":$rt,"failed":$fl,"sf":"$sfDir"}"""
     println(line)
     // The driver captures the log tail, which has truncated mid-line before
     // (BENCH_r05.json lost the durations dict). Persist the line to a file
@@ -148,7 +173,7 @@ object Bench {
       val entry = (if (first) "" else ",") + "\"" + k + "\":" + f"$v%.3f"
       if (sb.length + entry.length < budget) { sb.append(entry); first = false }
     }
-    sb.append(s"""},"n_queries":${results.size},"full_map":"target/bench_out.json","sf":"$sfDir"}""")
+    sb.append(s"""},"n_queries":${results.size},"n_failed":${failed.size},"full_map":"target/bench_out.json","sf":"$sfDir"}""")
     println(sb.toString)
     Console.out.flush()
   }

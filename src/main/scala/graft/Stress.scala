@@ -7,36 +7,16 @@ import graft.dedup.Dedup
   * plans hold well past the gate scale.
   */
 object Stress {
-  /** Shuffle traffic per timed block: stage-completion listener summing
-    * driver-aggregated task metrics. Evidence for the SCALING.md claims —
-    * a rank whose shuffle grows linearly with input and a component
-    * fixpoint whose per-round shuffle is the label table, not the edges
-    * squared.
+  /** Wall time + shuffle read/write of one block ([[Meter.measure]]
+    * drains the listener bus around it, so the figures are the block's).
     */
-  private final class ShuffleMeter extends org.apache.spark.scheduler.SparkListener {
-    val read = new java.util.concurrent.atomic.AtomicLong
-    val write = new java.util.concurrent.atomic.AtomicLong
-    override def onStageCompleted(
-        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
+  private def timed(meter: Meter, n: String)(f: => Long): Unit = {
+    val ((r, secs), m) = meter.measure {
+      val t0 = System.nanoTime(); val r = f
+      (r, (System.nanoTime() - t0) / 1e9)
     }
-  }
-
-  /** Wall time + per-block shuffle read/write delta (listener-bus settle
-    * before each snapshot keeps the deltas attributable to the block).
-    */
-  private def timed(meter: ShuffleMeter, n: String)(f: => Long): Unit = {
-    Thread.sleep(300)
-    val (r0, w0) = (meter.read.get, meter.write.get)
-    val t0 = System.nanoTime(); val r = f
-    val secs = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(300)
     println(f"STRESS $n%-26s $secs%7.2f s  rows=$r  " +
-      f"shufR=${(meter.read.get - r0) / 1e6}%9.1f MB  shufW=${(meter.write.get - w0) / 1e6}%9.1f MB")
+      f"shufR=${m.shuffleRead / 1e6}%9.1f MB  shufW=${m.shuffleWrite / 1e6}%9.1f MB")
   }
 
   /** The round-4 verdict's missing datapoint: the two iterative/rank
@@ -53,7 +33,7 @@ object Stress {
     * blocks scan parquet like the gate queries do.
     */
   private def scale50(
-      spark: org.apache.spark.sql.SparkSession, dir: String, meter: ShuffleMeter): Unit = {
+      spark: org.apache.spark.sql.SparkSession, dir: String, meter: Meter): Unit = {
     def time(n: String)(f: => Long): Unit = timed(meter, n)(f)
     val base = "target/stress50"
     def synth(name: String, reps: Int, key: String, shift: Long): String = {
@@ -268,7 +248,7 @@ object Stress {
     * the one-pass histogram sketch over 7.5M values.
     */
   private def scaleOps(
-      spark: org.apache.spark.sql.SparkSession, dir: String, meter: ShuffleMeter): Unit = {
+      spark: org.apache.spark.sql.SparkSession, dir: String, meter: Meter): Unit = {
     def time(n: String)(f: => Long): Unit = timed(meter, n)(f)
     val docs50 = (1 to 50).map(i =>
       Tables.load(spark, dir, "documents")
@@ -403,7 +383,7 @@ object Stress {
       concat(lit("c"), (col("id") + 1L).cast("string")).as("dst"))
 
   private def graphScale(
-      spark: org.apache.spark.sql.SparkSession, meter: ShuffleMeter): Unit = {
+      spark: org.apache.spark.sql.SparkSession, meter: Meter): Unit = {
     def time(n: String)(f: => Long): Unit = timed(meter, n)(f)
     val hub = hubGraph(spark, 2000000L, 200000L)
     // plus a 100k chain on separate ids (diameter driver for components).
@@ -461,7 +441,7 @@ object Stress {
     * count), and rounds ~log₂(diameter) for any id alphabet.
     */
   private def graphScale10x(
-      spark: org.apache.spark.sql.SparkSession, meter: ShuffleMeter): Unit = {
+      spark: org.apache.spark.sql.SparkSession, meter: Meter): Unit = {
     def time(n: String)(f: => Long): Unit = timed(meter, n)(f)
     val hub = hubGraph(spark, 20000000L, 2000000L).persist()
     time("warmup_edges_20M")(hub.count())
@@ -479,13 +459,13 @@ object Stress {
     * runs for the four raster containers through the SAME
     * one-decoder-per-partition mapPartitions shape — the claim under test
     * is that media decode is pure per-row task CPU with ZERO shuffle
-    * before the final aggregate (ShuffleMeter rows prove it), so
+    * before the final aggregate (the shufR/shufW figures prove it), so
     * throughput scales linearly with payload count and executor count.
     * The 64×64 JPEG run (16× the pixels of the 16×16 one at 1/10 the
     * rows) pins the per-pixel scaling law for the entropy-coded path.
     */
   private def codecScale(
-      spark: org.apache.spark.sql.SparkSession, meter: ShuffleMeter): Unit = {
+      spark: org.apache.spark.sql.SparkSession, meter: Meter): Unit = {
     import graft.multimodal.Multimodal
     def time(n: String)(f: => Long): Unit = timed(meter, n)(f)
     val ids = spark.range(200000L).select(col("id").as("doc_id")).persist()
@@ -630,7 +610,7 @@ object Stress {
     * horizon, measured instead of gestured at.
     */
   private def yearScale(
-      spark: org.apache.spark.sql.SparkSession, meter: ShuffleMeter): Unit = {
+      spark: org.apache.spark.sql.SparkSession, meter: Meter): Unit = {
     def time(n: String)(f: => Long): Unit = timed(meter, n)(f)
     val root = "target/yearscale"
     val hconf = spark.sparkContext.hadoopConfiguration
@@ -736,7 +716,7 @@ object Stress {
     * + TakeOrdered with zero joins.
     */
   private def pqScale(
-      spark: org.apache.spark.sql.SparkSession, meter: ShuffleMeter): Unit = {
+      spark: org.apache.spark.sql.SparkSession, meter: Meter): Unit = {
     import graft.sim.ProductQuantizer
     def time(n: String)(f: => Long): Unit = timed(meter, n)(f)
     // 200k vectors in 1000 planted clusters (center + small noise) — the
@@ -895,7 +875,7 @@ object Stress {
     * runnable.
     */
   private def aviSplit(
-      spark: org.apache.spark.sql.SparkSession, meter: ShuffleMeter): Unit = {
+      spark: org.apache.spark.sql.SparkSession, meter: Meter): Unit = {
     import graft.multimodal.{AviCodec, JpegCodec, Multimodal}
     import org.apache.spark.sql.Row
     def time(n: String)(f: => Long): Unit = timed(meter, n)(f)
@@ -949,7 +929,7 @@ object Stress {
     * Crawl file must not pin one task" story, made runnable.
     */
   private def warcSplit(
-      spark: org.apache.spark.sql.SparkSession, meter: ShuffleMeter): Unit = {
+      spark: org.apache.spark.sql.SparkSession, meter: Meter): Unit = {
     import graft.ingest.{Warc, WarcCodec}
     import org.apache.spark.sql.Row
     def time(n: String)(f: => Long): Unit = timed(meter, n)(f)
@@ -1011,7 +991,7 @@ object Stress {
     * mega-clusters, which graphscale covers separately).
     */
   private def dedupScale(
-      spark: org.apache.spark.sql.SparkSession, meter: ShuffleMeter): Unit = {
+      spark: org.apache.spark.sql.SparkSession, meter: Meter): Unit = {
     import graft.dedup.IncrementalDedup
     def time(n: String)(f: => Long): Unit = timed(meter, n)(f)
     val root = "target/dedupscale"
@@ -1118,7 +1098,7 @@ object Stress {
     * five single tasks).
     */
   private def schedScale(
-      spark: org.apache.spark.sql.SparkSession, meter: ShuffleMeter): Unit = {
+      spark: org.apache.spark.sql.SparkSession, meter: Meter): Unit = {
     import graft.operators.{Mixture, SequencePack, TokenBudget}
     def time(n: String)(f: => Long): Unit = timed(meter, n)(f)
     val n = 20000000L
@@ -1150,7 +1130,7 @@ object Stress {
     * the harmonic whole-doc packer.
     */
   private def schedScale2(
-      spark: org.apache.spark.sql.SparkSession, meter: ShuffleMeter): Unit = {
+      spark: org.apache.spark.sql.SparkSession, meter: Meter): Unit = {
     import graft.operators.{Mixture, SequencePack}
     val n = 20000000L
     val docs = spark.range(0, n).select(
@@ -1187,7 +1167,7 @@ object Stress {
     * guard priced in every append.
     */
   private def schedStore(
-      spark: org.apache.spark.sql.SparkSession, meter: ShuffleMeter): Unit = {
+      spark: org.apache.spark.sql.SparkSession, meter: Meter): Unit = {
     import graft.operators.PieceStore
     val root = "target/stress_schedstore"
     val p = new org.apache.hadoop.fs.Path(root)
@@ -1209,13 +1189,11 @@ object Stress {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.builder("stress", Some("32")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session("stress")
     val dir = "/root/testdata/sf0.1"
     def x10(name: String) = (1 to 10).map(i =>
       Tables.load(spark, dir, name).withColumn("_rep", lit(i))).reduce(_ unionByName _)
-    val meter = new ShuffleMeter
-    spark.sparkContext.addSparkListener(meter)
+    val meter = Meter(spark.sparkContext)
     def time(n: String)(f: => Long): Unit = timed(meter, n)(f)
     if (args.contains("schedstore")) { schedStore(spark, meter); spark.stop(); return }
     if (args.contains("scale50")) { scale50(spark, dir, meter); spark.stop(); return }
@@ -1475,7 +1453,7 @@ object Stress {
     * must come in near the no-mega-basket mining cost.
     */
   private def hotBasket(
-      spark: org.apache.spark.sql.SparkSession, dir: String, meter: ShuffleMeter): Unit = {
+      spark: org.apache.spark.sql.SparkSession, dir: String, meter: Meter): Unit = {
     def time(n: String)(f: => Long): Unit = timed(meter, n)(f)
     val li1 = Tables.load(spark, dir, "lineitem")
     val mega = spark.range(10000L)

@@ -88,8 +88,8 @@ object ZOrder {
     * of three of each.
     *
     * Output: [[skippingDepth]]'s row per (layout, chunk) with a leading
-    * `layout` column. Order columns must be integer-typed (the long
-    * cast must preserve their order).
+    * `layout` column. Order columns must be Byte/Short/Int/Long (the long
+    * cast must preserve their order); any other type is rejected.
     */
   def skippingDepthMulti(
       df: org.apache.spark.sql.DataFrame,
@@ -99,6 +99,10 @@ object ZOrder {
     require(chunks >= 1, s"chunks=$chunks must be >= 1")
     require(layouts.nonEmpty, "need at least one layout")
     require(layouts.map(_._1).distinct.size == layouts.size, "duplicate layout label")
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    for ((label, ord) <- layouts; c <- ord) require(
+      Seq(ByteType, ShortType, IntegerType, LongType).contains(df.schema(c).dataType),
+      s"layout $label: order column $c is ${df.schema(c).dataType.simpleString}, not integral")
     val p = layouts.map(_._2.size).max
     val branches = layouts.map { case (label, ord) =>
       df.select(

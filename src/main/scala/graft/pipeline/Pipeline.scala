@@ -70,51 +70,53 @@ final class Pipeline(
       case None => return fail(fileName, Status.NoSchema)
       case Some(s) => s
     }
-    // key-substring-of-table-name, like the reference's lookup
-    // (data_processing.py:34-36 — one direction only: a broader key such as
-    // "events_v2" must NOT match table "events"); longest key wins so the
-    // pick is deterministic when several keys match
-    val mapping = renames.toSeq
-      .filter { case (k, _) => schema.tableName.contains(k) }
-      .sortBy { case (k, _) => (-k.length, k) }
-      .headOption.map(_._2) match {
+    val mapping = mappingFor(schema.tableName) match {
       case None => return fail(fileName, Status.NoMapping)
       case Some(m) => m
     }
-
-    try {
-      val raw = CsvSource.readSniffed(spark, csvPath)
-
-      // 3. rename (extra columns fatal, missing tolerated)
-      val renamed = Clean.renameColumns(raw, mapping) match {
-        case Left(_) => return fail(fileName, Status.RenameError)
-        case Right(df) => df
-      }
-
-      // 4. conform to declared columns (id + row_hash are engine-assigned)
-      val dataCols = schema.columnNames.filterNot(c => c == "id" || c == "row_hash")
-      if (renamed.columns.length > dataCols.length)
-        return fail(fileName, Status.ColumnCountMismatch)
-      val conformed = Clean.conform(renamed, dataCols)
-
-      // 5. content hash over the raw string fields, then J1 + J2
-      val hashed = Clean.withRowHash(conformed, dataCols)
-      val deduped = Dedup.selfDedupAnyWins(hashed, "row_hash")
-      val target = prior(schema.tableName)
-      val netNew = target.fold(deduped)(Dedup.antiJoinPrior(deduped, _, "row_hash"))
-
-      // 6-7. typed casts; ids, J3, append, watermark (land); statuses.
-      // The watermark is committed BEFORE the status rows: a crash after
-      // the append but before the file is marked processed means the
-      // rerun's hash anti-join inserts zero rows (content idempotency) —
-      // harmless. The reverse order would leave a stale watermark behind a
-      // recorded file, and the id guard would then silently discard later
-      // batches' reused ids.
-      val inserted = land(Casts.applyRoles(netNew, schema), schema, target)
-      catalog.recordStatus(fileName, Status.Processed, Status.Uploaded)
-      Result(fileName, Some(schema.tableName), inserted, Status.Uploaded)
+    // The watermark is committed BEFORE the status rows: a crash after the
+    // append but before the file is marked processed means the rerun's hash
+    // anti-join inserts zero rows (content idempotency) — harmless. The
+    // reverse order would leave a stale watermark behind a recorded file,
+    // and the id guard would then silently discard later batches' reused ids.
+    try stage(CsvSource.readSniffed(spark, csvPath), schema, mapping) match {
+      case Left(status) => fail(fileName, status)
+      case Right(inserted) =>
+        catalog.recordStatus(fileName, Status.Processed, Status.Uploaded)
+        Result(fileName, Some(schema.tableName), inserted, Status.Uploaded)
     } catch {
       case e: Exception => fail(fileName, Status.unexpected(e.getMessage))
+    }
+  }
+
+  /** The rename mapping of a table: the longest key contained in its name,
+    * like the reference's key-substring-of-table-name lookup
+    * (data_processing.py:34-36 — one direction only: a broader key such as
+    * "events_v2" must NOT match table "events"); ties go to the smaller key.
+    */
+  private def mappingFor(table: String): Option[Map[String, String]] =
+    renames.toSeq
+      .filter { case (k, _) => table.contains(k) }
+      .sortBy { case (k, _) => (-k.length, k) }
+      .headOption.map(_._2)
+
+  /** One batch of both paths, from raw string columns to the warehouse:
+    * rename (extra columns are a reject) → column-count check → conform to
+    * the declared columns (id + row_hash are engine-assigned) → row_hash
+    * over the raw string fields → J1 → J2 → typed casts → [[land]]. Returns
+    * the rows inserted, or the status of a reject.
+    */
+  private def stage(raw: DataFrame, schema: TableSchema, mapping: Map[String, String]): Either[String, Long] = {
+    val dataCols = schema.columnNames.filterNot(c => c == "id" || c == "row_hash")
+    Clean.renameColumns(raw, mapping) match {
+      case Left(_) => Left(Status.RenameError)
+      case Right(renamed) if renamed.columns.length > dataCols.length => Left(Status.ColumnCountMismatch)
+      case Right(renamed) =>
+        val hashed = Clean.withRowHash(Clean.conform(renamed, dataCols), dataCols)
+        val deduped = Dedup.selfDedupAnyWins(hashed, "row_hash")
+        val target = prior(schema.tableName)
+        val netNew = target.fold(deduped)(Dedup.antiJoinPrior(deduped, _, "row_hash"))
+        Right(land(Casts.applyRoles(netNew, schema), schema, target))
     }
   }
 
@@ -143,8 +145,8 @@ final class Pipeline(
     * stream per TABLE directory (routing is per-file in the batch path; a
     * stream has one schema, so the stream is per table), drained with
     * `Trigger.AvailableNow`. The checkpoint replaces the processed-files
-    * idempotency set; each micro-batch runs the same clean → hash → dedup →
-    * cast → id → J3 → append stages through `foreachBatch`.
+    * idempotency set; each micro-batch runs the file path's [[stage]]
+    * through `foreachBatch`, and a rejected batch fails the stream.
     */
   def runTableStream(
       tableName: String,
@@ -153,9 +155,8 @@ final class Pipeline(
       rawColumns: Seq[String] = Nil): Unit = {
     val schema = schemas.find(_.tableName == tableName)
       .getOrElse(throw new IllegalArgumentException(s"no schema for $tableName"))
-    val mapping = renames.getOrElse(tableName,
-      renames.collectFirst { case (k, m) if tableName.contains(k) => m }.getOrElse(Map.empty))
-    val dataCols = schema.columnNames.filterNot(c => c == "id" || c == "row_hash")
+    val mapping = mappingFor(tableName)
+      .getOrElse(throw new IllegalArgumentException(s"no rename mapping for $tableName"))
     // An explicit CSV schema binds by POSITION, not by header name, so the
     // caller must declare the files' actual column order (`rawColumns`).
     // enforceSchema=false makes Spark validate each file's header against it
@@ -166,13 +167,7 @@ final class Pipeline(
         org.apache.spark.sql.types.StructField(_, org.apache.spark.sql.types.StringType, true)))
     val stream = graft.streaming.StreamingIngest.fileStream(spark, inputDir, rawSchema)
     graft.streaming.StreamingIngest.runAvailableNow(stream, checkpointDir) { (batch, _) =>
-      val renamed = Clean.renameColumns(batch, mapping)
-        .fold(e => throw new RuntimeException(e.message), identity)
-      val conformed = Clean.conform(renamed, dataCols)
-      val hashed = Dedup.selfDedupAnyWins(Clean.withRowHash(conformed, dataCols), "row_hash")
-      val target = prior(tableName)
-      val netNew = target.fold(hashed)(Dedup.antiJoinPrior(hashed, _, "row_hash"))
-      land(Casts.applyRoles(netNew, schema), schema, target)
+      stage(batch, schema, mapping).fold(s => throw new IllegalStateException(s"$tableName: $s"), identity)
     }
   }
 

@@ -59,4 +59,9 @@ object GraftExpressionBridge {
       rdd: org.apache.spark.rdd.RDD[catalyst.InternalRow],
       schema: types.StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
+
+  /** Waits until the listener bus (`private[spark]`) has delivered every
+    * posted event, so a listener has seen all jobs of the work just done.
+    */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -34,6 +34,11 @@ class BenchSpec extends AnyFunSuite {
     assert(b.values.forall(v => v >= 0 && v < 20.0), b.filter(_._2 >= 20.0))
   }
 
+  test("a query that throws is a failure, not a duration") {
+    val boom = new IllegalStateException("boom")
+    assert(Bench.time(throw boom) == Left(boom))
+  }
+
   test("parseBaseline tolerates missing or malformed queries object") {
     assert(Bench.parseBaseline("""{"metric":"total"}""").isEmpty)
     assert(Bench.parseBaseline("").isEmpty)

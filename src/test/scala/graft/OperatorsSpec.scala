@@ -272,6 +272,17 @@ class OperatorsSpec extends SparkSpec {
     assert(math.abs(r.getLong(1) - r.getLong(0)) < math.abs(r.getLong(2) - r.getLong(0)))
   }
 
+  test("skippingDepthMulti: integral order columns only") {
+    import graft.operators.ZOrder
+    val df = Seq((1, "b", 10L), (2, "a", 20L), (3, "c", 30L)).toDF("i", "s", "k")
+    val e = intercept[IllegalArgumentException](
+      ZOrder.skippingDepthMulti(df, Seq("by_i" -> Seq("i"), "by_s" -> Seq("s")), "k", 2))
+    assert(e.getMessage.contains("order column s is string"))
+    val depths = ZOrder.skippingDepthMulti(df, Seq("by_i" -> Seq("i")), "k", 2)
+      .select("chunk", "n_rows", "depth").as[(Long, Long, Long)].collect().sorted.toSeq
+    assert(depths == Seq((1L, 2L, 1L), (2L, 1L, 1L)))
+  }
+
   test("count-min sketch: estimates upper-bound exact counts; unseen key is 0; merge = rebuild") {
     import graft.operators.CountMinSketch
     val occ = (Seq.fill(50)("hot") ++ Seq.fill(7)("warm") ++ Seq("cold")).toDF("t")

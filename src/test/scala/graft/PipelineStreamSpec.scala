@@ -44,4 +44,25 @@ class PipelineStreamSpec extends SparkSpec {
     assert(t2.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
     assert(cat.watermark("mini_campaign_events") == 3L)
   }
+
+  test("streaming ingest picks the batch path's rename mapping: longest key in the table name") {
+    val root = tmpDir("pstream_map")
+    val in = s"$root/in"
+    Files.createDirectories(Paths.get(in))
+    Files.write(Paths.get(s"$in/b1.csv"),
+      "Email,prénom\na@x.com,Ana\nb@x.com,Bob\n".getBytes(StandardCharsets.UTF_8))
+    val renames = Map("events" -> Map("Mail" -> "email"), "campaign_events" -> mapping)
+    val pipe = new Pipeline(spark, new Catalog(spark, s"$root/catalog"), Seq(schema),
+      renames, s"$root/warehouse")
+    pipe.runTableStream("mini_campaign_events", in, s"$root/ckpt")
+    val got = spark.read.parquet(s"$root/warehouse/mini_campaign_events")
+      .select("email", "first_name").as[(String, String)].collect().sorted.toSeq
+    assert(got == Seq(("a@x.com", "Ana"), ("b@x.com", "Bob")))
+    // a table no mapping key names fails before the stream starts
+    val bare = new Pipeline(spark, new Catalog(spark, s"$root/catalog2"), Seq(schema),
+      Map("orders" -> mapping), s"$root/warehouse2")
+    val e = intercept[IllegalArgumentException](
+      bare.runTableStream("mini_campaign_events", in, s"$root/ckpt2"))
+    assert(e.getMessage == "no rename mapping for mini_campaign_events")
+  }
 }
