@@ -12,6 +12,12 @@ package graft
   * output); the thunks run on their own threads, so job-description
   * thread-locals stay per thunk. Failures propagate (the first
   * exception rethrown).
+  *
+  * Contract: ONE THREAD PER THUNK, no cap — for a handful of independent
+  * actions (the largest fan-out today is six, the probe queries of
+  * Round15Queries' IVF-PQ refit gate). A caller with a per-row, per-probe
+  * or per-batch list of unbounded length must not pass it here: each
+  * thunk is a thread driving its own concurrent Spark jobs.
   */
 object Par {
   def run[A](thunks: Seq[() => A]): Seq[A] = {

@@ -520,7 +520,7 @@ object Stress {
     def gradJpeg(ids: org.apache.spark.sql.DataFrame, progressive: Boolean) = {
       import graft.multimodal.JpegCodec
       import org.apache.spark.sql.Row
-      val rdd = ids.rdd.mapPartitions { rows =>
+      graft.operators.PartitionBatch.mapPartitions(ids, Multimodal.MediaSchema) { rows =>
         rows.map { r =>
           val id = r.getLong(0).toInt
           val px = Array.tabulate(32 * 32) { i =>
@@ -534,7 +534,6 @@ object Stress {
           Row(id.toLong, payload, Row("image", "jpeg", 32, 32, null))
         }
       }
-      spark.createDataFrame(rdd, Multimodal.MediaSchema)
     }
     val ids50k = spark.range(50000L).select(col("id").as("doc_id")).persist()
     time("jpegprog_50k_32x32_gradient") {

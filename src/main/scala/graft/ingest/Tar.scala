@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.operators.PartitionBatch
+
 /** Spark plumbing for [[TarCodec]]: WebDataset-style shard handling.
   * Shards travel as opaque `binary` columns (one tar per row); samples —
   * the `stem.{txt,cls,json,…}` component groups — explode into one
@@ -31,21 +33,17 @@ object Tar {
     * doc-id order within the shard — byte-deterministic archives.
     */
   def synthesizeShards(df: DataFrame, idCol: String, docsPerShard: Int = 50): DataFrame = {
-    val spark = df.sparkSession
-    // explicit repartition after the groupBy: AQE's byte-based coalescing
-    // folds the tiny grouped frame onto one task, serializing the
-    // CPU-bound tar builds (and the downstream per-shard parse that
-    // inherits this layout); the exchange carries the grouped doc structs
-    // once, keyed deterministically by shard_id
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val src = df
+    // spread after the groupBy: AQE's byte-based coalescing folds the tiny
+    // grouped frame onto one task, serializing the CPU-bound tar builds
+    // (and the downstream per-shard parse that inherits this layout); the
+    // exchange carries the grouped doc structs once, keyed by shard_id
+    val src = PartitionBatch.spread(df
       .select(col(idCol).cast("long").as("doc_id"), col("text"), col("lang"), col("source"))
       .withColumn("shard_id", expr(s"doc_id div $docsPerShard"))
       .groupBy("shard_id")
       .agg(sort_array(collect_list(struct(col("doc_id"), col("text"), col("lang"),
-        col("source")))).as("docs"))
-      .repartition(parts, col("shard_id"))
-    val rdd = src.rdd.mapPartitions { rows =>
+        col("source")))).as("docs")), "shard_id")
+    PartitionBatch.mapPartitions(src, ShardSchema) { rows =>
       rows.map { r =>
         val shard = r.getLong(0)
         val entries = r.getSeq[Row](1).flatMap { d =>
@@ -59,7 +57,6 @@ object Tar {
         Row(shard, TarCodec.build(entries))
       }
     }
-    spark.createDataFrame(rdd, ShardSchema)
   }
 
   /** Explode shards into one row per SAMPLE (WebDataset grouping by
@@ -68,7 +65,6 @@ object Tar {
     * out inside the mapPartitions batch shape.
     */
   def samples(shards: DataFrame): DataFrame = {
-    val spark = shards.sparkSession
     val outSchema = StructType(Seq(
       StructField("shard_id", LongType, nullable = false),
       StructField("stem", StringType, nullable = false),
@@ -78,7 +74,7 @@ object Tar {
       StructField("json_chars", LongType, nullable = true)))
     val idIdx = shards.schema.fieldIndex("shard_id")
     val payloadIdx = shards.schema.fieldIndex("payload")
-    val rdd = shards.rdd.mapPartitions { rows =>
+    PartitionBatch.mapPartitions(shards, outSchema) { rows =>
       rows.flatMap { r =>
         val shard = r.getLong(idIdx)
         TarCodec.samples(TarCodec.parse(r.getAs[Array[Byte]](payloadIdx))).iterator
@@ -91,6 +87,5 @@ object Tar {
           }
       }
     }
-    spark.createDataFrame(rdd, outSchema)
   }
 }

@@ -6,13 +6,17 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.operators.PartitionBatch
+
 /** Spark plumbing for [[WarcCodec]]: crawl archives travel as opaque
   * `binary` columns (one .warc.gz per row — the per-capture shape) or as
-  * one huge shared file decoded range-parallel; parsing runs in the
-  * one-decoder-per-partition mapPartitions batch shape shared with the
-  * media codecs, and the outputs are plain relational tables the rest of
-  * the curation pipeline (HTML extraction, URL canonicalization, dedup,
-  * quality scoring) composes onto unchanged.
+  * one huge shared file decoded range-parallel; building and parsing run
+  * in the one-decoder-per-partition batch shape shared with the media
+  * codecs ([[graft.operators.PartitionBatch.mapPartitions]]: archives are
+  * built through `synthesizeArchives` and parsed through `perArchive`),
+  * and the outputs are plain relational tables the rest of the curation
+  * pipeline (HTML extraction, URL canonicalization, dedup, quality
+  * scoring) composes onto unchanged.
   */
 object Warc {
 
@@ -33,24 +37,53 @@ object Warc {
 
   // ------------------------------------------------------------ synthesize
 
-  /** Spread a synthesizer's source rows across the session's shuffle
-    * parallelism before the per-row archive build: a small parquet scan
-    * arrives as one input split, and without this every synthesize →
-    * mapPartitions parse chain runs on that single task. The exchange
-    * carries only the pre-payload columns (ids + text), bytes are built
-    * AFTER the spread; the explicit count is a user repartition, so AQE's
-    * byte-based coalescing cannot fold CPU-bound archive work onto one
-    * core. Same discipline as [[graft.multimodal.Multimodal]]'s
-    * synthesizers.
+  /** The synthesizers' shape: `src` (`media_id` first, then the columns
+    * the bytes are built from) spread across the session's shuffle
+    * parallelism ([[PartitionBatch.spread]] — the exchange carries only
+    * the pre-payload columns, bytes are built AFTER it), then one archive
+    * per row, `build(row)`.
     */
-  private def spread(df: DataFrame, keyCol: String = "media_id"): DataFrame = {
-    val parts = df.sparkSession.sessionState.conf.numShufflePartitions
-    df.repartition(parts, col(keyCol))
+  private def synthesizeArchives(src: DataFrame)(build: Row => Array[Byte]): DataFrame =
+    PartitionBatch.mapPartitions(PartitionBatch.spread(src, "media_id"), WarcFileSchema) {
+      rows => rows.map(r => Row(r.getLong(0), build(r)))
+    }
+
+  /** The parsers' shape: one parse per archive, `f(media_id, payload)`
+    * giving its output rows.
+    */
+  private def perArchive(warcFiles: DataFrame, schema: StructType)(
+      f: (Long, Array[Byte]) => Iterator[Row]): DataFrame = {
+    val idIdx = warcFiles.schema.fieldIndex("media_id")
+    val payloadIdx = warcFiles.schema.fieldIndex("payload")
+    PartitionBatch.mapPartitions(warcFiles, schema) { rows =>
+      rows.flatMap(r => f(r.getLong(idIdx), r.getAs[Array[Byte]](payloadIdx)))
+    }
   }
+
+  /** The 200 text/html responses of one archive — the extraction feed. */
+  private def htmlEntities(archive: Array[Byte]): Iterator[WarcCodec.HttpResponse] =
+    WarcCodec.parse(archive).iterator
+      .filter(rec => rec.warcType == "response" &&
+        rec.contentType.startsWith("application/http"))
+      .map(rec => WarcCodec.parseHttpResponse(rec.block))
+      .filter(h => h.status == 200 &&
+        h.contentType.exists(_.toLowerCase.startsWith("text/html")))
 
   /** Fixed warcinfo block — every synthesized archive opens with it. */
   val WarcinfoBlock: String =
     "software: graft-crawler/1.0\r\nformat: WARC File Format 1.0\r\n"
+
+  private val CaptureDate = "2026-08-12T00:00:00Z"
+
+  private def warcinfo(id: Long, date: String): WarcCodec.WarcRecord =
+    WarcCodec.WarcRecord("warcinfo", s"<urn:graft:$id:0>", None, date,
+      "application/warc-fields", Nil, WarcinfoBlock.getBytes(UTF_8))
+
+  /** Doc `id`'s two-record archive: warcinfo, then the response `block`. */
+  private def responseArchive(id: Long, block: Array[Byte]): Array[Byte] =
+    WarcCodec.build(Seq(warcinfo(id, CaptureDate),
+      WarcCodec.WarcRecord("response", s"<urn:graft:$id:1>", Some(s"https://example.com/doc/$id"),
+        CaptureDate, "application/http;msgtype=response", Nil, block)), gzipPerRecord = true)
 
   /** The capture request for doc `id` (the crawl's own GET). */
   def requestBlock(id: Long): String =
@@ -90,13 +123,11 @@ object Warc {
     */
   def docRecords(id: Long, lang: String, text: String): Seq[WarcCodec.WarcRecord] = {
     val uri = s"https://example.com/doc/$id"
-    val date = "2026-08-12T00:00:00Z"
     Seq(
-      WarcCodec.WarcRecord("warcinfo", s"<urn:graft:$id:0>", None, date,
-        "application/warc-fields", Nil, WarcinfoBlock.getBytes(UTF_8)),
-      WarcCodec.WarcRecord("request", s"<urn:graft:$id:1>", Some(uri), date,
+      warcinfo(id, CaptureDate),
+      WarcCodec.WarcRecord("request", s"<urn:graft:$id:1>", Some(uri), CaptureDate,
         "application/http;msgtype=request", Nil, requestBlock(id).getBytes(UTF_8)),
-      WarcCodec.WarcRecord("response", s"<urn:graft:$id:2>", Some(uri), date,
+      WarcCodec.WarcRecord("response", s"<urn:graft:$id:2>", Some(uri), CaptureDate,
         "application/http;msgtype=response", Nil,
         responseBlock(id, lang, text).getBytes(UTF_8)))
   }
@@ -146,66 +177,37 @@ object Warc {
   /** [[synthesizeWarc]]'s wire-encoded twin: response entities arrive
     * chunked / gzipped / both, per [[responseBlockEncoded]].
     */
-  def synthesizeWarcEncoded(df: DataFrame, idCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val src = spread(df.select(
-      col(idCol).cast("long").as("media_id"), col("lang"), col("text")))
-    val rdd = src.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val uri = s"https://example.com/doc/$id"
-        val date = "2026-08-12T00:00:00Z"
-        val recs = Seq(
-          WarcCodec.WarcRecord("warcinfo", s"<urn:graft:$id:0>", None, date,
-            "application/warc-fields", Nil, WarcinfoBlock.getBytes(UTF_8)),
-          WarcCodec.WarcRecord("response", s"<urn:graft:$id:1>", Some(uri), date,
-            "application/http;msgtype=response", Nil,
-            responseBlockEncoded(id, r.getString(1), r.getString(2))))
-        Row(id, WarcCodec.build(recs, gzipPerRecord = true))
-      }
+  def synthesizeWarcEncoded(df: DataFrame, idCol: String): DataFrame =
+    synthesizeArchives(df.select(
+      col(idCol).cast("long").as("media_id"), col("lang"), col("text"))) { r =>
+      val id = r.getLong(0)
+      responseArchive(id, responseBlockEncoded(id, r.getString(1), r.getString(2)))
     }
-    spark.createDataFrame(rdd, WarcFileSchema)
-  }
 
   /** [[htmlResponses]] with ENTITY DECODING ([[WarcCodec.decodeEntity]]):
     * chunked framing undone, content codings inflated — the feed real
     * captures need before extraction sees a byte.
     */
-  def htmlResponsesDecoded(warcFiles: DataFrame): DataFrame = {
-    val spark = warcFiles.sparkSession
-    val outSchema = StructType(Seq(
+  def htmlResponsesDecoded(warcFiles: DataFrame): DataFrame =
+    perArchive(warcFiles, StructType(Seq(
       StructField("media_id", LongType, nullable = false),
       StructField("encoding", StringType, nullable = false),
-      StructField("html", StringType, nullable = false)))
-    val idIdx = warcFiles.schema.fieldIndex("media_id")
-    val payloadIdx = warcFiles.schema.fieldIndex("payload")
-    val rdd = warcFiles.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.getLong(idIdx)
-        WarcCodec.parse(r.getAs[Array[Byte]](payloadIdx)).iterator
-          .filter(rec => rec.warcType == "response" &&
-            rec.contentType.startsWith("application/http"))
-          .map(rec => WarcCodec.parseHttpResponse(rec.block))
-          .filter(h => h.status == 200 &&
-            h.contentType.exists(_.toLowerCase.startsWith("text/html")))
-          .map { h =>
-            def has(n: String, v: String) = h.headers.exists { case (k, hv) =>
-              k.equalsIgnoreCase(n) && hv.toLowerCase.contains(v)
-            }
-            val enc = Seq(
-              if (has("Transfer-Encoding", "chunked")) Some("chunked") else None,
-              if (has("Content-Encoding", "gzip")) Some("gzip") else None)
-              .flatten match {
-              case Nil => "identity"
-              case es => es.mkString("+")
-            }
-            val (_, _, text) = decodeHtmlCharset(h)
-            Row(id, enc, text)
-          }
+      StructField("html", StringType, nullable = false)))) { (id, archive) =>
+      htmlEntities(archive).map { h =>
+        def has(n: String, v: String) = h.headers.exists { case (k, hv) =>
+          k.equalsIgnoreCase(n) && hv.toLowerCase.contains(v)
+        }
+        val enc = Seq(
+          if (has("Transfer-Encoding", "chunked")) Some("chunked") else None,
+          if (has("Content-Encoding", "gzip")) Some("gzip") else None)
+          .flatten match {
+          case Nil => "identity"
+          case es => es.mkString("+")
+        }
+        val (_, _, text) = decodeHtmlCharset(h)
+        Row(id, enc, text)
       }
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   // --------------------------------------------------------------- charset
 
@@ -280,32 +282,17 @@ object Warc {
     * The fix for the silent-mojibake failure mode: a windows-1252 or
     * shift_jis capture decoded as UTF-8 poisons the corpus invisibly.
     */
-  def htmlResponsesCharsetRouted(warcFiles: DataFrame): DataFrame = {
-    val spark = warcFiles.sparkSession
-    val outSchema = StructType(Seq(
+  def htmlResponsesCharsetRouted(warcFiles: DataFrame): DataFrame =
+    perArchive(warcFiles, StructType(Seq(
       StructField("media_id", LongType, nullable = false),
       StructField("charset", StringType, nullable = false),
       StructField("charset_source", StringType, nullable = false),
-      StructField("html", StringType, nullable = false)))
-    val idIdx = warcFiles.schema.fieldIndex("media_id")
-    val payloadIdx = warcFiles.schema.fieldIndex("payload")
-    val rdd = warcFiles.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.getLong(idIdx)
-        WarcCodec.parse(r.getAs[Array[Byte]](payloadIdx)).iterator
-          .filter(rec => rec.warcType == "response" &&
-            rec.contentType.startsWith("application/http"))
-          .map(rec => WarcCodec.parseHttpResponse(rec.block))
-          .filter(h => h.status == 200 &&
-            h.contentType.exists(_.toLowerCase.startsWith("text/html")))
-          .map { h =>
-            val (cs, src, text) = decodeHtmlCharset(h)
-            Row(id, cs, src, text)
-          }
+      StructField("html", StringType, nullable = false)))) { (id, archive) =>
+      htmlEntities(archive).map { h =>
+        val (cs, src, text) = decodeHtmlCharset(h)
+        Row(id, cs, src, text)
       }
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** Per-charset payload suffix for [[synthesizeWarcCharsets]] — each
     * mode's text carries characters DIAGNOSTIC of its charset (bytes
@@ -420,45 +407,35 @@ object Warc {
     * crawler avoids re-storing an unchanged page. WARC-Date seconds vary
     * per doc (id % 60) so the CDX timestamp column is non-constant.
     */
-  def synthesizeWarcRevisits(df: DataFrame, idCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val src = spread(df.select(col(idCol).cast("long").as("media_id")))
-    val rdd = src.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val cg = id / 4
-        val uri = s"https://example.com/doc/$id"
-        val date = f"2026-08-12T00:00:${id % 60}%02dZ"
-        val body = htmlBody(cg, "en", s"group body $cg")
-        val block =
-          ("HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=utf-8\r\n" +
-            s"Content-Length: ${body.getBytes(UTF_8).length}\r\n\r\n" + body)
-            .getBytes(UTF_8)
-        val digest = payloadDigest(body.getBytes(UTF_8))
-        val capture =
-          if (id % 4 == 0)
-            WarcCodec.WarcRecord("response", s"<urn:graft:$id:1>", Some(uri), date,
-              "application/http;msgtype=response",
-              Seq("WARC-Payload-Digest" -> digest), block)
-          else
-            WarcCodec.WarcRecord("revisit", s"<urn:graft:$id:1>", Some(uri), date,
-              "application/http;msgtype=response",
-              Seq(
-                "WARC-Payload-Digest" -> digest,
-                "WARC-Profile" ->
-                  "http://netpreserve.org/warc/1.0/revisit/identical-payload-digest",
-                "WARC-Refers-To-Target-URI" ->
-                  s"https://example.com/doc/${4 * (id / 4)}"),
-              Array.emptyByteArray)
-        val recs = Seq(
-          WarcCodec.WarcRecord("warcinfo", s"<urn:graft:$id:0>", None, date,
-            "application/warc-fields", Nil, WarcinfoBlock.getBytes(UTF_8)),
-          capture)
-        Row(id, WarcCodec.build(recs, gzipPerRecord = true))
-      }
+  def synthesizeWarcRevisits(df: DataFrame, idCol: String): DataFrame =
+  synthesizeArchives(df.select(col(idCol).cast("long").as("media_id"))) { r =>
+      val id = r.getLong(0)
+      val cg = id / 4
+      val uri = s"https://example.com/doc/$id"
+      val date = f"2026-08-12T00:00:${id % 60}%02dZ"
+      val body = htmlBody(cg, "en", s"group body $cg")
+      val block =
+        ("HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=utf-8\r\n" +
+          s"Content-Length: ${body.getBytes(UTF_8).length}\r\n\r\n" + body)
+          .getBytes(UTF_8)
+      val digest = payloadDigest(body.getBytes(UTF_8))
+      val capture =
+        if (id % 4 == 0)
+          WarcCodec.WarcRecord("response", s"<urn:graft:$id:1>", Some(uri), date,
+            "application/http;msgtype=response",
+            Seq("WARC-Payload-Digest" -> digest), block)
+        else
+          WarcCodec.WarcRecord("revisit", s"<urn:graft:$id:1>", Some(uri), date,
+            "application/http;msgtype=response",
+            Seq(
+              "WARC-Payload-Digest" -> digest,
+              "WARC-Profile" ->
+                "http://netpreserve.org/warc/1.0/revisit/identical-payload-digest",
+              "WARC-Refers-To-Target-URI" ->
+                s"https://example.com/doc/${4 * (id / 4)}"),
+            Array.emptyByteArray)
+      WarcCodec.build(Seq(warcinfo(id, date), capture), gzipPerRecord = true)
     }
-    spark.createDataFrame(rdd, WarcFileSchema)
-  }
 
   /** CDX(J) capture index — the standard lookup table over a WARC
     * corpus (what wayback machines and crawl curators key on): one row
@@ -472,9 +449,8 @@ object Warc {
     * entity. One mapPartitions pass per archive, zero shuffle — the
     * SURT/timestamp projections are column expressions on top.
     */
-  def cdxIndex(warcFiles: DataFrame): DataFrame = {
-    val spark = warcFiles.sparkSession
-    val rawSchema = StructType(Seq(
+  def cdxIndex(warcFiles: DataFrame): DataFrame =
+    perArchive(warcFiles, StructType(Seq(
       StructField("media_id", LongType, nullable = false),
       StructField("target_uri", StringType, nullable = false),
       StructField("warc_date", StringType, nullable = false),
@@ -483,41 +459,32 @@ object Warc {
       StructField("status", LongType, nullable = true),
       StructField("offset", LongType, nullable = false),
       StructField("length", LongType, nullable = false),
-      StructField("is_revisit", BooleanType, nullable = false)))
-    val idIdx = warcFiles.schema.fieldIndex("media_id")
-    val payloadIdx = warcFiles.schema.fieldIndex("payload")
-    val rdd = warcFiles.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.getLong(idIdx)
-        val bytes = r.getAs[Array[Byte]](payloadIdx)
-        WarcCodec.memberOffsets(bytes).iterator.flatMap { case (off, len) =>
-          val rec = WarcCodec.parseMemberAt(bytes, off)
-          def hdr(n: String): Option[String] =
-            rec.headers.collectFirst { case (k, v) if k.equalsIgnoreCase(n) => v }
-          rec.warcType match {
-            case "revisit" =>
-              Some(Row(id, rec.targetUri.getOrElse(""), rec.date,
-                hdr("WARC-Payload-Digest").getOrElse(""),
-                "warc/revisit", null, off.toLong, len.toLong, true))
-            case "response" if rec.contentType.startsWith("application/http") =>
-              val h = WarcCodec.parseHttpResponse(rec.block)
-              val mime = h.contentType.map(_.takeWhile(_ != ';').trim).getOrElse("")
-              val digest = hdr("WARC-Payload-Digest")
-                .getOrElse(payloadDigest(WarcCodec.decodeEntity(h)))
-              Some(Row(id, rec.targetUri.getOrElse(""), rec.date,
-                digest, mime, h.status.toLong, off.toLong, len.toLong, false))
-            case _ => None
-          }
+      StructField("is_revisit", BooleanType, nullable = false)))) { (id, bytes) =>
+      WarcCodec.memberOffsets(bytes).iterator.flatMap { case (off, len) =>
+        val rec = WarcCodec.parseMemberAt(bytes, off)
+        def hdr(n: String): Option[String] =
+          rec.headers.collectFirst { case (k, v) if k.equalsIgnoreCase(n) => v }
+        rec.warcType match {
+          case "revisit" =>
+            Some(Row(id, rec.targetUri.getOrElse(""), rec.date,
+              hdr("WARC-Payload-Digest").getOrElse(""),
+              "warc/revisit", null, off.toLong, len.toLong, true))
+          case "response" if rec.contentType.startsWith("application/http") =>
+            val h = WarcCodec.parseHttpResponse(rec.block)
+            val mime = h.contentType.map(_.takeWhile(_ != ';').trim).getOrElse("")
+            val digest = hdr("WARC-Payload-Digest")
+              .getOrElse(payloadDigest(WarcCodec.decodeEntity(h)))
+            Some(Row(id, rec.targetUri.getOrElse(""), rec.date,
+              digest, mime, h.status.toLong, off.toLong, len.toLong, false))
+          case _ => None
         }
       }
     }
-    spark.createDataFrame(rdd, rawSchema)
       .withColumn("surt", graft.text.TextAnalysis.surtKey(col("target_uri")))
       .withColumn("ts14", regexp_replace(col("warc_date"), "[^0-9]", ""))
       .select(col("media_id"), col("surt"), col("ts14"), col("digest"),
         col("mime"), col("status"), col("offset"), col("length"),
         col("is_revisit"))
-  }
 
   /** FETCH-BY-GEOMETRY verification — the loop [[cdxIndex]]'s (offset,
     * length) columns exist to close: a wayback reader never scans the
@@ -534,7 +501,6 @@ object Warc {
     * + digest equality.
     */
   def cdxFetch(warcFiles: DataFrame, cdx: DataFrame): DataFrame = {
-    val spark = warcFiles.sparkSession
     val joined = cdx.filter(!col("is_revisit"))
       .select(col("media_id"), col("digest"), col("offset"), col("length"))
       .join(warcFiles.select(col("media_id"), col("payload")), Seq("media_id"))
@@ -548,7 +514,7 @@ object Warc {
     val offIdx = joined.schema.fieldIndex("offset")
     val lenIdx = joined.schema.fieldIndex("length")
     val payIdx = joined.schema.fieldIndex("payload")
-    val rdd = joined.rdd.mapPartitions { rows =>
+    PartitionBatch.mapPartitions(joined, outSchema) { rows =>
       rows.map { r =>
         val id = r.getLong(idIdx)
         val indexed = r.getString(digIdx)
@@ -578,7 +544,6 @@ object Warc {
         Row(id, indexed, fetched.orNull, fetched.contains(indexed))
       }
     }
-    spark.createDataFrame(rdd, outSchema)
   }
 
   /** Resolve `revisit` rows against the digest index: each revisit joins
@@ -608,25 +573,11 @@ object Warc {
   /** [[synthesizeWarc]]'s charset-mix twin: response entities arrive in
     * the five labeling shapes of [[responseBlockCharset]].
     */
-  def synthesizeWarcCharsets(df: DataFrame, idCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val src = spread(df.select(col(idCol).cast("long").as("media_id"), col("text")))
-    val rdd = src.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val uri = s"https://example.com/doc/$id"
-        val date = "2026-08-12T00:00:00Z"
-        val recs = Seq(
-          WarcCodec.WarcRecord("warcinfo", s"<urn:graft:$id:0>", None, date,
-            "application/warc-fields", Nil, WarcinfoBlock.getBytes(UTF_8)),
-          WarcCodec.WarcRecord("response", s"<urn:graft:$id:1>", Some(uri), date,
-            "application/http;msgtype=response", Nil,
-            responseBlockCharset(id, r.getString(1))))
-        Row(id, WarcCodec.build(recs, gzipPerRecord = true))
-      }
+  def synthesizeWarcCharsets(df: DataFrame, idCol: String): DataFrame =
+    synthesizeArchives(df.select(col(idCol).cast("long").as("media_id"), col("text"))) { r =>
+      val id = r.getLong(0)
+      responseArchive(id, responseBlockCharset(id, r.getString(1)))
     }
-    spark.createDataFrame(rdd, WarcFileSchema)
-  }
 
   /** The crawl-capstone intake: one archive per row of a PREPARED feed
     * (`media_id`, `mode`, `text`, `lang`) whose response is a
@@ -640,79 +591,43 @@ object Warc {
     * heading, and the payload carries the tokens everything downstream
     * counts.
     */
-  def synthesizeWarcBoilerplate(feed: DataFrame): DataFrame = {
-    val spark = feed.sparkSession
-    val src = spread(feed.select(col("media_id").cast("long"), col("mode").cast("int"),
-      col("text"), col("lang")))
-    val rdd = src.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val mode = r.getInt(1)
-        val payload = charsetPayload(mode, r.getString(2))
-        val lang = r.getString(3)
-        val html =
-          s"<html><head>${charsetMetaTag(mode)}<title>Doc $id</title></head><body>" +
-            "<div id=\"nav\"><a href=\"/\">Home</a> <a href=\"/a\">About</a> " +
-            "<a href=\"/b\">More</a></div>" +
-            s"<p>$payload</p><h2>Part two</h2>" +
-            s"<p>Appendix ${lang.toUpperCase(java.util.Locale.ROOT)} stable words &amp; digits here</p>" +
-            "<div><a href=\"/x\">read more</a> teaser</div>" +
-            "<div id=\"foot\"><a>Terms</a> <a>Privacy</a> (c)</div></body></html>"
-        val uri = s"https://example.com/doc/$id"
-        val date = "2026-08-12T00:00:00Z"
-        val recs = Seq(
-          WarcCodec.WarcRecord("warcinfo", s"<urn:graft:$id:0>", None, date,
-            "application/warc-fields", Nil, WarcinfoBlock.getBytes(UTF_8)),
-          WarcCodec.WarcRecord("response", s"<urn:graft:$id:1>", Some(uri), date,
-            "application/http;msgtype=response", Nil,
-            encodeCharsetResponse(mode, html)))
-        Row(id, WarcCodec.build(recs, gzipPerRecord = true))
-      }
+  def synthesizeWarcBoilerplate(feed: DataFrame): DataFrame =
+    synthesizeArchives(feed.select(col("media_id").cast("long"), col("mode").cast("int"),
+      col("text"), col("lang"))) { r =>
+      val id = r.getLong(0)
+      val mode = r.getInt(1)
+      val payload = charsetPayload(mode, r.getString(2))
+      val lang = r.getString(3)
+      val html =
+        s"<html><head>${charsetMetaTag(mode)}<title>Doc $id</title></head><body>" +
+          "<div id=\"nav\"><a href=\"/\">Home</a> <a href=\"/a\">About</a> " +
+          "<a href=\"/b\">More</a></div>" +
+          s"<p>$payload</p><h2>Part two</h2>" +
+          s"<p>Appendix ${lang.toUpperCase(java.util.Locale.ROOT)} stable words &amp; digits here</p>" +
+          "<div><a href=\"/x\">read more</a> teaser</div>" +
+          "<div id=\"foot\"><a>Terms</a> <a>Privacy</a> (c)</div></body></html>"
+      responseArchive(id, encodeCharsetResponse(mode, html))
     }
-    spark.createDataFrame(rdd, WarcFileSchema)
-  }
 
   /** [[synthesizeWarcCharsets]] over the WIDE nine-shape labeling matrix
     * ([[responseBlockCharsetWide]]).
     */
-  def synthesizeWarcCharsetsWide(df: DataFrame, idCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val src = spread(df.select(col(idCol).cast("long").as("media_id"), col("text")))
-    val rdd = src.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val uri = s"https://example.com/doc/$id"
-        val date = "2026-08-12T00:00:00Z"
-        val recs = Seq(
-          WarcCodec.WarcRecord("warcinfo", s"<urn:graft:$id:0>", None, date,
-            "application/warc-fields", Nil, WarcinfoBlock.getBytes(UTF_8)),
-          WarcCodec.WarcRecord("response", s"<urn:graft:$id:1>", Some(uri), date,
-            "application/http;msgtype=response", Nil,
-            responseBlockCharsetWide(id, r.getString(1))))
-        Row(id, WarcCodec.build(recs, gzipPerRecord = true))
-      }
+  def synthesizeWarcCharsetsWide(df: DataFrame, idCol: String): DataFrame =
+    synthesizeArchives(df.select(col(idCol).cast("long").as("media_id"), col("text"))) { r =>
+      val id = r.getLong(0)
+      responseArchive(id, responseBlockCharsetWide(id, r.getString(1)))
     }
-    spark.createDataFrame(rdd, WarcFileSchema)
-  }
 
   /** One synthesized .warc.gz per document row (per-record gzip members —
     * the Common Crawl shape), payload a pure function of (doc_id, lang,
     * text).
     */
-  def synthesizeWarc(df: DataFrame, idCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val src = spread(df.select(
-      col(idCol).cast("long").as("media_id"), col("lang"), col("text")))
-    val rdd = src.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val payload = WarcCodec.build(
-          docRecords(id, r.getString(1), r.getString(2)), gzipPerRecord = true)
-        Row(id, payload)
-      }
+  def synthesizeWarc(df: DataFrame, idCol: String): DataFrame =
+    synthesizeArchives(df.select(
+      col(idCol).cast("long").as("media_id"), col("lang"), col("text"))) { r =>
+      WarcCodec.build(docRecords(r.getLong(0), r.getString(1), r.getString(2)),
+        gzipPerRecord = true)
     }
-    spark.createDataFrame(rdd, WarcFileSchema)
-  }
 
   // ----------------------------------------------------------------- parse
 
@@ -721,57 +636,38 @@ object Warc {
     * records) the parsed status + entity content type. The route table a
     * crawl intake filters on BEFORE any payload decode.
     */
-  def records(warcFiles: DataFrame): DataFrame = {
-    val spark = warcFiles.sparkSession
-    val idIdx = warcFiles.schema.fieldIndex("media_id")
-    val payloadIdx = warcFiles.schema.fieldIndex("payload")
-    val rdd = warcFiles.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.getLong(idIdx)
-        WarcCodec.parse(r.getAs[Array[Byte]](payloadIdx)).zipWithIndex.map {
-          case (rec, i) =>
-            // route on WARC-Type, not block shape: request blocks are HTTP
-            // too, but their first line is a request line, not a status line
-            val http =
-              if (rec.warcType == "response" &&
-                rec.contentType.startsWith("application/http"))
-                Some(WarcCodec.parseHttpResponse(rec.block))
-              else None
-            Row(id, i.toLong, rec.warcType, rec.targetUri.orNull,
-              rec.contentType, rec.block.length.toLong,
-              http.map(h => h.status.toLong).orNull,
-              http.flatMap(_.contentType).orNull)
-        }
+  def records(warcFiles: DataFrame): DataFrame =
+    perArchive(warcFiles, RecordSchema) { (id, archive) =>
+      WarcCodec.parse(archive).iterator.zipWithIndex.map { case (rec, i) =>
+        recordRow(id, i.toLong, rec)
       }
     }
-    spark.createDataFrame(rdd, RecordSchema)
+
+  /** One [[RecordSchema]] row. Routes on WARC-Type, not block shape:
+    * request blocks are HTTP too, but their first line is a request line,
+    * not a status line.
+    */
+  private def recordRow(mediaId: Long, recIdx: Long, rec: WarcCodec.WarcRecord): Row = {
+    val http =
+      if (rec.warcType == "response" && rec.contentType.startsWith("application/http"))
+        Some(WarcCodec.parseHttpResponse(rec.block))
+      else None
+    Row(mediaId, recIdx, rec.warcType, rec.targetUri.orNull,
+      rec.contentType, rec.block.length.toLong,
+      http.map(h => h.status.toLong).orNull,
+      http.flatMap(_.contentType).orNull)
   }
 
   /** The extraction feed: 200 text/html response entities, decoded UTF-8 —
     * (media_id, html). Compose [[graft.text.TextAnalysis.extractHtmlText]]
     * onto the `html` column for the full WARC → clean-text intake.
     */
-  def htmlResponses(warcFiles: DataFrame): DataFrame = {
-    val spark = warcFiles.sparkSession
-    val outSchema = StructType(Seq(
+  def htmlResponses(warcFiles: DataFrame): DataFrame =
+    perArchive(warcFiles, StructType(Seq(
       StructField("media_id", LongType, nullable = false),
-      StructField("html", StringType, nullable = false)))
-    val idIdx = warcFiles.schema.fieldIndex("media_id")
-    val payloadIdx = warcFiles.schema.fieldIndex("payload")
-    val rdd = warcFiles.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.getLong(idIdx)
-        WarcCodec.parse(r.getAs[Array[Byte]](payloadIdx)).iterator
-          .filter(rec => rec.warcType == "response" &&
-            rec.contentType.startsWith("application/http"))
-          .map(rec => WarcCodec.parseHttpResponse(rec.block))
-          .filter(h => h.status == 200 &&
-            h.contentType.exists(_.toLowerCase.startsWith("text/html")))
-          .map(h => Row(id, new String(h.body, UTF_8)))
-      }
+      StructField("html", StringType, nullable = false)))) { (id, archive) =>
+      htmlEntities(archive).map(h => Row(id, new String(h.body, UTF_8)))
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** QUARANTINE twin of [[htmlResponses]] — per-ARCHIVE containment for
     * streaming intake: a good archive emits one (ok=true) row per
@@ -782,34 +678,19 @@ object Warc {
     * audit row, not the stream. Other exception types still propagate
     * (a parser BUG should stop the job; only corrupt DATA is contained).
     */
-  def htmlTextQuarantine(warcFiles: DataFrame): DataFrame = {
-    val spark = warcFiles.sparkSession
-    val outSchema = StructType(Seq(
+  def htmlTextQuarantine(warcFiles: DataFrame): DataFrame =
+    perArchive(warcFiles, StructType(Seq(
       StructField("media_id", LongType, nullable = false),
       StructField("ok", BooleanType, nullable = false),
       StructField("decode_error", StringType, nullable = true),
-      StructField("html", StringType, nullable = true)))
-    val idIdx = warcFiles.schema.fieldIndex("media_id")
-    val payloadIdx = warcFiles.schema.fieldIndex("payload")
-    val rdd = warcFiles.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.getLong(idIdx)
-        try {
-          WarcCodec.parse(r.getAs[Array[Byte]](payloadIdx)).iterator
-            .filter(rec => rec.warcType == "response" &&
-              rec.contentType.startsWith("application/http"))
-            .map(rec => WarcCodec.parseHttpResponse(rec.block))
-            .filter(h => h.status == 200 &&
-              h.contentType.exists(_.toLowerCase.startsWith("text/html")))
-            .map(h => Row(id, true, null, new String(h.body, UTF_8)))
-            .toSeq
-        } catch {
-          case e: IllegalArgumentException => Seq(Row(id, false, e.getMessage, null))
-        }
+      StructField("html", StringType, nullable = true)))) { (id, archive) =>
+      // materialized inside the try: a torn archive throws mid-walk
+      try htmlEntities(archive).map(h => Row(id, true, null, new String(h.body, UTF_8)))
+        .toList.iterator
+      catch {
+        case e: IllegalArgumentException => Iterator.single(Row(id, false, e.getMessage, null))
       }
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** Range-parallel record inventory of ONE huge .warc.gz: the member
     * walk ([[WarcCodec.memberOffsets]] — cheap, header-hop only) yields
@@ -828,20 +709,13 @@ object Warc {
       parallelism: Int): DataFrame = {
     val offs = WarcCodec.memberOffsets(payload)
     val bc = spark.sparkContext.broadcast(payload)
-    val rdd = spark.sparkContext
-      .parallelize(offs.toIndexedSeq.zipWithIndex, math.max(parallelism, 1))
-      .map { case ((o, _), i) =>
-        val rec = WarcCodec.parseMemberAt(bc.value, o)
-        val isResp = rec.warcType == "response"
-        val http =
-          if (isResp && rec.contentType.startsWith("application/http"))
-            Some(WarcCodec.parseHttpResponse(rec.block))
-          else None
-        Row(mediaId, i.toLong, rec.warcType, rec.targetUri.orNull,
-          rec.contentType, rec.block.length.toLong,
-          http.map(h => h.status.toLong).orNull,
-          http.flatMap(_.contentType).orNull)
+    // member ordinals, split evenly over `parallelism` tasks
+    val members = spark.range(0L, offs.length.toLong, 1L, math.max(parallelism, 1)).toDF()
+    PartitionBatch.mapPartitions(members, RecordSchema) { rows =>
+      rows.map { r =>
+        val i = r.getLong(0)
+        recordRow(mediaId, i, WarcCodec.parseMemberAt(bc.value, offs(i.toInt)._1))
       }
-    spark.createDataFrame(rdd, RecordSchema)
+    }
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.operators.PartitionBatch
+
 /** Multimodal-column plumbing: image/audio/video payloads travel as opaque
   * `binary` columns beside a typed metadata struct; decode / feature-extract
   * / frame-sample run batch-parallel over partitions.
@@ -22,8 +24,10 @@ import org.apache.spark.sql.types._
   * per frame — a real camera-adjacent video path).
   * Everything Spark-side is
   * real and tested either way: the schema contract, the binary column handling, the
-  * mapPartitions batch shape (the Scala analog of a pandas-batch UDF: one
-  * decoder instantiation per partition, amortized over its rows), and the
+  * batch shape ([[graft.operators.PartitionBatch.mapPartitions]], the Scala
+  * analog of a pandas-batch UDF: one decoder instantiation per partition,
+  * amortized over its rows — every synthesizer here is `synthesize` and
+  * every payload extractor `extract`/`extractRows` on top of it), and the
   * byte-range frame sampling.
   */
 object Multimodal {
@@ -61,22 +65,74 @@ object Multimodal {
   /** Payload byte length — pure column op, no decode. */
   def payloadBytes(payload: Column): Column = length(payload).cast("long")
 
-  /** Id projection for the payload synthesizers, SPREAD across the
-    * session's shuffle parallelism. A small parquet table arrives as ONE
-    * input split (single row group), and every synthesize → mapPartitions
-    * decode chain inherits that layout — the whole codec path then runs on
-    * one core while 31 idle. The exchange here carries ONLY the id column
-    * (payload bytes are created AFTER the spread, decode stays task-local,
-    * zero payload shuffle — the scale property is unchanged), and the
-    * explicit partition count is a user repartition, so AQE's size-based
-    * coalescing (tuned for shuffle bytes, not decode CPU) cannot fold the
-    * work back onto one task.
+  /** The synthesizer shape: the id column alone, spread across the
+    * session's shuffle parallelism ([[PartitionBatch.spread]] — payload
+    * bytes are created AFTER the spread, so the exchange carries ids only
+    * and decode stays task-local), then one [[MediaSchema]] row per id,
+    * `make(id)` giving its payload and meta struct.
     */
-  private def spreadIds(df: DataFrame, idCol: String): DataFrame = {
-    val parts = df.sparkSession.sessionState.conf.numShufflePartitions
-    df.select(col(idCol).cast("long").as("media_id"))
-      .repartition(parts, col("media_id"))
+  private def synthesize(df: DataFrame, idCol: String)(
+      make: Long => (Array[Byte], Row)): DataFrame = {
+    val ids = PartitionBatch.spread(df.select(col(idCol).cast("long").as("media_id")), "media_id")
+    PartitionBatch.mapPartitions(ids, MediaSchema) { rows =>
+      rows.map { r =>
+        val id = r.getLong(0)
+        val (payload, meta) = make(id)
+        Row(id, payload, meta)
+      }
+    }
   }
+
+  /** [[synthesize]] for still images of fixed dimensions. */
+  private def synthesizeImage(df: DataFrame, idCol: String, format: String, width: Int,
+      height: Int)(encode: Long => Array[Byte]): DataFrame =
+    synthesize(df, idCol)(id => (encode(id), image(format, width, height)))
+
+  private def image(format: String, width: Int, height: Int): Row =
+    Row("image", format, width, height, null)
+
+  private def audio(format: String, durationMs: Long): Row =
+    Row("audio", format, null, null, durationMs)
+
+  private val MediaId = StructField("media_id", LongType, nullable = false)
+
+  private def longs(names: String*): Seq[StructField] =
+    names.map(StructField(_, LongType, nullable = false))
+
+  /** The extractor shape: one decode per payload, output rows `media_id`
+    * +: `fields`, `f` giving each output row's remaining values — many per
+    * payload for a frame or granule explode, which happens after the
+    * decode, so the codec still runs once per payload.
+    */
+  private def extractRows(media: DataFrame, fields: Seq[StructField])(
+      f: Array[Byte] => Iterator[Seq[Any]]): DataFrame = {
+    val idIdx = media.schema.fieldIndex("media_id")
+    val payloadIdx = media.schema.fieldIndex("payload")
+    PartitionBatch.mapPartitions(media, StructType(MediaId +: fields)) { rows =>
+      rows.flatMap { r =>
+        val id = r.getLong(idIdx)
+        f(r.getAs[Array[Byte]](payloadIdx)).map(values => Row.fromSeq(id +: values))
+      }
+    }
+  }
+
+  /** [[extractRows]] with exactly one output row per payload. */
+  private def extract(media: DataFrame, fields: Seq[StructField])(
+      f: Array[Byte] => Seq[Any]): DataFrame =
+    extractRows(media, fields)(payload => Iterator.single(f(payload)))
+
+  /** (id·a + y·b + x·c) mod m — the integer channel recipe the
+    * synthesizers are built from, so an oracle regenerates every sample
+    * arithmetically without touching bytes.
+    */
+  private def recipe(id: Long, y: Int, x: Int, a: Long, b: Long, c: Long, m: Long = 256L): Int =
+    ((id * a + y * b + x * c) % m).toInt
+
+  private def rgb(r: Int, g: Int, b: Int): Int = (r << 16) | (g << 8) | b
+
+  /** A `w`×`h` row-major raster, pixel (x, y) = `px(y, x)`. */
+  private def raster(w: Int, h: Int)(px: (Int, Int) => Int): Array[Int] =
+    Array.tabulate(w * h)(i => px(i / w, i % w))
 
   /** Byte-range "frame sample": `n` evenly spaced slices of `width` bytes.
     * For video this is the frame-sampling access pattern (seek + bounded
@@ -118,6 +174,12 @@ object Multimodal {
     }
   }
 
+  /** sample_i = ((id·7919 + i·104729) mod 65536) − 32768. */
+  private def wavRecipe(id: Long, nSamples: Int): Array[Short] =
+    Array.tabulate(nSamples) { i =>
+      (((id * 7919L + i * 104729L) % 65536L) - 32768L).toShort
+    }
+
   /** Deterministic synthetic WAV payloads (10 ms of 44.1 kHz mono 16-bit
     * PCM by default): sample_i = ((id·7919 + i·104729) mod 65536) − 32768 —
     * pure integer arithmetic, so an oracle can regenerate the identical
@@ -129,23 +191,16 @@ object Multimodal {
       df: DataFrame,
       idCol: String,
       nSamples: Int = 441,
-      sampleRate: Int = 44100): DataFrame = {
-    val spark = df.sparkSession
-    val ids = spreadIds(df, idCol)
-    val idIdx = 0
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(idIdx)
-        val samples = Array.tabulate(nSamples) { i =>
-          (((id * 7919L + i * 104729L) % 65536L) - 32768L).toShort
-        }
-        val payload = WavCodec.encode(sampleRate, 1, samples)
-        Row(id, payload, Row("audio", "wav", null, null,
-          nSamples.toLong * 1000L / sampleRate))
-      }
+      sampleRate: Int = 44100): DataFrame =
+    synthesize(df, idCol) { id =>
+      (WavCodec.encode(sampleRate, 1, wavRecipe(id, nSamples)),
+        audio("wav", nSamples.toLong * 1000L / sampleRate))
     }
-    spark.createDataFrame(rdd, MediaSchema)
-  }
+
+  private def bmpPixels(id: Long, width: Int, height: Int): Array[Int] =
+    raster(width, height) { (y, x) =>
+      rgb(recipe(id, y, x, 31, 7, 13), recipe(id, y, x, 17, 11, 5), recipe(id, y, x, 23, 3, 19))
+    }
 
   /** Deterministic synthetic BMP payloads (16×12 24-bit by default):
     * channel c of pixel (x,y) = integer recipe over (id, y, x) mod 256 —
@@ -157,25 +212,10 @@ object Multimodal {
       df: DataFrame,
       idCol: String,
       width: Int = 16,
-      height: Int = 12): DataFrame = {
-    val spark = df.sparkSession
-    val ids = spreadIds(df, idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val pixels = Array.tabulate(width * height) { i =>
-          val y = i / width; val x = i % width
-          val pr = ((id * 31L + y * 7L + x * 13L) % 256L).toInt
-          val pg = ((id * 17L + y * 11L + x * 5L) % 256L).toInt
-          val pb = ((id * 23L + y * 3L + x * 19L) % 256L).toInt
-          (pr << 16) | (pg << 8) | pb
-        }
-        val payload = BmpCodec.encode(width, height, pixels)
-        Row(id, payload, Row("image", "bmp", width, height, null))
-      }
+      height: Int = 12): DataFrame =
+    synthesizeImage(df, idCol, "bmp", width, height) { id =>
+      BmpCodec.encode(width, height, bmpPixels(id, width, height))
     }
-    spark.createDataFrame(rdd, MediaSchema)
-  }
 
   /** [[synthesizeBmp]] with per-id VARIABLE dimensions (w = 10 + 7·(id
     * mod 4), h = 6 + 5·(id mod 3) — including widths that are not
@@ -184,88 +224,51 @@ object Multimodal {
     * meta carries the true dims, pixels follow the [[synthesizeBmp]]
     * recipe.
     */
-  def synthesizeBmpVar(df: DataFrame, idCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val ids = spreadIds(df, idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val width = 10 + 7 * (id % 4).toInt
-        val height = 6 + 5 * (id % 3).toInt
-        val pixels = Array.tabulate(width * height) { i =>
-          val y = i / width; val x = i % width
-          val pr = ((id * 31L + y * 7L + x * 13L) % 256L).toInt
-          val pg = ((id * 17L + y * 11L + x * 5L) % 256L).toInt
-          val pb = ((id * 23L + y * 3L + x * 19L) % 256L).toInt
-          (pr << 16) | (pg << 8) | pb
-        }
-        Row(id, BmpCodec.encode(width, height, pixels),
-          Row("image", "bmp", width, height, null))
-      }
+  def synthesizeBmpVar(df: DataFrame, idCol: String): DataFrame =
+    synthesize(df, idCol) { id =>
+      val width = 10 + 7 * (id % 4).toInt
+      val height = 6 + 5 * (id % 3).toInt
+      (BmpCodec.encode(width, height, bmpPixels(id, width, height)),
+        image("bmp", width, height))
     }
-    spark.createDataFrame(rdd, MediaSchema)
-  }
+
+  private val PixelFeatureNames = Seq("width", "height", "n_pixels", "sum_r", "sum_g",
+    "sum_b", "luma_min", "luma_max", "edge_count")
+
+  private def pixelFeatureValues(f: BmpCodec.Features): Seq[Any] =
+    Seq(f.width, f.height, f.nPixels, f.sumR, f.sumG, f.sumB, f.lumaMin, f.lumaMax, f.edgeCount)
 
   /** ONE pixel contract, N containers: every raster codec decodes into
     * [[BmpCodec.Bmp]], so decode→(resize)→featurize and decode→resize→
-    * dHash are the same body with a different `decode` — these two
-    * helpers are that body (the per-format public verbs keep their names
-    * and docs; a schema or plumbing fix lands once, not five times).
+    * dHash are the same body with a different `decode` — this and
+    * [[extractDHashWith]] are that body (the per-format public verbs keep
+    * their names and docs; a schema or plumbing fix lands once, not five
+    * times).
     */
   private def extractPixelFeatures(
       media: DataFrame,
       decode: Array[Byte] => BmpCodec.Bmp,
-      resizeTo: Option[(Int, Int)]): DataFrame = {
-    val spark = media.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("width", LongType, nullable = false),
-      StructField("height", LongType, nullable = false),
-      StructField("n_pixels", LongType, nullable = false),
-      StructField("sum_r", LongType, nullable = false),
-      StructField("sum_g", LongType, nullable = false),
-      StructField("sum_b", LongType, nullable = false),
-      StructField("luma_min", LongType, nullable = false),
-      StructField("luma_max", LongType, nullable = false),
-      StructField("edge_count", LongType, nullable = false)))
-    val idIdx = media.schema.fieldIndex("media_id")
-    val payloadIdx = media.schema.fieldIndex("payload")
-    val rdd = media.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val decoded = decode(r.getAs[Array[Byte]](payloadIdx))
-        val img = resizeTo match {
-          case Some((w, h)) => BmpCodec.resizeNearest(decoded, w, h)
-          case None => decoded
-        }
-        val f = BmpCodec.features(img)
-        Row(r.getLong(idIdx), f.width, f.height, f.nPixels, f.sumR, f.sumG, f.sumB,
-          f.lumaMin, f.lumaMax, f.edgeCount)
-      }
+      resizeTo: Option[(Int, Int)]): DataFrame =
+    extract(media, longs(PixelFeatureNames: _*)) { payload =>
+      val decoded = decode(payload)
+      val img = resizeTo.fold(decoded) { case (w, h) => BmpCodec.resizeNearest(decoded, w, h) }
+      pixelFeatureValues(BmpCodec.features(img))
     }
-    spark.createDataFrame(rdd, outSchema)
+
+  private val DHashFields = Seq(
+    StructField("dhash", StringType, nullable = false),
+    StructField("n_ones", LongType, nullable = false))
+
+  private def dHashValues(side: Int)(img: BmpCodec.Bmp): Seq[Any] = {
+    val (bits, ones) = BmpCodec.dHash(BmpCodec.resizeNearest(img, side + 1, side))
+    Seq(bits, ones)
   }
 
   private def extractDHashWith(
       media: DataFrame,
       decode: Array[Byte] => BmpCodec.Bmp,
-      side: Int): DataFrame = {
-    val spark = media.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("dhash", StringType, nullable = false),
-      StructField("n_ones", LongType, nullable = false)))
-    val idIdx = media.schema.fieldIndex("media_id")
-    val payloadIdx = media.schema.fieldIndex("payload")
-    val rdd = media.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val img = BmpCodec.resizeNearest(
-          decode(r.getAs[Array[Byte]](payloadIdx)), side + 1, side)
-        val (bits, ones) = BmpCodec.dHash(img)
-        Row(r.getLong(idIdx), bits, ones)
-      }
-    }
-    spark.createDataFrame(rdd, outSchema)
-  }
+      side: Int): DataFrame =
+    extract(media, DHashFields)(payload => dHashValues(side)(decode(payload)))
 
   /** REAL decode+featurize for `format = 'bmp'` payloads — same
     * one-decoder-per-partition batch shape as [[extractWavFeatures]].
@@ -279,40 +282,34 @@ object Multimodal {
       resizeTo: Option[(Int, Int)] = None): DataFrame =
     extractPixelFeatures(media, BmpCodec.decode _, resizeTo)
 
+  /** The audio twin of [[extractPixelFeatures]]: every audio codec
+    * decodes into [[WavCodec.Wav]], so decode → (decimate) → featurize is
+    * one body with a different `decode`.
+    */
+  private def extractAudioFeatures(
+      media: DataFrame,
+      decode: Array[Byte] => WavCodec.Wav,
+      decimateBy: Int): DataFrame =
+    extract(media, longs("sr", "channels", "n_samples", "duration_ms", "peak_min", "peak_max",
+      "zero_crossings", "sum_samples", "sum_squares") :+
+      StructField("rms", DoubleType, nullable = false)) { payload =>
+      val w0 = decode(payload)
+      // decimate (decode → resample → featurize — the audio twin of the
+      // image decode → resize → extract pipeline) before features
+      val w = if (decimateBy == 1) w0 else WavCodec.decimate(w0, decimateBy)
+      val f = WavCodec.features(w)
+      // Seq[Any]: a Long/Double mix would otherwise widen the Longs to Double
+      Seq[Any](f.sampleRate, f.channels, f.nSamples, f.durationMs,
+        f.peakMin, f.peakMax, f.zeroCrossings, f.sumSamples, f.sumSquares, f.rms)
+    }
+
   /** REAL decode+featurize for `format = 'wav'` payloads: parses the RIFF
     * container and 16-bit PCM per row ([[WavCodec.decode]]) inside the same
     * one-decoder-per-partition batch shape as [[extractFeatures]], emitting
     * the exact integer features (+ rms) of [[WavCodec.features]].
     */
-  def extractWavFeatures(media: DataFrame, decimateBy: Int = 1): DataFrame = {
-    val spark = media.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("sr", LongType, nullable = false),
-      StructField("channels", LongType, nullable = false),
-      StructField("n_samples", LongType, nullable = false),
-      StructField("duration_ms", LongType, nullable = false),
-      StructField("peak_min", LongType, nullable = false),
-      StructField("peak_max", LongType, nullable = false),
-      StructField("zero_crossings", LongType, nullable = false),
-      StructField("sum_samples", LongType, nullable = false),
-      StructField("sum_squares", LongType, nullable = false),
-      StructField("rms", DoubleType, nullable = false)))
-    val idIdx = media.schema.fieldIndex("media_id")
-    val payloadIdx = media.schema.fieldIndex("payload")
-    val rdd = media.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val w0 = WavCodec.decode(r.getAs[Array[Byte]](payloadIdx))
-        // decimate (decode → resample → featurize — the audio twin of the
-        // image decode → resize → extract pipeline) before features
-        val w = if (decimateBy == 1) w0 else WavCodec.decimate(w0, decimateBy)
-        val f = WavCodec.features(w)
-        Row(r.getLong(idIdx), f.sampleRate, f.channels, f.nSamples, f.durationMs,
-          f.peakMin, f.peakMax, f.zeroCrossings, f.sumSamples, f.sumSquares, f.rms)
-      }
-    }
-    spark.createDataFrame(rdd, outSchema)
-  }
+  def extractWavFeatures(media: DataFrame, decimateBy: Int = 1): DataFrame =
+    extractAudioFeatures(media, WavCodec.decode _, decimateBy)
 
   /** Perceptual image fingerprints: REAL decode → nearest-neighbor resize to
     * `side`×`side` → [[BmpCodec.aHash]] (luma-vs-mean bit per pixel, integer
@@ -322,24 +319,14 @@ object Multimodal {
     * binary media unchanged. Same one-decoder-per-partition batch shape as
     * [[extractBmpFeatures]].
     */
-  def extractBmpAHash(media: DataFrame, side: Int = 8): DataFrame = {
-    val spark = media.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
+  def extractBmpAHash(media: DataFrame, side: Int = 8): DataFrame =
+    extract(media, Seq(
       StructField("ahash", StringType, nullable = false),
-      StructField("n_ones", LongType, nullable = false)))
-    val idIdx = media.schema.fieldIndex("media_id")
-    val payloadIdx = media.schema.fieldIndex("payload")
-    val rdd = media.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val img = BmpCodec.resizeNearest(
-          BmpCodec.decode(r.getAs[Array[Byte]](payloadIdx)), side, side)
-        val (bits, ones) = BmpCodec.aHash(img)
-        Row(r.getLong(idIdx), bits, ones)
-      }
+      StructField("n_ones", LongType, nullable = false))) { payload =>
+      val (bits, ones) =
+        BmpCodec.aHash(BmpCodec.resizeNearest(BmpCodec.decode(payload), side, side))
+      Seq(bits, ones)
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** Difference-hash fingerprints: REAL decode → nearest-neighbor resize to
     * (side+1)×side → [[BmpCodec.dHash]] horizontal-gradient bits — the
@@ -355,25 +342,12 @@ object Multimodal {
     * windows over. Same batch shape; the per-row explode happens after the
     * decode, so the codec still runs once per payload.
     */
-  def extractWavFrameFeatures(media: DataFrame, frameLen: Int = 64): DataFrame = {
-    val spark = media.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("frame", LongType, nullable = false),
-      StructField("zero_crossings", LongType, nullable = false),
-      StructField("sum_squares", LongType, nullable = false)))
-    val idIdx = media.schema.fieldIndex("media_id")
-    val payloadIdx = media.schema.fieldIndex("payload")
-    val rdd = media.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val w = WavCodec.decode(r.getAs[Array[Byte]](payloadIdx))
-        WavCodec.frameFeatures(w, frameLen).iterator.map { case (f, zc, ssq) =>
-          Row(r.getLong(idIdx), f, zc, ssq)
-        }
+  def extractWavFrameFeatures(media: DataFrame, frameLen: Int = 64): DataFrame =
+    extractRows(media, longs("frame", "zero_crossings", "sum_squares")) { payload =>
+      WavCodec.frameFeatures(WavCodec.decode(payload), frameLen).iterator.map {
+        case (f, zc, ssq) => Seq(f, zc, ssq)
       }
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** Voice-activity segmentation over a frame-energy table (the
     * utterance-extraction step an ASR corpus pipeline runs between decode
@@ -412,28 +386,25 @@ object Multimodal {
         col("end_frame"), col("n_frames"), col("sum_energy"))
   }
 
+  /** Frame-energy sign-of-delta fingerprint ([[WavCodec.energyFingerprint]])
+    * over any audio codec's decode.
+    */
+  private def extractFingerprint(
+      media: DataFrame,
+      decode: Array[Byte] => WavCodec.Wav,
+      frameLen: Int): DataFrame =
+    extract(media, longs("n_frames") ++ Seq(StructField("fp", StringType, nullable = false)) ++
+      longs("sum_energy")) { payload =>
+      val (nf, bits, tot) = WavCodec.energyFingerprint(decode(payload), frameLen)
+      Seq(nf, bits, tot)
+    }
+
   /** Acoustic fingerprints: REAL decode → [[WavCodec.energyFingerprint]]
     * (frame-energy delta signs, exact integer arithmetic) — the audio twin
     * of [[extractBmpAHash]], same batch shape.
     */
-  def extractWavFingerprint(media: DataFrame, frameLen: Int = 44): DataFrame = {
-    val spark = media.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("n_frames", LongType, nullable = false),
-      StructField("fp", StringType, nullable = false),
-      StructField("sum_energy", LongType, nullable = false)))
-    val idIdx = media.schema.fieldIndex("media_id")
-    val payloadIdx = media.schema.fieldIndex("payload")
-    val rdd = media.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val w = WavCodec.decode(r.getAs[Array[Byte]](payloadIdx))
-        val (nf, bits, tot) = WavCodec.energyFingerprint(w, frameLen)
-        Row(r.getLong(idIdx), nf, bits, tot)
-      }
-    }
-    spark.createDataFrame(rdd, outSchema)
-  }
+  def extractWavFingerprint(media: DataFrame, frameLen: Int = 44): DataFrame =
+    extractFingerprint(media, WavCodec.decode _, frameLen)
 
   /** FLAC-decoded acoustic fingerprint — [[extractWavFingerprint]]'s
     * compressed twin: the same frame-energy sign-of-delta bitstring over
@@ -441,24 +412,8 @@ object Multimodal {
     * container into the shared [[WavCodec.Wav]] is exactly this:
     * fingerprint/dedup verbs compose unchanged across codecs.
     */
-  def extractFlacFingerprint(media: DataFrame, frameLen: Int = 44): DataFrame = {
-    val spark = media.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("n_frames", LongType, nullable = false),
-      StructField("fp", StringType, nullable = false),
-      StructField("sum_energy", LongType, nullable = false)))
-    val idIdx = media.schema.fieldIndex("media_id")
-    val payloadIdx = media.schema.fieldIndex("payload")
-    val rdd = media.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val w = FlacCodec.decode(r.getAs[Array[Byte]](payloadIdx))
-        val (nf, bits, tot) = WavCodec.energyFingerprint(w, frameLen)
-        Row(r.getLong(idIdx), nf, bits, tot)
-      }
-    }
-    spark.createDataFrame(rdd, outSchema)
-  }
+  def extractFlacFingerprint(media: DataFrame, frameLen: Int = 44): DataFrame =
+    extractFingerprint(media, FlacCodec.decode _, frameLen)
 
   /** [[synthesizeWav]]'s COMPRESSED twin: the same integer sample recipe
     * encoded as mono IMA ADPCM (WAVE format 0x11 — [[WavCodec
@@ -474,22 +429,11 @@ object Multimodal {
       idCol: String,
       nSamples: Int = 202,
       samplesPerBlock: Int = 101,
-      sampleRate: Int = 8000): DataFrame = {
-    val spark = df.sparkSession
-    val ids = spreadIds(df, idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val samples = Array.tabulate(nSamples) { i =>
-          (((id * 7919L + i * 104729L) % 65536L) - 32768L).toShort
-        }
-        val payload = WavCodec.encodeAdpcm(sampleRate, samples, samplesPerBlock)
-        Row(id, payload, Row("audio", "wav-adpcm", null, null,
-          nSamples.toLong * 1000L / sampleRate))
-      }
+      sampleRate: Int = 8000): DataFrame =
+    synthesize(df, idCol) { id =>
+      (WavCodec.encodeAdpcm(sampleRate, wavRecipe(id, nSamples), samplesPerBlock),
+        audio("wav-adpcm", nSamples.toLong * 1000L / sampleRate))
     }
-    spark.createDataFrame(rdd, MediaSchema)
-  }
 
   /** [[synthesizeWav]]'s LOSSLESSLY-compressed twin: integer sample
     * recipes encoded as real FLAC ([[FlacCodec.encode]] — fixed
@@ -507,20 +451,11 @@ object Multimodal {
       idCol: String,
       nSamples: Int = 600,
       blockSize: Int = 256,
-      sampleRate: Int = 16000): DataFrame = {
-    val spark = df.sparkSession
-    val ids = spreadIds(df, idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val samples = flacRecipe(id, nSamples)
-        val payload = FlacCodec.encode(sampleRate, 1, samples, blockSize)
-        Row(id, payload, Row("audio", "flac", null, null,
-          nSamples.toLong * 1000L / sampleRate))
-      }
+      sampleRate: Int = 16000): DataFrame =
+    synthesize(df, idCol) { id =>
+      (FlacCodec.encode(sampleRate, 1, flacRecipe(id, nSamples), blockSize),
+        audio("flac", nSamples.toLong * 1000L / sampleRate))
     }
-    spark.createDataFrame(rdd, MediaSchema)
-  }
 
   /** The q318 synthesis recipe (shared with its spec): doc m = id mod 3 —
     * m=0 constant `(id·13 mod 200)−100`; m=1 sawtooth
@@ -562,25 +497,16 @@ object Multimodal {
       idCol: String,
       nFrames: Int = 600,
       blockSize: Int = 256,
-      sampleRate: Int = 16000): DataFrame = {
-    val spark = df.sparkSession
-    val ids = spreadIds(df, idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val mode = (id % 3L) match {
-          case 0L => "left-side"
-          case 1L => "right-side"
-          case _ => "mid-side"
-        }
-        val samples = flacStereoRecipe(id, nFrames)
-        val payload = FlacCodec.encode(sampleRate, 2, samples, blockSize, mode)
-        Row(id, payload, Row("audio", "flac", null, null,
-          nFrames.toLong * 1000L / sampleRate))
+      sampleRate: Int = 16000): DataFrame =
+    synthesize(df, idCol) { id =>
+      val mode = (id % 3L) match {
+        case 0L => "left-side"
+        case 1L => "right-side"
+        case _ => "mid-side"
       }
+      (FlacCodec.encode(sampleRate, 2, flacStereoRecipe(id, nFrames), blockSize, mode),
+        audio("flac", nFrames.toLong * 1000L / sampleRate))
     }
-    spark.createDataFrame(rdd, MediaSchema)
-  }
 
   /** REAL FLAC decode+featurize: container + frame + subframe + Rice
     * decode per row ([[FlacCodec.decode]]) in the one-decoder-per-
@@ -588,33 +514,26 @@ object Multimodal {
     * [[WavCodec.features]] — the audio pipeline is codec-agnostic past
     * decode, which is the point of decoding to the shared [[WavCodec.Wav]].
     */
-  def extractFlacFeatures(media: DataFrame, decimateBy: Int = 1): DataFrame = {
-    val spark = media.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("sr", LongType, nullable = false),
-      StructField("channels", LongType, nullable = false),
-      StructField("n_samples", LongType, nullable = false),
-      StructField("duration_ms", LongType, nullable = false),
-      StructField("peak_min", LongType, nullable = false),
-      StructField("peak_max", LongType, nullable = false),
-      StructField("zero_crossings", LongType, nullable = false),
-      StructField("sum_samples", LongType, nullable = false),
-      StructField("sum_squares", LongType, nullable = false),
-      StructField("rms", DoubleType, nullable = false)))
-    val idIdx = media.schema.fieldIndex("media_id")
-    val payloadIdx = media.schema.fieldIndex("payload")
-    val rdd = media.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val w0 = FlacCodec.decode(r.getAs[Array[Byte]](payloadIdx))
-        val w = if (decimateBy == 1) w0 else WavCodec.decimate(w0, decimateBy)
-        val f = WavCodec.features(w)
-        Row(r.getLong(idIdx), f.sampleRate, f.channels, f.nSamples, f.durationMs,
-          f.peakMin, f.peakMax, f.zeroCrossings, f.sumSamples, f.sumSquares, f.rms)
-      }
-    }
-    spark.createDataFrame(rdd, outSchema)
-  }
+  def extractFlacFeatures(media: DataFrame, decimateBy: Int = 1): DataFrame =
+    extractAudioFeatures(media, FlacCodec.decode _, decimateBy)
+
+  /** Palette entry j = ((j·31+7) mod 256, (j·17+3) mod 256, (j·23+11) mod 256). */
+  private def gifColor(j: Int): Int = rgb((j * 31 + 7) % 256, (j * 17 + 3) % 256, (j * 23 + 11) % 256)
+
+  /** The shared 256-entry palette: built once per JVM and only read, so
+    * every task shares it.
+    */
+  private val GifPalette: Array[Int] = Array.tabulate(256)(gifColor)
+
+  /** Palette indices (base + y·31 + x·7) mod 256 — base id·13 for stills,
+    * plus a per-scene term for animation frames.
+    */
+  private def gifIndices(base: Long, width: Int, height: Int): Array[Int] =
+    raster(width, height)((y, x) => ((base + y * 31L + x * 7L) % 256L).toInt)
+
+  /** The palette-composed pixels of [[synthesizeGif]]'s GIF for `id`. */
+  private def gifTwinPixels(id: Long, width: Int, height: Int): Array[Int] =
+    gifIndices(id * 13L, width, height).map(gifColor)
 
   /** Deterministic synthetic GIF payloads (16×12, 256-entry palette by
     * default): palette index of pixel (x,y) = (id·13 + y·31 + x·7) mod 256
@@ -628,25 +547,11 @@ object Multimodal {
       df: DataFrame,
       idCol: String,
       width: Int = 16,
-      height: Int = 12): DataFrame = {
-    val spark = df.sparkSession
-    val ids = spreadIds(df, idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      val palette = Array.tabulate(256) { j =>
-        (((j * 31 + 7) % 256) << 16) | (((j * 17 + 3) % 256) << 8) | ((j * 23 + 11) % 256)
-      }
-      rows.map { r =>
-        val id = r.getLong(0)
-        val indices = Array.tabulate(width * height) { i =>
-          val y = i / width; val x = i % width
-          ((id * 13L + y * 31L + x * 7L) % 256L).toByte
-        }
-        val payload = GifCodec.encode(width, height, 8, palette, indices)
-        Row(id, payload, Row("image", "gif", width, height, null))
-      }
+      height: Int = 12): DataFrame =
+    synthesizeImage(df, idCol, "gif", width, height) { id =>
+      GifCodec.encode(width, height, 8, GifPalette,
+        gifIndices(id * 13L, width, height).map(_.toByte))
     }
-    spark.createDataFrame(rdd, MediaSchema)
-  }
 
   /** [[synthesizeBmp]] generating the SAME pixels as [[synthesizeGif]]
     * (the palette-composed recipe) — the cross-container twin: for each
@@ -658,23 +563,10 @@ object Multimodal {
       df: DataFrame,
       idCol: String,
       width: Int = 16,
-      height: Int = 12): DataFrame = {
-    val spark = df.sparkSession
-    val ids = spreadIds(df, idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val pixels = Array.tabulate(width * height) { i =>
-          val y = i / width; val x = i % width
-          val j = ((id * 13L + y * 31L + x * 7L) % 256L).toInt
-          (((j * 31 + 7) % 256) << 16) | (((j * 17 + 3) % 256) << 8) | ((j * 23 + 11) % 256)
-        }
-        val payload = BmpCodec.encode(width, height, pixels)
-        Row(id, payload, Row("image", "bmp", width, height, null))
-      }
+      height: Int = 12): DataFrame =
+    synthesizeImage(df, idCol, "bmp", width, height) { id =>
+      BmpCodec.encode(width, height, gifTwinPixels(id, width, height))
     }
-    spark.createDataFrame(rdd, MediaSchema)
-  }
 
   /** REAL GIF decode+featurize — LZW decompression + palette lookup per
     * row ([[GifCodec.decode]]) into the SHARED pixel frame, then the exact
@@ -696,6 +588,28 @@ object Multimodal {
   def extractGifDHash(media: DataFrame, side: Int = 8): DataFrame =
     extractDHashWith(media, GifCodec.decode _, side)
 
+  /** PNG channel recipes: pr = (id·37+y·5+x·11), pg = (id·41+y·13+x·3),
+    * pb = (id·43+y·7+x·17), each mod 256.
+    */
+  private def pngRgb(id: Long, y: Int, x: Int): Int =
+    rgb(recipe(id, y, x, 37, 5, 11), recipe(id, y, x, 41, 13, 3), recipe(id, y, x, 43, 7, 17))
+
+  /** PNG gray sample v = (id·53 + y·9 + x·29) mod 256. */
+  private def pngGray(id: Long, width: Int, height: Int): Array[Int] =
+    raster(width, height)(recipe(id, _, _, 53, 9, 29))
+
+  /** Per-channel primes (p₀, p₁, p₂) of the 16-bit PNG recipes: r, g, b, a. */
+  private val Png16Primes =
+    Seq((257L, 1031L, 4099L), (263L, 1033L, 4111L), (269L, 1039L, 4127L), (271L, 1049L, 4129L))
+
+  /** 16-bit PNG channels c16 = (id·p₀ + y·p₁ + x·p₂) mod 65536, the first
+    * `n` of r, g, b, a.
+    */
+  private def png16(id: Long, width: Int, height: Int, n: Int): Seq[Array[Int]] =
+    Png16Primes.take(n).map { case (a, b, c) =>
+      raster(width, height)(recipe(id, _, _, a, b, c, 65536L))
+    }
+
   /** Deterministic synthetic PNG payloads (16×12 8-bit truecolor by
     * default): channel recipe pr = (id·37+y·5+x·11) mod 256,
     * pg = (id·41+y·13+x·3) mod 256, pb = (id·43+y·7+x·17) mod 256 — the
@@ -710,25 +624,10 @@ object Multimodal {
       idCol: String,
       width: Int = 16,
       height: Int = 12,
-      interlaced: Boolean = false): DataFrame = {
-    val spark = df.sparkSession
-    val ids = spreadIds(df, idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val pixels = Array.tabulate(width * height) { i =>
-          val y = i / width; val x = i % width
-          val pr = ((id * 37L + y * 5L + x * 11L) % 256L).toInt
-          val pg = ((id * 41L + y * 13L + x * 3L) % 256L).toInt
-          val pb = ((id * 43L + y * 7L + x * 17L) % 256L).toInt
-          (pr << 16) | (pg << 8) | pb
-        }
-        val payload = PngCodec.encode(width, height, pixels, interlaced)
-        Row(id, payload, Row("image", "png", width, height, null))
-      }
+      interlaced: Boolean = false): DataFrame =
+    synthesizeImage(df, idCol, "png", width, height) { id =>
+      PngCodec.encode(width, height, raster(width, height)(pngRgb(id, _, _)), interlaced)
     }
-    spark.createDataFrame(rdd, MediaSchema)
-  }
 
   /** Paletted (color type 3) synthetic PNGs carrying the GIF recipe —
     * palette index (id·13 + y·31 + x·7) mod 256, palette entry j =
@@ -741,25 +640,11 @@ object Multimodal {
       idCol: String,
       width: Int = 16,
       height: Int = 12,
-      interlaced: Boolean = false): DataFrame = {
-    val spark = df.sparkSession
-    val ids = spreadIds(df, idCol)
-    val palette = Array.tabulate(256) { j =>
-      (((j * 31 + 7) % 256) << 16) | (((j * 17 + 3) % 256) << 8) | ((j * 23 + 11) % 256)
+      interlaced: Boolean = false): DataFrame =
+    synthesizeImage(df, idCol, "png", width, height) { id =>
+      PngCodec.encodePalette(width, height, gifIndices(id * 13L, width, height),
+        GifPalette, interlaced)
     }
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val indices = Array.tabulate(width * height) { i =>
-          val y = i / width; val x = i % width
-          ((id * 13L + y * 31L + x * 7L) % 256L).toInt
-        }
-        val payload = PngCodec.encodePalette(width, height, indices, palette, interlaced)
-        Row(id, payload, Row("image", "png", width, height, null))
-      }
-    }
-    spark.createDataFrame(rdd, MediaSchema)
-  }
 
   /** [[synthesizePng]] generating the SAME pixels as [[synthesizeGif]]
     * (the palette-composed recipe) — the third corner of the cross-format
@@ -771,23 +656,10 @@ object Multimodal {
       df: DataFrame,
       idCol: String,
       width: Int = 16,
-      height: Int = 12): DataFrame = {
-    val spark = df.sparkSession
-    val ids = spreadIds(df, idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val pixels = Array.tabulate(width * height) { i =>
-          val y = i / width; val x = i % width
-          val j = ((id * 13L + y * 31L + x * 7L) % 256L).toInt
-          (((j * 31 + 7) % 256) << 16) | (((j * 17 + 3) % 256) << 8) | ((j * 23 + 11) % 256)
-        }
-        val payload = PngCodec.encode(width, height, pixels)
-        Row(id, payload, Row("image", "png", width, height, null))
-      }
+      height: Int = 12): DataFrame =
+    synthesizeImage(df, idCol, "png", width, height) { id =>
+      PngCodec.encode(width, height, gifTwinPixels(id, width, height))
     }
-    spark.createDataFrame(rdd, MediaSchema)
-  }
 
   /** Grayscale (color type 0) synthetic PNGs — the scan/document-image
     * shape: sample v = (id·53 + y·9 + x·29) mod 256, widened to
@@ -799,22 +671,10 @@ object Multimodal {
       idCol: String,
       width: Int = 16,
       height: Int = 12,
-      interlaced: Boolean = false): DataFrame = {
-    val spark = df.sparkSession
-    val ids = spreadIds(df, idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val gray = Array.tabulate(width * height) { i =>
-          val y = i / width; val x = i % width
-          ((id * 53L + y * 9L + x * 29L) % 256L).toInt
-        }
-        val payload = PngCodec.encodeGray(width, height, gray, interlaced)
-        Row(id, payload, Row("image", "png", width, height, null))
-      }
+      interlaced: Boolean = false): DataFrame =
+    synthesizeImage(df, idCol, "png", width, height) { id =>
+      PngCodec.encodeGray(width, height, pngGray(id, width, height), interlaced)
     }
-    spark.createDataFrame(rdd, MediaSchema)
-  }
 
   /** RGBA (color type 6) synthetic PNGs — the web's most common PNG
     * shape: the [[synthesizePng]] channel recipes plus an alpha plane
@@ -827,26 +687,13 @@ object Multimodal {
       idCol: String,
       width: Int = 16,
       height: Int = 12,
-      interlaced: Boolean = false): DataFrame = {
-    val spark = df.sparkSession
-    val ids = spreadIds(df, idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val argb = Array.tabulate(width * height) { i =>
-          val y = i / width; val x = i % width
-          val pr = ((id * 37L + y * 5L + x * 11L) % 256L).toInt
-          val pg = ((id * 41L + y * 13L + x * 3L) % 256L).toInt
-          val pb = ((id * 43L + y * 7L + x * 17L) % 256L).toInt
-          val pa = ((id * 29L + y * 3L + x * 13L) % 256L).toInt
-          (pa << 24) | (pr << 16) | (pg << 8) | pb
-        }
-        val payload = PngCodec.encodeRgba(width, height, argb, interlaced)
-        Row(id, payload, Row("image", "png", width, height, null))
+      interlaced: Boolean = false): DataFrame =
+    synthesizeImage(df, idCol, "png", width, height) { id =>
+      val argb = raster(width, height) { (y, x) =>
+        (recipe(id, y, x, 29, 3, 13) << 24) | pngRgb(id, y, x)
       }
+      PngCodec.encodeRgba(width, height, argb, interlaced)
     }
-    spark.createDataFrame(rdd, MediaSchema)
-  }
 
   /** Gray+alpha (color type 4) synthetic PNGs: the [[synthesizePngGray]]
     * sample recipe plus alpha a = (id·19 + y·23 + x·5) mod 256, decoded
@@ -857,28 +704,11 @@ object Multimodal {
       idCol: String,
       width: Int = 16,
       height: Int = 12,
-      interlaced: Boolean = false): DataFrame = {
-    val spark = df.sparkSession
-    val ids = spreadIds(df, idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val n = width * height
-        val gray = new Array[Int](n)
-        val alpha = new Array[Int](n)
-        var i = 0
-        while (i < n) {
-          val y = i / width; val x = i % width
-          gray(i) = ((id * 53L + y * 9L + x * 29L) % 256L).toInt
-          alpha(i) = ((id * 19L + y * 23L + x * 5L) % 256L).toInt
-          i += 1
-        }
-        val payload = PngCodec.encodeGrayAlpha(width, height, gray, alpha, interlaced)
-        Row(id, payload, Row("image", "png", width, height, null))
-      }
+      interlaced: Boolean = false): DataFrame =
+    synthesizeImage(df, idCol, "png", width, height) { id =>
+      PngCodec.encodeGrayAlpha(width, height, pngGray(id, width, height),
+        raster(width, height)(recipe(id, _, _, 19, 23, 5)), interlaced)
     }
-    spark.createDataFrame(rdd, MediaSchema)
-  }
 
   /** 16-BIT grayscale (depth 16, color type 0) synthetic PNGs — the
     * scan/medical/archival shape: v16 = (id·257 + y·1031 + x·4099) mod
@@ -890,22 +720,10 @@ object Multimodal {
       idCol: String,
       width: Int = 16,
       height: Int = 12,
-      interlaced: Boolean = false): DataFrame = {
-    val spark = df.sparkSession
-    val ids = spreadIds(df, idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val gray = Array.tabulate(width * height) { i =>
-          val y = i / width; val x = i % width
-          ((id * 257L + y * 1031L + x * 4099L) % 65536L).toInt
-        }
-        val payload = PngCodec.encodeGray16(width, height, gray, interlaced)
-        Row(id, payload, Row("image", "png", width, height, null))
-      }
+      interlaced: Boolean = false): DataFrame =
+    synthesizeImage(df, idCol, "png", width, height) { id =>
+      PngCodec.encodeGray16(width, height, png16(id, width, height, 1).head, interlaced)
     }
-    spark.createDataFrame(rdd, MediaSchema)
-  }
 
   /** 16-BIT TRUECOLOR (depth 16, color type 2) synthetic PNGs — the
     * [[synthesizePngGray16]] recipe per channel: c16 = (id·p₀ + y·p₁ +
@@ -917,28 +735,11 @@ object Multimodal {
       idCol: String,
       width: Int = 16,
       height: Int = 12,
-      interlaced: Boolean = false): DataFrame = {
-    val spark = df.sparkSession
-    val ids = spreadIds(df, idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val n = width * height
-        val cr = new Array[Int](n); val cg = new Array[Int](n); val cb = new Array[Int](n)
-        var i = 0
-        while (i < n) {
-          val y = i / width; val x = i % width
-          cr(i) = ((id * 257L + y * 1031L + x * 4099L) % 65536L).toInt
-          cg(i) = ((id * 263L + y * 1033L + x * 4111L) % 65536L).toInt
-          cb(i) = ((id * 269L + y * 1039L + x * 4127L) % 65536L).toInt
-          i += 1
-        }
-        val payload = PngCodec.encodeRgb16(width, height, cr, cg, cb, interlaced)
-        Row(id, payload, Row("image", "png", width, height, null))
-      }
+      interlaced: Boolean = false): DataFrame =
+    synthesizeImage(df, idCol, "png", width, height) { id =>
+      val Seq(cr, cg, cb) = png16(id, width, height, 3)
+      PngCodec.encodeRgb16(width, height, cr, cg, cb, interlaced)
     }
-    spark.createDataFrame(rdd, MediaSchema)
-  }
 
   /** 16-BIT RGBA (depth 16, color type 6) synthetic PNGs: the
     * [[synthesizePngRgb16]] channels plus a16 = (id·271 + y·1049 +
@@ -950,30 +751,11 @@ object Multimodal {
       idCol: String,
       width: Int = 16,
       height: Int = 12,
-      interlaced: Boolean = false): DataFrame = {
-    val spark = df.sparkSession
-    val ids = spreadIds(df, idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val n = width * height
-        val cr = new Array[Int](n); val cg = new Array[Int](n)
-        val cb = new Array[Int](n); val ca = new Array[Int](n)
-        var i = 0
-        while (i < n) {
-          val y = i / width; val x = i % width
-          cr(i) = ((id * 257L + y * 1031L + x * 4099L) % 65536L).toInt
-          cg(i) = ((id * 263L + y * 1033L + x * 4111L) % 65536L).toInt
-          cb(i) = ((id * 269L + y * 1039L + x * 4127L) % 65536L).toInt
-          ca(i) = ((id * 271L + y * 1049L + x * 4129L) % 65536L).toInt
-          i += 1
-        }
-        val payload = PngCodec.encodeRgba16(width, height, cr, cg, cb, ca, interlaced)
-        Row(id, payload, Row("image", "png", width, height, null))
-      }
+      interlaced: Boolean = false): DataFrame =
+    synthesizeImage(df, idCol, "png", width, height) { id =>
+      val Seq(cr, cg, cb, ca) = png16(id, width, height, 4)
+      PngCodec.encodeRgba16(width, height, cr, cg, cb, ca, interlaced)
     }
-    spark.createDataFrame(rdd, MediaSchema)
-  }
 
   /** [[synthesizePngPalette]] plus tRNS: entry j's alpha = (j·7 + 13)
     * mod 256 — transparency without an alpha channel, the GIF-shaped
@@ -986,25 +768,11 @@ object Multimodal {
       width: Int = 16,
       height: Int = 12,
       interlaced: Boolean = false): DataFrame = {
-    val spark = df.sparkSession
-    val ids = spreadIds(df, idCol)
-    val palette = Array.tabulate(256) { j =>
-      (((j * 31 + 7) % 256) << 16) | (((j * 17 + 3) % 256) << 8) | ((j * 23 + 11) % 256)
-    }
     val alphas = Array.tabulate(256)(j => (j * 7 + 13) % 256)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val indices = Array.tabulate(width * height) { i =>
-          val y = i / width; val x = i % width
-          ((id * 13L + y * 31L + x * 7L) % 256L).toInt
-        }
-        val payload = PngCodec.encodePaletteTrns(
-          width, height, indices, palette, alphas, interlaced)
-        Row(id, payload, Row("image", "png", width, height, null))
-      }
+    synthesizeImage(df, idCol, "png", width, height) { id =>
+      PngCodec.encodePaletteTrns(width, height, gifIndices(id * 13L, width, height),
+        GifPalette, alphas, interlaced)
     }
-    spark.createDataFrame(rdd, MediaSchema)
   }
 
   /** REAL PNG decode+featurize — zlib inflate + per-scanline unfilter per
@@ -1025,6 +793,42 @@ object Multimodal {
   def extractPngDHash(media: DataFrame, side: Int = 8): DataFrame =
     extractDHashWith(media, PngCodec.decode _, side)
 
+  /** Block-constant grayscale pixels: block (by, bx) of `tile`×`tile`
+    * has luma (base + by·71 + bx·113) mod 256.
+    */
+  private def grayBlocks(base: Long, w: Int, h: Int, tile: Int): Array[Int] =
+    raster(w, h) { (y, x) =>
+      val v = ((base + (y / tile) * 71L + (x / tile) * 113L) % 256L).toInt
+      rgb(v, v, v)
+    }
+
+  /** [[synthesizeJpeg]] and its progressive twin: the same block-constant
+    * pixels through a different `encode(w, h, pixels)`.
+    */
+  private def synthesizeJpegWith(
+      df: DataFrame,
+      idCol: String,
+      grayscale: Boolean,
+      blocksW: Int,
+      blocksH: Int,
+      subsample420: Boolean)(encode: (Int, Int, Array[Int]) => Array[Byte]): DataFrame = {
+    // 4:2:0 constants must hold per 16×16 MCU (so the downsampled chroma
+    // block is constant too — DC-only on every component); 4:4:4/gray per
+    // 8×8 block
+    val tile = if (subsample420) 16 else 8
+    val w = blocksW * tile; val h = blocksH * tile
+    synthesizeImage(df, idCol, "jpeg", w, h) { id =>
+      val pixels =
+        if (grayscale) grayBlocks(id * 29L, w, h, tile)
+        else raster(w, h) { (y, x) =>
+          val by = y / tile; val bx = x / tile
+          rgb(recipe(id, by, bx, 19, 53, 101), recipe(id, by, bx, 23, 59, 103),
+            recipe(id, by, bx, 31, 61, 107))
+        }
+      encode(w, h, pixels)
+    }
+  }
+
   /** Deterministic synthetic JPEG payloads, built BLOCK-CONSTANT so the
     * lossy round-trip has a closed form: the image is a `bw`×`bh` grid of
     * 8×8 blocks, each a constant sample — every AC coefficient quantizes
@@ -1044,36 +848,10 @@ object Multimodal {
       grayscale: Boolean,
       blocksW: Int = 2,
       blocksH: Int = 2,
-      subsample420: Boolean = false): DataFrame = {
-    val spark = df.sparkSession
-    // 4:2:0 constants must hold per 16×16 MCU (so the downsampled chroma
-    // block is constant too — DC-only on every component); 4:4:4/gray per
-    // 8×8 block
-    val tile = if (subsample420) 16 else 8
-    val w = blocksW * tile; val h = blocksH * tile
-    val ids = spreadIds(df, idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val pixels = Array.tabulate(w * h) { i =>
-          val by = (i / w) / tile; val bx = (i % w) / tile
-          if (grayscale) {
-            val v = ((id * 29L + by * 71L + bx * 113L) % 256L).toInt
-            (v << 16) | (v << 8) | v
-          } else {
-            val pr = ((id * 19L + by * 53L + bx * 101L) % 256L).toInt
-            val pg = ((id * 23L + by * 59L + bx * 103L) % 256L).toInt
-            val pb = ((id * 31L + by * 61L + bx * 107L) % 256L).toInt
-            (pr << 16) | (pg << 8) | pb
-          }
-        }
-        val payload =
-          JpegCodec.encode(w, h, pixels, grayscale, subsample420 = subsample420)
-        Row(id, payload, Row("image", "jpeg", w, h, null))
-      }
+      subsample420: Boolean = false): DataFrame =
+    synthesizeJpegWith(df, idCol, grayscale, blocksW, blocksH, subsample420) { (w, h, px) =>
+      JpegCodec.encode(w, h, px, grayscale, subsample420 = subsample420)
     }
-    spark.createDataFrame(rdd, MediaSchema)
-  }
 
   /** [[synthesizeJpeg]]'s PROGRESSIVE (SOF2) twin: the same block-
     * constant pixels through [[JpegCodec.encodeProgressive]] — multi-scan
@@ -1089,33 +867,10 @@ object Multimodal {
       grayscale: Boolean,
       blocksW: Int = 2,
       blocksH: Int = 2,
-      subsample420: Boolean = false): DataFrame = {
-    val spark = df.sparkSession
-    val tile = if (subsample420) 16 else 8
-    val w = blocksW * tile; val h = blocksH * tile
-    val ids = spreadIds(df, idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val pixels = Array.tabulate(w * h) { i =>
-          val by = (i / w) / tile; val bx = (i % w) / tile
-          if (grayscale) {
-            val v = ((id * 29L + by * 71L + bx * 113L) % 256L).toInt
-            (v << 16) | (v << 8) | v
-          } else {
-            val pr = ((id * 19L + by * 53L + bx * 101L) % 256L).toInt
-            val pg = ((id * 23L + by * 59L + bx * 103L) % 256L).toInt
-            val pb = ((id * 31L + by * 61L + bx * 107L) % 256L).toInt
-            (pr << 16) | (pg << 8) | pb
-          }
-        }
-        val payload = JpegCodec.encodeProgressive(
-          w, h, pixels, grayscale, subsample420 = subsample420)
-        Row(id, payload, Row("image", "jpeg", w, h, null))
-      }
+      subsample420: Boolean = false): DataFrame =
+    synthesizeJpegWith(df, idCol, grayscale, blocksW, blocksH, subsample420) { (w, h, px) =>
+      JpegCodec.encodeProgressive(w, h, px, grayscale, subsample420 = subsample420)
     }
-    spark.createDataFrame(rdd, MediaSchema)
-  }
 
   /** REAL JPEG decode+featurize — Huffman entropy decode + dequant +
     * fixed-point IDCT per row ([[JpegCodec.decode]]) into the SHARED pixel
@@ -1155,29 +910,16 @@ object Multimodal {
       idCol: String,
       blocksW: Int = 4,
       blocksH: Int = 2): DataFrame = {
-    val spark = df.sparkSession
     val w = blocksW * 8; val h = blocksH * 8
-    val ids = spreadIds(df, idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val g = id / 8
-        val o = 1 + (id % 8).toInt
-        val upright = Array.tabulate(w * h) { i =>
-          val by = (i / w) / 8; val bx = (i % w) / 8
-          val v = ((g * 29L + by * 71L + bx * 113L) % 256L).toInt
-          (v << 16) | (v << 8) | v
-        }
-        val stored = BmpCodec.applyOrientation(
-          BmpCodec.Bmp(w, h, upright), BmpCodec.inverseOrientation(o))
-        val jpeg = JpegCodec.encode(
-          stored.width, stored.height, stored.pixels, grayscale = true)
-        val payload = ExifCodec.insertApp1(jpeg,
-          ExifCodec.buildApp1(o, "2026:08:12 12:00:00", None))
-        Row(id, payload, Row("image", "jpeg", stored.width, stored.height, null))
-      }
+    synthesize(df, idCol) { id =>
+      val o = 1 + (id % 8).toInt
+      val stored = BmpCodec.applyOrientation(
+        BmpCodec.Bmp(w, h, grayBlocks((id / 8) * 29L, w, h, 8)), BmpCodec.inverseOrientation(o))
+      val jpeg = JpegCodec.encode(
+        stored.width, stored.height, stored.pixels, grayscale = true)
+      (ExifCodec.insertApp1(jpeg, ExifCodec.buildApp1(o, "2026:08:12 12:00:00", None)),
+        image("jpeg", stored.width, stored.height))
     }
-    spark.createDataFrame(rdd, MediaSchema)
   }
 
   /** ORIENTATION-NORMALIZED difference-hash for JPEG payloads: sniff the
@@ -1188,27 +930,13 @@ object Multimodal {
     * twin, which the stored-order hash of [[extractJpegDHash]] misses.
     * Emits the sniffed orientation for audit.
     */
-  def extractJpegOrientedDHash(media: DataFrame, side: Int = 8): DataFrame = {
-    val spark = media.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("orientation", LongType, nullable = false),
-      StructField("dhash", StringType, nullable = false),
-      StructField("ones", LongType, nullable = false)))
-    val idIdx = media.schema.fieldIndex("media_id")
-    val payloadIdx = media.schema.fieldIndex("payload")
-    val rdd = media.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val payload = r.getAs[Array[Byte]](payloadIdx)
-        val o = ExifCodec.sniff(payload).orientation.getOrElse(1)
-        val upright = BmpCodec.applyOrientation(JpegCodec.decode(payload), o)
-        val img = BmpCodec.resizeNearest(upright, side + 1, side)
-        val (bits, ones) = BmpCodec.dHash(img)
-        Row(r.getLong(idIdx), o.toLong, bits, ones)
-      }
+  def extractJpegOrientedDHash(media: DataFrame, side: Int = 8): DataFrame =
+    extract(media, longs("orientation") ++
+      Seq(StructField("dhash", StringType, nullable = false)) ++ longs("ones")) { payload =>
+      val o = ExifCodec.sniff(payload).orientation.getOrElse(1)
+      val upright = BmpCodec.applyOrientation(JpegCodec.decode(payload), o)
+      o.toLong +: dHashValues(side)(upright)
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** Quarantine decode: the poison-pill-safe twin of
     * [[extractPixelFeatures]]. A 100 TB media scan WILL contain corrupt
@@ -1223,39 +951,17 @@ object Multimodal {
     */
   private def extractPixelFeaturesQuarantine(
       media: DataFrame,
-      decode: Array[Byte] => BmpCodec.Bmp): DataFrame = {
-    val spark = media.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
+      decode: Array[Byte] => BmpCodec.Bmp): DataFrame =
+    extract(media, Seq(
       StructField("ok", BooleanType, nullable = false),
-      StructField("decode_error", StringType, nullable = true),
-      StructField("width", LongType, nullable = true),
-      StructField("height", LongType, nullable = true),
-      StructField("n_pixels", LongType, nullable = true),
-      StructField("sum_r", LongType, nullable = true),
-      StructField("sum_g", LongType, nullable = true),
-      StructField("sum_b", LongType, nullable = true),
-      StructField("luma_min", LongType, nullable = true),
-      StructField("luma_max", LongType, nullable = true),
-      StructField("edge_count", LongType, nullable = true)))
-    val idIdx = media.schema.fieldIndex("media_id")
-    val payloadIdx = media.schema.fieldIndex("payload")
-    val rdd = media.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(idIdx)
-        try {
-          val f = BmpCodec.features(decode(r.getAs[Array[Byte]](payloadIdx)))
-          Row(id, true, null, f.width, f.height, f.nPixels, f.sumR, f.sumG,
-            f.sumB, f.lumaMin, f.lumaMax, f.edgeCount)
-        } catch {
-          case e: IllegalArgumentException =>
-            Row(id, false, e.getMessage,
-              null, null, null, null, null, null, null, null, null)
-        }
+      StructField("decode_error", StringType, nullable = true)) ++
+      PixelFeatureNames.map(StructField(_, LongType, nullable = true))) { payload =>
+      try true +: null +: pixelFeatureValues(BmpCodec.features(decode(payload)))
+      catch {
+        case e: IllegalArgumentException =>
+          false +: e.getMessage +: Seq.fill(PixelFeatureNames.size)(null)
       }
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** [[extractPngFeatures]] with per-row quarantine instead of job
     * failure — see [[extractPixelFeaturesQuarantine]].
@@ -1271,6 +977,28 @@ object Multimodal {
   def extractGifFeaturesQuarantine(media: DataFrame): DataFrame =
     extractPixelFeaturesQuarantine(media, GifCodec.decode _)
 
+  /** The poison fixtures' shape: rows whose id is a multiple of `everyN`
+    * and whose payload is non-empty get `rewrite(payload)`; every other
+    * value, and the schema, pass through. Null/empty payloads have no
+    * byte to damage, so they pass through rather than crash the fixture.
+    */
+  private def rewritePayloads(media: DataFrame, everyN: Long)(
+      rewrite: Array[Byte] => Array[Byte]): DataFrame = {
+    require(everyN > 0, s"everyN must be positive, got $everyN")
+    val idIdx = media.schema.fieldIndex("media_id")
+    val payloadIdx = media.schema.fieldIndex("payload")
+    PartitionBatch.mapPartitions(media, media.schema) { rows =>
+      rows.map { r =>
+        val vals = r.toSeq.toArray
+        val p0 = if (r.isNullAt(payloadIdx)) null else r.getAs[Array[Byte]](payloadIdx)
+        if (r.getLong(idIdx) % everyN == 0L && p0 != null && p0.nonEmpty) {
+          vals(payloadIdx) = rewrite(p0)
+        }
+        Row.fromSeq(vals.toSeq)
+      }
+    }
+  }
+
   /** Deterministically corrupt PNG payloads of selected rows (flip the
     * LAST byte) — the planted-poison fixture the PNG quarantine gate
     * (q307) runs on. The last byte sits in IEND's CRC, so the decode
@@ -1283,32 +1011,16 @@ object Multimodal {
     * every codec in the family detects, use [[truncatePayloads]].
     */
   def corruptPayloads(media: DataFrame, everyN: Long): DataFrame = {
-    require(everyN > 0, s"everyN must be positive, got $everyN")
-    val idIdx = media.schema.fieldIndex("media_id")
-    val payloadIdx = media.schema.fieldIndex("payload")
-    val spark = media.sparkSession
     val pngSig = Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A)
-    val rdd = media.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val vals = r.toSeq.toArray
-        val p0 = if (r.isNullAt(payloadIdx)) null
-          else r.getAs[Array[Byte]](payloadIdx)
-        // null/empty payloads have no byte to flip — pass them through
-        // unchanged rather than crash the fixture helper itself
-        if (r.getLong(idIdx) % everyN == 0L && p0 != null && p0.nonEmpty) {
-          require(
-            p0.length >= 8 && java.util.Arrays.equals(
-              java.util.Arrays.copyOf(p0, 8), pngSig),
-            "corruptPayloads is a PNG-only fixture (last byte = IEND CRC); " +
-              "use truncatePayloads for other formats")
-          val p = p0.clone()
-          p(p.length - 1) = (p(p.length - 1) ^ 0x01).toByte
-          vals(payloadIdx) = p
-        }
-        Row.fromSeq(vals.toSeq)
-      }
+    rewritePayloads(media, everyN) { p0 =>
+      require(
+        p0.length >= 8 && java.util.Arrays.equals(java.util.Arrays.copyOf(p0, 8), pngSig),
+        "corruptPayloads is a PNG-only fixture (last byte = IEND CRC); " +
+          "use truncatePayloads for other formats")
+      val p = p0.clone()
+      p(p.length - 1) = (p(p.length - 1) ^ 0x01).toByte
+      p
     }
-    spark.createDataFrame(rdd, media.schema)
   }
 
   /** Format-agnostic poison fixture: TRUNCATE selected payloads to half
@@ -1320,24 +1032,8 @@ object Multimodal {
     * — the right fixture for GIF/JPEG/AVI quarantine gates and the
     * streaming poison-pill spec.
     */
-  def truncatePayloads(media: DataFrame, everyN: Long): DataFrame = {
-    require(everyN > 0, s"everyN must be positive, got $everyN")
-    val idIdx = media.schema.fieldIndex("media_id")
-    val payloadIdx = media.schema.fieldIndex("payload")
-    val spark = media.sparkSession
-    val rdd = media.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val vals = r.toSeq.toArray
-        val p0 = if (r.isNullAt(payloadIdx)) null
-          else r.getAs[Array[Byte]](payloadIdx)
-        if (r.getLong(idIdx) % everyN == 0L && p0 != null && p0.nonEmpty) {
-          vals(payloadIdx) = java.util.Arrays.copyOf(p0, p0.length / 2)
-        }
-        Row.fromSeq(vals.toSeq)
-      }
-    }
-    spark.createDataFrame(rdd, media.schema)
-  }
+  def truncatePayloads(media: DataFrame, everyN: Long): DataFrame =
+    rewritePayloads(media, everyN)(p0 => java.util.Arrays.copyOf(p0, p0.length / 2))
 
   /** Deterministic synthetic ANIMATED GIF payloads — the video-modality
     * member of the synthesize family: `nFrames` full-screen frames over
@@ -1354,29 +1050,14 @@ object Multimodal {
       idCol: String,
       nFrames: Int = 6,
       width: Int = 16,
-      height: Int = 12): DataFrame = {
-    val spark = df.sparkSession
-    val ids = spreadIds(df, idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      val palette = Array.tabulate(256) { j =>
-        (((j * 31 + 7) % 256) << 16) | (((j * 17 + 3) % 256) << 8) | ((j * 23 + 11) % 256)
+      height: Int = 12): DataFrame =
+    synthesize(df, idCol) { id =>
+      val frames = (0 until nFrames).map { f =>
+        gifIndices(id * 13L + (f / 3) * 97L, width, height).map(_.toByte)
       }
-      rows.map { r =>
-        val id = r.getLong(0)
-        val frames = (0 until nFrames).map { f =>
-          val scene = f / 3
-          Array.tabulate(width * height) { i =>
-            val y = i / width; val x = i % width
-            ((id * 13L + scene * 97L + y * 31L + x * 7L) % 256L).toByte
-          }
-        }
-        val payload = GifCodec.encodeAnimation(width, height, 8, palette, frames)
-        Row(id, payload, Row("video", "gif", width, height,
-          nFrames.toLong * 100L))
-      }
+      (GifCodec.encodeAnimation(width, height, 8, GifPalette, frames),
+        Row("video", "gif", width, height, nFrames.toLong * 100L))
     }
-    spark.createDataFrame(rdd, MediaSchema)
-  }
 
   /** The frame-grain twin of [[extractPixelFeatures]]'s sharing: one
     * multi-frame decode per payload (`decode` — [[GifCodec.decodeFrames]]
@@ -1389,28 +1070,13 @@ object Multimodal {
       media: DataFrame,
       decode: Array[Byte] => Seq[BmpCodec.Bmp],
       fields: Seq[StructField],
-      project: BmpCodec.Bmp => Seq[Any]): DataFrame = {
-    val spark = media.sparkSession
-    val outSchema = StructType(
-      StructField("media_id", LongType, nullable = false) +:
-        StructField("frame", LongType, nullable = false) +: fields)
-    val idIdx = media.schema.fieldIndex("media_id")
-    val payloadIdx = media.schema.fieldIndex("payload")
-    val rdd = media.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val frames = decode(r.getAs[Array[Byte]](payloadIdx))
-        frames.iterator.zipWithIndex.map { case (img, f) =>
-          Row.fromSeq(r.getLong(idIdx) +: f.toLong +: project(img))
-        }
-      }
+      project: BmpCodec.Bmp => Seq[Any]): DataFrame =
+    extractRows(media, longs("frame") ++ fields) { payload =>
+      decode(payload).iterator.zipWithIndex.map { case (img, f) => f.toLong +: project(img) }
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   private def frameFeatureFields: Seq[StructField] =
-    Seq("width", "height", "sum_r", "sum_g", "sum_b",
-      "luma_min", "luma_max", "edge_count")
-      .map(StructField(_, LongType, nullable = false))
+    longs("width", "height", "sum_r", "sum_g", "sum_b", "luma_min", "luma_max", "edge_count")
 
   private def frameFeatureProject(img: BmpCodec.Bmp): Seq[Any] = {
     val ft = BmpCodec.features(img)
@@ -1438,17 +1104,7 @@ object Multimodal {
     * [[extractGifFrameFeatures]].
     */
   def extractGifFrameDHash(media: DataFrame, side: Int = 8): DataFrame =
-    extractFramesWith(media, GifCodec.decodeFrames _,
-      frameDHashFields, frameDHashProject(side))
-
-  private def frameDHashFields: Seq[StructField] = Seq(
-    StructField("dhash", StringType, nullable = false),
-    StructField("n_ones", LongType, nullable = false))
-
-  private def frameDHashProject(side: Int)(img: BmpCodec.Bmp): Seq[Any] = {
-    val (bits, ones) = BmpCodec.dHash(BmpCodec.resizeNearest(img, side + 1, side))
-    Seq(bits, ones)
-  }
+    extractFramesWith(media, GifCodec.decodeFrames _, DHashFields, dHashValues(side))
 
   /** Deterministic synthetic MJPEG-in-AVI payloads — the REAL-video
     * member of the synthesize family: `nFrames` frames, each a
@@ -1470,27 +1126,14 @@ object Multimodal {
       blocksW: Int = 2,
       blocksH: Int = 2,
       fps: Int = 10): DataFrame = {
-    val spark = df.sparkSession
     val w = blocksW * 8; val h = blocksH * 8
-    val ids = spreadIds(df, idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val framePayloads = (0 until nFrames).map { f =>
-          val scene = f / 3
-          val pixels = Array.tabulate(w * h) { i =>
-            val by = (i / w) / 8; val bx = (i % w) / 8
-            val v = ((id * 29L + scene * 67L + by * 71L + bx * 113L) % 256L).toInt
-            (v << 16) | (v << 8) | v
-          }
-          JpegCodec.encode(w, h, pixels, grayscale = true)
-        }
-        val payload = AviCodec.encodeMjpeg(w, h, fps, framePayloads)
-        Row(id, payload, Row("video", "avi", w, h,
-          nFrames.toLong * 1000L / fps))
+    synthesize(df, idCol) { id =>
+      val framePayloads = (0 until nFrames).map { f =>
+        JpegCodec.encode(w, h, grayBlocks(id * 29L + (f / 3) * 67L, w, h, 8), grayscale = true)
       }
+      (AviCodec.encodeMjpeg(w, h, fps, framePayloads),
+        Row("video", "avi", w, h, nFrames.toLong * 1000L / fps))
     }
-    spark.createDataFrame(rdd, MediaSchema)
   }
 
   /** Frame-grain image features from a REAL video container: RIFF/AVI
@@ -1511,8 +1154,7 @@ object Multimodal {
     * real video container.
     */
   def extractAviFrameDHash(media: DataFrame, side: Int = 8): DataFrame =
-    extractFramesWith(media, AviCodec.decodeFrames _,
-      frameDHashFields, frameDHashProject(side))
+    extractFramesWith(media, AviCodec.decodeFrames _, DHashFields, dHashValues(side))
 
   /** Frame PROFILE: features AND fingerprint from ONE decode pass — the
     * keyframe-extraction input (scene detection needs the sums, keyframe
@@ -1521,8 +1163,8 @@ object Multimodal {
     */
   def extractAviFrameProfile(media: DataFrame, side: Int = 8): DataFrame =
     extractFramesWith(media, AviCodec.decodeFrames _,
-      frameFeatureFields ++ frameDHashFields,
-      img => frameFeatureProject(img) ++ frameDHashProject(side)(img))
+      frameFeatureFields ++ DHashFields,
+      img => frameFeatureProject(img) ++ dHashValues(side)(img))
 
   /** Range-parallel frame features for ONE huge MJPEG capture: the
     * container walk ([[AviCodec.frameOffsets]] — cheap, zero entropy
@@ -1542,17 +1184,39 @@ object Multimodal {
       payload: Array[Byte],
       parallelism: Int): DataFrame = {
     val (inf, offs) = AviCodec.frameOffsets(payload)
-    val outSchema = StructType(
-      StructField("media_id", LongType, nullable = false) +:
-        StructField("frame", LongType, nullable = false) +: frameFeatureFields)
     val bc = spark.sparkContext.broadcast(payload)
-    val rdd = spark.sparkContext
-      .parallelize(offs.toIndexedSeq.zipWithIndex, math.max(parallelism, 1))
-      .map { case ((o, s), f) =>
-        Row.fromSeq(mediaId +: f.toLong +:
-          frameFeatureProject(AviCodec.decodeFrameAt(bc.value, o, s, inf, f.toLong)))
+    // frame ordinals, split evenly over `parallelism` tasks
+    val frames = spark.range(0L, offs.length.toLong, 1L, math.max(parallelism, 1)).toDF()
+    PartitionBatch.mapPartitions(frames,
+      StructType(MediaId +: (longs("frame") ++ frameFeatureFields))) { rows =>
+      rows.map { r =>
+        val f = r.getLong(0)
+        val (o, s) = offs(f.toInt)
+        Row.fromSeq(mediaId +: f +:
+          frameFeatureProject(AviCodec.decodeFrameAt(bc.value, o, s, inf, f)))
       }
-    spark.createDataFrame(rdd, outSchema)
+    }
+  }
+
+  /** The header sniffs' shape: `sniff` reads (width, height, values) from
+    * the payload's header, and a trailing `meta_match` flags rows whose
+    * declared `meta` dims disagree with the bytes.
+    */
+  private def sniffAgainstMeta(media: DataFrame, fields: Seq[StructField])(
+      sniff: Array[Byte] => (Int, Int, Seq[Any])): DataFrame = {
+    val idIdx = media.schema.fieldIndex("media_id")
+    val payloadIdx = media.schema.fieldIndex("payload")
+    val metaIdx = media.schema.fieldIndex("meta")
+    PartitionBatch.mapPartitions(media, StructType(MediaId +: fields :+
+      StructField("meta_match", BooleanType, nullable = false))) { rows =>
+      rows.map { r =>
+        val (w, h, values) = sniff(r.getAs[Array[Byte]](payloadIdx))
+        val meta = if (r.isNullAt(metaIdx)) null else r.getStruct(metaIdx)
+        val ok = meta != null && !meta.isNullAt(2) && !meta.isNullAt(3) &&
+          meta.getInt(2) == w && meta.getInt(3) == h
+        Row.fromSeq(r.getLong(idIdx) +: values :+ ok)
+      }
+    }
   }
 
   /** Header-only sniff for AVI payloads: [[AviCodec.info]] walks the
@@ -1562,32 +1226,14 @@ object Multimodal {
     * rows whose declared metadata disagrees with the container bytes —
     * the video twin of [[sniffJpegDims]].
     */
-  def sniffAviInfo(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("sniff_width", LongType, nullable = false),
-      StructField("sniff_height", LongType, nullable = false),
-      StructField("us_per_frame", LongType, nullable = false),
-      StructField("n_frames", LongType, nullable = false),
-      StructField("duration_ms_sniff", LongType, nullable = false),
-      StructField("meta_match", BooleanType, nullable = false)))
-    val idIdx = media.schema.fieldIndex("media_id")
-    val payloadIdx = media.schema.fieldIndex("payload")
-    val metaIdx = media.schema.fieldIndex("meta")
-    val rdd = media.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val inf = AviCodec.info(r.getAs[Array[Byte]](payloadIdx))
-        val meta = if (r.isNullAt(metaIdx)) null else r.getStruct(metaIdx)
-        val ok = meta != null && !meta.isNullAt(2) && !meta.isNullAt(3) &&
-          meta.getInt(2) == inf.width && meta.getInt(3) == inf.height
-        Row(r.getLong(idIdx), inf.width.toLong, inf.height.toLong,
-          inf.usPerFrame.toLong, inf.totalFrames.toLong,
-          inf.usPerFrame.toLong * inf.totalFrames / 1000L, ok)
-      }
+  def sniffAviInfo(media: DataFrame): DataFrame =
+    sniffAgainstMeta(media, longs("sniff_width", "sniff_height", "us_per_frame", "n_frames",
+      "duration_ms_sniff")) { payload =>
+      val inf = AviCodec.info(payload)
+      (inf.width, inf.height, Seq(inf.width.toLong, inf.height.toLong,
+        inf.usPerFrame.toLong, inf.totalFrames.toLong,
+        inf.usPerFrame.toLong * inf.totalFrames / 1000L))
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** Header-only dimension sniff for JPEG payloads: [[JpegCodec.dims]]
     * walks markers to SOF without touching the entropy stream — O(header)
@@ -1596,48 +1242,23 @@ object Multimodal {
     * declared metadata disagrees with the bytes (crawled corpora lie) —
     * the media twin of the schema-validation story.
     */
-  def sniffJpegDims(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("sniff_width", LongType, nullable = false),
-      StructField("sniff_height", LongType, nullable = false),
-      StructField("n_components", LongType, nullable = false),
-      StructField("meta_match", BooleanType, nullable = false)))
-    val idIdx = media.schema.fieldIndex("media_id")
-    val payloadIdx = media.schema.fieldIndex("payload")
-    val metaIdx = media.schema.fieldIndex("meta")
-    val rdd = media.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val (w, h, nc) = JpegCodec.dims(r.getAs[Array[Byte]](payloadIdx))
-        val meta = if (r.isNullAt(metaIdx)) null else r.getStruct(metaIdx)
-        val ok = meta != null && !meta.isNullAt(2) && !meta.isNullAt(3) &&
-          meta.getInt(2) == w && meta.getInt(3) == h
-        Row(r.getLong(idIdx), w.toLong, h.toLong, nc.toLong, ok)
-      }
+  def sniffJpegDims(media: DataFrame): DataFrame =
+    sniffAgainstMeta(media, longs("sniff_width", "sniff_height", "n_components")) { payload =>
+      val (w, h, nc) = JpegCodec.dims(payload)
+      (w, h, Seq(w.toLong, h.toLong, nc.toLong))
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** Deterministic MP3-shaped streams ([[MpegAudioSniff.synthesize]] —
     * ID3v2 + valid Layer III frame headers with header-computed junk
     * payloads, a VBR bitrate profile by recipe) as a media frame.
     */
-  def synthesizeMp3(df: DataFrame, idCol: String, baseFrames: Int = 20): DataFrame = {
-    val spark = df.sparkSession
-    val ids = spreadIds(df, idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val n = baseFrames + (id % 11).toInt
-        val payload = MpegAudioSniff.synthesize(id, n)
-        Row(id, payload, Row("audio", "mp3", null, null,
-          MpegAudioSniff.SamplesPerFrame.toLong * n * 1000L /
-            MpegAudioSniff.SampleRateHz((id % 3).toInt)))
-      }
+  def synthesizeMp3(df: DataFrame, idCol: String, baseFrames: Int = 20): DataFrame =
+    synthesize(df, idCol) { id =>
+      val n = baseFrames + (id % 11).toInt
+      (MpegAudioSniff.synthesize(id, n), audio("mp3",
+        MpegAudioSniff.SamplesPerFrame.toLong * n * 1000L /
+          MpegAudioSniff.SampleRateHz((id % 3).toInt)))
     }
-    spark.createDataFrame(rdd, MediaSchema)
-  }
 
   /** Header-only MP3 sniff ([[MpegAudioSniff.sniff]]): frame count,
     * sample rate, bitrate profile (min/sum/max — CBR vs VBR), duration
@@ -1646,47 +1267,58 @@ object Multimodal {
     * deciding to decode (or quarantine). The audio twin of
     * [[sniffAviInfo]]/[[sniffJpegDims]].
     */
-  def sniffMp3Info(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("n_frames", LongType, nullable = false),
-      StructField("sample_rate", LongType, nullable = false),
-      StructField("sum_bitrate_kbps", LongType, nullable = false),
-      StructField("min_bitrate_kbps", LongType, nullable = false),
-      StructField("max_bitrate_kbps", LongType, nullable = false),
-      StructField("duration_ms", LongType, nullable = false),
-      StructField("id3_bytes", LongType, nullable = false)))
-    val idIdx = media.schema.fieldIndex("media_id")
-    val payloadIdx = media.schema.fieldIndex("payload")
-    val rdd = media.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val i = MpegAudioSniff.sniff(r.getAs[Array[Byte]](payloadIdx))
-        Row(r.getLong(idIdx), i.nFrames, i.sampleRate.toLong, i.sumBitrateKbps,
-          i.minBitrateKbps.toLong, i.maxBitrateKbps.toLong, i.durationMs, i.id3Bytes)
-      }
+  def sniffMp3Info(media: DataFrame): DataFrame =
+    extract(media, longs("n_frames", "sample_rate", "sum_bitrate_kbps", "min_bitrate_kbps",
+      "max_bitrate_kbps", "duration_ms", "id3_bytes")) { payload =>
+      val i = MpegAudioSniff.sniff(payload)
+      Seq(i.nFrames, i.sampleRate.toLong, i.sumBitrateKbps,
+        i.minBitrateKbps.toLong, i.maxBitrateKbps.toLong, i.durationMs, i.id3Bytes)
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
+
+  /** The coded-MP3 synthesizers differ only in the stream generator:
+    * `generate(id)` at 44.1 kHz, `nFrames` frames.
+    */
+  private def synthesizeMp3With(df: DataFrame, idCol: String, nFrames: Int)(
+      generate: Long => Array[Byte]): DataFrame =
+    synthesize(df, idCol) { id =>
+      (generate(id), audio("mp3",
+        MpegAudioSniff.SamplesPerFrame.toLong * nFrames * 1000L / 44100L))
+    }
 
   /** Deterministic FULLY-CODED Layer III streams
     * ([[Mp3Codec.synthesizeCoded]] — real side info, real Huffman data,
     * spectral lines all ±1 at exact power-of-two gains) as a media
     * frame: the decode twin of the header-only [[synthesizeMp3]].
     */
-  def synthesizeMp3Coded(df: DataFrame, idCol: String, nFrames: Int = 2): DataFrame = {
-    val spark = df.sparkSession
-    val ids = spreadIds(df, idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        Row(id, Mp3Codec.synthesizeCoded(id, nFrames),
-          Row("audio", "mp3", null, null,
-            MpegAudioSniff.SamplesPerFrame.toLong * nFrames * 1000L / 44100L))
+  def synthesizeMp3Coded(df: DataFrame, idCol: String, nFrames: Int = 2): DataFrame =
+    synthesizeMp3With(df, idCol, nFrames)(Mp3Codec.synthesizeCoded(_, nFrames))
+
+  /** Integer spectral features per granule, `block_type` included when
+    * `typed`.
+    */
+  private def mp3Spectra(media: DataFrame, typed: Boolean): DataFrame =
+    extractRows(media, longs("frame_idx", "granule", "channel") ++
+      (if (typed) longs("block_type") else Nil) ++
+      longs("big_values", "global_gain", "part2_3_length", "n_nonzero", "sum_abs_micro",
+        "checksum_micro")) { payload =>
+      Mp3Codec.decodeSpectra(payload).iterator.map { g =>
+        var nnz = 0L; var sumAbs = 0L; var checksum = 0L
+        var j = 0
+        while (j < 576) {
+          // count the OUTPUT spectrum (after MS matrixing a line can
+          // cancel to zero even though its coded `is` line was set)
+          if (g.xr(j) != 0.0) nnz += 1
+          val m = math.rint(g.xr(j) * 1e6).toLong
+          sumAbs += math.abs(m)
+          checksum += (j + 1) * m
+          j += 1
+        }
+        Seq(g.frameIdx.toLong, g.granule.toLong, g.channel.toLong) ++
+          (if (typed) Seq(g.info.blockType.toLong) else Nil) ++
+          Seq(g.info.bigValues.toLong, g.info.globalGain.toLong,
+            g.info.part23Length.toLong, nnz, sumAbs, checksum)
       }
     }
-    spark.createDataFrame(rdd, MediaSchema)
-  }
 
   /** REAL Layer III decode to requantized spectra ([[Mp3Codec
     * .decodeSpectra]]: side info, bit reservoir, scalefactors, Huffman,
@@ -1697,116 +1329,35 @@ object Multimodal {
     * bit recipe. Same one-decoder-per-partition batch shape as the
     * image codecs.
     */
-  def extractMp3Spectra(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("frame_idx", LongType, nullable = false),
-      StructField("granule", LongType, nullable = false),
-      StructField("channel", LongType, nullable = false),
-      StructField("big_values", LongType, nullable = false),
-      StructField("global_gain", LongType, nullable = false),
-      StructField("part2_3_length", LongType, nullable = false),
-      StructField("n_nonzero", LongType, nullable = false),
-      StructField("sum_abs_micro", LongType, nullable = false),
-      StructField("checksum_micro", LongType, nullable = false)))
-    val idIdx = media.schema.fieldIndex("media_id")
-    val payloadIdx = media.schema.fieldIndex("payload")
-    val rdd = media.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.getLong(idIdx)
-        Mp3Codec.decodeSpectra(r.getAs[Array[Byte]](payloadIdx)).map { g =>
-          var nnz = 0L; var sumAbs = 0L; var checksum = 0L
-          var j = 0
-          while (j < 576) {
-            // count the OUTPUT spectrum (after MS matrixing a line can
-            // cancel to zero even though its coded `is` line was set)
-            if (g.xr(j) != 0.0) nnz += 1
-            val m = math.rint(g.xr(j) * 1e6).toLong
-            sumAbs += math.abs(m)
-            checksum += (j + 1) * m
-            j += 1
-          }
-          Row(id, g.frameIdx.toLong, g.granule.toLong, g.channel.toLong,
-            g.info.bigValues.toLong, g.info.globalGain.toLong,
-            g.info.part23Length.toLong, nnz, sumAbs, checksum)
-        }
-      }
-    }
-    spark.createDataFrame(rdd, outSchema)
-  }
+  def extractMp3Spectra(media: DataFrame): DataFrame = mp3Spectra(media, typed = false)
 
   /** [[synthesizeMp3Coded]]'s SHORT-BLOCK twin
     * ([[Mp3Codec.synthesizeCodedShort]] — window-switching transient
     * granules with per-window subblock gains).
     */
-  def synthesizeMp3CodedShort(df: DataFrame, idCol: String, nFrames: Int = 2): DataFrame = {
-    val spark = df.sparkSession
-    val ids = spreadIds(df, idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        Row(id, Mp3Codec.synthesizeCodedShort(id, nFrames),
-          Row("audio", "mp3", null, null,
-            MpegAudioSniff.SamplesPerFrame.toLong * nFrames * 1000L / 44100L))
-      }
-    }
-    spark.createDataFrame(rdd, MediaSchema)
-  }
+  def synthesizeMp3CodedShort(df: DataFrame, idCol: String, nFrames: Int = 2): DataFrame =
+    synthesizeMp3With(df, idCol, nFrames)(Mp3Codec.synthesizeCodedShort(_, nFrames))
 
   /** [[synthesizeMp3Coded]]'s MS JOINT STEREO twin
     * ([[Mp3Codec.synthesizeCodedMs]]).
     */
-  def synthesizeMp3CodedMs(df: DataFrame, idCol: String, nFrames: Int = 2): DataFrame = {
-    val spark = df.sparkSession
-    val ids = spreadIds(df, idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        Row(id, Mp3Codec.synthesizeCodedMs(id, nFrames),
-          Row("audio", "mp3", null, null,
-            MpegAudioSniff.SamplesPerFrame.toLong * nFrames * 1000L / 44100L))
-      }
-    }
-    spark.createDataFrame(rdd, MediaSchema)
-  }
+  def synthesizeMp3CodedMs(df: DataFrame, idCol: String, nFrames: Int = 2): DataFrame =
+    synthesizeMp3With(df, idCol, nFrames)(Mp3Codec.synthesizeCodedMs(_, nFrames))
 
   /** [[synthesizeMp3Coded]]'s START/STOP twin
     * ([[Mp3Codec.synthesizeCodedStartStop]] — granule 0 a type-1 start
     * block, granule 1 a type-3 stop block, the transient bracket).
     */
   def synthesizeMp3CodedStartStop(
-      df: DataFrame, idCol: String, nFrames: Int = 2): DataFrame = {
-    val spark = df.sparkSession
-    val ids = spreadIds(df, idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        Row(id, Mp3Codec.synthesizeCodedStartStop(id, nFrames),
-          Row("audio", "mp3", null, null,
-            MpegAudioSniff.SamplesPerFrame.toLong * nFrames * 1000L / 44100L))
-      }
-    }
-    spark.createDataFrame(rdd, MediaSchema)
-  }
+      df: DataFrame, idCol: String, nFrames: Int = 2): DataFrame =
+    synthesizeMp3With(df, idCol, nFrames)(Mp3Codec.synthesizeCodedStartStop(_, nFrames))
 
   /** [[synthesizeMp3Coded]]'s INTENSITY JOINT STEREO twin
     * ([[Mp3Codec.synthesizeCodedIntensity]]).
     */
   def synthesizeMp3CodedIntensity(
-      df: DataFrame, idCol: String, nFrames: Int = 2): DataFrame = {
-    val spark = df.sparkSession
-    val ids = spreadIds(df, idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        Row(id, Mp3Codec.synthesizeCodedIntensity(id, nFrames),
-          Row("audio", "mp3", null, null,
-            MpegAudioSniff.SamplesPerFrame.toLong * nFrames * 1000L / 44100L))
-      }
-    }
-    spark.createDataFrame(rdd, MediaSchema)
-  }
+      df: DataFrame, idCol: String, nFrames: Int = 2): DataFrame =
+    synthesizeMp3With(df, idCol, nFrames)(Mp3Codec.synthesizeCodedIntensity(_, nFrames))
 
   /** [[synthesizeMp3CodedIntensity]]'s COMBINED twin — the same bit
     * layout under mode_extension 3 ([[Mp3Codec.synthesizeCodedIntensity]]
@@ -1814,19 +1365,9 @@ object Multimodal {
     * bound, the pan above it, illegal positions falling back to MS.
     */
   def synthesizeMp3CodedIntensityMs(
-      df: DataFrame, idCol: String, nFrames: Int = 2): DataFrame = {
-    val spark = df.sparkSession
-    val ids = spreadIds(df, idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        Row(id, Mp3Codec.synthesizeCodedIntensity(id, nFrames, modeExt = 3),
-          Row("audio", "mp3", null, null,
-            MpegAudioSniff.SamplesPerFrame.toLong * nFrames * 1000L / 44100L))
-      }
-    }
-    spark.createDataFrame(rdd, MediaSchema)
-  }
+      df: DataFrame, idCol: String, nFrames: Int = 2): DataFrame =
+    synthesizeMp3With(df, idCol, nFrames)(
+      Mp3Codec.synthesizeCodedIntensity(_, nFrames, modeExt = 3))
 
   /** [[synthesizeMp3CodedStartStop]] with mixed_block_flag SET
     * ([[Mp3Codec.synthesizeCodedStartStop]] `mixed = true`): the
@@ -1835,19 +1376,9 @@ object Multimodal {
     * spec-gated in Mp3Spec.
     */
   def synthesizeMp3CodedStartStopMixed(
-      df: DataFrame, idCol: String, nFrames: Int = 2): DataFrame = {
-    val spark = df.sparkSession
-    val ids = spreadIds(df, idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        Row(id, Mp3Codec.synthesizeCodedStartStop(id, nFrames, mixed = true),
-          Row("audio", "mp3", null, null,
-            MpegAudioSniff.SamplesPerFrame.toLong * nFrames * 1000L / 44100L))
-      }
-    }
-    spark.createDataFrame(rdd, MediaSchema)
-  }
+      df: DataFrame, idCol: String, nFrames: Int = 2): DataFrame =
+    synthesizeMp3With(df, idCol, nFrames)(
+      Mp3Codec.synthesizeCodedStartStop(_, nFrames, mixed = true))
 
   /** [[synthesizeMp3CodedIntensity]]'s SHORT-BLOCK twin
     * ([[Mp3Codec.synthesizeCodedIntensityShort]] — both channels
@@ -1855,19 +1386,8 @@ object Multimodal {
     * the surface under test).
     */
   def synthesizeMp3CodedIntensityShort(
-      df: DataFrame, idCol: String, nFrames: Int = 2): DataFrame = {
-    val spark = df.sparkSession
-    val ids = spreadIds(df, idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        Row(id, Mp3Codec.synthesizeCodedIntensityShort(id, nFrames),
-          Row("audio", "mp3", null, null,
-            MpegAudioSniff.SamplesPerFrame.toLong * nFrames * 1000L / 44100L))
-      }
-    }
-    spark.createDataFrame(rdd, MediaSchema)
-  }
+      df: DataFrame, idCol: String, nFrames: Int = 2): DataFrame =
+    synthesizeMp3With(df, idCol, nFrames)(Mp3Codec.synthesizeCodedIntensityShort(_, nFrames))
 
   /** [[synthesizeMp3CodedIntensityShort]]'s COMBINED twin — the same
     * bits under mode_extension 3: MS everywhere by default, per-window
@@ -1875,126 +1395,45 @@ object Multimodal {
     * the MS default.
     */
   def synthesizeMp3CodedIntensityShortMs(
-      df: DataFrame, idCol: String, nFrames: Int = 2): DataFrame = {
-    val spark = df.sparkSession
-    val ids = spreadIds(df, idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        Row(id, Mp3Codec.synthesizeCodedIntensityShort(id, nFrames, modeExt = 3),
-          Row("audio", "mp3", null, null,
-            MpegAudioSniff.SamplesPerFrame.toLong * nFrames * 1000L / 44100L))
-      }
-    }
-    spark.createDataFrame(rdd, MediaSchema)
-  }
+      df: DataFrame, idCol: String, nFrames: Int = 2): DataFrame =
+    synthesizeMp3With(df, idCol, nFrames)(
+      Mp3Codec.synthesizeCodedIntensityShort(_, nFrames, modeExt = 3))
 
   /** [[synthesizeMp3Coded]]'s MIXED-BLOCK twin
     * ([[Mp3Codec.synthesizeCodedMixed]] — hybrid long+short granules).
     */
   def synthesizeMp3CodedMixed(
-      df: DataFrame, idCol: String, nFrames: Int = 2): DataFrame = {
-    val spark = df.sparkSession
-    val ids = spreadIds(df, idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        Row(id, Mp3Codec.synthesizeCodedMixed(id, nFrames),
-          Row("audio", "mp3", null, null,
-            MpegAudioSniff.SamplesPerFrame.toLong * nFrames * 1000L / 44100L))
-      }
-    }
-    spark.createDataFrame(rdd, MediaSchema)
-  }
+      df: DataFrame, idCol: String, nFrames: Int = 2): DataFrame =
+    synthesizeMp3With(df, idCol, nFrames)(Mp3Codec.synthesizeCodedMixed(_, nFrames))
 
   /** [[extractMp3Spectra]] + the granule's `block_type` — the gate
     * surface for window-switching streams where the TYPE itself is the
     * new decode capability (start/stop brackets).
     */
-  def extractMp3SpectraTyped(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("frame_idx", LongType, nullable = false),
-      StructField("granule", LongType, nullable = false),
-      StructField("channel", LongType, nullable = false),
-      StructField("block_type", LongType, nullable = false),
-      StructField("big_values", LongType, nullable = false),
-      StructField("global_gain", LongType, nullable = false),
-      StructField("part2_3_length", LongType, nullable = false),
-      StructField("n_nonzero", LongType, nullable = false),
-      StructField("sum_abs_micro", LongType, nullable = false),
-      StructField("checksum_micro", LongType, nullable = false)))
-    val idIdx = media.schema.fieldIndex("media_id")
-    val payloadIdx = media.schema.fieldIndex("payload")
-    val rdd = media.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.getLong(idIdx)
-        Mp3Codec.decodeSpectra(r.getAs[Array[Byte]](payloadIdx)).map { g =>
-          var nnz = 0L; var sumAbs = 0L; var checksum = 0L
-          var j = 0
-          while (j < 576) {
-            if (g.xr(j) != 0.0) nnz += 1
-            val m = math.rint(g.xr(j) * 1e6).toLong
-            sumAbs += math.abs(m)
-            checksum += (j + 1) * m
-            j += 1
-          }
-          Row(id, g.frameIdx.toLong, g.granule.toLong, g.channel.toLong,
-            g.info.blockType.toLong,
-            g.info.bigValues.toLong, g.info.globalGain.toLong,
-            g.info.part23Length.toLong, nnz, sumAbs, checksum)
-        }
-      }
-    }
-    spark.createDataFrame(rdd, outSchema)
-  }
+  def extractMp3SpectraTyped(media: DataFrame): DataFrame = mp3Spectra(media, typed = true)
 
   /** Deterministic Opus-in-Ogg streams ([[OggSniff.synthesize]] — BOS
     * OpusHead + OpusTags + recipe audio pages with monotonic granules
     * and stamped CRCs) as a media frame.
     */
-  def synthesizeOgg(df: DataFrame, idCol: String, basePages: Int = 10): DataFrame = {
-    val spark = df.sparkSession
-    val ids = spreadIds(df, idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val n = basePages + (id % 7).toInt
-        Row(id, OggSniff.synthesize(id, n),
-          Row("audio", "ogg-opus", null, null, 40L * n))
-      }
+  def synthesizeOgg(df: DataFrame, idCol: String, basePages: Int = 10): DataFrame =
+    synthesize(df, idCol) { id =>
+      val n = basePages + (id % 7).toInt
+      (OggSniff.synthesize(id, n), audio("ogg-opus", 40L * n))
     }
-    spark.createDataFrame(rdd, MediaSchema)
-  }
 
   /** Header-only Ogg/Opus sniff ([[OggSniff.sniff]]): page/packet
     * structure, channels, pre-skip, duration from granule bookkeeping —
     * with every page CRC verified. [[sniffMp3Info]]'s twin for the
     * other big crawled-audio container.
     */
-  def sniffOggInfo(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("n_pages", LongType, nullable = false),
-      StructField("n_packets", LongType, nullable = false),
-      StructField("channels", LongType, nullable = false),
-      StructField("pre_skip", LongType, nullable = false),
-      StructField("input_sample_rate", LongType, nullable = false),
-      StructField("granule_final", LongType, nullable = false),
-      StructField("duration_ms", LongType, nullable = false)))
-    val idIdx = media.schema.fieldIndex("media_id")
-    val payloadIdx = media.schema.fieldIndex("payload")
-    val rdd = media.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val i = OggSniff.sniff(r.getAs[Array[Byte]](payloadIdx))
-        Row(r.getLong(idIdx), i.nPages, i.nPackets, i.channels.toLong,
-          i.preSkip.toLong, i.inputSampleRate, i.granuleFinal, i.durationMs)
-      }
+  def sniffOggInfo(media: DataFrame): DataFrame =
+    extract(media, longs("n_pages", "n_packets", "channels", "pre_skip", "input_sample_rate",
+      "granule_final", "duration_ms")) { payload =>
+      val i = OggSniff.sniff(payload)
+      Seq(i.nPages, i.nPackets, i.channels.toLong,
+        i.preSkip.toLong, i.inputSampleRate, i.granuleFinal, i.durationMs)
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** The EXIF recipe for media `id` — pure function of the row (the
     * synthesizer discipline): every id carries orientation + timestamp,
@@ -2018,11 +1457,10 @@ object Multimodal {
     * right after SOI).
     */
   def withExif(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
     val idIdx = media.schema.fieldIndex("media_id")
     val payloadIdx = media.schema.fieldIndex("payload")
     val metaIdx = media.schema.fieldIndex("meta")
-    val rdd = media.rdd.mapPartitions { rows =>
+    PartitionBatch.mapPartitions(media, MediaSchema) { rows =>
       rows.map { r =>
         val id = r.getLong(idIdx)
         val (o, dt, gps) = exifRecipe(id)
@@ -2032,7 +1470,6 @@ object Multimodal {
           if (r.isNullAt(metaIdx)) null else r.getStruct(metaIdx))
       }
     }
-    spark.createDataFrame(rdd, MediaSchema)
   }
 
   /** EXIF audit + strip in one pass: sniff the metadata (orientation /
@@ -2041,10 +1478,8 @@ object Multimodal {
     * pixels bit-identical before/after). One row per payload; the
     * JPEG decodes twice by design — the equality is the point.
     */
-  def extractExifAudit(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
+  def extractExifAudit(media: DataFrame): DataFrame =
+    extract(media, Seq(
       StructField("orientation", LongType, nullable = true),
       StructField("date_time", StringType, nullable = true),
       StructField("has_gps", BooleanType, nullable = false),
@@ -2058,46 +1493,35 @@ object Multimodal {
       StructField("lon_sec_milli", LongType, nullable = true),
       StructField("app1_before", LongType, nullable = false),
       StructField("app1_after", LongType, nullable = false),
-      StructField("pixels_unchanged", BooleanType, nullable = false)))
-    val idIdx = media.schema.fieldIndex("media_id")
-    val payloadIdx = media.schema.fieldIndex("payload")
-    val rdd = media.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val payload = r.getAs[Array[Byte]](payloadIdx)
-        val e = ExifCodec.sniff(payload)
-        val stripped = ExifCodec.stripMetadata(payload)
-        val same = JpegCodec.decode(payload).pixels.toSeq ==
-          JpegCodec.decode(stripped).pixels.toSeq
-        val g = e.gps
-        Row(r.getLong(idIdx),
-          e.orientation.map(_.toLong).orNull, e.dateTime.orNull, g.isDefined,
-          g.map(_.latRef).orNull, g.map(_.latDeg).orNull,
-          g.map(_.latMin).orNull, g.map(_.latSecMilli).orNull,
-          g.map(_.lonRef).orNull, g.map(_.lonDeg).orNull,
-          g.map(_.lonMin).orNull, g.map(_.lonSecMilli).orNull,
-          ExifCodec.countApp1(payload).toLong,
-          ExifCodec.countApp1(stripped).toLong, same)
-      }
+      StructField("pixels_unchanged", BooleanType, nullable = false))) { payload =>
+      val e = ExifCodec.sniff(payload)
+      val stripped = ExifCodec.stripMetadata(payload)
+      val same = JpegCodec.decode(payload).pixels.toSeq ==
+        JpegCodec.decode(stripped).pixels.toSeq
+      val g = e.gps
+      Seq(e.orientation.map(_.toLong).orNull, e.dateTime.orNull, g.isDefined,
+        g.map(_.latRef).orNull, g.map(_.latDeg).orNull,
+        g.map(_.latMin).orNull, g.map(_.latSecMilli).orNull,
+        g.map(_.lonRef).orNull, g.map(_.lonDeg).orNull,
+        g.map(_.lonMin).orNull, g.map(_.lonSecMilli).orNull,
+        ExifCodec.countApp1(payload).toLong,
+        ExifCodec.countApp1(stripped).toLong, same)
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** Distributed decode+featurize: one decoder per PARTITION (not per row) —
     * the mapPartitions batch shape that amortizes model/codec setup, the
     * Scala analog of a pandas-batch UDF.
     */
   def extractFeatures(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
     val outSchema = StructType(media.schema.fields :+
       StructField("features", ArrayType(FloatType, containsNull = false), nullable = false))
     val payloadIdx = media.schema.fieldIndex("payload")
-    val rdd = media.rdd.mapPartitions { rows =>
+    PartitionBatch.mapPartitions(media, outSchema) { rows =>
       // per-partition setup would go here (decoder/model init)
       rows.map { r =>
         val bytes = if (r.isNullAt(payloadIdx)) null else r.getAs[Array[Byte]](payloadIdx)
         Row.fromSeq(r.toSeq :+ StubDecoder.features(bytes).toSeq)
       }
     }
-    spark.createDataFrame(rdd, outSchema)
   }
 }

@@ -63,7 +63,9 @@ object IvfPqStore {
       batchId: String): Long = {
     require(batchId.matches("[A-Za-z0-9._-]+"), s"batchId '$batchId' is not filename-safe")
     // the vector count is observed during the write itself — one job
-    // where persist + write + count used to run two over a cached copy
+    // where persist + write + count used to run two over a cached copy;
+    // exact: only the write's local partition sort lies above the
+    // observe, so it runs in the result stage ([[PqIndexStore]] layout doc)
     val obs = org.apache.spark.sql.Observation()
     IvfPq.encode(batch, centroids, idCol, vecCol, cellCol, cb)
       .observe(obs, count(lit(1)).as("n"))
@@ -199,7 +201,9 @@ object IvfPqStore {
     val foldedTombs = batchDirs(spark, s"$root/tombstones").filterNot(prior)
     require(foldedCodes.nonEmpty, "compact: no code batches to fold")
     // both row counts are OBSERVED during the survivor write — the same
-    // values the separate count + read-back-count jobs used to fetch
+    // values the separate count + read-back-count jobs used to fetch;
+    // exact: broadcast anti-join + local partition sort keep both
+    // observes in the write's result stage ([[PqIndexStore]] layout doc)
     val allObs = org.apache.spark.sql.Observation()
     val liveObs = org.apache.spark.sql.Observation()
     val all = foldedCodes.map(spark.read.parquet(_)).reduce(_ unionByName _)

@@ -25,6 +25,20 @@ import org.apache.spark.sql.functions._
   *    it was trained on, so a batch whose mean error runs well above the
   *    fit-time batches signals the corpus moved and the codebook needs
   *    refitting ([[staleness]] surfaces the ratio).
+  *  - `compactions/<compactId>/folded` — a committed compaction's marker:
+  *    the folded subdir paths, one per line ([[writeMarker]]). The marker
+  *    was once a parquet dir; a store whose crash-mid-delete marker is
+  *    in that old format is NOT replayable by this code ([[readMarker]]
+  *    reads only `folded`) — finish or discard such a compaction with
+  *    the version that started it.
+  *
+  * Exactness of the observed counts (appends, tombstones, compaction):
+  * every `observe` here sits in its write's RESULT stage — nothing but
+  * local operators and the streamed side of a broadcast join lie between
+  * it and the write, as the executed plans show — and Spark merges a
+  * result stage's accumulator updates once per partition even when a
+  * task is retried or speculated. An `observe` below a shuffle would sit
+  * in a map stage, whose updates merge once per successful attempt.
   *
   * Scale shape: appends touch only the new batch (codes are m small ints
   * per vector); the error stat rides the same scan as the encode (one
@@ -140,7 +154,8 @@ object PqIndexStore {
     // codes and the error stat come out of ONE projection over the batch
     // (same per-row arithmetic the id self-join used to reattach), and the
     // stat aggregates are OBSERVED during the codes write — one job where
-    // persist + write + aggregate used to run two over a cached copy
+    // persist + write + aggregate used to run two over a cached copy;
+    // exact: the observe is in the write's result stage (layout doc)
     val codes = (0 until cb.m).map(s =>
       KMeans.assignExpr(slice(col(vecCol), s * cb.subDims + 1, cb.subDims),
         cb.centroids(s)))
@@ -189,7 +204,8 @@ object PqIndexStore {
       ids: DataFrame, idCol: String, root: String, batchId: String): Long = {
     require(batchId.matches("[A-Za-z0-9._-]+"), s"batchId '$batchId' is not filename-safe")
     // the id count is observed during the write itself — one job where
-    // persist + write + count used to run two over a cached copy
+    // persist + write + count used to run two over a cached copy; exact:
+    // the observe sits above the distinct's exchange, in the result stage
     val obs = org.apache.spark.sql.Observation()
     ids.select(col(idCol)).distinct()
       .observe(obs, count(lit(1)).as("n"))
@@ -280,7 +296,9 @@ object PqIndexStore {
     require(foldedCodes.nonEmpty, "compact: no code batches to fold")
     // both row counts are OBSERVED during the survivor write: the input
     // count below the anti-join, the survivor count above it — the same
-    // values the separate count + read-back-count jobs used to fetch
+    // values the separate count + read-back-count jobs used to fetch;
+    // exact: the anti-join broadcasts the tombstones, so both observes
+    // (streamed side and top) run in the write's result stage
     val allObs = org.apache.spark.sql.Observation()
     val liveObs = org.apache.spark.sql.Observation()
     val all = foldedCodes.map(spark.read.parquet(_)).reduce(_ unionAll _)

@@ -1,5 +1,6 @@
 package graft
 
+import graft.ingest.{Tar, Warc}
 import graft.multimodal.Multimodal
 import org.apache.spark.sql.functions._
 
@@ -1004,5 +1005,18 @@ class MultimodalSpec extends SparkSpec {
       .filter(col("media_id") === 1L).orderBy("utt").collect()
     assert(all1.map(r => (r.getLong(2), r.getLong(3))).toSeq ==
       Seq((1L, 3L), (5L, 5L), (7L, 8L)))
+  }
+
+  test("synthesizers spread a one-partition input over the shuffle partitions") {
+    val docs = Seq((1L, "en", "alpha", "web"), (2L, "de", "beta", "web"),
+      (3L, "en", "gamma", "wiki")).toDF("doc_id", "lang", "text", "source").coalesce(1)
+    assert(docs.rdd.getNumPartitions == 1)
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(parts > 1)
+    for ((name, out) <- Seq(
+        "Multimodal.synthesizeBmp" -> Multimodal.synthesizeBmp(docs, "doc_id"),
+        "Warc.synthesizeWarc" -> Warc.synthesizeWarc(docs, "doc_id"),
+        "Tar.synthesizeShards" -> Tar.synthesizeShards(docs, "doc_id")))
+      assert(out.rdd.getNumPartitions == parts, name)
   }
 }

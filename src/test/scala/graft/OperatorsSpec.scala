@@ -1,7 +1,9 @@
 package graft
 
-import graft.operators.{AsOfJoin, RangeJoin}
+import graft.operators.{AsOfJoin, PartitionBatch, RangeJoin}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 class OperatorsSpec extends SparkSpec {
   import spark.implicits._
@@ -548,5 +550,31 @@ class OperatorsSpec extends SparkSpec {
         math.min(d(i - 1)(j) + 1, d(i)(j - 1) + 1),
         d(i - 1)(j - 1) + (if (a(i - 1) == b(j - 1)) 0 else 1))
     d(a.length)(b.length)
+  }
+
+  test("PartitionBatch.mapPartitions: 0, 1 and 3 rows per input row, nulls kept, declared schema") {
+    val schema = StructType(Seq(
+      StructField("n", LongType, nullable = false),
+      StructField("bin", BinaryType, nullable = true),
+      StructField("st", StructType(Seq(StructField("a", IntegerType))), nullable = true)))
+    val in = Seq(0L, 1L, 3L).toDF("n").coalesce(1)
+    assert(in.rdd.getNumPartitions == 1)
+    // input row n yields n rows; each row's first output carries null cells
+    val out = PartitionBatch.mapPartitions(in, schema) { rows =>
+      rows.flatMap { r =>
+        val n = r.getLong(0)
+        (0L until n).iterator.map { i =>
+          if (i == 0L) Row(n, null, null) else Row(n, Array(i.toByte), Row(i.toInt))
+        }
+      }
+    }
+    assert(out.schema == schema)
+    val got = out.collect().toSeq.map(r => (r.getLong(0),
+      Option(r.getAs[Array[Byte]](1)).map(_.toSeq), Option(r.getStruct(2)).map(_.getInt(0))))
+    assert(got == Seq(
+      (1L, None, None),
+      (3L, None, None),
+      (3L, Some(Seq(1.toByte)), Some(1)),
+      (3L, Some(Seq(2.toByte)), Some(2))))
   }
 }
