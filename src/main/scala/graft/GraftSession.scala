@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Central SparkSession factory — every entry point (Verify, Bench, tests,
   * pipeline mains) builds its session here so scale-sensitive settings are
@@ -47,8 +51,38 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String) =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** One table read with its schema given, so building a query starts no
+    * schema-inference job. The schema is inferred once per path and kept
+    * while the path's files keep their length and mtime; a rewrite is
+    * inferred again. Sessions whose parquet settings differ (such as
+    * `nanosAsLong`) infer apart.
+    */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val key = (path, spark.conf.getAll.filter(_._1.contains("parquet")).toSeq.sorted)
+    val stamp = fileStamp(spark, path)
+    val schema = Option(schemas.get(key)).filter(_._1 == stamp).map(_._2).getOrElse {
+      val inferred = spark.read.parquet(path).schema
+      schemas.put(key, (stamp, inferred))
+      inferred
+    }
+    spark.read.schema(schema).parquet(path)
+  }
+
+  private val schemas =
+    new ConcurrentHashMap[(String, Seq[(String, String)]), (Seq[(String, Long, Long)], StructType)]
+
+  /** (file, length, mtime) of every file under `path`; empty if it is absent. */
+  private def fileStamp(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) Nil
+    else {
+      val it = fs.listFiles(p, true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSeq
+    }
+  }
 
   /** `events` with `ts` normalized to a session-zone timestamp regardless of
     * how the generator wrote it: older drops used INT64 TIMESTAMP(NANOS)

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 
-/** The metrics listener of the measuring mains ([[Probe]], [[Stress]]):
+/** The metrics listener of the measuring main [[Probe]]:
   * each Spark job's start, end and call site and, per completed stage, its
   * tasks, shuffle read/write bytes and spill. Read it with [[measure]].
   */

@@ -7,15 +7,18 @@ import org.apache.spark.sql.execution.ExplainMode
 /** Dev probe of named gate queries, on [[Bench]]'s session and data dir
   * (`SPARK_GRAFT_CPUS`, `SPARK_GRAFT_SF_DIR`). Per query: one untimed
   * `collect()` that writes the formatted pre-execution plan and the
-  * AQE-final executed plan to `target/probe/<query>.txt`; three runs timed
+  * AQE-final executed plan to `target/probe/<query>.txt`; five runs timed
   * by [[Bench.time]]; then one JSON line with every run's seconds, their
-  * minimum, and the last run's [[Meter]] counters: each job's start offset,
-  * duration and call site, stages, tasks, shuffle bytes, spill, codegen.
+  * minimum, the median of runs 2–5 (run 1 still warms the JIT; a cold
+  * JVM's whole level moves by about a fifth, so compare medians over
+  * order-swapped pairs of JVMs), and the last run's [[Meter]] counters:
+  * each job's start offset, duration and call site, stages, tasks,
+  * shuffle bytes, spill, codegen.
   *
   * `sbt "runMain graft.Probe q23_agg_group q07_row_hash"`
   */
 object Probe {
-  private val Runs = 3
+  private val Runs = 5
   private val PlanDir = Paths.get("target/probe")
 
   def main(args: Array[String]): Unit = {
@@ -40,6 +43,11 @@ object Probe {
     spark.stop()
   }
 
+  private def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    (s((s.size - 1) / 2) + s(s.size / 2)) / 2
+  }
+
   private def line(name: String, runs: Seq[(Either[Throwable, Double], Meter.Counts)]): String = {
     import Verify.quote
     def obj(kv: (String, Any)*) = kv.map { case (k, v) => s"${quote(k)}:$v" }.mkString("{", ",", "}")
@@ -51,7 +59,8 @@ object Probe {
         val jobs = m.jobs.map(j => obj("start_s" -> f3(j.start / 1e3),
           "s" -> f3((j.end - j.start) / 1e3), "site" -> quote(j.site)))
         obj("query" -> quote(name), "runs" -> secs.map(f3).mkString("[", ",", "]"),
-          "min" -> f3(secs.min), "jobs" -> jobs.mkString("[", ",", "]"),
+          "min" -> f3(secs.min), "median" -> f3(median(secs.tail)),
+          "jobs" -> jobs.mkString("[", ",", "]"),
           "stages" -> m.stages, "tasks" -> m.tasks, "shuffle_read_bytes" -> m.shuffleRead,
           "shuffle_write_bytes" -> m.shuffleWrite, "spill_bytes" -> m.spill,
           "codegen_compiles" -> m.compiles, "codegen_ms" -> f"${m.compileNs / 1e6}%.1f")

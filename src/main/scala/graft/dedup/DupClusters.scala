@@ -37,8 +37,8 @@ import org.apache.spark.sql.functions._
   * permutation — GlobalRank over (hash, id) makes the longs unique and
   * dense, no birthday-collision component merges); the star alternation
   * runs entirely in long space, where the random order delivers its
-  * O(log n) expected bound for ANY caller id alphabet (DupClustersSpec
-  * and the graphscale probe pin chain datapoints); and the result is
+  * O(log n) expected bound for ANY caller id alphabet (CurationSpec pins
+  * a chain datapoint); and the result is
   * mapped back with component = min ORIGINAL id, so the public contract
   * is unchanged. Per-round shuffles carry 16-byte long rows instead of
   * caller-width ids — for URL-keyed corpora that alone shrinks every
@@ -207,7 +207,7 @@ object DupClusters {
 
   /** Star-alternation rounds (one large-star + one small-star each) the
     * loop took to converge on `pairs` — the observability twin of
-    * [[components]] for Stress/spec datapoints (a chain of length n must
+    * [[components]] for spec datapoints (a chain of length n must
     * come in at O(log n) rounds under the hash remap, near-cliques at
     * 1–2).
     */

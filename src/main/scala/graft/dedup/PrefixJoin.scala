@@ -34,9 +34,9 @@ import org.apache.spark.sql.functions._
   * group Jaccard is 1 by definition (≥ any t ≤ 1), and cross-group Jaccard
   * depends only on the two sets, so the expansion is exact — and the
   * quadratic-in-duplicity part of the answer becomes output-sized work
-  * instead of repeated join work (measured on the 50k-doc 10×-replica
-  * stress corpus: 155 s / 5.3 GB shuffle uncollapsed → the collapsed core
-  * runs on the ~5k distinct sets).
+  * instead of repeated join work (historical, by the removed `graft.Stress`
+  * main on a 50k-doc 10×-replica corpus: 155 s / 5.3 GB shuffle
+  * uncollapsed → the collapsed core runs on the ~5k distinct sets).
   *
   * Plan shape: shingle projection (no shuffle) → set-hash groupBy →
   * frequency agg (map-side combine) → per-set sort + slice → candidate

@@ -14,15 +14,14 @@ import java.nio.charset.StandardCharsets.US_ASCII
   * spec): fourcc + little-endian size, odd-size pad bytes, nested LIST
   * forms (`hdrl` → `avih`/`strl`, `movi` → frame chunks, trailing `idx1`).
   *
-  * Scale note: decode is pure task-side CPU with zero shuffle (the
-  * codecscale probes pin this for the whole codec family), and MJPEG is
-  * the one mainstream video coding where frames are INDEPENDENT — no
+  * Scale note: decode is pure task-side CPU with zero shuffle, and MJPEG
+  * is the one mainstream video coding where frames are INDEPENDENT — no
   * inter-frame prediction state — so one huge file's frames split across
   * tasks: [[frameOffsets]] walks the container once (no entropy decode)
   * and [[decodeFrameAt]] decodes any single chunk independently
-  * ([[Multimodal.splitAviFrameFeatures]] is the range-parallel op; the
-  * avisplit Stress probe pins balance + whole-file equality). The
-  * decoder deliberately
+  * ([[Multimodal.splitAviFrameFeatures]] is the range-parallel op;
+  * MultimodalSpec pins balance + whole-file equality). The decoder
+  * deliberately
   * IGNORES the `idx1` index and walks `movi` sequentially: an index is an
   * untrusted seek accelerator, not ground truth, and a decode that trusts
   * it silently skips frames on the (common) files whose index is stale.

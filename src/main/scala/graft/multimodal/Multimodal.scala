@@ -1176,7 +1176,7 @@ object Multimodal {
     * the same (offset, size) map drives RANGED READS against the object
     * store — the offsets are the contract, the transport is deployment
     * detail. Output schema equals [[extractAviFrameFeatures]]'s, so
-    * split == whole-file is directly assertable (avisplit Stress probe).
+    * split == whole-file is directly assertable (MultimodalSpec).
     */
   def splitAviFrameFeatures(
       spark: SparkSession,

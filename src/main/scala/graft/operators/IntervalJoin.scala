@@ -29,9 +29,11 @@ import org.apache.spark.sql.functions._
   * into the same bucket (degrading toward the cartesian).
   *
   * HOT BUCKETS (a day every interval touches) — measured mitigations
-  * (Stress scaleops, 2M-row hot bucket × 200 windows = 400M pairs through
-  * one key): when the window side broadcasts, the hot rows never shuffle
-  * and skew is structurally immune. When both sides are large, AQE's
+  * (2M-row hot bucket × 200 windows = 400M pairs through one key;
+  * historical, by the removed `graft.Stress` main at local[32], last
+  * present at commit 4e7a95a; ScaleOpsSpec pins the salted pairs exact):
+  * when the window side broadcasts, the hot rows never shuffle and skew
+  * is structurally immune. When both sides are large, AQE's
   * skew-split nominally applies to the bucket key — but it detects skew
   * by COMPRESSED shuffle bytes, and a hot bucket's near-constant rows
   * compress ~100× (2M rows ≈ 200 KB) while the join OUTPUT explodes

@@ -40,7 +40,7 @@ object TokenBudget {
     // ONE fused global stamp (rank + exclusive running total) over
     // (domain, best-quality-first, id) — a single range exchange; the
     // unfused version paid the same shuffle twice (measured 2.2 GB →
-    // 1.1 GB shuffle read at the 20M-doc schedscale probe)
+    // 1.1 GB shuffle read at 20M docs; historical, removed `graft.Stress` main)
     val ordered = df.withColumn("_negq", -col(qualityCol))
     val rn = GlobalRank.withRowNumberAndRunningTotal(
       ordered, Seq(domainCol, "_negq", idCol), nTokensCol,

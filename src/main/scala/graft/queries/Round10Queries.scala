@@ -307,7 +307,7 @@ object Round10Queries {
     },
 
     // End-to-end INCREMENTAL near-dup at the multi-day horizon: the
-    // production loop (IncrementalDedup / dedupscale probe) run
+    // production loop (IncrementalDedup) run
     // functionally — five "daily" batches (doc_id mod 5), each banding
     // only its own docs, probing the ACCUMULATED index, appending pairs;
     // then one components + keepCanonical pass. The invariant under

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.DoubleType
   * x − centroid(cell). Residuals concentrate near zero regardless of
   * where the cell sits, so the same code budget spends its precision on
   * local structure — recall at equal code bytes dominates flat PQ
-  * whenever the corpus is clustered (the pqscale probe measures it).
+  * whenever the corpus is clustered (SimilaritySpec checks it).
   *
   * Query: rank cells by centroid distance, probe the top `nProbe`, and
   * inside each probed cell run ADC with the query RELOCATED to that cell

@@ -236,8 +236,9 @@ object ProductQuantizer {
     * JUST those raw vectors returns the true top-k of the candidate set
     * — the output-sized second stage that recovers the ranking ADC's
     * granularity can't express (a near-dup cluster shares one code; the
-    * pqscale probe measures 95% recall@10 at 400 candidates on clustered
-    * corpora). The candidate set broadcasts into the raw-vector scan, so
+    * removed `graft.Stress` main, historical: 95% recall@10 at 400
+    * candidates on a clustered 200k-vector corpus). The candidate set
+    * broadcasts into the raw-vector scan, so
     * stage two is one semi-join + TakeOrdered; raw vectors load for the
     * candidates only. Scores are `x·x − 2·q·x` (the q·q constant drops
     * out of the ranking), rounded to 6 dp.

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.Row
+
 /** The measuring mains' listener: a block's counters are its own. */
 class MeterSpec extends SparkSpec {
 
@@ -30,5 +32,29 @@ class MeterSpec extends SparkSpec {
       assert(b.jobs.map(_.site.takeWhile(_ != ' ')) == Vector("collect"), b)
       assert((b.stages, b.tasks, b.shuffleRead, b.shuffleWrite) == ((1L, 2L, 0L, 0L)), b)
     }
+  }
+
+  test("Tables.load: building q23_agg_group a second time runs no job; the kept schema is the file's") {
+    withMeter { meter =>
+      SparkEntry.queries("q23_agg_group")(spark, sf)
+      val (_, m) = meter.measure(SparkEntry.queries("q23_agg_group")(spark, sf))
+      assert(m.jobs.isEmpty, m.jobs)
+    }
+    assert(Tables.load(spark, sf, "events").schema ==
+      spark.read.parquet(s"$sf/events.parquet").schema)
+  }
+
+  test("Tables.load: a rewritten table, or a session with other parquet settings, infers again") {
+    import spark.implicits._
+    val dir = tmpDir("tables")
+    Seq((1L, Array[Byte](1))).toDF("id", "b").write.parquet(s"$dir/t.parquet")
+    assert(Tables.load(spark, dir, "t").columns.toSeq == Seq("id", "b"))
+    // a plain microsecond `ts` reads as timestamp_ntz unless the session says otherwise
+    val ltz = spark.newSession()
+    ltz.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    assert(Tables.load(ltz, sf, "events").schema("ts").dataType.typeName == "timestamp")
+    assert(Tables.load(spark, sf, "events").schema("ts").dataType.typeName == "timestamp_ntz")
+    Seq((2L, "x", 3)).toDF("id", "s", "n").write.mode("overwrite").parquet(s"$dir/t.parquet")
+    assert(Tables.load(spark, dir, "t").collect().toSeq == Seq(Row(2L, "x", 3)))
   }
 }

@@ -846,6 +846,29 @@ class MultimodalSpec extends SparkSpec {
     assert(d3(0).getLong(4) == expSum, "sum_r must equal the DC closed form")
   }
 
+  test("splitAviFrameFeatures: range-parallel == whole-file decode, balanced tasks") {
+    import graft.multimodal.{AviCodec, JpegCodec}
+    import org.apache.spark.sql.Row
+    // 200 frames, every one distinct (scene every 40 frames plus a per-frame
+    // step), so a dropped or repeated frame changes the rows
+    val frames = (0 until 200).map { f =>
+      val px = Array.tabulate(16 * 16) { i =>
+        val v = ((f / 40) * 67 + (i / 16 / 8) * 71 + (i % 16 / 8) * 113 + f) % 256
+        (v << 16) | (v << 8) | v
+      }
+      JpegCodec.encode(16, 16, px, grayscale = true)
+    }
+    val avi = AviCodec.encodeMjpeg(16, 16, fps = 10, frames)
+    val media = spark.createDataFrame(
+      java.util.List.of(Row(7L, avi, Row("video", "avi", 16, 16, null))), Multimodal.MediaSchema)
+    val whole = Multimodal.extractAviFrameFeatures(media).orderBy("frame").collect().toSeq
+    assert(whole.map(_.getLong(1)) == (0L until 200L))
+    val split = Multimodal.splitAviFrameFeatures(spark, 7L, avi, parallelism = 8)
+    assert(split.orderBy("frame").collect().toSeq == whole)
+    val perTask = split.rdd.mapPartitions(it => Iterator(it.length)).collect()
+    assert(perTask.length == 8 && perTask.max - perTask.min <= 1, perTask.mkString(","))
+  }
+
   test("extractAviFrameDHash: a scene shared across two videos collides") {
     import graft.multimodal.Multimodal
     // v = (id·29 + scene·67 + …) mod 256 and 29⁻¹ ≡ 53 (mod 256), so

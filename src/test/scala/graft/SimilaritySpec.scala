@@ -1,6 +1,7 @@
 package graft
 
 import graft.sim.{KMeans, Similarity}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpec {
@@ -512,5 +513,62 @@ class SimilaritySpec extends SparkSpec {
       "vec_id", "cell", PqIndexStore.readCodebook(spark, root),
       probe, nProbe = 1, topK = 3)
     assert(top.count() == 3)
+  }
+
+  // 1000 planted clusters in 64 dims (center + small id-driven noise), 20
+  // vectors each: the clustered shape PQ exists for, at tier-1 size
+  private def centerTerm(g: Column, d: Column): Column =
+    (pmod(g * 7919L + d * 104729L, lit(2000L)) - 1000L).cast("double") / 1000.0
+  private def clustered(from: Long, n: Long, shift: Double = 0.0) =
+    spark.range(from, from + n).select(col("id").as("vec_id"),
+      transform(sequence(lit(0), lit(63)), d =>
+        (centerTerm(pmod(col("id"), lit(1000L)), d) + lit(shift) +
+          (pmod(col("id") * 31L + d * 17L, lit(200L)) - 100L).cast("double") / 2000.0)
+          .cast("float")).as("embedding"))
+  private def clusterCenter(q: Int): Array[Double] =
+    Array.tabulate(64)(d => (((q * 7919L + d * 104729L) % 2000L) - 1000L).toDouble / 1000.0)
+
+  test("residual IVF+PQ recall@10 beats flat PQ at equal code bytes on a clustered corpus") {
+    import graft.sim.{IvfPq, ProductQuantizer}
+    val vecs = clustered(0L, 20000L).persist()
+    val cells = vecs.withColumn("cell", pmod(col("vec_id"), lit(1000L)))
+    try {
+      val cb = ProductQuantizer.fit(vecs, "vec_id", "embedding", dims = 64, m = 8, k = 16, iters = 3)
+      val codes = ProductQuantizer.encode(vecs, "vec_id", "embedding", cb).persist()
+      val (cents, icb) = IvfPq.fitResidual(cells, "vec_id", "embedding", "cell",
+        dims = 64, m = 8, k = 16, iters = 3)
+      val icodes = IvfPq.encode(cells, cents, "vec_id", "embedding", "cell", icb).persist()
+      val raw = vecs.collect().map(r => r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble))
+      def top10(df: DataFrame): Set[Long] = df.collect().map(_.getLong(0)).toSet
+      val (flatHits, ivfHits) = (0 until 20).map { q =>
+        val qv = clusterCenter(q)
+        val exact = raw.map { case (id, v) =>
+          (v.iterator.zip(qv.iterator).map { case (x, y) => (x - y) * (x - y) }.sum, id)
+        }.sorted.take(10).map(_._2).toSet
+        (top10(ProductQuantizer.adcTopK(codes, "vec_id", cb, qv, 10)).intersect(exact).size,
+          top10(IvfPq.adcTopK(icodes, cents, "vec_id", "cell", icb, qv, nProbe = 4, topK = 10))
+            .intersect(exact).size)
+      }.unzip
+      assert(ivfHits.sum > flatHits.sum,
+        s"residual IVF+PQ hits ${ivfHits.sum}/200 must beat flat PQ ${flatHits.sum}/200")
+      codes.unpersist(); icodes.unpersist(); cents.unpersist()
+    } finally vecs.unpersist()
+  }
+
+  test("PqIndexStore staleness: an in-distribution day reads ~1x, a drifted day > 3x") {
+    import graft.sim.{PqIndexStore, ProductQuantizer}
+    val day0 = clustered(0L, 20000L)
+    val cb = ProductQuantizer.fit(day0, "vec_id", "embedding", dims = 64, m = 8, k = 16, iters = 3)
+    val root = tmpDir("pqstale")
+    PqIndexStore.writeCodebook(spark, root, cb)
+    val frozen = PqIndexStore.readCodebook(spark, root)
+    PqIndexStore.appendBatch(day0, "vec_id", "embedding", root, frozen, "day0")
+    PqIndexStore.appendBatch(clustered(20000L, 2000L), "vec_id", "embedding", root, frozen, "day1")
+    PqIndexStore.appendBatch(clustered(22000L, 2000L, shift = 0.5),
+      "vec_id", "embedding", root, frozen, "day2-drift")
+    val ratio = PqIndexStore.staleness(spark, root).collect()
+      .map(r => r.getAs[String]("batch_id") -> r.getAs[Double]("drift_ratio")).toMap
+    assert(ratio("day1") < 1.5 && ratio("day2-drift") > 3.0, ratio)
+    assert(PqIndexStore.codes(spark, root).count() == 24000L)
   }
 }

@@ -396,5 +396,8 @@ class WarcSpec extends SparkSpec {
       assert(row.getLong(2) == rec.block.length.toLong)
     }
     assert(split.count(r => !r.isNullAt(3) && r.getLong(3) == 200L) == 30)
+    val perTask = Warc.splitRecords(spark, 7L, big, parallelism = 4)
+      .rdd.mapPartitions(it => Iterator(it.length)).collect()
+    assert(perTask.length == 4 && perTask.max - perTask.min <= 1, perTask.mkString(","))
   }
 }
