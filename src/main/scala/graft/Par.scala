@@ -14,10 +14,13 @@ package graft
   * exception rethrown).
   *
   * Contract: ONE THREAD PER THUNK, no cap — for a handful of independent
-  * actions (the largest fan-out today is six, the probe queries of
-  * Round15Queries' IVF-PQ refit gate). A caller with a per-row, per-probe
-  * or per-batch list of unbounded length must not pass it here: each
-  * thunk is a thread driving its own concurrent Spark jobs.
+  * actions. Only the query-level fan-outs of Round12–15Queries call it;
+  * the stores run their steps in order, so a crash test's k-th
+  * filesystem step is the same step on every run. The largest fan-out
+  * is six, the probe queries of Round15Queries' IVF-PQ refit gate. A
+  * caller with a per-row, per-probe or per-batch list of unbounded
+  * length must not pass it here: each thunk is a thread driving its own
+  * concurrent Spark jobs.
   */
 object Par {
   def run[A](thunks: Seq[() => A]): Seq[A] = {

@@ -1,5 +1,7 @@
 package graft.catalog
 
+import graft.store.CommitLog
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -40,22 +42,33 @@ object Status {
   * (`util/data_pushing.py:430-460`; moving it here is SURVEY.md §7.4 item 6).
   *
   * Append-only: one file may have many status rows; the latest watermark row
-  * per table wins.
+  * per table wins. Both logs are [[graft.store.CommitLog]] logs: one
+  * committed dir per append, folded by [[compactWatermarkHistory]].
   */
 final class Catalog(spark: SparkSession, dir: String) {
   import spark.implicits._
 
   private val statusDir = s"$dir/processed_files"
-  private val watermarkDir = s"$dir/watermarks"
+  private val StatusSchema = "file_name STRING, status STRING, created_at TIMESTAMP"
+  private val WatermarkSchema = "table_name STRING, last_id BIGINT, updated_at TIMESTAMP"
 
-  /** Read a log (recursive: one subdir per commit, plus any legacy flat
-    * files) with its declared row layout, so no job infers it from footers.
+  /** A log's committed dirs read in one scan with its declared row
+    * layout, so no job infers it from footers; None when it has none.
     */
-  private def readLog(d: String, schema: String): DataFrame =
-    spark.read.schema(schema).option("recursiveFileLookup", "true").parquet(d)
+  private def readLog(dirs: Seq[String], schema: String): Option[DataFrame] =
+    if (dirs.isEmpty) None else Some(spark.read.schema(schema).parquet(dirs: _*))
 
-  private def watermarkLog: DataFrame =
-    readLog(watermarkDir, "table_name STRING, last_id BIGINT, updated_at TIMESTAMP")
+  private def watermarkLog: Option[DataFrame] =
+    readLog(CommitLog.dirs(spark, dir, "watermarks"), WatermarkSchema)
+
+  /** One append to a log, in its own dir: Spark's output committer
+    * stages every job writing to a path under that path's shared
+    * `_temporary`, so per-commit dirs keep two appending processes from
+    * deleting each other's staged files.
+    */
+  private def append(log: String, rows: DataFrame): Unit =
+    rows.coalesce(1).write.mode(SaveMode.Overwrite)
+      .parquet(s"$dir/$log/c_${java.util.UUID.randomUUID()}")
 
   /** Per-run cache of the processed-file NAME SET for the driver-side
     * [[isProcessed]] probe: the per-file orchestration path probes once per
@@ -94,9 +107,9 @@ final class Catalog(spark: SparkSession, dir: String) {
     * [[refreshProcessedNames]] between batches or use the set-based
     * [[filterUnprocessed]] path, which never touches this cache. */
   private def statusStamp(): Long = {
-    val p = new org.apache.hadoop.fs.Path(statusDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.getFileStatus(p).getModificationTime else -1L
+    val p = new Path(statusDir)
+    try CommitLog.fs(spark, p).getFileStatus(p).getModificationTime
+    catch { case _: java.io.FileNotFoundException => -1L }
   }
 
   private def cachedNames(): Set[String] = {
@@ -110,29 +123,15 @@ final class Catalog(spark: SparkSession, dir: String) {
     c._2
   }
 
-  private def existsAny(d: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(d)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).nonEmpty
-  }
-
   /** K3 — append one status row per given status, all in ONE commit (one
     * write job), and keep the probe cache in sync.
-    * Each append lands in its OWN subdirectory: Spark's output committer
-    * stages every job writing to a path under that path's shared
-    * `_temporary` dir, so two processes appending to the same directory
-    * can delete each other's staged files — per-commit dirs make the
-    * append multi-writer safe (reads recurse).
     */
   def recordStatus(fileName: String, statuses: String*): Unit = {
     require(statuses.nonEmpty, "need at least one status")
     val preStamp = statusStamp()
     val now = new java.sql.Timestamp(System.currentTimeMillis())
-    statuses.map(s => (fileName, s, now))
-      .toDF("file_name", "status", "created_at")
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$statusDir/c_${java.util.UUID.randomUUID()}")
+    append("processed_files",
+      statuses.map(s => (fileName, s, now)).toDF("file_name", "status", "created_at"))
     val c = nameCache
     // keep the probe cache warm across our OWN append — but only when
     // nothing else moved the dir since we cached: re-stamping over an
@@ -147,9 +146,9 @@ final class Catalog(spark: SparkSession, dir: String) {
 
   /** S9/S10 — the full status log. */
   def statusLog: DataFrame =
-    if (existsAny(statusDir))
-      readLog(statusDir, "file_name STRING, status STRING, created_at TIMESTAMP")
-    else Seq.empty[(String, String, java.sql.Timestamp)].toDF("file_name", "status", "created_at")
+    readLog(CommitLog.dirs(spark, dir, "processed_files"), StatusSchema)
+      .getOrElse(Seq.empty[(String, String, java.sql.Timestamp)]
+        .toDF("file_name", "status", "created_at"))
 
   /** The idempotency set: distinct file names with any recorded status. */
   def processedFileNames: DataFrame = statusLog.select("file_name").distinct()
@@ -166,16 +165,10 @@ final class Catalog(spark: SparkSession, dir: String) {
     */
   def isProcessed(fileName: String): Boolean = cachedNames().contains(fileName)
 
-  /** K4 — watermark commit (append-only; latest row wins). Per-commit
-    * subdirectory for the same multi-writer committer-isolation reason
-    * as [[recordStatus]].
-    */
+  /** K4 — watermark commit (append-only; latest row wins). */
   def setWatermark(table: String, lastId: Long): Unit =
-    Seq((table, lastId, new java.sql.Timestamp(System.currentTimeMillis())))
-      .toDF("table_name", "last_id", "updated_at")
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$watermarkDir/c_${java.util.UUID.randomUUID()}")
+    append("watermarks", Seq((table, lastId, new java.sql.Timestamp(System.currentTimeMillis())))
+      .toDF("table_name", "last_id", "updated_at"))
 
   /** A2 — current watermark for a table (0 when never set). Resolved by
     * `last_id` FIRST: watermarks are strictly increasing under both the
@@ -188,82 +181,45 @@ final class Catalog(spark: SparkSession, dir: String) {
     * clock skew. `updated_at` stays as a tiebreaker only.
     */
   def watermark(table: String): Long =
-    if (!existsAny(watermarkDir)) 0L
-    else {
-      val rows = watermarkLog
-        .filter($"table_name" === table)
-        .orderBy($"last_id".desc, $"updated_at".desc)
-        .select($"last_id")
-        .head(1)
-      if (rows.isEmpty) 0L else rows(0).getLong(0)
-    }
+    watermarkLog.flatMap(_.filter($"table_name" === table)
+      .orderBy($"last_id".desc, $"updated_at".desc)
+      .select($"last_id").head(1).headOption)
+      .fold(0L)(_.getLong(0))
 
   // ---- multi-writer watermark protocol -------------------------------------
 
   private def slotPath(table: String, expected: Long) =
-    new org.apache.hadoop.fs.Path(s"$dir/watermark_slots/$table/from_$expected")
-
-  /** Atomic create-no-overwrite of a small file. Local paths go through
-    * java.nio `CREATE_NEW` (atomic open-exclusive); everything else uses
-    * Hadoop `create(path, overwrite = false)`, which is atomic on HDFS.
-    * Object-store caveat: classic S3A create is check-then-put, so on
-    * stores without conditional writes the exclusivity is best-effort —
-    * pair the catalog with a store that has atomic create (HDFS, ABFS)
-    * for hard multi-writer guarantees.
-    */
-  private def atomicCreate(p: org.apache.hadoop.fs.Path, content: String): Boolean = {
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(p.getParent)
-    if (p.toUri.getScheme == null || p.toUri.getScheme == "file") {
-      try {
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(p.toUri.getPath),
-          content.getBytes("UTF-8"),
-          java.nio.file.StandardOpenOption.CREATE_NEW)
-        true
-      } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    } else {
-      try {
-        val out = fs.create(p, false)
-        try out.write(content.getBytes("UTF-8")) finally out.close()
-        true
-      } catch { case _: java.io.IOException => false }
-    }
-  }
-
-  private def readSlot(p: org.apache.hadoop.fs.Path): Long = {
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    try new String(in.readAllBytes(), "UTF-8").trim.toLong finally in.close()
-  }
+    new Path(s"$dir/watermark_slots/$table/from_$expected")
 
   /** K4 for CONCURRENT writers — conditional watermark commit (optimistic
     * concurrency): advances `table`'s watermark to `newId` only if it
     * still equals `expected`; returns whether THIS call won. Two ingest
     * jobs racing from the same snapshot contend on one transition slot
-    * (`watermark_slots/<table>/from_<expected>`, claimed by atomic
-    * create-no-overwrite — watermarks are strictly increasing, so a
-    * value is transitioned FROM at most once and the slot name is a
-    * natural CAS key); exactly one create wins and appends the watermark
-    * row, the loser returns false, re-reads, and retries from the new
-    * value. A winner that crashes between claiming the slot and
-    * appending the row is ROLLED FORWARD by whichever caller next
-    * touches the transition (the slot records the committed id), so a
-    * crash never wedges the ladder. The unconditional [[setWatermark]]
-    * remains the single-writer fast path.
+    * (`watermark_slots/<table>/from_<expected>`, claimed by an exclusive
+    * [[CommitLog.publish]] of the new id — watermarks are strictly
+    * increasing, so a value is transitioned FROM at most once and the
+    * slot name is a natural CAS key); exactly one claim wins and appends
+    * the watermark row, the loser returns false, re-reads, and retries
+    * from the new value. The slot is published whole, so a winner that
+    * crashes between claiming the slot and appending the row is ROLLED
+    * FORWARD by whichever caller next touches the transition: a crash
+    * never wedges the ladder. Exclusivity is the publish's: hard on
+    * `file:` and HDFS. The unconditional [[setWatermark]] remains the
+    * single-writer fast path.
     */
   def compareAndSetWatermark(table: String, expected: Long, newId: Long): Boolean = {
     require(newId > expected, s"watermark must advance: $expected -> $newId")
     if (watermark(table) != expected) return false
     val slot = slotPath(table, expected)
-    if (atomicCreate(slot, newId.toString)) {
+    if (CommitLog.publish(spark, slot, Seq(newId.toString))) {
       setWatermark(table, newId)
       true
     } else {
       // lost the race (or found a crashed winner): roll the recorded
       // transition forward if its append never landed, then report loss
-      val committed = readSlot(slot)
-      if (watermark(table) == expected) setWatermark(table, committed)
+      CommitLog.read(spark, slot).flatMap(_.headOption).foreach { committed =>
+        if (watermark(table) == expected) setWatermark(table, committed.toLong)
+      }
       false
     }
   }
@@ -274,45 +230,36 @@ final class Catalog(spark: SparkSession, dir: String) {
     * parquet commit dir + one slot file per transition and [[watermark]]
     * reads/sorts the whole history on every call — linear degradation.
     *
-    * Safe to run alongside CAS writers: only the commit subdirectories
-    * listed BEFORE the snapshot lands are deleted (a concurrent append
-    * creates a new subdir we never touch, and values strictly increase so
-    * the snapshot can never shadow it under the last_id-first resolution),
-    * and only slots `from_<N>` with N strictly below a table's current
-    * watermark go (those transitions are fully committed — a crashed
-    * winner's roll-forward need is exactly the slot AT the current value,
-    * which is kept). Same maintenance-pass discipline as the dedup
-    * store's compact+vacuum.
+    * A [[CommitLog.fold]] of the committed dirs (nothing to do under
+    * two). Safe to run alongside CAS writers: a concurrent append creates
+    * a new dir the fold never lists, and values strictly increase so the
+    * snapshot can never shadow it under the last_id-first resolution.
+    * Only slots `from_<N>` (and their claim temps) with N strictly below
+    * a table's current watermark go: those transitions are fully
+    * committed, and a crashed winner's roll-forward needs exactly the
+    * slot AT the current value, which is kept. A fold that a crash left
+    * mid-delete is finished by the next call.
     */
   def compactWatermarkHistory(): Unit = {
-    if (!existsAny(watermarkDir)) return
-    val conf = spark.sparkContext.hadoopConfiguration
-    val wmPath = new org.apache.hadoop.fs.Path(watermarkDir)
-    val fs = wmPath.getFileSystem(conf)
-    val oldDirs = fs.listStatus(wmPath).filter(_.isDirectory).map(_.getPath)
-    // latest row per table: last_id desc (strictly-increasing resolution)
-    val snapshot = watermarkLog
-      .groupBy($"table_name")
-      .agg(max(struct($"last_id", $"updated_at")).as("w"))
-      .select($"table_name", $"w.last_id", $"w.updated_at")
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getTimestamp(2)))
-    if (snapshot.isEmpty) return
-    snapshot.toSeq.toDF("table_name", "last_id", "updated_at")
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$watermarkDir/c_${java.util.UUID.randomUUID()}")
-    oldDirs.foreach(p => fs.delete(p, true))
-    // prune committed CAS slots (from_<N> below the table's floor)
-    val slotsRoot = new org.apache.hadoop.fs.Path(s"$dir/watermark_slots")
-    if (fs.exists(slotsRoot)) for ((table, floor, _) <- snapshot) {
-      val td = new org.apache.hadoop.fs.Path(slotsRoot, table)
-      if (fs.exists(td)) fs.listStatus(td).foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("from_") && n.stripPrefix("from_").matches("-?[0-9]+") &&
-            n.stripPrefix("from_").toLong < floor)
-          fs.delete(st.getPath, false)
-      }
+    CommitLog.fold(spark, dir, "watermarks", retire = true)(
+      Some(CommitLog.dirs(spark, dir, "watermarks")).filter(_.size > 1).getOrElse(Nil)) {
+      sources =>
+      // latest row per table: last_id desc (strictly-increasing resolution)
+      append("watermarks", readLog(sources, WatermarkSchema).get
+        .groupBy($"table_name")
+        .agg(max(struct($"last_id", $"updated_at")).as("w"))
+        .select($"table_name", $"w.last_id", $"w.updated_at"))
     }
+    // prune committed CAS slots (from_<N> below the table's floor)
+    val floors = watermarkLog.fold(Map.empty[String, Long])(
+      _.groupBy($"table_name").agg(max($"last_id")).as[(String, Long)].collect().toMap)
+    val Slot = "(?:\\._)?from_(-?[0-9]+)(?:\\..+\\.tmp)?".r
+    for {
+      t <- CommitLog.list(spark, s"$dir/watermark_slots")
+      floor <- floors.get(t.getPath.getName)
+      s <- CommitLog.list(spark, t.getPath.toString)
+      Slot(n) <- Some(s.getPath.getName)
+      if n.toLong < floor
+    } CommitLog.delete(spark, Seq(s.getPath))
   }
 }

@@ -1,10 +1,10 @@
 package graft.dedup
 
-import java.nio.charset.StandardCharsets.UTF_8
-
+import graft.store.CommitLog
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{AnalysisException, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** The production incremental near-dup loop a 100 TB corpus actually runs —
   * ONE pipeline op composing the pieces the per-verb gates already prove
@@ -50,8 +50,9 @@ import org.apache.spark.sql.functions._
   * and re-running the batch (same `batchId`, fresh attempt) is safe: the
   * old attempt's rows never match any marker. Re-ingesting an
   * already-committed `batchId` is a no-op that reports from state.
-  * Markers are single files created complete-then-closed; on a store
-  * without atomic create-visibility, write to a temp name and rename.
+  * Markers are published whole ([[graft.store.CommitLog.publish]]). The
+  * four tables commit at one marker, which a per-dir commit cannot
+  * express, hence the (batch, attempt) tags.
   *
   * Single-WRITER contract like the catalog (one daily ingest job owns
   * the state). [[audit]] is a READER and safe to run concurrently with
@@ -118,44 +119,32 @@ object IncrementalDedup {
     */
   private val SmallMergeEdges = 100000L
 
-  private def fs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** Committed batches: batchId → marker. Driver-side, O(#batches) — a
     * year of daily ingest is ~366 tiny files (and [[compact]] prunes).
-    * A marker that does not parse (a crash mid-marker-write, the one
-    * non-atomic step) is treated as ABSENT: the batch's data rows are
-    * invisible either way, re-ingest of the same batchId proceeds with
-    * a fresh attempt and REWRITES the marker (create is overwrite), and
-    * [[vacuum]] clears the corpse — the protocol never wedges on its
-    * own partial writes.
+    * Markers are published whole; one that does not parse (a torn marker
+    * that older versions wrote in place) is treated as ABSENT: re-ingest
+    * of its batchId proceeds with a fresh attempt and replaces it, and
+    * [[vacuum]] clears it.
     */
-  private def committed(spark: SparkSession, state: State): Map[String, Commit] = {
-    val f = fs(spark, state.commitsDir)
-    val dir = new Path(state.commitsDir)
-    if (!f.exists(dir)) Map.empty
-    else f.listStatus(dir).filter(_.isFile).flatMap { st =>
-      val in = f.open(st.getPath)
-      val body = try new String(in.readAllBytes(), UTF_8) finally in.close()
-      body.trim.split("\n") match {
-        case Array(attempt, seq, kind) if seq.matches("-?[0-9]+") =>
-          Some(st.getPath.getName -> Commit(attempt, seq.toLong, kind == "snapshot"))
-        case Array(attempt, seq, kind, folded) if seq.matches("-?[0-9]+") =>
-          Some(st.getPath.getName -> Commit(attempt, seq.toLong, kind == "snapshot",
-            folded.split(",").iterator.filter(_.nonEmpty).toSet))
-        case _ => None // partial marker from a crashed commit: uncommitted
-      }
+  private def committed(spark: SparkSession, state: State): Map[String, Commit] =
+    CommitLog.markers(spark, state.commitsDir).flatMap {
+      case (batchId, Seq(attempt, seq, kind, folded @ _*))
+          if seq.matches("-?[0-9]+") && folded.sizeIs <= 1 =>
+        Some(batchId -> Commit(attempt, seq.toLong, kind == "snapshot",
+          folded.flatMap(_.split(",")).filter(_.nonEmpty).toSet))
+      case _ => None
     }.toMap
-  }
 
   private def writeMarker(
       spark: SparkSession, state: State, batchId: String, c: Commit): Unit = {
-    val f = fs(spark, state.commitsDir)
-    val out = f.create(new Path(state.commitsDir, batchId), true)
+    val p = new Path(state.commitsDir, batchId)
     val kind = if (c.snapshot) "snapshot" else "delta"
-    val tail = if (c.folded.isEmpty) "" else "\n" + c.folded.toSeq.sorted.mkString(",")
-    try out.write(s"${c.attempt}\n${c.seq}\n$kind$tail".getBytes(UTF_8))
-    finally out.close()
+    val lines = Seq(c.attempt, c.seq.toString, kind) ++
+      (if (c.folded.isEmpty) Nil else Seq(c.folded.toSeq.sorted.mkString(",")))
+    if (!CommitLog.publish(spark, p, lines)) { // a torn marker: replace it
+      CommitLog.delete(spark, Seq(p))
+      require(CommitLog.publish(spark, p, lines), s"marker $p published concurrently")
+    }
   }
 
   /** Every batchId the state already accounts for: live markers plus ids
@@ -189,19 +178,23 @@ object IncrementalDedup {
   private def visible(
       spark: SparkSession, state: State, dir: String, schema: String,
       com: Map[String, Commit]): DataFrame = {
-    val cols = schema.split(",").map(_.trim.split(" ")(0))
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(schema))
-    if (!fs(spark, dir).exists(new Path(dir))) return empty
+    val declared = StructType.fromDDL(schema)
+    // read with the declared layout plus the commit tags: no job infers
+    // it from footers, and `batch` stays a string whatever a batchId
+    // looks like (partition inference would type "007" as an int)
+    val stored = StructType(declared.filterNot(f => f.name == "batch" || f.name == "attempt"))
+      .add("attempt", StringType).add("batch", StringType)
     val raw =
-      try spark.read.parquet(dir)
-      catch { case _: AnalysisException => return empty } // dir exists, no data
+      try spark.read.schema(stored).parquet(dir)
+      catch { // no dir yet
+        case _: AnalysisException =>
+          return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], declared)
+      }
     val live = liveBatches(com).toSeq
       .map { case (b, c) => (b, c.attempt) }
     import spark.implicits._
     raw.join(broadcast(live.toDF("batch", "attempt")), Seq("batch", "attempt"))
-      .select(cols.map(col): _*)
+      .select(declared.fieldNames.map(col): _*)
   }
 
   /** The current id → representative map, losers only (rep < id): the
@@ -262,7 +255,7 @@ object IncrementalDedup {
     val com = committed(spark, state)
     val seq = nextSeq(com)
     val bid = Option(batchId).getOrElse(f"b$seq%06d")
-    require(bid.matches("[A-Za-z0-9._-]+"), s"batchId '$bid' is not filename-safe")
+    CommitLog.requireId(bid)
     // already committed (directly, or folded into a snapshot by a compact
     // that vacuumed the delta's own marker) → idempotent no-op; recovery
     // re-runs land here. A folded batch's rows now live under the
@@ -277,107 +270,99 @@ object IncrementalDedup {
 
     val ids = batch.select(col(idCol).cast("long").as("id"))
 
-    // 1. band the new docs (cached: probed once, appended once)
-    val newBanded = MinHashLsh
-      .bandedTable(batch.select(col(idCol).cast("long").as("id"), col(textCol)),
-        "id", textCol, shingleSize, numHashes, bands)
-      .persist()
+    // every persisted frame is released in `finally`, on every path
+    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def cache(df: DataFrame): DataFrame = { cached += df; df.persist() }
+    val nNewPairs = try {
+      // 1. band the new docs (cached: probed once, appended once)
+      val newBanded = cache(MinHashLsh
+        .bandedTable(batch.select(col(idCol).cast("long").as("id"), col(textCol)),
+          "id", textCol, shingleSize, numHashes, bands))
 
-    // 2. probe stored index ∪ own rows: new×old plus new×new pairs —
-    // exactly the pairs the batch recompute would add (q129 invariant)
-    val storedBanded = visible(spark, state, state.indexDir,
-      "id BIGINT, band INT, bucket STRING", com)
-    val newPairs = MinHashLsh
-      .candidatePairsAgainst(newBanded, storedBanded.unionByName(newBanded), "id")
-      .persist()
-    val nNewPairs = newPairs.count()
+      // 2. probe stored index ∪ own rows: new×old plus new×new pairs —
+      // exactly the pairs the batch recompute would add (q129 invariant)
+      val storedBanded = visible(spark, state, state.indexDir,
+        "id BIGINT, band INT, bucket STRING", com)
+      val newPairs = cache(MinHashLsh
+        .candidatePairsAgainst(newBanded, storedBanded.unionByName(newBanded), "id"))
+      val nNewPairs = newPairs.count()
 
-    // 3. fold new pairs into the stored clusters at REP level: one node
-    // per touched component (or fresh batch id), one edge per new pair —
-    // the graph DupClusters sees is batch-sized regardless of corpus age.
-    // The caches feeding the delta stay live until the APPEND below
-    // materializes it — no extra count-to-materialize job.
-    var repCaches: Seq[DataFrame] = Nil
-    val repDelta: DataFrame = if (nNewPairs == 0) null else {
-      val reps = resolvedReps(spark, state, com).persist()
-      val endpoints = newPairs.select(col("id_a").as("id"))
-        .unionByName(newPairs.select(col("id_b").as("id"))).distinct()
-      val epReps = endpoints.join(reps, Seq("id"), "left")
-        .select(col("id"), coalesce(col("rep"), col("id")).as("rep"))
-        .persist()
-      val repEdges = newPairs
-        .join(epReps.select(col("id").as("id_a"), col("rep").as("_ra")), "id_a")
-        .join(epReps.select(col("id").as("id_b"), col("rep").as("_rb")), "id_b")
-        .select(col("_ra"), col("_rb"))
-        .filter(col("_ra") =!= col("_rb"))
-        .distinct()
-      // merged old reps / losing fresh ids → their new (smaller) rep.
-      // Small-batch fast path: the rep graph is ≤ nNewPairs edges, and a
-      // DAILY batch's merge graph is batch-sized by construction — driver
-      // union-find (min-id roots, identical semantics to
-      // DupClusters.components) costs ONE collect where the distributed
-      // star alternation costs ~10 scheduler round-trips; the distributed
-      // path remains for backfill-scale merges. The collect is bounded by
-      // the threshold (2 longs/edge — the sanctioned O(small) inventory).
-      val changed: DataFrame = if (nNewPairs <= SmallMergeEdges) {
-        val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-        val nodes = scala.collection.mutable.LinkedHashSet.empty[Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent(r)
-          var c = x
-          while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-          r
-        }
-        repEdges.collect().foreach { row =>
-          val a = row.getLong(0); val b = row.getLong(1)
-          nodes += a; nodes += b
-          val ra = find(a); val rb = find(b)
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
-        val rows = nodes.iterator.flatMap { n =>
-          val r = find(n)
-          if (r != n) Some(org.apache.spark.sql.Row(n, r)) else None
-        }.toSeq
-        spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, 1),
-          org.apache.spark.sql.types.StructType.fromDDL("node BIGINT, component BIGINT"))
-      } else DupClusters.components(repEdges, "_ra", "_rb")
-        .filter(col("node") =!= col("component"))
-      // existing members of a merged component follow their old rep down.
-      // Broadcast `changed` only on the small-merge driver path, where it
-      // is provably bounded by SmallMergeEdges nodes; the distributed path
-      // runs precisely when the merge graph is backfill-scale and
-      // `changed` can approach corpus size — there a broadcast hint is an
-      // OOM risk, so let Catalyst plan a keyed shuffle join.
-      val changedRenamed =
-        changed.select(col("node").as("rep"), col("component").as("_nr"))
-      val changedForJoin =
-        if (nNewPairs <= SmallMergeEdges) broadcast(changedRenamed) else changedRenamed
-      val memberUpdates = reps
-        .join(changedForJoin, Seq("rep"))
-        .select(col("id"), col("_nr").as("rep"))
-      repCaches = Seq(reps, epReps)
-      changed.select(col("node").as("id"), col("component").as("rep"))
-        .unionByName(memberUpdates)
-    }
+      // 3. fold new pairs into the stored clusters at REP level: one node
+      // per touched component (or fresh batch id), one edge per new pair —
+      // the graph DupClusters sees is batch-sized regardless of corpus age.
+      // The caches feeding the delta stay live until the APPEND below
+      // materializes it — no extra count-to-materialize job.
+      val repDelta: DataFrame = if (nNewPairs == 0) null else {
+        val reps = cache(resolvedReps(spark, state, com))
+        val endpoints = newPairs.select(col("id_a").as("id"))
+          .unionByName(newPairs.select(col("id_b").as("id"))).distinct()
+        val epReps = cache(endpoints.join(reps, Seq("id"), "left")
+          .select(col("id"), coalesce(col("rep"), col("id")).as("rep")))
+        val repEdges = newPairs
+          .join(epReps.select(col("id").as("id_a"), col("rep").as("_ra")), "id_a")
+          .join(epReps.select(col("id").as("id_b"), col("rep").as("_rb")), "id_b")
+          .select(col("_ra"), col("_rb"))
+          .filter(col("_ra") =!= col("_rb"))
+          .distinct()
+        // merged old reps / losing fresh ids → their new (smaller) rep.
+        // Small-batch fast path: the rep graph is ≤ nNewPairs edges, and a
+        // DAILY batch's merge graph is batch-sized by construction — driver
+        // union-find (min-id roots, identical semantics to
+        // DupClusters.components) costs ONE collect where the distributed
+        // star alternation costs ~10 scheduler round-trips; the distributed
+        // path remains for backfill-scale merges. The collect is bounded by
+        // the threshold (2 longs/edge — the sanctioned O(small) inventory).
+        val changed: DataFrame = if (nNewPairs <= SmallMergeEdges) {
+          val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+          val nodes = scala.collection.mutable.LinkedHashSet.empty[Long]
+          def find(x: Long): Long = {
+            var r = x
+            while (parent.getOrElse(r, r) != r) r = parent(r)
+            var c = x
+            while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+            r
+          }
+          repEdges.collect().foreach { row =>
+            val a = row.getLong(0); val b = row.getLong(1)
+            nodes += a; nodes += b
+            val ra = find(a); val rb = find(b)
+            if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+          }
+          val rows = nodes.iterator.flatMap { n =>
+            val r = find(n)
+            if (r != n) Some(Row(n, r)) else None
+          }.toSeq
+          spark.createDataFrame(
+            spark.sparkContext.parallelize(rows, 1),
+            StructType.fromDDL("node BIGINT, component BIGINT"))
+        } else DupClusters.components(repEdges, "_ra", "_rb")
+          .filter(col("node") =!= col("component"))
+        // existing members of a merged component follow their old rep down.
+        // Broadcast `changed` only on the small-merge driver path, where it
+        // is provably bounded by SmallMergeEdges nodes; the distributed path
+        // runs precisely when the merge graph is backfill-scale and
+        // `changed` can approach corpus size — there a broadcast hint is an
+        // OOM risk, so let Catalyst plan a keyed shuffle join.
+        val changedRenamed =
+          changed.select(col("node").as("rep"), col("component").as("_nr"))
+        val changedForJoin =
+          if (nNewPairs <= SmallMergeEdges) broadcast(changedRenamed) else changedRenamed
+        val memberUpdates = reps
+          .join(changedForJoin, Seq("rep"))
+          .select(col("id"), col("_nr").as("rep"))
+        changed.select(col("node").as("id"), col("component").as("rep"))
+          .unionByName(memberUpdates)
+      }
 
-    // 4. append-only state updates — data first, marker LAST (the commit
-    // point); a crash anywhere before the marker leaves invisible rows.
-    // The four appends land in DISTINCT state dirs and read already-
-    // materialized caches, so they run CONCURRENTLY (the marker still
-    // writes only after every append returns — same crash window as the
-    // sequential order, which also left partial invisible data). The
-    // rep-delta append is the action that materializes the delta, so its
-    // input caches release right after the barrier.
-    graft.Par.run(
-      Seq(() => append(newBanded, state.indexDir)) ++
-        (if (nNewPairs > 0) Seq(() => append(newPairs, state.pairsDir)) else Nil) ++
-        Seq(() => append(ids, state.docsDir)) ++
-        (if (repDelta != null) Seq(() => append(repDelta, state.repsDir)) else Nil))
-    repCaches.foreach(_.unpersist())
-    newBanded.unpersist()
-    newPairs.unpersist()
+      // 4. append-only state updates — data first, marker LAST (the commit
+      // point); a crash anywhere before the marker leaves invisible rows.
+      // The rep-delta append is the action that materializes the delta.
+      append(newBanded, state.indexDir)
+      if (nNewPairs > 0) append(newPairs, state.pairsDir)
+      append(ids, state.docsDir)
+      if (repDelta != null) append(repDelta, state.repsDir)
+      nNewPairs
+    } finally cached.foreach(_.unpersist())
     writeMarker(spark, state, bid, Commit(attempt, seq, snapshot = false))
 
     // the report's totals are LAZY (the caller may never read them — the
@@ -483,21 +468,12 @@ object IncrementalDedup {
     val com = committed(spark, state)
     val live = liveBatches(com).keySet
     for (dir <- Seq(state.indexDir, state.pairsDir, state.docsDir, state.repsDir)) {
-      val f = fs(spark, dir)
-      val p = new Path(dir)
-      if (f.exists(p)) f.listStatus(p).foreach { st =>
-        val name = st.getPath.getName
-        if (name.startsWith("batch=") && !live.contains(name.stripPrefix("batch=")))
-          f.delete(st.getPath, true)
-      }
+      CommitLog.delete(spark, CommitLog.list(spark, dir).map(_.getPath).filter { p =>
+        p.getName.startsWith("batch=") && !live.contains(p.getName.stripPrefix("batch="))
+      })
     }
-    val cf = fs(spark, state.commitsDir)
-    (com.keySet -- live).foreach(b => cf.delete(new Path(state.commitsDir, b), false))
-    // clear unparseable marker corpses (crash mid-marker-write) — their
-    // batches read as uncommitted, so the file is pure litter
-    val cdir = new Path(state.commitsDir)
-    if (cf.exists(cdir)) cf.listStatus(cdir).filter(_.isFile).foreach { st =>
-      if (!com.contains(st.getPath.getName)) cf.delete(st.getPath, false)
-    }
+    // superseded markers, torn markers and the temps of crashed publishes
+    CommitLog.delete(spark, CommitLog.list(spark, state.commitsDir).map(_.getPath)
+      .filterNot(p => live.contains(p.getName)))
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.store.CommitLog
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -13,14 +14,14 @@ import org.apache.spark.sql.functions._
   * append and its tail piece from the next, exactly as a whole-corpus
   * pack would emit them (the q375 gate pins incremental == rebuild).
   *
-  * Layout under `root` (plain parquet, the [[graft.sim.PqIndexStore]]
-  * per-commit-subdir discipline):
+  * Layout under `root` (plain parquet, [[graft.store.CommitLog]] dirs):
   *  - `pieces/<batchId>/` — the batch's piece rows (Overwrite:
   *    re-appending a batchId rewrites its own subdir);
   *  - `state/<batchId>/`  — ONE row (batch_id, first_offset, n_tokens),
   *    written AFTER the pieces commit (the state row is the marker: a
   *    crash between the two leaves orphan piece files that the replay
-  *    overwrites byte-identically).
+  *    overwrites byte-identically);
+  *  - `compactions/<compactId>/` — [[compactState]]'s fold markers.
   *
   * Replay idempotence: an append whose batchId already has a state row
   * re-uses its RECORDED first_offset — replaying batch k after batches
@@ -57,15 +58,8 @@ object PieceStore {
   // cache for the exact dir it wrote, but a cached PARENT listing
   // survives a manual delete-and-rebuild — a same-session re-build
   // would read the previous build's file names
-  private def subdirs(spark: SparkSession, d: String): Seq[String] = {
-    val f = new Path(d).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(new Path(d))) Seq.empty
-    else f.listStatus(new Path(d)).filter(_.isDirectory)
-      .map(_.getPath.toString).toSeq
-  }
-
   private def stateDf(spark: SparkSession, root: String): Option[DataFrame] = {
-    val dirs = subdirs(spark, s"$root/state")
+    val dirs = CommitLog.dirs(spark, root, "state")
     if (dirs.isEmpty) None
     else Some(dirs.map(spark.read.parquet(_)).reduce(_ unionByName _))
   }
@@ -91,28 +85,19 @@ object PieceStore {
       seqLen: Long,
       root: String,
       batchId: String): (Long, Long) = {
-    require(batchId.matches("[A-Za-z0-9._-]+"), s"batchId '$batchId' is not filename-safe")
+    CommitLog.requireId(batchId)
     val spark = batch.sparkSession
     // ONE state read (full rows, max_id included) feeds the replay
-    // lookup, the tail offset AND the guard — no second file scan. The
-    // state read and the batch aggregate are independent (distinct
-    // inputs; both are needed on every path) — overlap their driver
-    // fixed costs instead of serializing two small jobs.
+    // lookup, the tail offset AND the guard — no second file scan
+    val stateOpt = stateDf(spark, root)
+    val stateSchema = stateOpt.map(_.schema)
+    val existingRows = stateOpt.toSeq.flatMap(_.collect().toSeq)
     val aggFrame = batch.agg(
       coalesce(sum(when(col(nTokensCol) > 0, col(nTokensCol).cast("long"))
         .otherwise(lit(0L))), lit(0L)).as("n_tokens"),
       min(col(idCol)).as("min_id"),
       max(col(idCol)).as("max_id"))
-    val fetched = graft.Par.run(Seq(
-      () => {
-        val stateOpt = stateDf(spark, root)
-        (stateOpt.map(_.schema), stateOpt.toSeq.flatMap(_.collect().toSeq)): Any
-      },
-      () => aggFrame.head(): Any))
-    val (stateSchema, existingRows) = fetched(0)
-      .asInstanceOf[(Option[org.apache.spark.sql.types.StructType],
-        Seq[org.apache.spark.sql.Row])]
-    val aggRow = fetched(1).asInstanceOf[org.apache.spark.sql.Row]
+    val aggRow = aggFrame.head()
     val existing = existingRows.map(r => (
       r.getAs[String]("batch_id"), r.getAs[Long]("first_offset"),
       r.getAs[Long]("n_tokens")))
@@ -169,39 +154,26 @@ object PieceStore {
 
   /** Fold every per-batch state row into ONE file — the append path
     * reads the state dir on every call, so a years-long daily cadence
-    * otherwise accumulates thousands of tiny state files. State rows
-    * are immutable facts keyed by batch_id, which makes the fold
-    * marker-free: write the deduplicated union under
-    * `state/<compactId>` FIRST, then delete the folded subdirs — a
-    * crash between the two leaves duplicate rows with identical
-    * values, harmless to every reader (replay lookup, tail max, the
-    * monotonicity guard). Recorded first_offsets survive verbatim, so
-    * replay idempotence survives the fold. Returns the folded row
-    * count.
+    * otherwise accumulates thousands of tiny state files. A
+    * [[graft.store.CommitLog.fold]] of the live state dirs into
+    * `state/<compactId>`: readers skip the folded dirs, so no state row
+    * is ever read twice, and recorded first_offsets survive verbatim, so
+    * replay idempotence survives the fold. Returns the folded row count
+    * (0 when this call folded nothing: no state, or a replay that only
+    * finished a committed fold's deletes).
     */
   def compactState(
-      spark: SparkSession, root: String, compactId: String): Long = {
-    require(compactId.matches("[A-Za-z0-9._-]+"),
-      s"compactId '$compactId' is not filename-safe")
-    val d = s"$root/state"
-    val f = new Path(d).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(new Path(d))) return 0L
-    val subdirs = f.listStatus(new Path(d)).filter(_.isDirectory)
-      .map(_.getPath).filterNot(_.getName == compactId).toSeq
-    if (subdirs.isEmpty) return 0L
-    val all = stateDf(spark, root).get
-    // bounded collect: one slim row per batch, already the append
-    // path's read shape; dedup keeps the first copy of a batch_id (a
-    // prior interrupted fold leaves only identical copies)
-    val rows = all.collect().toSeq
-      .groupBy(_.getAs[String]("batch_id")).map(_._2.head).toSeq
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava, all.schema)
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$d/$compactId")
-    subdirs.foreach(p => f.delete(p, true))
-    rows.size.toLong
-  }
+      spark: SparkSession, root: String, compactId: String): Long =
+    CommitLog.fold(spark, root, compactId)(
+      CommitLog.dirs(spark, root, "state").filterNot(new Path(_).getName == compactId)) {
+      sources =>
+      // the row count is observed during the write (no shuffle: exact)
+      val obs = org.apache.spark.sql.Observation()
+      sources.map(spark.read.parquet(_)).reduce(_ unionByName _)
+        .coalesce(1).observe(obs, count(lit(1)).as("n"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$root/state/$compactId")
+      obs.get("n").asInstanceOf[Long]
+    }.getOrElse(0L)
 
   /** The full piece table across every appended batch — identical rows
     * to a whole-corpus [[SequencePack.packChunks]] over the batches'
@@ -209,7 +181,7 @@ object PieceStore {
     * cache note on [[stateDf]]).
     */
   def pieces(spark: SparkSession, root: String): DataFrame = {
-    val dirs = subdirs(spark, s"$root/pieces")
+    val dirs = CommitLog.dirs(spark, root, "pieces")
     require(dirs.nonEmpty, s"piece store at $root has no piece batches")
     dirs.map(spark.read.parquet(_)).reduce(_ unionByName _)
   }

@@ -73,10 +73,10 @@ object IvfPq {
     // work it orders
     val cents = Similarity.centroidsOf(df, vecCol, cellCol).persist()
     val res = residuals(df, cents, idCol, vecCol, cellCol).persist()
-    val cb = ProductQuantizer.fit(res, idCol, "_res", dims, m, k, iters)
     // k-means drives its iterations with driver-side actions, so every
-    // scan has happened by now — safe to release
-    res.unpersist()
+    // scan has happened once fit returns — safe to release
+    val cb = try ProductQuantizer.fit(res, idCol, "_res", dims, m, k, iters)
+    finally res.unpersist()
     (cents, cb)
   }
 

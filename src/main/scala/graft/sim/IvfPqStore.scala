@@ -1,5 +1,6 @@
 package graft.sim
 
+import graft.store.CommitLog
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -9,9 +10,7 @@ import org.apache.spark.sql.functions._
   * FAISS-style deployments actually run: the coarse centroids and the
   * shared residual codebook freeze at fit time, batches ENCODE-APPEND
   * against them, deletes arrive as tombstones, and compaction folds
-  * tombstones out with the same marker discipline (survivor data first,
-  * folded-dir marker second, deletes last — replay-idempotent on either
-  * side of the crash line).
+  * tombstones out with the same [[graft.store.CommitLog]] fold.
   *
   * Layout under `root` (plain parquet, object-store friendly):
   *  - `centroids/` — one row per cell with its exact-mean centroid
@@ -23,18 +22,16 @@ import org.apache.spark.sql.functions._
   *    just compute: Spark's partition discovery turns the probed-cell
   *    filter into directory pruning inside every batch dir;
   *  - `tombstones/<batchId>/` + `compactions/<compactId>/` — exactly
-  *    [[PqIndexStore]]'s delete lifecycle (those helpers are reused,
-  *    not copied).
+  *    [[PqIndexStore]]'s delete lifecycle.
   *
   * Scale shape: appends touch only the new batch; a query reads only
   * the probed cells' directories across batch dirs (bounded listing —
   * batch count is an ops cadence, not a data volume); compaction's
   * survivor rewrite keeps the cell partitioning so the pruning property
   * survives every fold. Single-maintenance contract: one writer owns a
-  * batchId at a time, one compactor at a time; readers ARE safe
-  * concurrent with a fold — [[codes]] skips every dir a committed
-  * compaction marker records, so the window between the marker commit
-  * and the deferred source deletes cannot double-count a batch.
+  * batchId at a time, one compactor at a time. [[codes]] skips every dir
+  * a committed fold lists, so a read between a fold's marker and its
+  * source deletes cannot double-count a batch.
   */
 object IvfPqStore {
 
@@ -61,7 +58,7 @@ object IvfPqStore {
       root: String,
       cb: ProductQuantizer.Codebook,
       batchId: String): Long = {
-    require(batchId.matches("[A-Za-z0-9._-]+"), s"batchId '$batchId' is not filename-safe")
+    CommitLog.requireId(batchId)
     // the vector count is observed during the write itself — one job
     // where persist + write + count used to run two over a cached copy;
     // exact: only the write's local partition sort lies above the
@@ -75,36 +72,14 @@ object IvfPqStore {
     obs.get("n").asInstanceOf[Long]
   }
 
-  private def batchDirs(spark: SparkSession, d: String): Seq[String] = {
-    val f = PqIndexStore.fs(spark, d)
-    if (!f.exists(new Path(d))) Seq.empty
-    else f.listStatus(new Path(d)).filter(_.isDirectory).map(_.getPath.toString).toSeq
-  }
-
-  /** Every source dir already folded by a COMMITTED compaction — a
-    * committed marker means the survivor rewrite holds those dirs'
-    * live rows, so until their deferred deletes land a listing sees
-    * BOTH; readers must skip them or double-count. Bounded: one row
-    * per folded dir per compaction.
-    */
-  private def foldedDirs(spark: SparkSession, root: String): Set[String] =
-    batchDirs(spark, s"$root/compactions")
-      .filter(PqIndexStore.isCommittedDir(spark, _))
-      .flatMap(PqIndexStore.readMarker(spark, _))
-      .toSet
-
   /** The full code table across every appended batch — (idCol, code,
     * cellCol) with the cell recovered from the partition directories.
     * Per-batch reads (bounded listing) unioned, so partition discovery
     * works under the batch level; a cell filter on the result prunes
-    * directories inside every batch. Safe against the compaction
-    * window: dirs recorded in a COMMITTED compaction marker are
-    * skipped, so a read concurrent with [[compact]]'s deferred source
-    * deletes never double-counts a folded batch.
+    * directories inside every batch.
     */
   def codes(spark: SparkSession, root: String): DataFrame = {
-    val folded = foldedDirs(spark, root)
-    val dirs = batchDirs(spark, s"$root/codes").filterNot(folded)
+    val dirs = CommitLog.dirs(spark, root, "codes")
     require(dirs.nonEmpty, s"ivfpq store at $root has no code batches")
     dirs.map(spark.read.parquet(_)).reduce(_ unionByName _)
   }
@@ -157,72 +132,51 @@ object IvfPqStore {
     val survivors = corpus.join(
       liveCodes(spark, root, idCol).select(col(idCol)), Seq(idCol))
       .persist()
-    val (cents, cb) = IvfPq.fitResidual(
-      survivors, idCol, vecCol, cellCol, dims, m, k, iters)
-    // the two metadata writes land in distinct subdirs and neither feeds
-    // the other — overlap their driver fixed costs
-    graft.Par.run(Seq(
-      () => writeCentroids(spark, newRoot, cents),
-      () => PqIndexStore.writeCodebook(spark, newRoot, cb)))
-    val n = appendBatch(survivors, cents, idCol, vecCol, cellCol, newRoot, cb, "g0")
-    survivors.unpersist()
-    n
+    try {
+      // fitResidual hands back its centroids cached: released here too
+      val (cents, cb) = IvfPq.fitResidual(
+        survivors, idCol, vecCol, cellCol, dims, m, k, iters)
+      try {
+        writeCentroids(spark, newRoot, cents)
+        PqIndexStore.writeCodebook(spark, newRoot, cb)
+        appendBatch(survivors, cents, idCol, vecCol, cellCol, newRoot, cb, "g0")
+      } finally cents.unpersist()
+    } finally survivors.unpersist()
   }
 
   /** Fold pending tombstones INTO the code table — [[PqIndexStore
-    * .compact]]'s marker discipline with the cell partitioning kept on
-    * the survivor rewrite (per-cell survivor subdirs under
-    * `codes/<compactId>/`, so probe-time pruning survives the fold).
-    * Returns (survivor rows, purged rows); (-1, -1) on a finish-
-    * deletions replay.
+    * .compact]]'s fold with the cell partitioning kept on the survivor
+    * rewrite (per-cell survivor subdirs under `codes/<compactId>/`, so
+    * probe-time pruning survives the fold). Returns (survivor rows,
+    * purged rows); (-1, -1) when the compaction had already committed.
     */
   def compact(
       spark: SparkSession,
       root: String,
       compactId: String,
       idCol: String,
-      cellCol: String): (Long, Long) = {
-    require(compactId.matches("[A-Za-z0-9._-]+"), s"compactId '$compactId' is not filename-safe")
-    val f = PqIndexStore.fs(spark, root)
-    val markerDir = s"$root/compactions/$compactId"
-    if (PqIndexStore.isCommittedDir(spark, markerDir)) {
-      PqIndexStore.readMarker(spark, markerDir)
-        .foreach(p => f.delete(new Path(p), true))
-      return (-1L, -1L)
-    }
-    if (PqIndexStore.existsAny(spark, markerDir))
-      f.delete(new Path(markerDir), true) // crash mid-marker-write: refold
-    // skip dirs a PRIOR committed compaction already folded (its
-    // deferred deletes may not have landed) — folding them again would
-    // duplicate their survivors into this rewrite
-    val prior = foldedDirs(spark, root)
-    val foldedCodes = batchDirs(spark, s"$root/codes")
-      .filterNot(_.endsWith(s"/$compactId")).filterNot(prior)
-    val foldedTombs = batchDirs(spark, s"$root/tombstones").filterNot(prior)
-    require(foldedCodes.nonEmpty, "compact: no code batches to fold")
-    // both row counts are OBSERVED during the survivor write — the same
-    // values the separate count + read-back-count jobs used to fetch;
-    // exact: broadcast anti-join + local partition sort keep both
-    // observes in the write's result stage ([[PqIndexStore]] layout doc)
-    val allObs = org.apache.spark.sql.Observation()
-    val liveObs = org.apache.spark.sql.Observation()
-    val all = foldedCodes.map(spark.read.parquet(_)).reduce(_ unionByName _)
-      .observe(allObs, count(lit(1)).as("n"))
-    val tomb =
-      if (foldedTombs.isEmpty) null
-      else foldedTombs.map(spark.read.parquet(_)).reduce(_ unionAll _)
-        .toDF(idCol).distinct()
-    val survivors =
-      if (tomb == null) all
-      else all.join(broadcast(tomb), Seq(idCol), "left_anti")
-    survivors.observe(liveObs, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy(cellCol)
-      .parquet(s"$root/codes/$compactId")
-    val nAll = allObs.get("n").asInstanceOf[Long]
-    val nLive = liveObs.get("n").asInstanceOf[Long]
-    PqIndexStore.writeMarker(spark, markerDir, foldedCodes ++ foldedTombs)
-    (foldedCodes ++ foldedTombs).foreach(p => f.delete(new Path(p), true))
-    (nLive, nAll - nLive)
-  }
+      cellCol: String): (Long, Long) =
+    CommitLog.fold(spark, root, compactId)(
+      PqIndexStore.foldSources(spark, root, compactId)) { sources =>
+      val (codeDirs, tombDirs) = sources.partition(new Path(_).getParent.getName == "codes")
+      // both row counts are OBSERVED during the survivor write — the same
+      // values the separate count + read-back-count jobs used to fetch;
+      // exact: broadcast anti-join + local partition sort keep both
+      // observes in the write's result stage ([[PqIndexStore]] layout doc)
+      val allObs = org.apache.spark.sql.Observation()
+      val liveObs = org.apache.spark.sql.Observation()
+      val all = codeDirs.map(spark.read.parquet(_)).reduce(_ unionByName _)
+        .observe(allObs, count(lit(1)).as("n"))
+      val survivors =
+        if (tombDirs.isEmpty) all
+        else all.join(broadcast(tombDirs.map(spark.read.parquet(_)).reduce(_ unionAll _)
+          .toDF(idCol).distinct()), Seq(idCol), "left_anti")
+      survivors.observe(liveObs, count(lit(1)).as("n"))
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy(cellCol)
+        .parquet(s"$root/codes/$compactId")
+      val nAll = allObs.get("n").asInstanceOf[Long]
+      val nLive = liveObs.get("n").asInstanceOf[Long]
+      (nLive, nAll - nLive)
+    }.getOrElse((-1L, -1L))
 }

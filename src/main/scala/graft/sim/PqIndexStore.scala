@@ -1,5 +1,6 @@
 package graft.sim
 
+import graft.store.CommitLog
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -14,23 +15,17 @@ import org.apache.spark.sql.functions._
   * Layout under `root` (plain parquet, object-store friendly):
   *  - `codebook/` — the frozen quantizer, one row per (subspace, cid)
   *    with its centroid (metadata-sized: m·k·subDims doubles);
-  *  - `codes/<batchId>/` — one subdirectory PER BATCH (the catalog's
-  *    per-commit-subdir discipline: Spark's committer stages every job
-  *    writing to a path under that path's shared `_temporary`, so
-  *    distinct dirs are the multi-writer-safe append). Re-appending a
-  *    batchId OVERWRITES its own subdir — replay-idempotent.
+  *  - `codes/<batchId>/` — one [[graft.store.CommitLog]] dir PER BATCH.
+  *    Re-appending a batchId OVERWRITES its own subdir — replay-idempotent.
   *  - `stats/<batchId>/` — one row per batch: vector count and mean
   *    QUANTIZATION ERROR mean‖x − x̂‖² (x̂ = the code's reconstruction),
   *    the codebook-drift probe: a frozen codebook fits the distribution
   *    it was trained on, so a batch whose mean error runs well above the
   *    fit-time batches signals the corpus moved and the codebook needs
   *    refitting ([[staleness]] surfaces the ratio).
-  *  - `compactions/<compactId>/folded` — a committed compaction's marker:
-  *    the folded subdir paths, one per line ([[writeMarker]]). The marker
-  *    was once a parquet dir; a store whose crash-mid-delete marker is
-  *    in that old format is NOT replayable by this code ([[readMarker]]
-  *    reads only `folded`) — finish or discard such a compaction with
-  *    the version that started it.
+  *  - `compactions/<compactId>/folded` — a committed compaction's marker
+  *    ([[graft.store.CommitLog]], which also defines when a batch dir is
+  *    committed and which dirs a reader skips).
   *
   * Exactness of the observed counts (appends, tombstones, compaction):
   * every `observe` here sits in its write's RESULT stage — nothing but
@@ -48,60 +43,6 @@ import org.apache.spark.sql.functions._
   * batchId at a time.
   */
 object PqIndexStore {
-
-  private[sim] def fs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private[sim] def existsAny(spark: SparkSession, d: String): Boolean = {
-    val f = fs(spark, d)
-    val p = new Path(d)
-    f.exists(p) && f.listStatus(p).nonEmpty
-  }
-
-  /** True only when `d` holds a COMMITTED parquet write — `_SUCCESS` or
-    * real data files. A crash DURING a write leaves only the committer's
-    * `_temporary` staging dir, which must read as "not committed" (the
-    * compact-replay branch point below depends on it).
-    */
-  private[sim] def isCommittedDir(spark: SparkSession, d: String): Boolean = {
-    val f = fs(spark, d)
-    val p = new Path(d)
-    f.exists(p) && f.listStatus(p).exists { st =>
-      val n = st.getPath.getName
-      n == "_SUCCESS" || (!st.isDirectory && !n.startsWith("_") && !n.startsWith("."))
-    }
-  }
-
-  /** Commit a compaction marker: the folded-path set is bounded
-    * driver-side metadata (one line per folded subdir), so it is written
-    * as ONE driver-side file — create under a dot-temp name, then an
-    * atomic rename publishes it. The dot prefix is invisible to
-    * [[isCommittedDir]], so a crash mid-write still reads as "not
-    * committed" and the replay refolds; the parquet marker this replaces
-    * paid a Spark job to write and another per read for kilobytes.
-    */
-  private[sim] def writeMarker(
-      spark: SparkSession, markerDir: String, paths: Seq[String]): Unit = {
-    val f = fs(spark, markerDir)
-    val tmp = new Path(markerDir, "._folded.tmp")
-    val dst = new Path(markerDir, "folded")
-    val out = f.create(tmp, true)
-    try out.write(paths.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    require(f.rename(tmp, dst), s"compaction marker commit failed: $tmp -> $dst")
-  }
-
-  /** Read a COMMITTED compaction marker's folded-path set (driver-side
-    * file read, no job). */
-  private[sim] def readMarker(spark: SparkSession, markerDir: String): Seq[String] = {
-    val f = fs(spark, markerDir)
-    val p = new Path(markerDir, "folded")
-    val buf = new Array[Byte](f.getFileStatus(p).getLen.toInt)
-    val in = f.open(p)
-    try in.readFully(0, buf) finally in.close()
-    new String(buf, java.nio.charset.StandardCharsets.UTF_8)
-      .split("\n").toSeq.filter(_.nonEmpty)
-  }
 
   /** Persist the frozen codebook (one row per subspace × centroid). */
   def writeCodebook(
@@ -138,7 +79,7 @@ object PqIndexStore {
       root: String,
       cb: ProductQuantizer.Codebook,
       batchId: String): (Long, Double) = {
-    require(batchId.matches("[A-Za-z0-9._-]+"), s"batchId '$batchId' is not filename-safe")
+    CommitLog.requireId(batchId)
     val spark = batch.sparkSession
     // per-subspace reconstruction = centroid literal-array lookup by the
     // assignment expression; the error stat rides the encode scan
@@ -181,12 +122,7 @@ object PqIndexStore {
     * Per-batch subdir reads unioned (the [[tombstones]] cache note).
     */
   def codes(spark: SparkSession, root: String): DataFrame = {
-    val d = s"$root/codes"
-    val f = fs(spark, d)
-    val dirs =
-      if (!f.exists(new Path(d))) Seq.empty
-      else f.listStatus(new Path(d)).filter(_.isDirectory)
-        .map(_.getPath.toString).toSeq
+    val dirs = CommitLog.dirs(spark, root, "codes")
     require(dirs.nonEmpty, s"pq store at $root has no code batches")
     dirs.map(spark.read.parquet(_)).reduce(_ unionByName _)
   }
@@ -202,7 +138,7 @@ object PqIndexStore {
     */
   def appendTombstones(
       ids: DataFrame, idCol: String, root: String, batchId: String): Long = {
-    require(batchId.matches("[A-Za-z0-9._-]+"), s"batchId '$batchId' is not filename-safe")
+    CommitLog.requireId(batchId)
     // the id count is observed during the write itself — one job where
     // persist + write + count used to run two over a cached copy; exact:
     // the observe sits above the distinct's exchange, in the result stage
@@ -221,12 +157,7 @@ object PqIndexStore {
     * same session would read the previous build's file names.
     */
   def tombstones(spark: SparkSession, root: String, idCol: String): DataFrame = {
-    val d = s"$root/tombstones"
-    val f = fs(spark, d)
-    val dirs =
-      if (!f.exists(new Path(d))) Seq.empty
-      else f.listStatus(new Path(d)).filter(_.isDirectory)
-        .map(_.getPath.toString).toSeq
+    val dirs = CommitLog.dirs(spark, root, "tombstones")
     if (dirs.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -251,74 +182,48 @@ object PqIndexStore {
   }
 
   /** Fold pending tombstones INTO the code table: survivors of every
-    * existing code batch rewrite into ONE new `codes/<compactId>/`
-    * subdir, then the folded code subdirs and the consumed tombstone
-    * subdirs are deleted. Replay-idempotent, the [[graft.dedup
-    * .IncrementalDedup]] marker discipline:
-    *
-    *  - data first, marker second, deletes last: a marker under
-    *    `compactions/<compactId>/` records exactly which subdirs were
-    *    folded, and is written only after the survivor data commits;
-    *  - replaying a compactId WITHOUT its marker (crash mid-write)
-    *    refolds from the still-present source dirs — same inputs, same
-    *    survivors, Overwrite semantics;
-    *  - replaying WITH the marker (crash mid-delete) skips the fold and
-    *    just finishes the recorded deletions — the survivor data is
-    *    already committed and the sources must not be re-read (they may
-    *    be half-deleted).
+    * live code batch rewrite into ONE new `codes/<compactId>/` subdir,
+    * then the folded code and tombstone subdirs are deleted — a
+    * [[graft.store.CommitLog.fold]], so a replay of the same compactId
+    * is safe on either side of a crash.
     *
     * Compaction does NOT write a stats row: `stats/` is the ingest-time
     * drift ledger ([[staleness]] baselines on the earliest batch), not
     * row accounting. Single-maintenance contract: one compactor at a
-    * time, like the ingest side. Returns (survivor rows, purged rows).
+    * time, like the ingest side. Returns (survivor rows, purged rows);
+    * (-1, -1) when the compaction had already committed.
     */
-  def compact(spark: SparkSession, root: String, compactId: String): (Long, Long) = {
-    require(compactId.matches("[A-Za-z0-9._-]+"), s"compactId '$compactId' is not filename-safe")
-    val f = fs(spark, root)
-    val markerDir = s"$root/compactions/$compactId"
-    def subdirs(d: String): Seq[String] =
-      if (!f.exists(new Path(d))) Seq.empty
-      else f.listStatus(new Path(d)).filter(_.isDirectory).map(_.getPath.toString).toSeq
-    if (isCommittedDir(spark, markerDir)) {
-      // crash-mid-delete replay: finish the recorded deletions only
-      readMarker(spark, markerDir).foreach(p => f.delete(new Path(p), true))
-      return (-1L, -1L)
-    }
-    // a markerDir holding only temp debris (`_temporary` staging or a
-    // dot-temp marker file) is a crash DURING the marker write: the
-    // survivor data committed but the fold set was never recorded —
-    // clear the debris and refold from the still-present sources
-    // (Overwrite semantics make the refold idempotent)
-    if (existsAny(spark, markerDir)) f.delete(new Path(markerDir), true)
-    val foldedCodes = subdirs(s"$root/codes")
-      .filterNot(_.endsWith(s"/$compactId"))
-    val foldedTombs = subdirs(s"$root/tombstones")
-    require(foldedCodes.nonEmpty, "compact: no code batches to fold")
-    // both row counts are OBSERVED during the survivor write: the input
-    // count below the anti-join, the survivor count above it — the same
-    // values the separate count + read-back-count jobs used to fetch;
-    // exact: the anti-join broadcasts the tombstones, so both observes
-    // (streamed side and top) run in the write's result stage
-    val allObs = org.apache.spark.sql.Observation()
-    val liveObs = org.apache.spark.sql.Observation()
-    val all = foldedCodes.map(spark.read.parquet(_)).reduce(_ unionAll _)
-      .observe(allObs, count(lit(1)).as("n"))
-    val idCol = all.columns.head
-    val tomb =
-      if (foldedTombs.isEmpty) null
-      else foldedTombs.map(spark.read.parquet(_)).reduce(_ unionAll _)
-        .toDF(idCol).distinct()
-    val survivors =
-      if (tomb == null) all
-      else all.join(broadcast(tomb), Seq(idCol), "left_anti")
-    survivors.observe(liveObs, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/codes/$compactId")
-    val nAll = allObs.get("n").asInstanceOf[Long]
-    val nLive = liveObs.get("n").asInstanceOf[Long]
-    // marker AFTER the data commit; deletes last
-    writeMarker(spark, markerDir, foldedCodes ++ foldedTombs)
-    (foldedCodes ++ foldedTombs).foreach(p => f.delete(new Path(p), true))
-    (nLive, nAll - nLive)
+  def compact(spark: SparkSession, root: String, compactId: String): (Long, Long) =
+    CommitLog.fold(spark, root, compactId)(foldSources(spark, root, compactId)) { sources =>
+      val (codeDirs, tombDirs) = sources.partition(new Path(_).getParent.getName == "codes")
+      // both row counts are OBSERVED during the survivor write: the input
+      // count below the anti-join, the survivor count above it — the same
+      // values the separate count + read-back-count jobs used to fetch;
+      // exact: the anti-join broadcasts the tombstones, so both observes
+      // (streamed side and top) run in the write's result stage
+      val allObs = org.apache.spark.sql.Observation()
+      val liveObs = org.apache.spark.sql.Observation()
+      val all = codeDirs.map(spark.read.parquet(_)).reduce(_ unionAll _)
+        .observe(allObs, count(lit(1)).as("n"))
+      val idCol = all.columns.head
+      val survivors =
+        if (tombDirs.isEmpty) all
+        else all.join(broadcast(tombDirs.map(spark.read.parquet(_)).reduce(_ unionAll _)
+          .toDF(idCol).distinct()), Seq(idCol), "left_anti")
+      survivors.observe(liveObs, count(lit(1)).as("n"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$root/codes/$compactId")
+      val nAll = allObs.get("n").asInstanceOf[Long]
+      val nLive = liveObs.get("n").asInstanceOf[Long]
+      (nLive, nAll - nLive)
+    }.getOrElse((-1L, -1L))
+
+  /** What a compaction folds: every live code dir but its own target,
+    * and every pending tombstone dir (shared with [[IvfPqStore.compact]]).
+    */
+  private[sim] def foldSources(spark: SparkSession, root: String, compactId: String): Seq[String] = {
+    val codeDirs = CommitLog.dirs(spark, root, "codes").filterNot(new Path(_).getName == compactId)
+    require(codeDirs.nonEmpty, "compact: no code batches to fold")
+    codeDirs ++ CommitLog.dirs(spark, root, "tombstones")
   }
 
   /** Per-batch drift stats with `drift_ratio` = mean_qerr / the EARLIEST
@@ -327,10 +232,8 @@ object PqIndexStore {
     * corpus moved under the frozen codebook: time to refit and re-encode.
     */
   def staleness(spark: SparkSession, root: String): DataFrame = {
-    val d = s"$root/stats"
-    if (!existsAny(spark, d)) return spark.emptyDataFrame
-    val dirs = fs(spark, d).listStatus(new Path(d)).filter(_.isDirectory)
-      .map(_.getPath.toString).toSeq
+    val dirs = CommitLog.dirs(spark, root, "stats")
+    if (dirs.isEmpty) return spark.emptyDataFrame
     val st = dirs.map(spark.read.parquet(_)).reduce(_ unionByName _)
     val base = st.orderBy("batch_id").select("mean_qerr").head().getDouble(0)
     st.withColumn("drift_ratio",

@@ -296,9 +296,8 @@ class PackingSpec extends SparkSpec {
     assert(ro == 3L, "recorded first_offset must survive the fold")
     assert(PieceStore.pieces(spark, root)
       .orderBy("chunk_id", "doc_id").collect().map(_.toSeq).toSeq == whole)
-    // the replay above re-wrote state/b1 next to the fold (an identical
-    // duplicate — the documented crash shape); a second fold dedups it
-    // and appends keep flowing
+    // the replay above re-wrote state/b1, a dir the fold retired: readers
+    // skip it, a second fold leaves it out, and appends keep flowing
     assert(PieceStore.compactState(spark, root, "s1") == 3L)
     PieceStore.appendBatch(
       Seq((9L, 6L)).toDF("doc_id", "n"), "doc_id", "n", 4L, root, "b3")

@@ -452,6 +452,33 @@ class SimilaritySpec extends SparkSpec {
     assert(PqIndexStore.codes(spark, root).count() == 6)
   }
 
+  test("PqIndexStore: after a compaction crashed at its first source delete, " +
+    "codes count each vector once and the next compaction keeps each survivor once") {
+    import graft.sim.{ProductQuantizer, PqIndexStore}
+    CrashFs.register(spark.sparkContext.hadoopConfiguration)
+    val subA = Seq(Array(1.0f, 2.0f), Array(5.0f, 6.0f))
+    val subB = Seq(Array(0.0f, 1.0f), Array(9.0f, 4.0f))
+    val df = (0 until 8).map { i =>
+      (i.toLong, (subA(i % 2) ++ subB((i / 2) % 2)).toSeq)
+    }.toDF("vec_id", "embedding")
+    val cb = ProductQuantizer.fit(df, "vec_id", "embedding", dims = 4, m = 2, k = 2, iters = 2)
+    val local = tmpDir("pqstore-crash")
+    val root = CrashFs.uri(local)
+    PqIndexStore.writeCodebook(spark, root, cb)
+    PqIndexStore.appendBatch(df.filter($"vec_id" < 4), "vec_id", "embedding", root, cb, "b0")
+    PqIndexStore.appendBatch(df.filter($"vec_id" >= 4), "vec_id", "embedding", root, cb, "b1")
+    PqIndexStore.appendTombstones(Seq(2L, 5L, 6L).toDF("vec_id"), "vec_id", root, "t0")
+    // the survivors and the marker are committed; every source dir remains
+    val t = CrashFs.track(local, (_, step) => step.startsWith("delete ") &&
+      step.matches(".*/(codes/b[0-9]|tombstones/t[0-9])"))
+    try intercept[java.io.IOException](PqIndexStore.compact(spark, root, "c0"))
+    finally CrashFs.untrack(t)
+    def ids() = PqIndexStore.codes(spark, root).select("vec_id").as[Long].collect().sorted.toSeq
+    assert(ids() == Seq(0L, 1L, 3L, 4L, 7L))
+    PqIndexStore.compact(spark, root, "c1")
+    assert(ids() == Seq(0L, 1L, 3L, 4L, 7L))
+  }
+
   test("IvfPqStore lifecycle: cell-partitioned appends, live view, compact == " +
     "rebuild-from-survivors, uncommitted marker refolds") {
     import graft.sim.{IvfPq, IvfPqStore, PqIndexStore}
