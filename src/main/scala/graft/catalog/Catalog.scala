@@ -58,9 +58,6 @@ final class Catalog(spark: SparkSession, dir: String) {
   private def readLog(dirs: Seq[String], schema: String): Option[DataFrame] =
     if (dirs.isEmpty) None else Some(spark.read.schema(schema).parquet(dirs: _*))
 
-  private def watermarkLog: Option[DataFrame] =
-    readLog(CommitLog.dirs(spark, dir, "watermarks"), WatermarkSchema)
-
   /** One append to a log, in its own dir: Spark's output committer
     * stages every job writing to a path under that path's shared
     * `_temporary`, so per-commit dirs keep two appending processes from
@@ -96,27 +93,28 @@ final class Catalog(spark: SparkSession, dir: String) {
   /** Drop the cached name set (next probe reloads from the status log). */
   def refreshProcessedNames(): Unit = nameCache = null
 
-  /** The status dir's mtime (-1 when absent) — the cache staleness key.
+  /** A log dir's mtime (-1 when absent) — the caches' staleness key.
     * Object-store caveat: S3A and friends synthesize directory entries
     * with constant (often zero) modification times, so on such stores
-    * the stamp never moves and this cache degrades to never-invalidate —
+    * the stamp never moves and a cache degrades to never-invalidate —
     * exactly the behavior the stamp exists to bound. That is acceptable
     * only because single-writer is the contract (our own appends go
-    * through [[recordStatus]], which updates the cache in-process);
-    * multi-writer orchestration over an object store must call
-    * [[refreshProcessedNames]] between batches or use the set-based
-    * [[filterUnprocessed]] path, which never touches this cache. */
-  private def statusStamp(): Long = {
-    val p = new Path(statusDir)
+    * through [[recordStatus]] and [[setWatermark]], which update the
+    * caches in-process); multi-writer orchestration over an object store
+    * must call [[refreshProcessedNames]] between batches or use the
+    * set-based [[filterUnprocessed]] path, and advance watermarks with
+    * [[compareAndSetWatermark]]; neither trusts a cache. */
+  private def stamp(logDir: String): Long = {
+    val p = new Path(logDir)
     try CommitLog.fs(spark, p).getFileStatus(p).getModificationTime
     catch { case _: java.io.FileNotFoundException => -1L }
   }
 
   private def cachedNames(): Set[String] = {
-    val stamp = statusStamp()
+    val now = stamp(statusDir)
     var c = nameCache
-    if (c == null || c._1 != stamp) {
-      c = (stamp,
+    if (c == null || c._1 != now) {
+      c = (now,
         statusLog.select("file_name").distinct().as[String].collect().toSet)
       nameCache = c
     }
@@ -128,7 +126,7 @@ final class Catalog(spark: SparkSession, dir: String) {
     */
   def recordStatus(fileName: String, statuses: String*): Unit = {
     require(statuses.nonEmpty, "need at least one status")
-    val preStamp = statusStamp()
+    val preStamp = stamp(statusDir)
     val now = new java.sql.Timestamp(System.currentTimeMillis())
     append("processed_files",
       statuses.map(s => (fileName, s, now)).toDF("file_name", "status", "created_at"))
@@ -139,7 +137,7 @@ final class Catalog(spark: SparkSession, dir: String) {
     // file from isProcessed indefinitely. On mismatch, drop the cache
     // and let the next probe reload.
     if (c != null) {
-      if (c._1 == preStamp) nameCache = (statusStamp(), c._2 + fileName)
+      if (c._1 == preStamp) nameCache = (stamp(statusDir), c._2 + fileName)
       else nameCache = null
     }
   }
@@ -165,26 +163,68 @@ final class Catalog(spark: SparkSession, dir: String) {
     */
   def isProcessed(fileName: String): Boolean = cachedNames().contains(fileName)
 
-  /** K4 — watermark commit (append-only; latest row wins). */
-  def setWatermark(table: String, lastId: Long): Unit =
+  /** K4 — watermark commit (append-only; the largest id wins), kept in the
+    * probe cache by the name cache's rule (see [[recordStatus]]).
+    */
+  def setWatermark(table: String, lastId: Long): Unit = {
+    val preStamp = stamp(watermarkDir)
     append("watermarks", Seq((table, lastId, new java.sql.Timestamp(System.currentTimeMillis())))
       .toDF("table_name", "last_id", "updated_at"))
+    val c = watermarkCache
+    if (c != null) {
+      if (c._1 == preStamp)
+        watermarkCache = (stamp(watermarkDir), c._2.updated(table, c._2.getOrElse(table, 0L).max(lastId)))
+      else watermarkCache = null
+    }
+  }
 
-  /** A2 — current watermark for a table (0 when never set). Resolved by
-    * `last_id` FIRST: watermarks are strictly increasing under both the
+  /** Per-run cache of every table's watermark, with the name cache's
+    * staleness bound: each probe stats the watermark dir and reloads when
+    * its mtime moved, so an external writer's commit is visible from the
+    * next probe onward, and [[setWatermark]] keeps it in sync without a
+    * reload. A commit dir is created (moving the mtime) before its job
+    * writes `_SUCCESS` (which does not), so a reload that finds a dir still
+    * without `_SUCCESS` is not kept. [[compareAndSetWatermark]] never
+    * trusts it: it reads the log fresh, and stores what it read.
+    */
+  @volatile private var watermarkCache: (Long, Map[String, Long]) = null
+
+  private def watermarkDir = s"$dir/watermarks"
+
+  /** Every table's watermark read from the log in one job, then cached.
+    * The log is metadata-sized (one row per commit), so its rows are
+    * collected and reduced here.
+    */
+  private def loadWatermarks(): Map[String, Long] = {
+    val before = stamp(watermarkDir)
+    val values = readLog(CommitLog.dirs(spark, dir, "watermarks"), WatermarkSchema)
+      .fold(Map.empty[String, Long])(_.select($"table_name", $"last_id").as[(String, Long)].collect()
+        .groupMapReduce(_._1)(_._2)(_ max _))
+    val pending = CommitLog.list(spark, watermarkDir).exists(d =>
+      d.isDirectory && !CommitLog.fs(spark, d.getPath).exists(new Path(d.getPath, "_SUCCESS")))
+    watermarkCache = (if (pending) Long.MinValue else before, values)
+    values
+  }
+
+  /** A2 — current watermark for a table (0 when never set), from the probe
+    * cache: no job while the watermark dir's mtime holds. Resolved by the
+    * largest `last_id`: watermarks are strictly increasing under both the
     * single-writer path and the CAS protocol, so the largest id IS the
-    * latest commit. Ordering by wall-clock `updated_at` first would let a
+    * latest commit. Resolving by wall-clock `updated_at` would let a
     * stalled winner (GC pause) whose append lands after a roll-forward
     * already advanced the table temporarily REGRESS the observed
     * watermark (an older value carrying a newer timestamp), re-opening an
     * already-covered id range; it is also unsafe across writers with
-    * clock skew. `updated_at` stays as a tiebreaker only.
+    * clock skew.
     */
-  def watermark(table: String): Long =
-    watermarkLog.flatMap(_.filter($"table_name" === table)
-      .orderBy($"last_id".desc, $"updated_at".desc)
-      .select($"last_id").head(1).headOption)
-      .fold(0L)(_.getLong(0))
+  def watermark(table: String): Long = {
+    val c = watermarkCache
+    val values = if (c != null && c._1 == stamp(watermarkDir)) c._2 else loadWatermarks()
+    values.getOrElse(table, 0L)
+  }
+
+  /** The log's current value for a table, read fresh (one job). */
+  private def freshWatermark(table: String): Long = loadWatermarks().getOrElse(table, 0L)
 
   // ---- multi-writer watermark protocol -------------------------------------
 
@@ -209,7 +249,7 @@ final class Catalog(spark: SparkSession, dir: String) {
     */
   def compareAndSetWatermark(table: String, expected: Long, newId: Long): Boolean = {
     require(newId > expected, s"watermark must advance: $expected -> $newId")
-    if (watermark(table) != expected) return false
+    if (freshWatermark(table) != expected) return false
     val slot = slotPath(table, expected)
     if (CommitLog.publish(spark, slot, Seq(newId.toString))) {
       setWatermark(table, newId)
@@ -218,7 +258,7 @@ final class Catalog(spark: SparkSession, dir: String) {
       // lost the race (or found a crashed winner): roll the recorded
       // transition forward if its append never landed, then report loss
       CommitLog.read(spark, slot).flatMap(_.headOption).foreach { committed =>
-        if (watermark(table) == expected) setWatermark(table, committed.toLong)
+        if (freshWatermark(table) == expected) setWatermark(table, committed.toLong)
       }
       false
     }
@@ -251,8 +291,7 @@ final class Catalog(spark: SparkSession, dir: String) {
         .select($"table_name", $"w.last_id", $"w.updated_at"))
     }
     // prune committed CAS slots (from_<N> below the table's floor)
-    val floors = watermarkLog.fold(Map.empty[String, Long])(
-      _.groupBy($"table_name").agg(max($"last_id")).as[(String, Long)].collect().toMap)
+    val floors = loadWatermarks()
     val Slot = "(?:\\._)?from_(-?[0-9]+)(?:\\..+\\.tmp)?".r
     for {
       t <- CommitLog.list(spark, s"$dir/watermark_slots")

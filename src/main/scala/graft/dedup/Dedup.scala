@@ -10,6 +10,8 @@ import org.apache.spark.sql.functions._
   * Scale notes (the reference streams Python hash-sets; these are real joins):
   *  - J1 is a shuffle on the hash column — at 100 TB this is one exchange,
   *    AQE-coalesced; no driver-side set.
+  *    The ingest pipeline's J1 rides the id stamp's hash-ordered exchange
+  *    ([[graft.load.IdAssign.dedupDenseIdsByHash]]).
   *  - J2's build side (prior batches' hashes) broadcasts when small; beyond
   *    `autoBroadcastJoinThreshold` Catalyst falls back to shuffled hash /
   *    sort-merge automatically. The reference's per-prior-file loop collapses

@@ -13,16 +13,20 @@ import org.apache.spark.sql.functions._
   * `process_file` (`main.py:70-333`) and daemon loop (`main.py:335-424`).
   *
   * For each new file: route → read all-string → rename → conform → row_hash →
-  * intra-batch dedup (J1) → anti-join vs target hashes (J2) → typed casts →
-  * dense ids from watermark (P3) → id guard (J3) → append snapshot → commit
-  * watermark → status rows. One logical plan per batch; Catalyst fuses the
-  * clean/cast projections, and the anti-joins are the only exchanges.
+  * anti-join vs target hashes (J2) → typed casts → one exchange in row_hash
+  * order, after which intra-batch dedup (J1) and dense ids from the watermark
+  * (P3) run together → id guard (J3) → append snapshot → commit watermark →
+  * status rows. One logical plan per batch; Catalyst fuses the clean/cast
+  * projections, and the hash exchange is the only shuffle (both anti-joins
+  * broadcast).
   *
-  * Spark jobs per file into an existing table: CSV header read; target
-  * footer read; watermark lookup; the id stamp's stages (J1, J2, range
-  * sample, partition counts); J3's broadcast of target ids above the
-  * watermark; ONE write over the batch, which also observes its row count
-  * and max id; one watermark commit; one status commit.
+  * Spark jobs per file into an existing table (7): CSV header read; J2's
+  * broadcast of target hashes; the exchange's map stage (scan, hash, J2,
+  * casts); J3's broadcast of target ids above the watermark; ONE write over
+  * the batch, which also runs J1 and the stamp and observes its row count
+  * and max id; one watermark commit; one status commit. A batch of more than
+  * one advisory partition size adds one job that counts the rows of all
+  * partitions but the last. The watermark comes from the catalog's cache.
   */
 object Pipeline {
   final case class Result(fileName: String, table: Option[String], inserted: Long, status: String)
@@ -79,7 +83,7 @@ final class Pipeline(
     // anti-join inserts zero rows (content idempotency) — harmless. The
     // reverse order would leave a stale watermark behind a recorded file,
     // and the id guard would then silently discard later batches' reused ids.
-    try stage(CsvSource.readSniffed(spark, csvPath), schema, mapping) match {
+    try stage(CsvSource.readSniffed(spark, csvPath), schema, mapping, fileBytes(csvPath)) match {
       case Left(status) => fail(fileName, status)
       case Right(inserted) =>
         catalog.recordStatus(fileName, Status.Processed, Status.Uploaded)
@@ -103,37 +107,55 @@ final class Pipeline(
   /** One batch of both paths, from raw string columns to the warehouse:
     * rename (extra columns are a reject) → column-count check → conform to
     * the declared columns (id + row_hash are engine-assigned) → row_hash
-    * over the raw string fields → J1 → J2 → typed casts → [[land]]. Returns
-    * the rows inserted, or the status of a reject.
+    * over the raw string fields → J2 → typed casts → [[land]], whose one
+    * exchange also runs J1. `inputBytes` (the batch's CSV bytes) sizes
+    * that exchange. Returns the rows inserted, or the status of a reject.
     */
-  private def stage(raw: DataFrame, schema: TableSchema, mapping: Map[String, String]): Either[String, Long] = {
+  private def stage(
+      raw: DataFrame,
+      schema: TableSchema,
+      mapping: Map[String, String],
+      inputBytes: Long): Either[String, Long] = {
     val dataCols = schema.columnNames.filterNot(c => c == "id" || c == "row_hash")
     Clean.renameColumns(raw, mapping) match {
       case Left(_) => Left(Status.RenameError)
       case Right(renamed) if renamed.columns.length > dataCols.length => Left(Status.ColumnCountMismatch)
       case Right(renamed) =>
         val hashed = Clean.withRowHash(Clean.conform(renamed, dataCols), dataCols)
-        val deduped = Dedup.selfDedupAnyWins(hashed, "row_hash")
         val target = prior(schema.tableName)
-        val netNew = target.fold(deduped)(Dedup.antiJoinPrior(deduped, _, "row_hash"))
-        Right(land(Casts.applyRoles(netNew, schema), schema, target))
+        val netNew = target.fold(hashed)(Dedup.antiJoinPrior(hashed, _, "row_hash"))
+        Right(land(Casts.applyRoles(netNew, schema), schema, target, inputBytes))
     }
   }
 
-  /** The table's rows so far, if it has any (the J2 and J3 build side). */
+  /** The table's ids and hashes so far, if it has any (the J2 and J3 build
+    * side), read with their declared types: no job infers them from footers.
+    */
   private def prior(table: String): Option[DataFrame] = {
     val tableDir = s"$warehouseDir/$table"
-    if (Snapshot.exists(spark, tableDir)) Some(Snapshot.readTable(spark, tableDir)) else None
+    if (Snapshot.exists(spark, tableDir)) Some(spark.read.schema("id BIGINT, row_hash STRING").parquet(tableDir))
+    else None
   }
 
-  /** The landing tail of both paths: ids from the watermark (P3), J3 floored
-    * at it (every stamped id is > lastId), one observed append, then the
-    * watermark commit (none for an empty batch). Nothing may evaluate the
-    * batch after the write: its anti-joins would see their own output.
+  private def fileBytes(path: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p).getLen
+  }
+
+  /** The landing tail of both paths: J1 and ids from the watermark (P3) over
+    * one exchange in row_hash order, J3 floored at the watermark (every
+    * stamped id is > lastId), one observed append, then the watermark commit
+    * (none for an empty batch). The exchange gets one partition per advisory
+    * partition size of input, at most the shuffle partition count. Nothing
+    * may evaluate the batch after the write: its anti-joins would see their
+    * own output.
     */
-  private def land(typed: DataFrame, schema: TableSchema, target: Option[DataFrame]): Long = {
+  private def land(typed: DataFrame, schema: TableSchema, target: Option[DataFrame], inputBytes: Long): Long = {
     val lastId = catalog.watermark(schema.tableName)
-    val withIds = IdAssign.denseIds(typed, lastId, Seq("row_hash"))
+    val conf = spark.sessionState.conf
+    val advisory = conf.getConf(org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    val parts = ((inputBytes - 1) / advisory + 1).max(1L).min(conf.numShufflePartitions.toLong).toInt
+    val withIds = IdAssign.dedupDenseIdsByHash(typed, lastId, "row_hash", parts)
     val guarded = target.fold(withIds)(Dedup.idGuardAbove(withIds, _, lastId, "id"))
     val m = Snapshot.appendBatchObserved(guarded.select(schema.columnNames.map(col): _*),
       s"$warehouseDir/${schema.tableName}", Seq(count(lit(1)).as("n"), max(col("id")).as("mx")))
@@ -167,7 +189,11 @@ final class Pipeline(
         org.apache.spark.sql.types.StructField(_, org.apache.spark.sql.types.StringType, true)))
     val stream = graft.streaming.StreamingIngest.fileStream(spark, inputDir, rawSchema)
     graft.streaming.StreamingIngest.runAvailableNow(stream, checkpointDir) { (batch, _) =>
-      stage(batch, schema, mapping).fold(s => throw new IllegalStateException(s"$tableName: $s"), identity)
+      // a micro-batch arrives as a scan of its rows, whose size statistic
+      // is the summed length of its input files
+      val inputBytes = batch.queryExecution.optimizedPlan.stats.sizeInBytes.min(Long.MaxValue).toLong
+      stage(batch, schema, mapping, inputBytes)
+        .fold(s => throw new IllegalStateException(s"$tableName: $s"), identity)
     }
   }
 

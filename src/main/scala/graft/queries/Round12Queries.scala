@@ -288,15 +288,19 @@ object Round12Queries {
       (s, dir) =>
         import graft.sim.IvfPq
         val emb = Tables.load(s, dir, "embeddings").persist()
-        val (cents, cb) = IvfPq.fitResidual(
-          emb, "vec_id", "embedding", "label", dims = 64, m = 4, k = 4, iters = 2)
-        val codes = IvfPq.encode(emb, cents, "vec_id", "embedding", "label", cb)
-        val probe = emb.filter(col("vec_id") === 0)
-          .select("embedding").head().getSeq[Float](0).map(_.toDouble).toArray
-        val out = IvfPq.adcTopK(codes, cents, "vec_id", "label", cb, probe,
-          nProbe = 2, topK = 10)
-        cents.unpersist()
-        out
+        // both cached frames are released on every path; the returned
+        // frame recomputes them from the table
+        var cached = List(emb)
+        try {
+          val (cents, cb) = IvfPq.fitResidual(
+            emb, "vec_id", "embedding", "label", dims = 64, m = 4, k = 4, iters = 2)
+          cached ::= cents
+          val codes = IvfPq.encode(emb, cents, "vec_id", "embedding", "label", cb)
+          val probe = emb.filter(col("vec_id") === 0)
+            .select("embedding").head().getSeq[Float](0).map(_.toDouble).toArray
+          IvfPq.adcTopK(codes, cents, "vec_id", "label", cb, probe,
+            nProbe = 2, topK = 10)
+        } finally cached.foreach(_.unpersist())
     },
 
     // INCREMENTAL PQ INDEX MAINTENANCE (sim.PqIndexStore): embeddings

@@ -361,29 +361,32 @@ object Round14Queries {
         nProbe = 2, topK = 10, where = "r.vec_id % 7 <> 3")) { (s, dir) =>
       import graft.sim.{IvfPq, IvfPqStore}
       val emb = Tables.load(s, dir, "embeddings").persist()
-      val (cents, cb) = IvfPq.fitResidual(
-        emb, "vec_id", "embedding", "label", dims = 64, m = 4, k = 4, iters = 2)
-      val root = s"target/q366_ivfpqstore/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val p = new org.apache.hadoop.fs.Path(root)
-      val fsys = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fsys.exists(p)) fsys.delete(p, true)
-      // the pre-compaction ops are mutually independent (distinct store
-      // subdirs; appends never read centroids/ or codebook/) — overlap
-      // their driver fixed costs instead of serializing five tiny jobs
-      graft.Par.run(Seq(
-        () => IvfPqStore.writeCentroids(s, root, cents),
-        () => graft.sim.PqIndexStore.writeCodebook(s, root, cb),
-        () => IvfPqStore.appendBatch(emb.filter(col("vec_id") % 2 === 0),
-          cents, "vec_id", "embedding", "label", root, cb, "b0"),
-        () => IvfPqStore.appendBatch(emb.filter(col("vec_id") % 2 === 1),
-          cents, "vec_id", "embedding", "label", root, cb, "b1"),
-        () => IvfPqStore.appendTombstones(
-          emb.filter(col("vec_id") % 7 === 3).select(col("vec_id")),
-          "vec_id", root, "t0")))
-      IvfPqStore.compact(s, root, "c0", "vec_id", "label")
-      val probe = emb.filter(col("vec_id") === 0)
-        .select("embedding").head().getSeq[Float](0).map(_.toDouble).toArray
-      cents.unpersist(); emb.unpersist()
+      var cached = List(emb)
+      val (root, probe) = try {
+        val (cents, cb) = IvfPq.fitResidual(
+          emb, "vec_id", "embedding", "label", dims = 64, m = 4, k = 4, iters = 2)
+        cached ::= cents
+        val root = s"target/q366_ivfpqstore/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+        val p = new org.apache.hadoop.fs.Path(root)
+        val fsys = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+        if (fsys.exists(p)) fsys.delete(p, true)
+        // the pre-compaction ops are mutually independent (distinct store
+        // subdirs; appends never read centroids/ or codebook/) — overlap
+        // their driver fixed costs instead of serializing five tiny jobs
+        graft.Par.run(Seq(
+          () => IvfPqStore.writeCentroids(s, root, cents),
+          () => graft.sim.PqIndexStore.writeCodebook(s, root, cb),
+          () => IvfPqStore.appendBatch(emb.filter(col("vec_id") % 2 === 0),
+            cents, "vec_id", "embedding", "label", root, cb, "b0"),
+          () => IvfPqStore.appendBatch(emb.filter(col("vec_id") % 2 === 1),
+            cents, "vec_id", "embedding", "label", root, cb, "b1"),
+          () => IvfPqStore.appendTombstones(
+            emb.filter(col("vec_id") % 7 === 3).select(col("vec_id")),
+            "vec_id", root, "t0")))
+        IvfPqStore.compact(s, root, "c0", "vec_id", "label")
+        (root, emb.filter(col("vec_id") === 0)
+          .select("embedding").head().getSeq[Float](0).map(_.toDouble).toArray)
+      } finally cached.foreach(_.unpersist())
       // cold reload: centroids, codebook, and codes all from disk
       IvfPq.adcTopK(
         IvfPqStore.codes(s, root),

@@ -594,90 +594,96 @@ object Round15Queries {
       Q("q381_ivfpq_recall", oracle) { (s, dir) =>
         import graft.sim.{IvfPq, IvfPqStore, PqIndexStore}
         val emb = Tables.load(s, dir, "embeddings").persist()
-        val (cents, cb) = IvfPq.fitResidual(
-          emb, "vec_id", "embedding", "label", dims = 64, m = 4, k = 4,
-          iters = 2)
-        val root = s"target/q381_ivfpqstore/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-        val p = new org.apache.hadoop.fs.Path(root)
-        val fsys = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fsys.exists(p)) fsys.delete(p, true)
-        // the pre-compaction ops are mutually independent (distinct store
-        // subdirs; appends never read centroids/ or codebook/) — overlap
-        // their driver fixed costs instead of serializing four tiny jobs
-        Q.concurrently(Seq(
-          () => IvfPqStore.writeCentroids(s, root, cents),
-          () => PqIndexStore.writeCodebook(s, root, cb),
-          () => IvfPqStore.appendBatch(emb.filter(col("vec_id") % 3 === 0),
-            cents, "vec_id", "embedding", "label", root, cb, "b0"),
-          () => IvfPqStore.appendBatch(emb.filter(col("vec_id") % 3 === 1),
-            cents, "vec_id", "embedding", "label", root, cb, "b1"),
-          () => IvfPqStore.appendTombstones(
-            emb.filter(col("vec_id") % 7 === 3).select(col("vec_id")),
-            "vec_id", root, "t0")))
-        IvfPqStore.compact(s, root, "c0", "vec_id", "label")
-        // post-compaction churn (strictly AFTER the fold commits — the
-        // compaction must fold exactly {b0, b1, t0}): a fresh append must
-        // NOT be retro-deleted by the folded tombstones, while PENDING
-        // tombstones mask the whole live view; the two are independent
-        Q.concurrently(Seq(
-          () => IvfPqStore.appendBatch(emb.filter(col("vec_id") % 3 === 2),
-            cents, "vec_id", "embedding", "label", root, cb, "b2"): Unit,
-          () => IvfPqStore.appendTombstones(
-            emb.filter(col("vec_id") % 5 === 4).select(col("vec_id")),
-            "vec_id", root, "t1"): Unit))
-        // cold reload: codes, centroids, codebook all from disk. The
-        // cold FRAMES are then cached for the three-probe loop only —
-        // the cache is created and dropped INSIDE this invocation (the
-        // store root is deleted and rebuilt every run, and a cache
-        // outliving the run would pin the previous build's file
-        // snapshot), so each probe reads the store once instead of
-        // re-listing and re-scanning the batch dirs per query
-        val codes = IvfPqStore.liveCodes(s, root, "vec_id").persist()
-        // the brute side's corpus is the STORE's live id set — not a
-        // closed-form twin — joined back to the raw vectors
-        val liveEmb = emb.join(codes.select(col("vec_id")), Seq("vec_id"))
-          .persist()
-        // materialize both caches with ONE job, then overlap the four
-        // independent metadata fetches (probe vectors ride one job)
-        val (cents2, cb2, probeVecs) = {
-          val fetched = Q.concurrently(Seq(
-            () => liveEmb.count(): Any,
-            () => IvfPqStore.readCentroids(s, root): Any,
-            () => PqIndexStore.readCodebook(s, root): Any,
-            () => emb.filter(col("vec_id").isin(probeIds: _*))
-              .select(col("vec_id"), col("embedding")).collect()
-              .map(r => r.getLong(0) ->
-                r.getSeq[Float](1).map(_.toDouble).toArray).toMap: Any))
-          (fetched(1).asInstanceOf[org.apache.spark.sql.DataFrame],
-            fetched(2).asInstanceOf[graft.sim.ProductQuantizer.Codebook],
-            fetched(3).asInstanceOf[Map[Long, Array[Double]]])
-        }
-        // per probe: the two top-10 id sets collect driver-side (the
-        // sanctioned BOUNDED inventory — k ids each) so the returned
-        // 3-row frame is store-file-independent and re-countable; the
-        // six probe queries are independent reads of the now-cached
-        // frames and run concurrently
-        val hits = Q.concurrently(probeIds.flatMap { pid =>
-          val q = probeVecs(pid)
-          Seq(
-            () => IvfPq.adcTopK(codes, cents2, "vec_id", "label", cb2, q,
-              nProbe = 2, topK = 10)
-              .collect().map(_.getLong(0)).toSet,
-            () => {
-              val qArr = array(q.map(lit).toSeq: _*)
-              liveEmb.select(col("vec_id"),
-                aggregate(
-                  zip_with(col("embedding"), qArr,
-                    (a, b) => (a.cast("double") - b) * (a.cast("double") - b)),
-                  lit(0.0), (acc, x) => acc + x).as("d"))
-                .orderBy(col("d"), col("vec_id")).limit(10)
-                .collect().map(_.getLong(0)).toSet
-            })
-        })
-        val rows = probeIds.zipWithIndex.map { case (pid, i) =>
-          (pid, hits(2 * i).intersect(hits(2 * i + 1)).size.toLong, 10L)
-        }
-        codes.unpersist(); liveEmb.unpersist(); emb.unpersist()
+        // every frame cached here is released on every path: a frame left
+        // cached would serve the next identical run from memory
+        var cached = List(emb)
+        val rows = try {
+          val (cents, cb) = IvfPq.fitResidual(
+            emb, "vec_id", "embedding", "label", dims = 64, m = 4, k = 4,
+            iters = 2)
+          cached ::= cents
+          val root = s"target/q381_ivfpqstore/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+          val p = new org.apache.hadoop.fs.Path(root)
+          val fsys = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+          if (fsys.exists(p)) fsys.delete(p, true)
+          // the pre-compaction ops are mutually independent (distinct store
+          // subdirs; appends never read centroids/ or codebook/) — overlap
+          // their driver fixed costs instead of serializing four tiny jobs
+          Q.concurrently(Seq(
+            () => IvfPqStore.writeCentroids(s, root, cents),
+            () => PqIndexStore.writeCodebook(s, root, cb),
+            () => IvfPqStore.appendBatch(emb.filter(col("vec_id") % 3 === 0),
+              cents, "vec_id", "embedding", "label", root, cb, "b0"),
+            () => IvfPqStore.appendBatch(emb.filter(col("vec_id") % 3 === 1),
+              cents, "vec_id", "embedding", "label", root, cb, "b1"),
+            () => IvfPqStore.appendTombstones(
+              emb.filter(col("vec_id") % 7 === 3).select(col("vec_id")),
+              "vec_id", root, "t0")))
+          IvfPqStore.compact(s, root, "c0", "vec_id", "label")
+          // post-compaction churn (strictly AFTER the fold commits — the
+          // compaction must fold exactly {b0, b1, t0}): a fresh append must
+          // NOT be retro-deleted by the folded tombstones, while PENDING
+          // tombstones mask the whole live view; the two are independent
+          Q.concurrently(Seq(
+            () => IvfPqStore.appendBatch(emb.filter(col("vec_id") % 3 === 2),
+              cents, "vec_id", "embedding", "label", root, cb, "b2"): Unit,
+            () => IvfPqStore.appendTombstones(
+              emb.filter(col("vec_id") % 5 === 4).select(col("vec_id")),
+              "vec_id", root, "t1"): Unit))
+          // cold reload: codes, centroids, codebook all from disk. The
+          // cold FRAMES are then cached for the three-probe loop only —
+          // the cache is created and dropped INSIDE this invocation (the
+          // store root is deleted and rebuilt every run, and a cache
+          // outliving the run would pin the previous build's file
+          // snapshot), so each probe reads the store once instead of
+          // re-listing and re-scanning the batch dirs per query
+          val codes = IvfPqStore.liveCodes(s, root, "vec_id").persist()
+          // the brute side's corpus is the STORE's live id set — not a
+          // closed-form twin — joined back to the raw vectors
+          val liveEmb = emb.join(codes.select(col("vec_id")), Seq("vec_id"))
+            .persist()
+          cached = codes :: liveEmb :: cached
+          // materialize both caches with ONE job, then overlap the four
+          // independent metadata fetches (probe vectors ride one job)
+          val (cents2, cb2, probeVecs) = {
+            val fetched = Q.concurrently(Seq(
+              () => liveEmb.count(): Any,
+              () => IvfPqStore.readCentroids(s, root): Any,
+              () => PqIndexStore.readCodebook(s, root): Any,
+              () => emb.filter(col("vec_id").isin(probeIds: _*))
+                .select(col("vec_id"), col("embedding")).collect()
+                .map(r => r.getLong(0) ->
+                  r.getSeq[Float](1).map(_.toDouble).toArray).toMap: Any))
+            (fetched(1).asInstanceOf[org.apache.spark.sql.DataFrame],
+              fetched(2).asInstanceOf[graft.sim.ProductQuantizer.Codebook],
+              fetched(3).asInstanceOf[Map[Long, Array[Double]]])
+          }
+          // per probe: the two top-10 id sets collect driver-side (the
+          // sanctioned BOUNDED inventory — k ids each) so the returned
+          // 3-row frame is store-file-independent and re-countable; the
+          // six probe queries are independent reads of the now-cached
+          // frames and run concurrently
+          val hits = Q.concurrently(probeIds.flatMap { pid =>
+            val q = probeVecs(pid)
+            Seq(
+              () => IvfPq.adcTopK(codes, cents2, "vec_id", "label", cb2, q,
+                nProbe = 2, topK = 10)
+                .collect().map(_.getLong(0)).toSet,
+              () => {
+                val qArr = array(q.map(lit).toSeq: _*)
+                liveEmb.select(col("vec_id"),
+                  aggregate(
+                    zip_with(col("embedding"), qArr,
+                      (a, b) => (a.cast("double") - b) * (a.cast("double") - b)),
+                    lit(0.0), (acc, x) => acc + x).as("d"))
+                  .orderBy(col("d"), col("vec_id")).limit(10)
+                  .collect().map(_.getLong(0)).toSet
+              })
+          })
+          probeIds.zipWithIndex.map { case (pid, i) =>
+            (pid, hits(2 * i).intersect(hits(2 * i + 1)).size.toLong, 10L)
+          }
+        } finally cached.foreach(_.unpersist())
         import s.implicits._
         rows.toDF("probe_id", "n_hits", "k").orderBy("probe_id")
       }
@@ -707,41 +713,44 @@ object Round15Queries {
           trainWhere = liveTrain)) { (s, dir) =>
         import graft.sim.{IvfPq, IvfPqStore, PqIndexStore}
         val emb = Tables.load(s, dir, "embeddings").persist()
-        val (cents, cb) = IvfPq.fitResidual(
-          emb, "vec_id", "embedding", "label", dims = 64, m = 4, k = 4,
-          iters = 2)
-        val root = s"target/q382_ivfpqstore/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-        val gen = s"${root}_g1"
-        for (d <- Seq(root, gen)) {
-          val p = new org.apache.hadoop.fs.Path(d)
-          val fsys = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          if (fsys.exists(p)) fsys.delete(p, true)
-        }
-        // independent pre-compaction ops overlap (distinct store subdirs;
-        // appends never read centroids/ or codebook/) — see q381
-        Q.concurrently(Seq(
-          () => IvfPqStore.writeCentroids(s, root, cents),
-          () => PqIndexStore.writeCodebook(s, root, cb),
-          () => IvfPqStore.appendBatch(emb.filter(col("vec_id") % 3 === 0),
-            cents, "vec_id", "embedding", "label", root, cb, "b0"),
-          () => IvfPqStore.appendBatch(emb.filter(col("vec_id") % 3 === 1),
-            cents, "vec_id", "embedding", "label", root, cb, "b1"),
-          () => IvfPqStore.appendTombstones(
-            emb.filter(col("vec_id") % 7 === 3).select(col("vec_id")),
-            "vec_id", root, "t0")))
-        IvfPqStore.compact(s, root, "c0", "vec_id", "label")
-        Q.concurrently(Seq(
-          () => IvfPqStore.appendBatch(emb.filter(col("vec_id") % 3 === 2),
-            cents, "vec_id", "embedding", "label", root, cb, "b2"): Unit,
-          () => IvfPqStore.appendTombstones(
-            emb.filter(col("vec_id") % 5 === 4).select(col("vec_id")),
-            "vec_id", root, "t1"): Unit))
-        // the refit generation: survivors only, fresh quantizers
-        IvfPqStore.refitGeneration(s, root, gen, emb,
-          "vec_id", "embedding", "label", dims = 64, m = 4, k = 4, iters = 2)
-        val probe = emb.filter(col("vec_id") === 0)
-          .select("embedding").head().getSeq[Float](0).map(_.toDouble).toArray
-        emb.unpersist()
+        var cached = List(emb)
+        val (gen, probe) = try {
+          val (cents, cb) = IvfPq.fitResidual(
+            emb, "vec_id", "embedding", "label", dims = 64, m = 4, k = 4,
+            iters = 2)
+          cached ::= cents
+          val root = s"target/q382_ivfpqstore/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+          val gen = s"${root}_g1"
+          for (d <- Seq(root, gen)) {
+            val p = new org.apache.hadoop.fs.Path(d)
+            val fsys = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+            if (fsys.exists(p)) fsys.delete(p, true)
+          }
+          // independent pre-compaction ops overlap (distinct store subdirs;
+          // appends never read centroids/ or codebook/) — see q381
+          Q.concurrently(Seq(
+            () => IvfPqStore.writeCentroids(s, root, cents),
+            () => PqIndexStore.writeCodebook(s, root, cb),
+            () => IvfPqStore.appendBatch(emb.filter(col("vec_id") % 3 === 0),
+              cents, "vec_id", "embedding", "label", root, cb, "b0"),
+            () => IvfPqStore.appendBatch(emb.filter(col("vec_id") % 3 === 1),
+              cents, "vec_id", "embedding", "label", root, cb, "b1"),
+            () => IvfPqStore.appendTombstones(
+              emb.filter(col("vec_id") % 7 === 3).select(col("vec_id")),
+              "vec_id", root, "t0")))
+          IvfPqStore.compact(s, root, "c0", "vec_id", "label")
+          Q.concurrently(Seq(
+            () => IvfPqStore.appendBatch(emb.filter(col("vec_id") % 3 === 2),
+              cents, "vec_id", "embedding", "label", root, cb, "b2"): Unit,
+            () => IvfPqStore.appendTombstones(
+              emb.filter(col("vec_id") % 5 === 4).select(col("vec_id")),
+              "vec_id", root, "t1"): Unit))
+          // the refit generation: survivors only, fresh quantizers
+          IvfPqStore.refitGeneration(s, root, gen, emb,
+            "vec_id", "embedding", "label", dims = 64, m = 4, k = 4, iters = 2)
+          (gen, emb.filter(col("vec_id") === 0)
+            .select("embedding").head().getSeq[Float](0).map(_.toDouble).toArray)
+        } finally cached.foreach(_.unpersist())
         // cold reload of the NEW generation only
         IvfPq.adcTopK(
           IvfPqStore.codes(s, gen),

@@ -54,6 +54,33 @@ class CatalogSpec extends SparkSpec {
     assert(cat.watermark("t") == 25L)
   }
 
+  test("watermark probes run no job while the log holds; an external commit is seen") {
+    val dir = tmpDir("cat-wm")
+    val mine = new Catalog(spark, dir)
+    mine.setWatermark("t", 10L)
+    assert(mine.watermark("t") == 10L) // loads the cache (one job)
+    mine.setWatermark("t", 12L) // our own commit keeps it loaded
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      (1 to 50).foreach { _ =>
+        assert(mine.watermark("t") == 12L)
+        assert(mine.watermark("never_set") == 0L)
+      }
+      Thread.sleep(300) // let any stray job-start events drain to listeners
+      assert(jobs.get() == 0, s"${jobs.get()} jobs ran for cached watermark probes")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // local-FS mtime is millisecond-grained: let the tick move past the
+    // cached stamp before the external commit lands
+    Thread.sleep(20)
+    new Catalog(spark, dir).setWatermark("t", 30L)
+    assert(mine.watermark("t") == 30L, "external commit invisible: staleness bound broken")
+  }
+
   test("compareAndSetWatermark: one winner per transition; concurrent ladder loses no update") {
     val dir = tmpDir("cat-cas")
     val cat = new Catalog(spark, dir)

@@ -2,6 +2,7 @@ package graft
 
 import graft.clean.Clean
 import graft.dedup.Dedup
+import graft.load.IdAssign
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
@@ -26,6 +27,22 @@ class DedupSpec extends SparkSpec {
     val once = Dedup.selfDedupAnyWins(df, "row_hash")
     val twice = Dedup.selfDedupAnyWins(once, "row_hash")
     assert(once.count() == twice.count())
+  }
+
+  test("J1 + ids over one exchange equal the window stamp after any-wins dedup, at 1, 3 and 7 partitions") {
+    // 120 distinct payloads, every 3rd twice and every 5th three times,
+    // spread over 4 input partitions so copies start on different tasks
+    val rows = (1 to 120).flatMap(i => Seq.fill(1 + (if (i % 3 == 0) 1 else 0) + (if (i % 5 == 0) 2 else 0))(
+      (s"p$i", i % 7)))
+    val df = Clean.withRowHash(rows.toDF("payload", "k").repartition(4), Seq("payload", "k"))
+    val want = IdAssign.denseIdsWindow(Dedup.selfDedupAnyWins(df, "row_hash"), 40L, Seq("row_hash"))
+      .as[(Long, String, Int, String)].collect().sorted.toSeq
+    assert(want.map(_._1) == (41L to 160L))
+    for (n <- Seq(1, 3, 7)) {
+      val got = IdAssign.dedupDenseIdsByHash(df, 40L, "row_hash", n)
+      assert(got.rdd.getNumPartitions == n)
+      assert(got.as[(Long, String, Int, String)].collect().sorted.toSeq == want, s"at $n partitions")
+    }
   }
 
   test("J2 anti-join removes rows present in prior batches") {

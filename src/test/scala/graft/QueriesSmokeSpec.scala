@@ -23,6 +23,14 @@ class QueriesSmokeSpec extends SparkSpec {
     }
   }
 
+  test("IVF+PQ queries release the frames they cache") {
+    spark.catalog.clearCache() // other suites share this session and its cache
+    for (name <- Seq("q332_ann_ivfpq", "q366_ivfpq_delete", "q381_ivfpq_recall", "q382_ivfpq_refit")) {
+      assert(SparkEntry.allQs.find(_.name == name).get.run(spark, sf).count() > 0)
+      assert(spark.sharedState.cacheManager.isEmpty, s"$name left a cached frame")
+    }
+  }
+
   SparkEntry.allQs.foreach { q =>
     test(s"${q.name} runs at sf0.001") {
       val n = q.run(spark, sf).count()
