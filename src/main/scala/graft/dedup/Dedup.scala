@@ -47,22 +47,6 @@ object Dedup {
   def antiJoinPrior(df: DataFrame, prior: DataFrame, hashCol: String): DataFrame =
     df.join(prior.select(hashCol), Seq(hashCol), "left_anti")
 
-  /** J2, bloom-reduced ([[graft.operators.BloomPrune.antiJoinReduced]]) —
-    * the 100 TB shape when `prior` is far past broadcast size and the batch
-    * is append-mostly: a bloom over prior hashes routes definitely-new rows
-    * (the overwhelming majority) around the join entirely, so the exchange
-    * carries only bloom-positive candidates. Same rows as [[antiJoinPrior]]
-    * (false positives die in the exact join); costs one extra sketch pass
-    * over `prior`'s hash column, so prefer the plain variant while `prior`
-    * still broadcasts.
-    */
-  def antiJoinPriorBloom(
-      df: DataFrame,
-      prior: DataFrame,
-      hashCol: String,
-      expectedItems: Long = 10000000L): DataFrame =
-    graft.operators.BloomPrune.antiJoinReduced(df, prior, hashCol, hashCol, expectedItems)
-
   /** J3 — re-insert guard: drop batch rows whose id already exists in the
     * target, pruning the target scan to the batch's id range first
     * (reference: `prevent_id_duplicate`, `util/data_pushing.py:115-166`,

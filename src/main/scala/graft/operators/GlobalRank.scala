@@ -1,32 +1,37 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Distributed global ranking — `row_number`/`rank`/`ntile`/`percent_rank`/
-  * `cume_dist` over a WHOLE table without the single-partition
-  * `Window.orderBy(...)` plan (an empty PARTITION BY collapses every row
-  * into one window partition: one task sorts 100 TB — the same scale-killer
-  * [[graft.load.IdAssign.denseIdsWindow]] documents).
+  * `cume_dist` and exclusive running totals over a WHOLE table without the
+  * single-partition `Window.orderBy(...)` plan (an empty PARTITION BY
+  * collapses every row into one window partition: one task sorts 100 TB —
+  * the scale-killer [[graft.load.IdAssign.denseIdsWindow]] documents).
   *
-  * Shape: range-repartition on the order columns (so partition p holds rows
-  * globally ordered before partition p+1), sort within partitions, then ONE
-  * lightweight pass collects per-partition row counts (a few hundred longs
-  * to the driver) and a second pass stamps each row with
-  * `offset(partition) + local position` plus the total count. Every rank
-  * statistic is arithmetic over (row_number, total):
-  *
-  *  - `rank = min row_number over the tied group`, `percent_rank =
-  *    (rank−1)/(N−1)`, `cume_dist = (max row_number over the tied
-  *    group)/N`, `ntile(k)` from row_number and N with the standard SQL
-  *    first-`N mod k`-buckets-get-one-extra fill.
-  *
-  * The count pass re-reads the range shuffle's map output (the exchange is
-  * reused, not re-planned), so the cost over a plain global sort is one
-  * extra reduce-side scan — constant factor, no bottleneck task.
+  * Every stamp here, and the landing path's dense ids ([[graft.load.IdAssign]]),
+  * is ONE two-pass prefix stamp ([[stamp]]) over rows laid out so partition
+  * p holds rows ordered before partition p+1. Every rank statistic is
+  * arithmetic over (row_number, total): `rank = min row_number over the
+  * tied group`, `percent_rank = (rank−1)/(N−1)`, `cume_dist = (max
+  * row_number over the tied group)/N`, `ntile(k)` from row_number and N
+  * with the standard SQL first-`N mod k`-buckets-get-one-extra fill.
   */
 object GlobalRank {
+
+  /** What [[stamp]] does with a row whose key equals the previous row's:
+    * stamp it (Allow), fail because the caller promised a total order
+    * (Fail), or skip it in both passes so positions stay dense (Drop).
+    */
+  private[graft] sealed trait Ties
+  private[graft] object Ties {
+    case object Allow extends Ties
+    case object Fail extends Ties
+    case object Drop extends Ties
+  }
 
   /** Order-key cell copied out of a (possibly reused) InternalRow buffer
     * and normalized for equality: UTF8String/array/struct values alias the
@@ -38,7 +43,7 @@ object GlobalRank {
   private def normKeyCell(v: Any): Any = v match {
     case a: Array[Byte] => a.toSeq
     case u: org.apache.spark.unsafe.types.UTF8String => u.clone()
-    case s: org.apache.spark.sql.catalyst.InternalRow => s.copy()
+    case s: InternalRow => s.copy()
     case ad: org.apache.spark.sql.catalyst.util.ArrayData => ad.copy()
     case d: org.apache.spark.sql.types.Decimal => d.toBigDecimal
     case x => x
@@ -52,200 +57,144 @@ object GlobalRank {
           " withColumn would replace it in place while the stamped schema appends," +
           " corrupting row arity; pass a different output column name")
 
+  /** Range-repartition on `orderCols`, sorted within partitions. A
+    * RangePartitioner never splits EQUAL keys across partitions, so tied
+    * rows are adjacent in one partition: [[stamp]]'s tie check is complete.
+    */
+  private[graft] def rangeSorted(df: DataFrame, orderCols: Seq[String]): DataFrame = {
+    require(orderCols.nonEmpty, "global ranking needs at least one order column")
+    df.repartitionByRange(orderCols.map(col): _*).sortWithinPartitions(orderCols.map(col): _*)
+  }
+
+  /** The two-pass prefix stamp. `layout` orders the rows of `df` by
+    * partition (p before p+1, each sorted by `keys`). The result appends,
+    * each only when named: `rnCol` (`start` + 1-based position), `value`'s
+    * output column (the EXCLUSIVE running total of its input column, cast to
+    * long, null as 0) and `nCol` (the total row count). `ties` rules a row
+    * whose `keys` equal the previous row's (nulls equal each other).
+    *
+    * Pass 1 ships per-partition (rows, value sum) to the driver: every
+    * partition when the total is emitted, else all but the last (its size
+    * moves no offset, so a one-partition frame runs no count job). Pass 2
+    * stamps `offset(partition) + local position`. Both run over the INTERNAL
+    * row RDD, reusing the exchange's files, so no row is converted to an
+    * external Row; the appended row and the JoinedRow are reused per
+    * partition (the SparkPlan output contract: consumers copy to buffer).
+    */
+  private[graft] def stamp(
+      df: DataFrame,
+      layout: DataFrame => DataFrame,
+      keys: Seq[String],
+      ties: Ties,
+      start: Long = 0L,
+      rnCol: Option[String] = None,
+      value: Option[(String, String)] = None,
+      nCol: Option[String] = None): DataFrame = {
+    val outCols = rnCol.toSeq ++ value.map(_._2) ++ nCol
+    requireFresh(df, outCols: _*)
+    val valTmp = "_gr_stamp_val"
+    val sorted = layout(value.fold(df) { case (valueCol, _) =>
+      require(!df.columns.contains(valTmp), s"GlobalRank: reserved column $valTmp in input")
+      df.withColumn(valTmp, coalesce(col(valueCol).cast("long"), lit(0L)))
+    })
+    val rdd = Lineage.internalRdd(sorted)
+    val vIdx = if (value.isDefined) sorted.schema.fieldIndex(valTmp) else -1
+    val keyIdx = keys.map(sorted.schema.fieldIndex).toArray
+    val keyTypes = keyIdx.map(i => sorted.schema(i).dataType)
+    val keyNames = keys.mkString("(", ",", ")")
+    // the rows of one partition under a tie rule; pass 1 only needs Drop's
+    // filter (a broken Fail promise is caught once, in pass 2)
+    def kept(it: Iterator[InternalRow], rule: Ties): Iterator[InternalRow] =
+      if (rule == Ties.Allow) it
+      else {
+        var prev: Seq[Any] = null
+        it.filter { r =>
+          val key = keyIdx.indices.map(k => normKeyCell(r.get(keyIdx(k), keyTypes(k))))
+          val repeat = prev != null && prev == key
+          if (repeat && rule == Ties.Fail)
+            throw new IllegalStateException(
+              s"GlobalRank: order key $keyNames = ${key.mkString("(", ",", ")")} is duplicated," +
+                " but tiesPossible=false — ranks and running totals would be nondeterministic;" +
+                " pass tiesPossible=true or append a unique tie-break column")
+          prev = key
+          !repeat
+        }
+      }
+    // pass 1: per-partition (rows, value sum) — O(partitions) pairs
+    val countRule = if (ties == Ties.Drop) Ties.Drop else Ties.Allow
+    val counted = if (nCol.isDefined) rdd.getNumPartitions else rdd.getNumPartitions - 1
+    val stats =
+      if (counted <= 0) Array.empty[(Long, Long)]
+      else sorted.sparkSession.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) => {
+        var n = 0L; var s = 0L
+        kept(it, countRule).foreach { r => n += 1; if (vIdx >= 0) s += r.getLong(vIdx) }
+        (n, s)
+      }, 0 until counted)
+    val offsets = stats.scanLeft((start, 0L)) { case ((n0, s0), (n, s)) => (n0 + n, s0 + s) }
+    val total = offsets.last._1 - start
+    val rnAt = if (rnCol.isDefined) 0 else -1
+    val cumAt = if (value.isDefined) rnAt + 1 else -1
+    // pass 2: stamp behind the same reused exchange
+    val stamped = rdd.mapPartitionsWithIndex { (pid, it) =>
+      var (rn, acc) = offsets(pid)
+      val appended = new GenericInternalRow(outCols.length)
+      if (nCol.isDefined) appended.update(outCols.length - 1, total)
+      val joined = new JoinedRow
+      kept(it, ties).map { r =>
+        rn += 1
+        if (rnAt >= 0) appended.update(rnAt, rn)
+        if (cumAt >= 0) { appended.update(cumAt, acc); acc += r.getLong(vIdx) }
+        joined(r, appended): InternalRow
+      }
+    }
+    val outSchema = StructType(sorted.schema.fields ++ outCols.map(StructField(_, LongType, nullable = false)))
+    val out = Lineage.internalDataFrame(sorted.sparkSession, stamped, outSchema)
+    if (value.isDefined) out.drop(valTmp) else out
+  }
+
   /** `df` + `rnCol` (1-based global row_number, long) + `nCol` (total rows,
     * long), ordered by `orderCols`. Row order within ties follows the sort's
     * (stable) placement, so make `orderCols` a TOTAL order (append a unique
-    * tie-break) whenever downstream math assumes `row_number == rank`.
+    * tie-break) whenever downstream math assumes `row_number == rank`;
+    * `failOnTies` makes a broken promise fail LOUDLY, not silently misrank.
     */
   def withRowNumber(
       df: DataFrame,
       orderCols: Seq[String],
       rnCol: String = "_rn",
       nCol: String = "_n",
-      failOnTies: Boolean = false): DataFrame = {
-    require(orderCols.nonEmpty, "global ranking needs at least one order column")
-    requireFresh(df, rnCol, nCol)
-    val spark = df.sparkSession
-    val sorted = df
-      .repartitionByRange(orderCols.map(col): _*)
-      .sortWithinPartitions(orderCols.map(col): _*)
-    // both passes run over the INTERNAL row RDD (the range shuffle's files
-    // are reused between them): stamping through `df.rdd` would
-    // field-by-field deserialize every row to an external Row and convert
-    // it back — for a fact-table stamp that conversion used to cost more
-    // than the shuffle itself
-    val rdd = graft.operators.Lineage.internalRdd(sorted)
-    // pass 1: per-partition sizes only — O(partitions) longs to the driver
-    val sizes = rdd.mapPartitions(
-      it => Iterator.single(it.size.toLong), preservesPartitioning = true).collect()
-    val offsets = sizes.scanLeft(0L)(_ + _)
-    val total = offsets.last
-    val outSchema = StructType(df.schema.fields ++ Seq(
-      StructField(rnCol, LongType, nullable = false),
-      StructField(nCol, LongType, nullable = false)))
-    // `failOnTies` = the caller promised orderCols is a TOTAL order (so
-    // row_number doubles as rank); a broken promise must fail LOUDLY, not
-    // silently misrank. Detection is complete with a per-partition
-    // adjacent-row compare: a RangePartitioner never splits EQUAL keys
-    // across partitions, so tied rows are always sorted adjacent within one
-    // partition — no extra pass, no cross-partition check needed. (Nulls
-    // compare equal here: SQL rank treats a repeated NULL key as a tie.)
-    val keyIdx = orderCols.map(c => df.schema.fieldIndex(c))
-    val keyTypes = keyIdx.map(i => df.schema(i).dataType)
-    // pass 2: stamp rank + total behind the same reused range shuffle. The
-    // appended struct and the JoinedRow are reused per partition — the
-    // standard SparkPlan output contract (consumers copy when buffering).
-    val stamped = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var i = offsets(pid)
-      val appended = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(2)
-      appended.update(1, total)
-      val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-      var prevKey: Seq[Any] = null
-      it.map { r =>
-        if (failOnTies) {
-          val key = keyIdx.indices.map(k => normKeyCell(r.get(keyIdx(k), keyTypes(k))))
-          if (prevKey != null && prevKey == key)
-            throw new IllegalStateException(
-              s"GlobalRank: tiesPossible=false but order key ${orderCols.mkString("(", ",", ")")}" +
-                s" = ${key.mkString("(", ",", ")")} is duplicated — ranks would be wrong;" +
-                " pass tiesPossible=true or append a unique tie-break column")
-          prevKey = key
-        }
-        i += 1
-        appended.update(0, i)
-        joined(r, appended): org.apache.spark.sql.catalyst.InternalRow
-      }
-    }
-    graft.operators.Lineage.internalDataFrame(spark, stamped, outSchema)
-  }
+      failOnTies: Boolean = false): DataFrame =
+    stamp(df, rangeSorted(_, orderCols), orderCols, if (failOnTies) Ties.Fail else Ties.Allow,
+      rnCol = Some(rnCol), nCol = Some(nCol))
 
   /** [[withRowNumber]] and [[withRunningTotal]] FUSED over one order:
     * when a caller needs both the global rank AND the exclusive prefix
     * sum of the same ordering (token-budget selection does), two
     * separate stamps would range-shuffle the same projection twice.
-    * This pays ONE range exchange, one O(partitions) driver pass
-    * collecting (size, sum) pairs, one stamp pass. Ties fail loudly
-    * (both outputs are meaningless under a non-total order).
+    * This pays one range exchange and one stamp. Ties fail loudly (both
+    * outputs are meaningless under a non-total order).
     */
   def withRowNumberAndRunningTotal(
       df: DataFrame,
       orderCols: Seq[String],
       valueCol: String,
       rnCol: String = "_rn",
-      cumCol: String = "_cum"): DataFrame = {
-    require(orderCols.nonEmpty, "global ranking needs at least one order column")
-    requireFresh(df, rnCol, cumCol)
-    val spark = df.sparkSession
-    val valTmp = "_gr_stamp_val"
-    require(!df.columns.contains(valTmp), s"GlobalRank: reserved column $valTmp in input")
-    val projected = df.withColumn(valTmp, coalesce(col(valueCol).cast("long"), lit(0L)))
-    val sorted = projected
-      .repartitionByRange(orderCols.map(col): _*)
-      .sortWithinPartitions(orderCols.map(col): _*)
-    // internal-row passes — see withRowNumber
-    val rdd = graft.operators.Lineage.internalRdd(sorted)
-    val vIdx = projected.schema.fieldIndex(valTmp)
-    val keyIdx = orderCols.map(c => projected.schema.fieldIndex(c))
-    val keyTypes = keyIdx.map(i => projected.schema(i).dataType)
-    // pass 1: per-partition (row count, value sum) — O(partitions) pairs
-    val stats = rdd.mapPartitions({ it =>
-      var n = 0L; var s = 0L
-      it.foreach { r => n += 1; s += r.getLong(vIdx) }
-      Iterator.single((n, s))
-    }, preservesPartitioning = true).collect()
-    val rnOffsets = stats.map(_._1).scanLeft(0L)(_ + _)
-    val cumOffsets = stats.map(_._2).scanLeft(0L)(_ + _)
-    val stampedSchema = StructType(projected.schema.fields ++ Seq(
-      StructField(rnCol, LongType, nullable = false),
-      StructField(cumCol, LongType, nullable = false)))
-    // pass 2: stamp both behind the same reused range-shuffle files
-    val stamped = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var rn = rnOffsets(pid)
-      var acc = cumOffsets(pid)
-      val appended = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(2)
-      val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-      var prevKey: Seq[Any] = null
-      it.map { r =>
-        val key = keyIdx.indices.map(k => normKeyCell(r.get(keyIdx(k), keyTypes(k))))
-        if (prevKey != null && prevKey == key)
-          throw new IllegalStateException(
-            s"GlobalRank: order key ${orderCols.mkString("(", ",", ")")}" +
-              s" = ${key.mkString("(", ",", ")")} is duplicated — rank and running" +
-              " total would be nondeterministic; append a unique tie-break column")
-        prevKey = key
-        rn += 1
-        appended.update(0, rn)
-        appended.update(1, acc)
-        acc += r.getLong(vIdx)
-        joined(r, appended): org.apache.spark.sql.catalyst.InternalRow
-      }
-    }
-    // drop the projected value column; output = df columns + rn + cum
-    graft.operators.Lineage.internalDataFrame(spark, stamped, stampedSchema)
-      .drop(valTmp)
-  }
+      cumCol: String = "_cum"): DataFrame =
+    stamp(df, rangeSorted(_, orderCols), orderCols, Ties.Fail,
+      rnCol = Some(rnCol), value = Some(valueCol -> cumCol))
 
   /** Distributed EXCLUSIVE prefix sum of `valueCol` in `orderCols` order —
     * the running-total twin of [[withRowNumber]], and the primitive behind
     * sequence packing (concat-then-split bin assignment) and token-budget
-    * selection in a training-data pipeline. A naive
-    * `sum over (ORDER BY …)` window with no PARTITION BY collapses to one
-    * task; this keeps the same two-pass shape: range-repartition + sort,
-    * ONE pass ships per-partition sums to the driver (O(partitions) longs),
-    * a second stamps `offset(partition) + local running sum`. `orderCols`
-    * must be a total order for a deterministic result (same contract as
-    * `tiesPossible = false`, enforced the same way).
+    * selection, without the one-task `sum over (ORDER BY …)` window.
+    * `orderCols` must be a total order; a tie fails loudly.
     */
   def withRunningTotal(
       df: DataFrame,
       orderCols: Seq[String],
       valueCol: String,
-      outCol: String = "_cum"): DataFrame = {
-    require(orderCols.nonEmpty, "running total needs at least one order column")
-    requireFresh(df, outCol)
-    val spark = df.sparkSession
-    val valTmp = "_gr_stamp_val"
-    require(!df.columns.contains(valTmp), s"GlobalRank: reserved column $valTmp in input")
-    // null values count as 0 (getLong on a null cell would NPE mid-stamp)
-    val projected = df.withColumn(valTmp, coalesce(col(valueCol).cast("long"), lit(0L)))
-    val sorted = projected
-      .repartitionByRange(orderCols.map(col): _*)
-      .sortWithinPartitions(orderCols.map(col): _*)
-    // internal-row passes — see withRowNumber
-    val rdd = graft.operators.Lineage.internalRdd(sorted)
-    val vIdx = projected.schema.fieldIndex(valTmp)
-    val keyIdx = orderCols.map(c => projected.schema.fieldIndex(c))
-    val keyTypes = keyIdx.map(i => projected.schema(i).dataType)
-    // pass 1: per-partition value sums — O(partitions) longs to the driver
-    val sums = rdd.mapPartitions(
-      it => Iterator.single(it.foldLeft(0L)((a, r) => a + r.getLong(vIdx))),
-      preservesPartitioning = true).collect()
-    val offsets = sums.scanLeft(0L)(_ + _)
-    val stampedSchema = StructType(
-      projected.schema.fields :+ StructField(outCol, LongType, nullable = false))
-    // pass 2: append the exclusive running total behind the reused shuffle
-    val stamped = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var acc = offsets(pid)
-      val appended = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(1)
-      val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-      var prevKey: Seq[Any] = null
-      it.map { r =>
-        val key = keyIdx.indices.map(k => normKeyCell(r.get(keyIdx(k), keyTypes(k))))
-        if (prevKey != null && prevKey == key)
-          throw new IllegalStateException(
-            s"GlobalRank.withRunningTotal: order key ${orderCols.mkString("(", ",", ")")}" +
-              s" = ${key.mkString("(", ",", ")")} is duplicated — the running total would be" +
-              " nondeterministic; append a unique tie-break column")
-        prevKey = key
-        appended.update(0, acc)
-        acc += r.getLong(vIdx)
-        joined(r, appended): org.apache.spark.sql.catalyst.InternalRow
-      }
-    }
-    // drop the projected value column; output = df columns + outCol
-    graft.operators.Lineage.internalDataFrame(spark, stamped, stampedSchema)
-      .drop(valTmp)
-  }
+      outCol: String = "_cum"): DataFrame =
+    stamp(df, rangeSorted(_, orderCols), orderCols, Ties.Fail, value = Some(valueCol -> outCol))
 
   /** SQL-standard `ntile(buckets)` from (row_number, total): the first
     * `N mod k` buckets take `ceil(N/k)` rows, the rest `floor(N/k)`.

@@ -30,8 +30,6 @@ final class CorpusPipeline(
     nearDupJaccard: Double = 0.8,
     benchmark: Option[DataFrame] = None,
     splitWeights: Seq[(String, Int)] = Seq("train" -> 8, "val" -> 1, "test" -> 1),
-    bloomDedup: Boolean = false,
-    bloomExpectedItems: Long = 10000000L,
     rebalanceRates: Map[String, Double] = Map.empty) {
 
   final case class Result(
@@ -69,18 +67,7 @@ final class CorpusPipeline(
     // 2. exact dedup: within batch (keep lowest id) then vs corpus hashes
     val inBatch = Dedup.selfDedupFirstWins(quality, Seq("text_hash"), "doc_id")
     val corpus = if (Snapshot.exists(spark, corpusDir)) Some(Snapshot.readTable(spark, corpusDir)) else None
-    val exactNew = corpus match {
-      // bloomDedup = the past-broadcast-size choice: a bloom over corpus
-      // hashes routes definitely-new docs (the append-mostly majority)
-      // around the anti-join entirely (Dedup.antiJoinPriorBloom)
-      case Some(c) if bloomDedup =>
-        // size the bloom to the corpus (bloomExpectedItems): an undersized
-        // filter saturates (FPP -> 1) and degrades to the plain join plus a
-        // wasted sketch pass
-        Dedup.antiJoinPriorBloom(inBatch, c.select("text_hash"), "text_hash", bloomExpectedItems)
-      case Some(c) => Dedup.antiJoinPrior(inBatch, c.select("text_hash"), "text_hash")
-      case None => inBatch
-    }
+    val exactNew = corpus.fold(inBatch)(c => Dedup.antiJoinPrior(inBatch, c.select("text_hash"), "text_hash"))
 
     // 3. near-dup: LSH candidates within batch + vs corpus, verified by
     // Jaccard; verified pairs cluster via connected components so a CHAIN

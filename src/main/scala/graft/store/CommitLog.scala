@@ -116,10 +116,15 @@ object CommitLog {
     * call folded nothing (the marker was found and its deletes are now
     * finished, or `sources` is empty). `retire` drops the marker once
     * its deletes are done, for a store whose fold ids are never replayed.
+    * Every fold first finishes the deletes of any other committed fold
+    * whose listed dirs a crash left on disk.
     */
   def fold[A](spark: SparkSession, root: String, id: String, retire: Boolean = false)(
       sources: => Seq[String])(write: Seq[String] => A): Option[A] = {
-    val r = fs(spark, new Path(root)).makeQualified(new Path(root))
+    val f = fs(spark, new Path(root))
+    val r = f.makeQualified(new Path(root))
+    for (c <- visible(spark, s"$r/compactions") if c.getName != id)
+      delete(spark, read(spark, new Path(c, "folded")).toSeq.flatten.map(new Path(r, _)).filter(f.exists))
     val markerDir = new Path(r, s"compactions/${requireId(id, "compactId")}")
     val marker = new Path(markerDir, "folded")
     val done = read(spark, marker) match {

@@ -151,9 +151,9 @@ object StreamingIngest {
     * twin of `dropDuplicatesWithinWatermark` when dedup must span RUNS, not
     * a watermark window), then append. The checkpoint makes each FILE
     * exactly-once across invocations; the content-hash anti-join makes each
-    * DOCUMENT exactly-once across arrivals. At 100 TB the anti-join is the
-    * [[graft.dedup.Dedup.antiJoinPriorBloom]] shape; hashes-only ships to
-    * the join either way.
+    * DOCUMENT exactly-once across arrivals. Past broadcast size,
+    * [[graft.operators.BloomPrune.antiJoinReduced]] is the bloom-pruned form
+    * of the same anti-join; hashes-only ships to the join either way.
     */
   def runCurationStream(
       stream: DataFrame,

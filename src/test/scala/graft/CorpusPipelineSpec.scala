@@ -94,29 +94,6 @@ class CorpusPipelineSpec extends SparkSpec {
     assert(Set("train", "val", "test").contains(corpus.select("split").as[String].head()))
   }
 
-  test("bloomDedup variant reaches the same corpus as the plain anti-join") {
-    // lexically diverse docs (see the rebalance test) so the near-dup gate
-    // keeps them all: batch 2's 10-doc overlap then REALLY exercises the
-    // bloom-positive path (true matches through the exact join) and the
-    // 10 new docs the bloom-negative bypass
-    def doc(i: Long) = (1 to 10).map(k => s"the a${i}b$k and c${i}d$k of e${i}f$k").mkString(" ")
-    def run(bloom: Boolean): Set[Long] = {
-      val root = tmpDir("corpusbl")
-      val cat = new Catalog(spark, s"$root/catalog")
-      val pipe = new CorpusPipeline(spark, cat, s"$root/corpus",
-        minQualityTokens = 3, nearDupJaccard = 0.7, bloomDedup = bloom,
-        bloomExpectedItems = 1000L)
-      val b1 = (1L to 20L).map(i => (i, doc(i))).toDF("doc_id", "text")
-      val r1 = pipe.processBatch(b1, "b1")
-      assert(r1.ingested == 20) // diverse docs all survive batch 1
-      val b2 = (11L to 30L).map(i => (i + 100L, doc(i))).toDF("doc_id", "text")
-      val r2 = pipe.processBatch(b2, "b2")
-      assert(r2.exactDups == 10 && r2.ingested == 10) // overlap truly deduped
-      spark.read.parquet(s"$root/corpus").select("doc_id").as[Long].collect().toSet
-    }
-    assert(run(bloom = true) == run(bloom = false))
-  }
-
   test("rebalanceRates downsamples the named stratum and audits it separately") {
     val root = tmpDir("corpusrb")
     val cat = new Catalog(spark, s"$root/catalog")

@@ -45,6 +45,26 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("J1 + ids over one exchange: mostly empty partitions and an all-duplicates batch") {
+    // 10 rows over 64 hash partitions: most partitions, very likely the
+    // last one too, hold nothing, and no id may be skipped for them
+    val rows = (1 to 8).map(i => (s"p$i", i)) ++ Seq(("p3", 3), ("p7", 7))
+    val df = Clean.withRowHash(rows.toDF("payload", "k"), Seq("payload", "k"))
+    val want = IdAssign.denseIdsWindow(Dedup.selfDedupAnyWins(df, "row_hash"), 7L, Seq("row_hash"))
+      .as[(Long, String, Int, String)].collect().sorted.toSeq
+    assert(want.map(_._1) == (8L to 15L))
+    val got = IdAssign.dedupDenseIdsByHash(df, 7L, "row_hash", 64)
+    assert(got.rdd.getNumPartitions == 64)
+    assert(got.as[(Long, String, Int, String)].collect().sorted.toSeq == want)
+    // every row a copy of one: one row survives, with the first id
+    val same = Clean.withRowHash(Seq.fill(25)(("x", 1)).toDF("payload", "k").repartition(3), Seq("payload", "k"))
+    for (n <- Seq(1, 4)) {
+      val one = IdAssign.dedupDenseIdsByHash(same, 100L, "row_hash", n)
+        .as[(Long, String, Int, String)].collect().toSeq
+      assert(one.map(r => (r._1, r._2, r._3)) == Seq((101L, "x", 1)), s"at $n partitions")
+    }
+  }
+
   test("J2 anti-join removes rows present in prior batches") {
     val batch = hashed(Seq((1, "a"), (2, "b"), (3, "c")))
     val prior = hashed(Seq((9, "b")))
@@ -55,16 +75,6 @@ class DedupSpec extends SparkSpec {
   test("J2 re-run idempotence: second pass inserts zero rows") {
     val batch = hashed(Seq((1, "a"), (2, "b")))
     assert(Dedup.antiJoinPrior(batch, batch, "row_hash").count() == 0)
-  }
-
-  test("J2 bloom-reduced variant matches the plain anti-join") {
-    val batch = (1 to 500).map(i => (s"h${i % 120}", i)).toDF("row_hash", "payload")
-    val prior = (0 to 40).map(i => Tuple1(s"h$i")).toDF("row_hash")
-    val want = Dedup.antiJoinPrior(batch, prior, "row_hash")
-      .select("payload").as[Int].collect().toSet
-    val got = Dedup.antiJoinPriorBloom(batch, prior, "row_hash", expectedItems = 1000L)
-      .select("payload").as[Int].collect().toSet
-    assert(got == want && want.nonEmpty)
   }
 
   test("J3 id guard drops overlapping ids, keeps the rest") {

@@ -337,6 +337,12 @@ class PropertySpec extends SparkSpec {
     }
     assert(ex.getMessage.contains("tiesPossible") || Option(ex.getCause)
       .exists(_.getMessage.contains("tiesPossible")))
+    // the stamp itself, asked to fail on ties, fails the same way
+    val exRn = intercept[org.apache.spark.SparkException] {
+      GlobalRank.withRowNumber(df, Seq("v"), failOnTies = true).collect()
+    }
+    assert(exRn.getMessage.contains("tiesPossible") || Option(exRn.getCause)
+      .exists(_.getMessage.contains("tiesPossible")))
     // and the same data under a total order (unique tie-break appended) is fine
     val ok = GlobalRank.rankRatios(df, Seq("v", "id"), tiesPossible = false)
     assert(ok.count() == 3)

@@ -477,6 +477,9 @@ class SimilaritySpec extends SparkSpec {
     assert(ids() == Seq(0L, 1L, 3L, 4L, 7L))
     PqIndexStore.compact(spark, root, "c1")
     assert(ids() == Seq(0L, 1L, 3L, 4L, 7L))
+    // the next fold finished the crashed one's deletes
+    for (d <- Seq("codes/b0", "codes/b1", "tombstones/t0"))
+      assert(!new java.io.File(s"$local/$d").exists, s"$d left on disk")
   }
 
   test("IvfPqStore lifecycle: cell-partitioned appends, live view, compact == " +
