@@ -48,7 +48,6 @@ object Status {
 final class Catalog(spark: SparkSession, dir: String) {
   import spark.implicits._
 
-  private val statusDir = s"$dir/processed_files"
   private val StatusSchema = "file_name STRING, status STRING, created_at TIMESTAMP"
   private val WatermarkSchema = "table_name STRING, last_id BIGINT, updated_at TIMESTAMP"
 
@@ -67,33 +66,7 @@ final class Catalog(spark: SparkSession, dir: String) {
     rows.coalesce(1).write.mode(SaveMode.Overwrite)
       .parquet(s"$dir/$log/c_${java.util.UUID.randomUUID()}")
 
-  /** Per-run cache of the processed-file NAME SET for the driver-side
-    * [[isProcessed]] probe: the per-file orchestration path probes once per
-    * input file, and without a cache each probe re-scans the whole status
-    * log — O(N files) scans per batch run. The set is metadata-sized (one
-    * name per file ever processed, not per row), loaded once per run and
-    * kept in sync by [[recordStatus]]. Single-writer assumption (true of
-    * the reference's poll loop — one daemon owns the catalog), but
-    * staleness is BOUNDED: each probe stats the status directory (one
-    * cheap FS metadata call, not a listing or scan) and reloads when its
-    * modification time moved — an external writer's append changes the
-    * dir mtime, so it is visible from the next probe onward. Residual
-    * races (single-writer remains the contract; these only matter under
-    * multi-writer misuse): an external append landing within the same
-    * mtime tick as a probe's reload (ms granularity on most
-    * filesystems), and an external append interleaving with OUR OWN
-    * [[recordStatus]] write — the post-append re-stamp can absorb its
-    * mtime change, hiding that file until the next external mtime move.
-    * [[refreshProcessedNames]] remains the explicit override. The
-    * SET-BASED path ([[filterUnprocessed]]) stays the scale answer and
-    * never touches this cache.
-    */
-  @volatile private var nameCache: (Long, Set[String]) = null
-
-  /** Drop the cached name set (next probe reloads from the status log). */
-  def refreshProcessedNames(): Unit = nameCache = null
-
-  /** A log dir's mtime (-1 when absent) — the caches' staleness key.
+  /** A log dir's mtime (-1 when absent) — a [[LogCache]]'s staleness key.
     * Object-store caveat: S3A and friends synthesize directory entries
     * with constant (often zero) modification times, so on such stores
     * the stamp never moves and a cache degrades to never-invalidate —
@@ -110,36 +83,91 @@ final class Catalog(spark: SparkSession, dir: String) {
     catch { case _: java.io.FileNotFoundException => -1L }
   }
 
-  private def cachedNames(): Set[String] = {
-    val now = stamp(statusDir)
-    var c = nameCache
-    if (c == null || c._1 != now) {
-      c = (now,
-        statusLog.select("file_name").distinct().as[String].collect().toSet)
-      nameCache = c
+  /** Per-run cache of one log's driver-side view, for the probes the
+    * per-file orchestration path runs once per input file ([[isProcessed]],
+    * [[watermark]]): without it each probe re-scans the whole log. The
+    * view is metadata-sized (one name per file ever processed, one value
+    * per table), loaded once per run and kept in sync by [[record]].
+    *
+    * Single-writer assumption (true of the reference's poll loop — one
+    * daemon owns the catalog), but staleness is BOUNDED: each probe stats
+    * the log dir (one cheap FS metadata call, not a listing or scan) and
+    * reloads when its mtime moved. An external writer's commit creates a
+    * dir, which moves the mtime, so it is visible from the next probe on.
+    * The commit writes its `_SUCCESS` inside that dir later, which moves
+    * nothing, so a reload that finds a commit dir still without `_SUCCESS`
+    * is not kept: the next probe reloads again. Residual races (they only
+    * matter under multi-writer misuse): an external commit landing within
+    * the same mtime tick as a reload (ms granularity on most filesystems),
+    * and one interleaving with OUR OWN [[record]] — the post-append
+    * re-stamp can absorb its mtime change, hiding it until the next
+    * external mtime move.
+    */
+  private final class LogCache[V](log: String, load: () => V) {
+    private val logDir = s"$dir/$log"
+    @volatile private var cached: (Long, V) = null
+
+    def get(): V = {
+      val c = cached
+      if (c != null && c._1 == stamp(logDir)) c._2 else reload()
     }
-    c._2
+
+    /** Read the log fresh, keep the view, and return it. */
+    def reload(): V = {
+      val before = stamp(logDir)
+      val v = load()
+      val pending = CommitLog.list(spark, logDir).exists(d =>
+        d.isDirectory && !CommitLog.fs(spark, d.getPath).exists(new Path(d.getPath, "_SUCCESS")))
+      cached = (if (pending) Long.MinValue else before, v)
+      v
+    }
+
+    def clear(): Unit = cached = null
+
+    /** Append `rows` to the log and fold them into the view with
+      * `update` — but only when nothing else moved the dir since the view
+      * was cached: re-stamping over an unseen external commit would absorb
+      * its mtime change and hide it indefinitely. On a mismatch the view
+      * is dropped and the next probe reloads.
+      */
+    def record(rows: DataFrame)(update: V => V): Unit = {
+      val pre = stamp(logDir)
+      append(log, rows)
+      val c = cached
+      if (c != null) cached = if (c._1 == pre) (stamp(logDir), update(c._2)) else null
+    }
   }
+
+  /** The processed-file NAME SET behind [[isProcessed]]. The SET-BASED
+    * path ([[filterUnprocessed]]) stays the scale answer and never
+    * touches it.
+    */
+  private val names = new LogCache("processed_files",
+    () => statusLog.select("file_name").distinct().as[String].collect().toSet)
+
+  /** Every table's watermark, read from the log in one job. The log is
+    * metadata-sized (one row per commit), so its rows are collected and
+    * reduced here. [[compareAndSetWatermark]] never trusts the cache: it
+    * reads the log fresh, and stores what it read.
+    */
+  private val watermarks = new LogCache("watermarks", () =>
+    readLog(CommitLog.dirs(spark, dir, "watermarks"), WatermarkSchema)
+      .fold(Map.empty[String, Long])(_.select($"table_name", $"last_id").as[(String, Long)].collect()
+        .groupMapReduce(_._1)(_._2)(_ max _)))
+
+  /** Drop the cached name set (next probe reloads from the status log);
+    * the explicit override of the staleness bound.
+    */
+  def refreshProcessedNames(): Unit = names.clear()
 
   /** K3 — append one status row per given status, all in ONE commit (one
     * write job), and keep the probe cache in sync.
     */
   def recordStatus(fileName: String, statuses: String*): Unit = {
     require(statuses.nonEmpty, "need at least one status")
-    val preStamp = stamp(statusDir)
     val now = new java.sql.Timestamp(System.currentTimeMillis())
-    append("processed_files",
-      statuses.map(s => (fileName, s, now)).toDF("file_name", "status", "created_at"))
-    val c = nameCache
-    // keep the probe cache warm across our OWN append — but only when
-    // nothing else moved the dir since we cached: re-stamping over an
-    // unseen external append would absorb its mtime change and hide its
-    // file from isProcessed indefinitely. On mismatch, drop the cache
-    // and let the next probe reload.
-    if (c != null) {
-      if (c._1 == preStamp) nameCache = (stamp(statusDir), c._2 + fileName)
-      else nameCache = null
-    }
+    names.record(statuses.map(s => (fileName, s, now)).toDF("file_name", "status", "created_at"))(
+      _ + fileName)
   }
 
   /** S9/S10 — the full status log. */
@@ -161,50 +189,15 @@ final class Catalog(spark: SparkSession, dir: String) {
   /** Driver-side idempotency probe — one status-log scan per RUN (the
     * cached name set), not per file.
     */
-  def isProcessed(fileName: String): Boolean = cachedNames().contains(fileName)
+  def isProcessed(fileName: String): Boolean = names.get().contains(fileName)
 
   /** K4 — watermark commit (append-only; the largest id wins), kept in the
-    * probe cache by the name cache's rule (see [[recordStatus]]).
+    * probe cache.
     */
-  def setWatermark(table: String, lastId: Long): Unit = {
-    val preStamp = stamp(watermarkDir)
-    append("watermarks", Seq((table, lastId, new java.sql.Timestamp(System.currentTimeMillis())))
-      .toDF("table_name", "last_id", "updated_at"))
-    val c = watermarkCache
-    if (c != null) {
-      if (c._1 == preStamp)
-        watermarkCache = (stamp(watermarkDir), c._2.updated(table, c._2.getOrElse(table, 0L).max(lastId)))
-      else watermarkCache = null
-    }
-  }
-
-  /** Per-run cache of every table's watermark, with the name cache's
-    * staleness bound: each probe stats the watermark dir and reloads when
-    * its mtime moved, so an external writer's commit is visible from the
-    * next probe onward, and [[setWatermark]] keeps it in sync without a
-    * reload. A commit dir is created (moving the mtime) before its job
-    * writes `_SUCCESS` (which does not), so a reload that finds a dir still
-    * without `_SUCCESS` is not kept. [[compareAndSetWatermark]] never
-    * trusts it: it reads the log fresh, and stores what it read.
-    */
-  @volatile private var watermarkCache: (Long, Map[String, Long]) = null
-
-  private def watermarkDir = s"$dir/watermarks"
-
-  /** Every table's watermark read from the log in one job, then cached.
-    * The log is metadata-sized (one row per commit), so its rows are
-    * collected and reduced here.
-    */
-  private def loadWatermarks(): Map[String, Long] = {
-    val before = stamp(watermarkDir)
-    val values = readLog(CommitLog.dirs(spark, dir, "watermarks"), WatermarkSchema)
-      .fold(Map.empty[String, Long])(_.select($"table_name", $"last_id").as[(String, Long)].collect()
-        .groupMapReduce(_._1)(_._2)(_ max _))
-    val pending = CommitLog.list(spark, watermarkDir).exists(d =>
-      d.isDirectory && !CommitLog.fs(spark, d.getPath).exists(new Path(d.getPath, "_SUCCESS")))
-    watermarkCache = (if (pending) Long.MinValue else before, values)
-    values
-  }
+  def setWatermark(table: String, lastId: Long): Unit =
+    watermarks.record(Seq((table, lastId, new java.sql.Timestamp(System.currentTimeMillis())))
+      .toDF("table_name", "last_id", "updated_at"))(
+      m => m.updated(table, m.getOrElse(table, 0L).max(lastId)))
 
   /** A2 — current watermark for a table (0 when never set), from the probe
     * cache: no job while the watermark dir's mtime holds. Resolved by the
@@ -217,14 +210,10 @@ final class Catalog(spark: SparkSession, dir: String) {
     * already-covered id range; it is also unsafe across writers with
     * clock skew.
     */
-  def watermark(table: String): Long = {
-    val c = watermarkCache
-    val values = if (c != null && c._1 == stamp(watermarkDir)) c._2 else loadWatermarks()
-    values.getOrElse(table, 0L)
-  }
+  def watermark(table: String): Long = watermarks.get().getOrElse(table, 0L)
 
   /** The log's current value for a table, read fresh (one job). */
-  private def freshWatermark(table: String): Long = loadWatermarks().getOrElse(table, 0L)
+  private def freshWatermark(table: String): Long = watermarks.reload().getOrElse(table, 0L)
 
   // ---- multi-writer watermark protocol -------------------------------------
 
@@ -291,7 +280,7 @@ final class Catalog(spark: SparkSession, dir: String) {
         .select($"table_name", $"w.last_id", $"w.updated_at"))
     }
     // prune committed CAS slots (from_<N> below the table's floor)
-    val floors = loadWatermarks()
+    val floors = watermarks.reload()
     val Slot = "(?:\\._)?from_(-?[0-9]+)(?:\\..+\\.tmp)?".r
     for {
       t <- CommitLog.list(spark, s"$dir/watermark_slots")

@@ -69,11 +69,11 @@ object DupClusters {
     * near-dup graph costs ONE collect where the alternation costs a remap,
     * per-round shuffles and a convergence probe per round — ~15 scheduler
     * round-trips. The collect is bounded by the threshold (two ids per
-    * edge — the sanctioned O(small) driver inventory, same contract as
-    * [[IncrementalDedup]]'s rep-merge fast path); corpus-scale graphs take
-    * the distributed path unchanged.
+    * edge — the sanctioned O(small) driver inventory); corpus-scale graphs
+    * take the distributed path unchanged. [[IncrementalDedup]]'s rep-merge
+    * fast path calls [[driverComponents]] under the same threshold.
     */
-  private val SmallGraphEdges = 100000L
+  private[graft] val SmallGraphEdges = 100000L
 
   /** (node, component) for every node appearing in `pairs`; component = min
     * node id reachable. Nodes absent from `pairs` are their own singleton
@@ -169,7 +169,7 @@ object DupClusters {
     * collected edge list — the same (node, component) rows the star
     * alternation converges to, in one collect + one local createDataFrame.
     */
-  private def driverComponents(
+  private[graft] def driverComponents(
       spark: org.apache.spark.sql.SparkSession,
       proj: DataFrame,
       aType: org.apache.spark.sql.types.DataType,

@@ -4,7 +4,7 @@ import graft.store.CommitLog
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 /** The production incremental near-dup loop a 100 TB corpus actually runs —
   * ONE pipeline op composing the pieces the per-verb gates already prove
@@ -113,11 +113,6 @@ object IncrementalDedup {
   private final case class Commit(
       attempt: String, seq: Long, snapshot: Boolean,
       folded: Set[String] = Set.empty)
-
-  /** Rep-merge graphs at or under this many edges fold on the driver
-    * (union-find) instead of through the distributed star alternation.
-    */
-  private val SmallMergeEdges = 100000L
 
   /** Committed batches: batchId → marker. Driver-side, O(#batches) — a
     * year of daily ingest is ~366 tiny files (and [[compact]] prunes).
@@ -306,47 +301,27 @@ object IncrementalDedup {
           .distinct()
         // merged old reps / losing fresh ids → their new (smaller) rep.
         // Small-batch fast path: the rep graph is ≤ nNewPairs edges, and a
-        // DAILY batch's merge graph is batch-sized by construction — driver
-        // union-find (min-id roots, identical semantics to
-        // DupClusters.components) costs ONE collect where the distributed
-        // star alternation costs ~10 scheduler round-trips; the distributed
-        // path remains for backfill-scale merges. The collect is bounded by
-        // the threshold (2 longs/edge — the sanctioned O(small) inventory).
-        val changed: DataFrame = if (nNewPairs <= SmallMergeEdges) {
-          val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-          val nodes = scala.collection.mutable.LinkedHashSet.empty[Long]
-          def find(x: Long): Long = {
-            var r = x
-            while (parent.getOrElse(r, r) != r) r = parent(r)
-            var c = x
-            while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-            r
-          }
-          repEdges.collect().foreach { row =>
-            val a = row.getLong(0); val b = row.getLong(1)
-            nodes += a; nodes += b
-            val ra = find(a); val rb = find(b)
-            if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-          }
-          val rows = nodes.iterator.flatMap { n =>
-            val r = find(n)
-            if (r != n) Some(Row(n, r)) else None
-          }.toSeq
-          spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, 1),
-            StructType.fromDDL("node BIGINT, component BIGINT"))
-        } else DupClusters.components(repEdges, "_ra", "_rb")
+        // DAILY batch's merge graph is batch-sized by construction — the
+        // driver union-find of DupClusters.components costs ONE collect
+        // where the distributed star alternation costs ~10 scheduler
+        // round-trips; the distributed path remains for backfill-scale
+        // merges. The collect is bounded by the threshold (2 longs/edge —
+        // the sanctioned O(small) inventory), and the nNewPairs bound
+        // spares the count job components would run to pick its path.
+        val small = nNewPairs <= DupClusters.SmallGraphEdges
+        val changed: DataFrame = (
+          if (small) DupClusters.driverComponents(spark, repEdges, LongType, LongType)
+          else DupClusters.components(repEdges, "_ra", "_rb"))
           .filter(col("node") =!= col("component"))
         // existing members of a merged component follow their old rep down.
         // Broadcast `changed` only on the small-merge driver path, where it
-        // is provably bounded by SmallMergeEdges nodes; the distributed path
+        // is provably bounded by SmallGraphEdges nodes; the distributed path
         // runs precisely when the merge graph is backfill-scale and
         // `changed` can approach corpus size — there a broadcast hint is an
         // OOM risk, so let Catalyst plan a keyed shuffle join.
         val changedRenamed =
           changed.select(col("node").as("rep"), col("component").as("_nr"))
-        val changedForJoin =
-          if (nNewPairs <= SmallMergeEdges) broadcast(changedRenamed) else changedRenamed
+        val changedForJoin = if (small) broadcast(changedRenamed) else changedRenamed
         val memberUpdates = reps
           .join(changedForJoin, Seq("rep"))
           .select(col("id"), col("_nr").as("rep"))

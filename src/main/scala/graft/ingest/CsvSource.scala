@@ -39,12 +39,16 @@ object CsvSource {
     }
   }
 
-  /** Sniff encoding + delimiter, then read; latin1 fallback when the sample
-    * decodes as neither UTF-8 nor UTF-16 (reference: `data_pushing.py:311-324`).
+  /** Sniff encoding + delimiter from one read of the file's head, then
+    * read; latin1 fallback when the sample decodes as neither UTF-8 nor
+    * UTF-16 (reference: `data_pushing.py:311-324`). The delimiter comes
+    * from the first line of the sample's first 64 KiB.
     */
   def readSniffed(spark: SparkSession, path: String): DataFrame = {
-    val enc = Sniff.detectEncodingAt(path).getOrElse("ISO-8859-1")
-    val delim = Sniff.detectDelimiterAt(path, enc)
+    val head = Sniff.headBytes(path, Sniff.DefaultSampleSize)
+    val enc = Sniff.detectEncoding(head).getOrElse("ISO-8859-1")
+    val text = new String(head.take(64 * 1024), java.nio.charset.Charset.forName(enc))
+    val delim = Sniff.detectDelimiter(text.linesIterator.nextOption().getOrElse(""))
     readAllString(spark, path, delim, enc)
   }
 }

@@ -73,9 +73,4 @@ object Sniff {
       case _ => ','
     }
   }
-
-  def detectDelimiterAt(path: String, encoding: String = "UTF-8"): Char = {
-    val text = new String(headBytes(path, 64 * 1024), Charset.forName(encoding))
-    detectDelimiter(text.linesIterator.nextOption().getOrElse(""))
-  }
 }

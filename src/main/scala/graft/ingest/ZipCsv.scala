@@ -1,7 +1,10 @@
 package graft.ingest
 
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.zip.ZipInputStream
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** ZIP-of-CSV handling. Spark has no zip codec for the CSV source, so zips are
@@ -14,15 +17,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * non-CSV entries are rejected.
   */
 object ZipCsv {
-
-  /** First entry name + bytes of one archive (used by tests and the driver-side
-    * single-file path).
-    */
-  def firstEntry(bytes: Array[Byte]): Option[(String, Array[Byte])] = {
-    val zin = new ZipInputStream(new java.io.ByteArrayInputStream(bytes))
-    try Option(zin.getNextEntry).map(e => e.getName -> zin.readAllBytes())
-    finally zin.close()
-  }
 
   /** Distributed extraction: every zip under `pathGlob` → (archivePath,
     * entryName, csv text lines). Lines (not whole files) are exposed so a
@@ -92,21 +86,29 @@ object ZipCsv {
       .toDF("archive", "entry", "line_no", "line")
   }
 
-  /** Driver-side extraction of a single local archive to a sibling CSV file —
-    * the direct analog of the reference's `extract_file` for the per-file
-    * pipeline. Returns the extracted path or an error.
+  /** Driver-side extraction of a single archive (any Hadoop-visible path)
+    * to a CSV file in `outDir` — the direct analog of the reference's
+    * `extract_file` for the per-file pipeline. The entry streams to disk,
+    * so neither the archive nor the entry is held in memory. Returns the
+    * extracted path or an error; a read error (a truncated upload ends in
+    * `EOFException`) is an error, not an exception, so the caller can
+    * record the file's status and go on.
     */
-  def extractFirstEntry(zipPath: String, outDir: String): Either[String, String] = {
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(zipPath))
-    firstEntry(bytes) match {
-      case None => Left(s"empty archive: $zipPath")
-      case Some((name, _)) if !name.toLowerCase.endsWith(".csv") =>
-        Left(s"first entry is not a CSV: $name")
-      case Some((name, data)) =>
-        val out = java.nio.file.Paths.get(outDir, java.nio.file.Paths.get(name).getFileName.toString)
-        java.nio.file.Files.createDirectories(out.getParent)
-        java.nio.file.Files.write(out, data)
-        Right(out.toString)
+  def extractFirstEntry(zipPath: String, outDir: String): Either[String, String] =
+    try {
+      val p = new Path(zipPath)
+      val zin = new ZipInputStream(p.getFileSystem(new Configuration()).open(p))
+      try Option(zin.getNextEntry) match {
+        case None => Left(s"empty archive: $zipPath")
+        case Some(e) if !e.getName.toLowerCase.endsWith(".csv") =>
+          Left(s"first entry is not a CSV: ${e.getName}")
+        case Some(e) =>
+          val out = Paths.get(outDir, Paths.get(e.getName).getFileName.toString)
+          Files.createDirectories(out.getParent)
+          Files.copy(zin, out, StandardCopyOption.REPLACE_EXISTING)
+          Right(out.toString)
+      } finally zin.close()
+    } catch {
+      case e: java.io.IOException => Left(s"cannot extract $zipPath: $e")
     }
-  }
 }

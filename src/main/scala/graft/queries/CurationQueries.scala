@@ -19,56 +19,55 @@ import org.apache.spark.sql.functions._
   */
 object CurationQueries {
 
-  /** Shared oracle CTE chain: the q31 MinHash-LSH candidate pairs as an
-    * undirected edge set, then connected components via a recursive
-    * reachability CTE (label = min reachable doc_id). Must be used with
-    * `WITH RECURSIVE`.
+  /** The WITH-clause body of every oracle that replays a k-means fit —
+    * [[graft.sim.KMeans.fit]], or one [[graft.sim.ProductQuantizer.fit]]
+    * subspace per call: `cents0 … fin` unrolled to `iters` Lloyd rounds,
+    * where `fin(vec_id, cid)` is the final assignment. `src` is the vector
+    * relation (keyed by `vec_id`, aliased `e`), `elem` the DOUBLE vector
+    * element at the 1-based position `i`, and every CTE name ends in
+    * `sfx`. k-means is deterministic here — lowest-id init, tie-to-lowest
+    * argmin, exact means — so the oracle retrains from scratch and must
+    * reach the same per-vector assignment. Distance uses the identical
+    * `c·c − 2·x·c` form and both engines fold the dot products
+    * sequentially in index order.
     */
-  /** DuckDB replay of [[graft.sim.KMeans.fit]] + final assignment, unrolled
-    * to `iters` Lloyd iterations (k-means is deterministic here — lowest-id
-    * init, tie-to-lowest argmin, exact means — so the oracle retrains from
-    * scratch and must reach the same per-vector assignment). Distance uses
-    * the identical `c·c − 2·x·c` form and both engines fold the dot
-    * products sequentially in index order.
-    */
-  /** The WITH-clause body shared by every oracle that replays the k-means
-    * fit: `cents0 … fin`, where `fin(vec_id, cid)` is the final assignment.
-    */
-  private def kmeansCtes(k: Int, iters: Int, dims: Int): String = {
-    def dist(emb: String, c: String): String =
-      s"(list_aggregate(list_transform(generate_series(1, $dims), i -> $c[i]*$c[i]), 'sum')" +
-        s" - 2 * list_aggregate(list_transform(generate_series(1, $dims)," +
-        s" i -> $emb[i]::DOUBLE * $c[i]), 'sum'))"
+  private[queries] def kmeansCtes(
+      src: String, elem: String, k: Int, iters: Int, dims: Int, sfx: String = ""): String = {
     def assignCte(name: String, cents: String): String =
       s"""$name AS (
          |  SELECT vec_id, cid FROM (
          |    SELECT e.vec_id, c.cid,
          |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY ${dist("e.embedding", "c.c")}, c.cid) AS rn
-         |    FROM embeddings e CROSS JOIN $cents c) WHERE rn = 1)""".stripMargin
+         |        ORDER BY (list_aggregate(list_transform(generate_series(1, $dims), i -> c.c[i]*c.c[i]), 'sum')
+         |          - 2 * list_aggregate(list_transform(generate_series(1, $dims), i -> $elem * c.c[i]), 'sum')),
+         |        c.cid) AS rn
+         |    FROM $src e CROSS JOIN $cents c) WHERE rn = 1)""".stripMargin
     val init =
-      s"""cents0 AS (
+      s"""cents0$sfx AS (
          |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid,
-         |         list_transform(embedding, v -> v::DOUBLE) AS c
-         |  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT $k))""".stripMargin
+         |         list_transform(generate_series(1, $dims), i -> $elem) AS c
+         |  FROM (SELECT * FROM $src ORDER BY vec_id LIMIT $k) e)""".stripMargin
     val rounds = (1 to iters).map { t =>
-      s"""${assignCte(s"assign$t", s"cents${t - 1}")},
-         |means$t AS (
-         |  SELECT a.cid, i, avg(e.embedding[i]::DOUBLE) AS m
-         |  FROM assign$t a JOIN embeddings e USING (vec_id),
+      s"""${assignCte(s"assign$t$sfx", s"cents${t - 1}$sfx")},
+         |means$t$sfx AS (
+         |  SELECT a.cid, i, avg($elem) AS m
+         |  FROM assign$t$sfx a JOIN $src e USING (vec_id),
          |       unnest(generate_series(1, $dims)) AS u(i)
          |  GROUP BY a.cid, i),
-         |cents$t AS (
+         |cents$t$sfx AS (
          |  SELECT p.cid, coalesce(m.c, p.c) AS c
-         |  FROM cents${t - 1} p LEFT JOIN
-         |    (SELECT cid, list(m ORDER BY i) AS c FROM means$t GROUP BY cid) m
+         |  FROM cents${t - 1}$sfx p LEFT JOIN
+         |    (SELECT cid, list(m ORDER BY i) AS c FROM means$t$sfx GROUP BY cid) m
          |    ON p.cid = m.cid)""".stripMargin
     }
-    (Seq(init) ++ rounds ++ Seq(assignCte("fin", s"cents$iters"))).mkString(",\n")
+    (Seq(init) ++ rounds ++ Seq(assignCte(s"fin$sfx", s"cents$iters$sfx"))).mkString(",\n")
   }
 
+  private def embeddingKmeansCtes(k: Int, iters: Int, dims: Int): String =
+    kmeansCtes("embeddings", "e.embedding[i]::DOUBLE", k, iters, dims)
+
   private def kmeansUnrolledOracle(k: Int, iters: Int, dims: Int): String =
-    s"WITH ${kmeansCtes(k, iters, dims)}\n" +
+    s"WITH ${embeddingKmeansCtes(k, iters, dims)}\n" +
       """SELECT vec_id, CAST(cid AS BIGINT) AS cluster,
         |  count(*) OVER (PARTITION BY cid) AS cluster_n
         |FROM fin ORDER BY vec_id""".stripMargin
@@ -78,7 +77,7 @@ object CurationQueries {
     * higher-id member of a pair dropped; the rest are kept.
     */
   private[queries] def semDedupOracle(k: Int, iters: Int, dims: Int, tau: Double): String =
-    s"WITH ${kmeansCtes(k, iters, dims)},\n" +
+    s"WITH ${embeddingKmeansCtes(k, iters, dims)},\n" +
       s"""n AS (
          |  SELECT f.vec_id, f.cid, e.embedding,
          |    sqrt(list_aggregate(list_transform(generate_series(1, $dims),
@@ -101,7 +100,7 @@ object CurationQueries {
     * nearest by (d², cid), and `sil = (b − a)/max(a, b)` rounded 6 dp.
     */
   private def silhouetteOracle(k: Int, iters: Int, dims: Int): String =
-    s"WITH ${kmeansCtes(k, iters, dims)},\n" +
+    s"WITH ${embeddingKmeansCtes(k, iters, dims)},\n" +
       s"""x AS (SELECT vec_id, list_transform(embedding, v -> v::DOUBLE) AS xv
          |      FROM embeddings),
          |xs AS (SELECT vec_id, xv,
@@ -264,6 +263,11 @@ object CurationQueries {
       |kept AS (SELECT doc_id FROM ded
       |  WHERE doc_id NOT IN (SELECT doc_id FROM contam))""".stripMargin
 
+  /** Shared oracle CTE chain: the q31 MinHash-LSH candidate pairs as an
+    * undirected edge set, then connected components via a recursive
+    * reachability CTE (label = min reachable doc_id). Must be used with
+    * `WITH RECURSIVE`.
+    */
   private[queries] val MinhashComponentCtes =
     """tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents),
       |sh3 AS (SELECT doc_id,

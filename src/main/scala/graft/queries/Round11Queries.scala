@@ -15,52 +15,13 @@ import org.apache.spark.sql.functions._
   */
 object Round11Queries {
 
-  /** One subspace's unrolled k-means for the q325 oracle: q86's CTE
-    * algebra (`CurationQueries.kmeansCtes`) parameterized by a dim
-    * OFFSET, so subspace `s` trains on `embedding[off+1 .. off+sub]` —
-    * init = the k lowest-id vectors' slices, assignment = the same
-    * `c·c − 2·x·c` index-order folds, update = exact per-dim means.
-    */
-  private def pqSubCtes(s: Int, k: Int, iters: Int, off: Int, sub: Int): String = {
-    def dist(emb: String, c: String): String =
-      s"(list_aggregate(list_transform(generate_series(1, $sub), i -> $c[i]*$c[i]), 'sum')" +
-        s" - 2 * list_aggregate(list_transform(generate_series(1, $sub)," +
-        s" i -> $emb[$off + i]::DOUBLE * $c[i]), 'sum'))"
-    def assignCte(name: String, cents: String): String =
-      s"""$name AS (
-         |  SELECT vec_id, cid FROM (
-         |    SELECT e.vec_id, c.cid,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY ${dist("e.embedding", "c.c")}, c.cid) AS rn
-         |    FROM embeddings e CROSS JOIN $cents c) WHERE rn = 1)""".stripMargin
-    val init =
-      s"""cents0_$s AS (
-         |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid,
-         |         list_transform(generate_series(1, $sub),
-         |           i -> embedding[$off + i]::DOUBLE) AS c
-         |  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT $k))""".stripMargin
-    val rounds = (1 to iters).map { t =>
-      s"""${assignCte(s"assign${t}_$s", s"cents${t - 1}_$s")},
-         |means${t}_$s AS (
-         |  SELECT a.cid, i, avg(e.embedding[$off + i]::DOUBLE) AS m
-         |  FROM assign${t}_$s a JOIN embeddings e USING (vec_id),
-         |       unnest(generate_series(1, $sub)) AS u(i)
-         |  GROUP BY a.cid, i),
-         |cents${t}_$s AS (
-         |  SELECT p.cid, coalesce(m.c, p.c) AS c
-         |  FROM cents${t - 1}_$s p LEFT JOIN
-         |    (SELECT cid, list(m ORDER BY i) AS c FROM means${t}_$s GROUP BY cid) m
-         |    ON p.cid = m.cid)""".stripMargin
-    }
-    (Seq(init) ++ rounds ++ Seq(assignCte(s"fin_$s", s"cents${iters}_$s")))
-      .mkString(",\n")
-  }
-
   /** Shared CTE text through the per-code ADC score (`scored(vec_id,
     * adc)`) for q325/q327.
     */
   private def pqScoredCtes(m: Int, k: Int, iters: Int, sub: Int): String = {
-    val subs = (0 until m).map(s => pqSubCtes(s, k, iters, s * sub, sub)).mkString(",\n")
+    // subspace s trains on embedding[s·sub + 1 .. (s+1)·sub]
+    val subs = (0 until m).map(s => CurationQueries.kmeansCtes(
+      "embeddings", s"e.embedding[${s * sub} + i]::DOUBLE", k, iters, sub, s"_$s")).mkString(",\n")
     val lutCtes = (0 until m).map { s =>
       s"""lut_$s AS (
          |  SELECT c.cid,

@@ -17,47 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object Round12Queries {
 
-  /** One subspace's unrolled k-means for the q332 oracle — the q325
-    * pattern (`Round11Queries` pqSubCtes) retargeted at the RESIDUAL
-    * relation `res(vec_id, label, r DOUBLE[])`: subspace `s` trains on
-    * `r[off+1 .. off+sub]`, init = the k lowest-id residual slices,
-    * assignment = the same `c·c − 2·x·c` index-order folds, update =
-    * exact per-dim means.
-    */
-  private def ivfPqSubCtes(s: Int, k: Int, iters: Int, off: Int, sub: Int): String = {
-    def dist(c: String): String =
-      s"(list_aggregate(list_transform(generate_series(1, $sub), i -> $c[i]*$c[i]), 'sum')" +
-        s" - 2 * list_aggregate(list_transform(generate_series(1, $sub)," +
-        s" i -> e.r[$off + i] * $c[i]), 'sum'))"
-    def assignCte(name: String, cents: String): String =
-      s"""$name AS (
-         |  SELECT vec_id, cid FROM (
-         |    SELECT e.vec_id, c.cid,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY ${dist("c.c")}, c.cid) AS rn
-         |    FROM res e CROSS JOIN $cents c) WHERE rn = 1)""".stripMargin
-    val init =
-      s"""cents0_$s AS (
-         |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid,
-         |         list_transform(generate_series(1, $sub), i -> r[$off + i]) AS c
-         |  FROM (SELECT vec_id, r FROM res ORDER BY vec_id LIMIT $k))""".stripMargin
-    val rounds = (1 to iters).map { t =>
-      s"""${assignCte(s"assign${t}_$s", s"cents${t - 1}_$s")},
-         |means${t}_$s AS (
-         |  SELECT a.cid, i, avg(e.r[$off + i]) AS m
-         |  FROM assign${t}_$s a JOIN res e USING (vec_id),
-         |       unnest(generate_series(1, $sub)) AS u(i)
-         |  GROUP BY a.cid, i),
-         |cents${t}_$s AS (
-         |  SELECT p.cid, coalesce(m.c, p.c) AS c
-         |  FROM cents${t - 1}_$s p LEFT JOIN
-         |    (SELECT cid, list(m ORDER BY i) AS c FROM means${t}_$s GROUP BY cid) m
-         |    ON p.cid = m.cid)""".stripMargin
-    }
-    (Seq(init) ++ rounds ++ Seq(assignCte(s"fin_$s", s"cents${iters}_$s")))
-      .mkString(",\n")
-  }
-
   /** The q332 oracle: q36's exact per-cell centroids → residuals →
     * q325's subspace algebra on them → probe the top-nProbe cells by
     * `c·c − 2·q·c` → per-cell relocated LUTs (entry = ĉ·ĉ − 2·(q−c)·ĉ)
@@ -67,7 +26,9 @@ object Round12Queries {
       nProbe: Int, topK: Int, where: String = "TRUE",
       probeId: Long = 0L, trainWhere: String = "TRUE"): String = {
     val dims = m * sub
-    val subs = (0 until m).map(s => ivfPqSubCtes(s, k, iters, s * sub, sub)).mkString(",\n")
+    // subspace s trains on the residual's r[s·sub + 1 .. (s+1)·sub]
+    val subs = (0 until m).map(s => CurationQueries.kmeansCtes(
+      "res", s"e.r[${s * sub} + i]", k, iters, sub, s"_$s")).mkString(",\n")
     val luts = (0 until m).map { s =>
       val off = s * sub
       s"""lut_$s AS (

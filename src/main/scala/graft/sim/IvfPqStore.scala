@@ -1,7 +1,6 @@
 package graft.sim
 
 import graft.store.CommitLog
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -73,16 +72,12 @@ object IvfPqStore {
   }
 
   /** The full code table across every appended batch — (idCol, code,
-    * cellCol) with the cell recovered from the partition directories.
-    * Per-batch reads (bounded listing) unioned, so partition discovery
-    * works under the batch level; a cell filter on the result prunes
-    * directories inside every batch.
+    * cellCol) with the cell recovered from the partition directories —
+    * read as [[PqIndexStore.codes]] reads it: per-batch reads unioned, so
+    * partition discovery works under the batch level and a cell filter on
+    * the result prunes directories inside every batch.
     */
-  def codes(spark: SparkSession, root: String): DataFrame = {
-    val dirs = CommitLog.dirs(spark, root, "codes")
-    require(dirs.nonEmpty, s"ivfpq store at $root has no code batches")
-    dirs.map(spark.read.parquet(_)).reduce(_ unionByName _)
-  }
+  def codes(spark: SparkSession, root: String): DataFrame = PqIndexStore.codes(spark, root)
 
   /** Record a DELETE batch — [[PqIndexStore.appendTombstones]]'s
     * lifecycle verbatim (the layout is shared).
@@ -91,13 +86,12 @@ object IvfPqStore {
       ids: DataFrame, idCol: String, root: String, batchId: String): Long =
     PqIndexStore.appendTombstones(ids, idCol, root, batchId)
 
-  /** The QUERY view between delete and compaction: codes minus pending
-    * tombstones — one broadcast anti-join, ADC scan shape unchanged.
+  /** The QUERY view between delete and compaction:
+    * [[PqIndexStore.liveCodes]], codes minus pending tombstones on the
+    * code table's first column, `idCol`.
     */
   def liveCodes(spark: SparkSession, root: String, idCol: String): DataFrame =
-    codes(spark, root).join(
-      broadcast(PqIndexStore.tombstones(spark, root, idCol)),
-      Seq(idCol), "left_anti")
+    PqIndexStore.liveCodes(spark, root)
 
   /** REFIT a new store GENERATION from the survivors — the maintenance
     * step the delete lifecycle alone cannot provide: centroids and the
@@ -147,8 +141,9 @@ object IvfPqStore {
   /** Fold pending tombstones INTO the code table — [[PqIndexStore
     * .compact]]'s fold with the cell partitioning kept on the survivor
     * rewrite (per-cell survivor subdirs under `codes/<compactId>/`, so
-    * probe-time pruning survives the fold). Returns (survivor rows,
-    * purged rows); (-1, -1) when the compaction had already committed.
+    * probe-time pruning survives the fold). Tombstones match on the code
+    * table's first column, `idCol`. Returns (survivor rows, purged rows);
+    * (-1, -1) when the compaction had already committed.
     */
   def compact(
       spark: SparkSession,
@@ -156,27 +151,5 @@ object IvfPqStore {
       compactId: String,
       idCol: String,
       cellCol: String): (Long, Long) =
-    CommitLog.fold(spark, root, compactId)(
-      PqIndexStore.foldSources(spark, root, compactId)) { sources =>
-      val (codeDirs, tombDirs) = sources.partition(new Path(_).getParent.getName == "codes")
-      // both row counts are OBSERVED during the survivor write — the same
-      // values the separate count + read-back-count jobs used to fetch;
-      // exact: broadcast anti-join + local partition sort keep both
-      // observes in the write's result stage ([[PqIndexStore]] layout doc)
-      val allObs = org.apache.spark.sql.Observation()
-      val liveObs = org.apache.spark.sql.Observation()
-      val all = codeDirs.map(spark.read.parquet(_)).reduce(_ unionByName _)
-        .observe(allObs, count(lit(1)).as("n"))
-      val survivors =
-        if (tombDirs.isEmpty) all
-        else all.join(broadcast(tombDirs.map(spark.read.parquet(_)).reduce(_ unionAll _)
-          .toDF(idCol).distinct()), Seq(idCol), "left_anti")
-      survivors.observe(liveObs, count(lit(1)).as("n"))
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy(cellCol)
-        .parquet(s"$root/codes/$compactId")
-      val nAll = allObs.get("n").asInstanceOf[Long]
-      val nLive = liveObs.get("n").asInstanceOf[Long]
-      (nLive, nAll - nLive)
-    }.getOrElse((-1L, -1L))
+    PqIndexStore.foldCodes(spark, root, compactId, Seq(cellCol))
 }

@@ -194,16 +194,35 @@ object PqIndexStore {
     * (-1, -1) when the compaction had already committed.
     */
   def compact(spark: SparkSession, root: String, compactId: String): (Long, Long) =
-    CommitLog.fold(spark, root, compactId)(foldSources(spark, root, compactId)) { sources =>
+    foldCodes(spark, root, compactId, Nil)
+
+  /** The compaction fold of both code stores ([[compact]] and
+    * [[IvfPqStore.compact]]): the survivor dir is written partitioned by
+    * `partitionCols`, and tombstones match on the code table's first
+    * column, its id.
+    */
+  private[sim] def foldCodes(
+      spark: SparkSession,
+      root: String,
+      compactId: String,
+      partitionCols: Seq[String]): (Long, Long) =
+    CommitLog.fold(spark, root, compactId) {
+      // every live code dir but the fold's own target, and every pending
+      // tombstone dir
+      val codeDirs = CommitLog.dirs(spark, root, "codes").filterNot(new Path(_).getName == compactId)
+      require(codeDirs.nonEmpty, "compact: no code batches to fold")
+      codeDirs ++ CommitLog.dirs(spark, root, "tombstones")
+    } { sources =>
       val (codeDirs, tombDirs) = sources.partition(new Path(_).getParent.getName == "codes")
       // both row counts are OBSERVED during the survivor write: the input
       // count below the anti-join, the survivor count above it — the same
       // values the separate count + read-back-count jobs used to fetch;
       // exact: the anti-join broadcasts the tombstones, so both observes
-      // (streamed side and top) run in the write's result stage
+      // (streamed side and top, under at most a local partition sort) run
+      // in the write's result stage
       val allObs = org.apache.spark.sql.Observation()
       val liveObs = org.apache.spark.sql.Observation()
-      val all = codeDirs.map(spark.read.parquet(_)).reduce(_ unionAll _)
+      val all = codeDirs.map(spark.read.parquet(_)).reduce(_ unionByName _)
         .observe(allObs, count(lit(1)).as("n"))
       val idCol = all.columns.head
       val survivors =
@@ -211,20 +230,13 @@ object PqIndexStore {
         else all.join(broadcast(tombDirs.map(spark.read.parquet(_)).reduce(_ unionAll _)
           .toDF(idCol).distinct()), Seq(idCol), "left_anti")
       survivors.observe(liveObs, count(lit(1)).as("n"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$root/codes/$compactId")
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy(partitionCols: _*)
+        .parquet(s"$root/codes/$compactId")
       val nAll = allObs.get("n").asInstanceOf[Long]
       val nLive = liveObs.get("n").asInstanceOf[Long]
       (nLive, nAll - nLive)
     }.getOrElse((-1L, -1L))
-
-  /** What a compaction folds: every live code dir but its own target,
-    * and every pending tombstone dir (shared with [[IvfPqStore.compact]]).
-    */
-  private[sim] def foldSources(spark: SparkSession, root: String, compactId: String): Seq[String] = {
-    val codeDirs = CommitLog.dirs(spark, root, "codes").filterNot(new Path(_).getName == compactId)
-    require(codeDirs.nonEmpty, "compact: no code batches to fold")
-    codeDirs ++ CommitLog.dirs(spark, root, "tombstones")
-  }
 
   /** Per-batch drift stats with `drift_ratio` = mean_qerr / the EARLIEST
     * batch's mean_qerr (the fit-time baseline — the codebook was trained

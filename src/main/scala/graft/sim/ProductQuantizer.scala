@@ -40,15 +40,12 @@ object ProductQuantizer {
     * subspace — deterministic: init = the k lowest-id vectors' slices).
     * `dims` must divide evenly into m subspaces.
     *
-    * All m subspace trainings are FUSED into shared jobs: the per-subspace
-    * Lloyd recipe ([[KMeans.fit]]'s init / assign / exact-mean update) is
-    * unchanged value-for-value, but one collect fetches every subspace's
-    * init slices and each round runs ONE internal-row scan that assigns
-    * all m subspaces and partial-aggregates all m·k·(D/m) means (driver-
-    * merged in partition order) — m·(iters+1) driver-side actions collapse
-    * to iters+1 single-job rounds over a projection planned once, which on
-    * a cached residual frame is the difference between the scheduler and
-    * the math being the cost.
+    * All m subspaces train in shared jobs: one collect fetches every
+    * subspace's init slices, and each round of [[KMeans.lloyd]] is ONE
+    * internal-row job that assigns all m subspaces and partial-aggregates
+    * all m·k·(D/m) means — iters+1 single-job rounds over a projection
+    * planned once, which on a cached residual frame is the difference
+    * between the scheduler and the math being the cost.
     */
   def fit(
       df: DataFrame,
@@ -61,126 +58,9 @@ object ProductQuantizer {
     require(m > 0 && dims % m == 0, s"dims=$dims not divisible into m=$m subspaces")
     require(k > 0 && iters >= 0, "k and iters must be positive")
     val subDims = dims / m
-    // init = the k lowest-id vectors' slices, all m subspaces in one job
-    // (same slice expressions KMeans.fit would collect one subspace at a
-    // time; float inputs arrive as Float and widen exactly like there)
-    val initRows = df
-      .orderBy(col(idCol))
-      .limit(k)
-      .select((0 until m).map(s => sliceCol(vecCol, s, subDims)): _*)
-      .collect()
-    require(initRows.nonEmpty, "corpus is empty")
-    def widen(v: Any): Double = v match {
-      case f: Float => f.toDouble
-      case d: Double => d
-      case other => throw new IllegalArgumentException(
-        s"$vecCol must be array<float|double>, found element $other")
-    }
-    var cents: Array[Array[Array[Double]]] = Array.tabulate(m) { s =>
-      initRows.map(_.getSeq[Any](s).map(widen).toArray)
-    }
-    if (iters > 0) {
-      // Each Lloyd round is ONE job over the vector projection's internal
-      // rows: per partition, every row's m assignments and its per-
-      // (subspace, cluster, sub-dim) (sum, count) contributions accumulate
-      // in row order, and the driver merges the bounded per-partition
-      // partials (m·k·subDims doubles each) in partition order. This is
-      // the partial aggregation the posexplode + groupBy pipeline ran,
-      // minus its exchange and the per-round planning: the projection is
-      // planned ONCE and each round is a single scheduler round-trip
-      // (the Catalyst round paid 3-4 AQE stage jobs over kilobytes).
-      // The arithmetic replicates the expression pipeline exactly:
-      //  - assignment d_j = c_j·c_j − 2·Σᵢ xᵢ·c_jᵢ (index-order folds,
-      //    floats widened — KMeans.assignExpr / DotProduct), strict <
-      //    keeps the LOWEST centroid index on ties, exactly as `least`
-      //    over (d, j) structs does;
-      //  - a slice shorter than subDims has a NULL dot product, and the
-      //    all-null struct compare assigned cluster 0 — replicated;
-      //  - means are Σv / count(v) per (subspace, cluster, sub-dim) with
-      //    values added in row order (Average's partial shape); a group
-      //    with no rows keeps its previous centroid.
-      val proj = df.select(col(vecCol))
-      val isFloat = proj.schema.head.dataType match {
-        case org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType, _) => true
-        case org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.DoubleType, _) => false
-        case other => throw new IllegalArgumentException(
-          s"$vecCol must be array<float|double>, got $other")
-      }
-      val rdd = graft.operators.Lineage.internalRdd(proj)
-      for (_ <- 1 to iters) {
-        val bc = cents
-        val (mm, sd, kk, fl) = (m, subDims, k, isFloat)
-        val partials = rdd.mapPartitions({ it =>
-          val ccs = Array.tabulate(mm)(s => bc(s).map(c => c.map(v => v * v).sum))
-          val sums = Array.ofDim[Double](mm, kk, sd)
-          val cnts = Array.ofDim[Long](mm, kk, sd)
-          it.foreach { r =>
-            if (!r.isNullAt(0)) {
-              val a = r.getArray(0)
-              val n = a.numElements()
-              var s = 0
-              while (s < mm) {
-                val base = s * sd
-                val lim = math.min(sd, n - base)
-                if (lim > 0) {
-                  var bestJ = 0
-                  if (lim == sd) { // a short slice nulls the dot → cluster 0
-                    var bestD = Double.MaxValue
-                    var j = 0
-                    while (j < kk) {
-                      val c = bc(s)(j)
-                      var dot = 0.0
-                      var i = 0
-                      while (i < sd) {
-                        val x =
-                          if (a.isNullAt(base + i)) 0.0
-                          else if (fl) a.getFloat(base + i).toDouble
-                          else a.getDouble(base + i)
-                        dot += x * c(i)
-                        i += 1
-                      }
-                      val d = ccs(s)(j) - 2.0 * dot
-                      if (d < bestD) { bestD = d; bestJ = j }
-                      j += 1
-                    }
-                  }
-                  var i = 0
-                  while (i < lim) {
-                    if (!a.isNullAt(base + i)) {
-                      val x = if (fl) a.getFloat(base + i).toDouble
-                              else a.getDouble(base + i)
-                      sums(s)(bestJ)(i) += x
-                      cnts(s)(bestJ)(i) += 1
-                    }
-                    i += 1
-                  }
-                }
-                s += 1
-              }
-            }
-          }
-          Iterator.single((sums, cnts))
-        }, preservesPartitioning = true).collect()
-        val sums = Array.ofDim[Double](m, k, subDims)
-        val cnts = Array.ofDim[Long](m, k, subDims)
-        for ((ps, pc) <- partials; s <- 0 until m; j <- 0 until k; i <- 0 until subDims) {
-          sums(s)(j)(i) += ps(s)(j)(i)
-          cnts(s)(j)(i) += pc(s)(j)(i)
-        }
-        cents = Array.tabulate(m) { s =>
-          Array.tabulate(k) { j =>
-            if (cnts(s)(j).forall(_ == 0L)) cents(s)(j)
-            else Array.tabulate(subDims) { i =>
-              if (cnts(s)(j)(i) == 0L) cents(s)(j)(i)
-              else sums(s)(j)(i) / cnts(s)(j)(i)
-            }
-          }
-        }
-      }
-    }
-    Codebook(subDims, cents)
+    val init = KMeans.lowestIdInit(df, idCol, vecCol,
+      (0 until m).map(s => sliceCol(vecCol, s, subDims)), k)
+    Codebook(subDims, KMeans.lloyd(df, col(vecCol), init, subDims, iters))
   }
 
   /** The code table: (id, code) with `code` an array of m centroid

@@ -45,6 +45,29 @@ class CatalogSpec extends SparkSpec {
     assert(mine.isProcessed("c.csv"))
   }
 
+  test("name probe keeps no reload that found a commit dir without _SUCCESS") {
+    val dir = tmpDir("cat-pending")
+    val mine = new Catalog(spark, dir)
+    mine.recordStatus("a.csv", Status.Processed)
+    assert(!mine.isProcessed("b.csv")) // loads the name cache
+    val log = new java.io.File(s"$dir/processed_files")
+    val dirsBefore = log.listFiles().toSet
+    // local-FS mtime is millisecond-grained: let the tick move past the
+    // cached stamp before the external commit lands
+    Thread.sleep(20)
+    new Catalog(spark, dir).recordStatus("b.csv", Status.Processed)
+    // catch that commit between its dir and its _SUCCESS: the dir moved
+    // the status dir's mtime, the _SUCCESS will not
+    val success = (log.listFiles().toSet -- dirsBefore).toSeq match {
+      case Seq(d) => java.nio.file.Paths.get(d.getPath, "_SUCCESS")
+      case other => fail(s"expected one new commit dir, found $other")
+    }
+    java.nio.file.Files.delete(success)
+    assert(!mine.isProcessed("b.csv"), "an uncommitted dir read as committed")
+    java.nio.file.Files.createFile(success)
+    assert(mine.isProcessed("b.csv"), "the committed file stays invisible")
+  }
+
   test("watermark: 0 when unset, latest commit wins") {
     val cat = new Catalog(spark, tmpDir("cat"))
     assert(cat.watermark("t") == 0L)

@@ -153,6 +153,34 @@ class PipelineSpec extends SparkSpec {
     assert((zipDirs() -- before).isEmpty, s"left behind: ${zipDirs() -- before}")
   }
 
+  test("a truncated ZIP is recorded as extraction failed and the batch goes on") {
+    val (root, cat, pipe) = mkPipeline()
+    val in = s"$root/inbox"
+    Files.createDirectories(Paths.get(in))
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def zipDirs() = Option(tmp.listFiles()).toSeq.flatten.filter(_.getName.startsWith("graft_zip")).toSet
+    val before = zipDirs()
+    val header = "Email,prénom,Event Datetime,NB_TOTAL_COMMANDES\n"
+    zipCsv(s"$in/last24h__20240101.zip", "last24h__20240101.csv",
+      header + "a@x.com,Ana,2024-01-01 10:00:00,1\n")
+    // a partial upload: the first half of an archive whose entry is
+    // several KB deflated, so the cut lands inside the entry's data
+    val rows = (0 until 400).map(i => s"u$i@x.com,U${i * 7919},2024-01-02 10:00:00,$i\n").mkString
+    val whole = Files.readAllBytes(Paths.get(
+      zipCsv(s"$root/whole.zip", "last24h__20240102.csv", header + rows)))
+    Files.write(Paths.get(s"$in/last24h__20240102.zip"), whole.take(whole.length / 2))
+    write(in, "last24h__20240103.csv", header + "c@x.com,Cleo,2024-01-03 10:00:00,3\n")
+    val results = pipe.runBatch(in)
+    assert(results.map(r => r.fileName -> r.status) == Seq(
+      "last24h__20240101.zip" -> Status.Uploaded,
+      "last24h__20240102.zip" -> Status.ExtractionFailed,
+      "last24h__20240103.csv" -> Status.Uploaded))
+    assert(results.map(_.inserted) == Seq(1L, 0L, 1L))
+    // the failure is recorded, so the next run skips the file
+    assert(cat.isProcessed("last24h__20240102.zip"))
+    assert((zipDirs() -- before).isEmpty, s"left behind: ${zipDirs() -- before}")
+  }
+
   test("3-entry zip: all-entries read routes each CSV member to its table") {
     // a real backfill zip batches several tables into one archive — the
     // all-entries variant surfaces every member, and Registry.route sends

@@ -111,6 +111,40 @@ class SimilaritySpec extends SparkSpec {
     assert(got(0L) != got(1L))
   }
 
+  test("k-means: ProductQuantizer.fit(m = 1) and KMeans.fit are one fit") {
+    import graft.sim.{KMeans, ProductQuantizer}
+    // quarter-step values: every sum is exact, so the order in which
+    // partial sums merge cannot move a bit between the two fits
+    val vecs = (0 until 12).map(i => (i.toLong, Seq.tabulate(4)(d => ((i * 7 + d * 3) % 11) * 0.25)))
+    for (float <- Seq(false, true); parts <- Seq(1, 3)) {
+      val df = (
+        if (float) vecs.map { case (i, v) => (i, v.map(_.toFloat)) }.toDF("vec_id", "embedding")
+        else vecs.toDF("vec_id", "embedding")).repartition(parts)
+      val km = KMeans.fit(df, "vec_id", "embedding", k = 3, iters = 3)
+      val pq = ProductQuantizer.fit(df, "vec_id", "embedding", dims = 4, m = 1, k = 3, iters = 3)
+      assert(pq.centroids(0).map(_.toSeq).toSeq == km.map(_.toSeq).toSeq,
+        s"float=$float partitions=$parts")
+    }
+  }
+
+  test("k-means: a shorter vector joins centroid 0 with the elements it has; a longer one fails") {
+    import graft.sim.KMeans
+    val base = Seq(
+      (0L, Seq(0.0, 0.0, 0.0, 0.0)), (1L, Seq(4.0, 4.0, 4.0, 4.0)),
+      (2L, Seq(1.0, 0.0, 0.0, 0.0)), (3L, Seq(3.0, 4.0, 4.0, 4.0)),
+      (4L, Seq(0.0, 1.0)), (5L, Seq(4.0, 4.0, 3.0, 4.0)))
+    // vector 4's dot products are null, so it goes to centroid 0 and
+    // adds its two elements to that centroid's first two means
+    val cs = KMeans.fit(base.toDF("vec_id", "embedding"), "vec_id", "embedding", k = 2, iters = 2)
+    assert(cs.map(_.toSeq).toSeq == Seq(
+      Seq(1.0 / 3, 1.0 / 3, 0.0, 0.0), Seq(11.0 / 3, 4.0, 11.0 / 3, 4.0)))
+    val long = (base :+ ((6L, Seq(4.0, 4.0, 4.0, 4.0, 4.0)))).toDF("vec_id", "embedding")
+    val e = intercept[Exception](KMeans.fit(long, "vec_id", "embedding", k = 2, iters = 2))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("longer than the 4-element init vectors")),
+      s"unclear failure: $e")
+  }
+
   test("native as-of rejects mismatched key types (merge ordering is left-typed)") {
     import graft.operators.AsOfJoin
     val l = Seq((1, 10L, "e")).toDF("k", "t", "name") // k: int
